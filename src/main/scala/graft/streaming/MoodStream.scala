@@ -1,30 +1,34 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
 
-import graft.ops.{Aggregates, Classify, Joins}
+import graft.ops.{Aggregates, Joins}
 import graft.pipeline.MoodPipeline
 
 /** Streaming composition of the flagship mood dataflow (reference:
   * jobs/spark_mood_tracker.py end-to-end, §2.9 semantics inventory).
   *
-  * Two execution strategies, both producing the reference's output schema:
+  * Both strategies stream [[perKeyMinutes]], one stateful aggregate over
+  * the three tagged inputs, and produce the reference's output schema:
   *
-  *  1. [[aggregatedJoined]] — the full multi-stateful chain: watermark ×3 →
-  *     per-minute aggregations ×3 → stream-stream left-outer joins ×2 →
-  *     classification, in append mode. Requires Spark ≥3.4 watermark
-  *     propagation (SURVEY.md §7 risk #1). State per operator is bounded by
-  *     the 1-minute watermark; join state holds ≤ (watermark + minute) of
-  *     per-minute rows per side — O(intersections) rows, trivially scalable.
+  *  1. [[aggregatedJoined]] — the full streaming chain in append mode: a
+  *     second, per-minute aggregate gathers each minute's traffic rows with
+  *     its weather and news, then explode → classify. Two stateful
+  *     operators, no stream-stream join; the result equals the left joins
+  *     of [[graft.pipeline.MoodPipeline.run]]. Every key of a minute closes
+  *     under the shared (min-of-inputs) 1-minute watermark, so the second
+  *     layer receives, emits and evicts a minute in the same micro-batch
+  *     (chained stateful operators need Spark ≥3.4, SURVEY.md §7 risk #1).
+  *     State per open minute: ≤ intersections + 2 rows in layer 1, one row
+  *     in layer 2.
   *
-  *  2. [[foreachBatchAligned]] — reference-faithful fallback: only the three
-  *     aggregations run as streaming state; each micro-batch's completed
-  *     minutes are aligned + classified with a BATCH join inside
-  *     foreachBatch (what the reference's sink-side flow effectively does,
-  *     minus its driver-side toPandas collect — ours stays distributed).
+  *  2. [[foreachBatchAligned]] — reference-faithful fallback: each
+  *     micro-batch's completed per-key rows are split by side, aligned +
+  *     classified with a BATCH join inside foreachBatch (what the
+  *     reference's sink-side flow effectively does, minus its driver-side
+  *     toPandas collect — ours stays distributed).
   *
   * Unlike the reference, every writer REQUIRES a checkpoint location
   * (the reference configures none and silently loses state on restart —
@@ -32,43 +36,63 @@ import graft.pipeline.MoodPipeline
   */
 object MoodStream {
 
-  /** Watermarked per-minute aggregations of the three parsed streams.
-    * Inputs carry `timestamp` (+ traffic: intersection, speed; weather:
-    * temp, weather; news: sentiment).
+  /** Watermarked per-minute aggregates of the three parsed streams as one
+    * frame `(event_time, side, intersection, v, label)`: `side` is "t"
+    * (v = avg speed per intersection), "w" (v = avg temp, label = weather)
+    * or "n" (label = sentiment). `side` stays in the key, so null-
+    * intersection traffic never merges with weather. Inputs carry
+    * `timestamp` (+ traffic: intersection, speed; weather: temp, weather;
+    * news: sentiment).
     */
-  def aggregates(
+  private def perKeyMinutes(
       traffic: DataFrame,
       weather: DataFrame,
       news: DataFrame,
-      watermark: String = "1 minute"): (DataFrame, DataFrame, DataFrame) = {
-    def prep(df: DataFrame): DataFrame =
+      watermark: String = "1 minute"): DataFrame = {
+    def tagged(df: DataFrame, side: String, intersection: Column, v: Column, label: Column) =
       MoodPipeline.withEventTime(df).withWatermark("event_time", watermark)
-    (
-      Aggregates.trafficPerMinute(prep(traffic)),
-      Aggregates.weatherPerMinute(prep(weather)),
-      Aggregates.newsPerMinute(prep(news)))
+        .select(lit(side).as("side"), col("event_time"),
+          intersection.cast("string").as("intersection"),
+          v.cast("double").as("v"), label.cast("string").as("label"))
+    tagged(traffic, "t", col("intersection"), col("speed"), lit(null))
+      .unionAll(tagged(weather, "w", lit(null), col("temp"), col("weather")))
+      .unionAll(tagged(news, "n", lit(null), lit(null), col("sentiment")))
+      .groupBy("event_time", "side", "intersection")
+      .agg(Aggregates.exactAvg(col("v")).as("v"), first(col("label")).as("label"))
   }
 
-  /** Strategy 1: full streaming chain (agg ×3 → left join ×2 → classify). */
+  /** Strategy 1: full streaming chain (per-key agg → per-minute agg →
+    * explode → classify).
+    */
   def aggregatedJoined(
       traffic: DataFrame,
       weather: DataFrame,
       news: DataFrame,
       watermark: String = "1 minute"): DataFrame = {
-    val (t, w, n) = aggregates(traffic, weather, news, watermark)
-    MoodPipeline.classifyAligned(Joins.alignMinutes(t, w, n))
+    def of(side: String, c: Column): Column = when(col("side") === side, c)
+    val minutes = perKeyMinutes(traffic, weather, news, watermark)
+      .groupBy("event_time")
+      .agg(
+        collect_list(of("t", struct(col("intersection"), col("v").as("avg_speed")))).as("t"),
+        // at most one "w" and one "n" row per minute: max just picks it
+        max(of("w", col("v"))).as("avg_temp"),
+        max(of("w", col("label"))).as("weather"),
+        max(of("n", col("label"))).as("sentiment"))
+    // a minute without traffic has an empty list and emits nothing, as in
+    // the left joins
+    MoodPipeline.classifyAligned(minutes.select(col("event_time"), inline(col("t")),
+        col("avg_temp"), col("weather"), col("sentiment")))
       .select("event_time", "intersection", "avg_speed", "avg_temp",
         "weather", "sentiment", "mood")
   }
 
-  /** Strategy 2: stream the three aggregations, align + classify per
-    * micro-batch via a batch join (distributed, never collected), hand the
-    * classified frame to `sink`.
+  /** Strategy 2: stream the per-key aggregate, split it by side, align +
+    * classify per micro-batch via a batch join (distributed, never
+    * collected), hand the classified frame to `sink`.
     *
-    * The three aggregation streams are unioned with a discriminator column
-    * into ONE streaming query (one checkpoint, one trigger), then split
-    * again inside foreachBatch — the same technique the reference needed
-    * two separate queries for (jobs/spark_news_consumer.py:39-58 double-read).
+    * One streaming query (one checkpoint, one trigger) carries all three
+    * inputs — the reference needed two separate queries for the same
+    * split (jobs/spark_news_consumer.py:39-58 double-read).
     */
   def foreachBatchAligned(
       traffic: DataFrame,
@@ -76,36 +100,20 @@ object MoodStream {
       news: DataFrame,
       checkpoint: String,
       watermark: String = "1 minute")(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] = {
-    val (t, w, n) = aggregates(traffic, weather, news, watermark)
-    val unioned =
-      t.select(lit("t").as("side"), col("event_time"), col("intersection"),
-          col("avg_speed"), lit(null).cast("double").as("avg_temp"),
-          lit(null).cast("string").as("weather"), lit(null).cast("string").as("sentiment"))
-        .unionAll(w.select(lit("w").as("side"), col("event_time"),
-          lit(null).cast("string").as("intersection"),
-          lit(null).cast("double").as("avg_speed"), col("avg_temp"), col("weather"),
-          lit(null).cast("string").as("sentiment")))
-        .unionAll(n.select(lit("n").as("side"), col("event_time"),
-          lit(null).cast("string").as("intersection"),
-          lit(null).cast("double").as("avg_speed"), lit(null).cast("double").as("avg_temp"),
-          lit(null).cast("string").as("weather"), col("sentiment")))
-    unioned.writeStream
+      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    perKeyMinutes(traffic, weather, news, watermark).writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val t = batch.filter(col("side") === "t")
-          .select("event_time", "intersection", "avg_speed")
-        val w = batch.filter(col("side") === "w")
-          .select("event_time", "avg_temp", "weather")
-        val n = batch.filter(col("side") === "n")
-          .select("event_time", "sentiment")
+        def side(s: String, cols: Column*) = batch.filter(col("side") === s).select(cols: _*)
+        val t = side("t", col("event_time"), col("intersection"), col("v").as("avg_speed"))
+        val w = side("w", col("event_time"), col("v").as("avg_temp"), col("label").as("weather"))
+        val n = side("n", col("event_time"), col("label").as("sentiment"))
         val aligned = MoodPipeline.classifyAligned(Joins.alignMinutes(t, w, n))
           .select("event_time", "intersection", "avg_speed", "avg_temp",
             "weather", "sentiment", "mood")
         sink(aligned, batchId)
       }
-  }
 
   /** Start strategy 1 into a parquet append sink (checkpointed). */
   def startToParquet(

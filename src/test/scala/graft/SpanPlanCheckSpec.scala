@@ -18,6 +18,9 @@ class SpanPlanCheckSpec extends SparkSpec {
       // gram hash column g
       val winParts = "Window \\[[^\\]]*\\], \\[([^\\]]*)\\]".r
         .findAllMatchIn(plan).map(_.group(1)).toSeq
+      // a regex that stops matching would pass every plan vacuously
+      if (plan.contains("Window")) assert(winParts.nonEmpty,
+        s"plan of $name has a Window the partition-spec regex missed:\n${plan.take(3000)}")
       winParts.foreach { p =>
         assert(p.contains("doc_id") && !p.matches(".*\\bg#.*"),
           s"non-doc-keyed window in $name (partition [$p]):\n${plan.take(3000)}")

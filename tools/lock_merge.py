@@ -8,7 +8,7 @@ every query in the run: if the lock has no entry, ADD the reading; if
 the reading is LOWER than the lock entry, tighten it. Never loosens an
 existing minimum (the r18 min-merge discipline). calib_total is
 likewise min-merged from the run's calibration sum. --add-only adds
-missing entries without tightening existing ones.
+missing entries without tightening existing ones or calib_total.
 """
 import json
 import sys
@@ -41,7 +41,8 @@ def main() -> int:
         elif not add_only and v < qs[q]:
             changed.append(f"TIGHTEN {q} {qs[q]:.3f} -> {v:.3f}")
             qs[q] = round(v, 3)
-    if calib > 0 and calib < lock.get("calib_total", float("inf")):
+    if (not add_only and calib > 0
+            and calib < lock.get("calib_total", float("inf"))):
         changed.append(
             f"calib_total {lock.get('calib_total')} -> {calib:.3f}")
         lock["calib_total"] = round(calib, 3)
