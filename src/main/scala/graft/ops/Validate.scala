@@ -12,13 +12,17 @@ object Validate {
 
   /** P8 — canonical "valid mood record" predicate
     * (mongo_to_storage.py:60-65): required fields non-null, positive speed.
+    * The one spelling of the rule: the filter below, the export's count and
+    * the quality gate's `invalid` sum all use it. It is null when
+    * `avg_speed` is null, so count only the rows where it is true.
     */
-  def validMood(df: DataFrame): DataFrame =
-    df.filter(
-      col("event_time").isNotNull &&
+  val ValidMood: Column =
+    col("event_time").isNotNull &&
       col("intersection").isNotNull &&
       col("weather").isNotNull &&
-      col("avg_speed") > 0)
+      col("avg_speed") > 0
+
+  def validMood(df: DataFrame): DataFrame = df.filter(ValidMood)
 
   /** P11 — any-null row drop (`df.na.drop()` before the Mongo insert). */
   def dropAnyNull(df: DataFrame): DataFrame = df.na.drop()

@@ -2,9 +2,11 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.io.BatchSink
+import graft.model.Schemas
 import graft.ops.{Parse, TimeOps, Validate}
 
 /** Batch export tier (reference: my_airflow/dags/mongo_to_storage.py
@@ -12,19 +14,37 @@ import graft.ops.{Parse, TimeOps, Validate}
   * rows, validate, coerce event_time, and load into a warehouse sink.
   *
   * Deliberate divergences (each flagged in SURVEY.md §7 risk #3):
-  *  - the input is read ONCE and cached across the count-guard, the write,
-  *    and the verification count — the reference re-reads and recomputes the
-  *    whole JSON scan three times (`:56,69,81`);
-  *  - counts come from one action; the quality gate (`mood_quality_check`)
-  *    runs distributed instead of a driver-side Mongo probe.
+  *  - the input is read with a DECLARED schema ([[ReadSchema]]), not an
+  *    inferred one, so there is no inference scan. Fields outside the
+  *    seven canonical ones are dropped (inference kept them as extra
+  *    columns), and a field absent from every line still lands as a null
+  *    column: the warehouse table has one fixed schema;
+  *  - the input is read ONCE into one cached frame, and one aggregate
+  *    action gives both the read and the valid count before the write —
+  *    the reference re-reads and recomputes the whole JSON scan three
+  *    times (`:56,69,81`);
+  *  - the quality gate (`mood_quality_check`) runs distributed instead of
+  *    a driver-side Mongo probe.
   */
 object ExportPipeline {
 
   final case class ExportResult(read: Long, valid: Long, written: Long)
 
+  /** The NDJSON read schema: the canonical mood fields as strings, in the
+    * alphabetical order inference produces, plus the corrupt-record column.
+    * Every field reads as a string whatever its JSON type (a number keeps
+    * its text), so `coerceMoodDrift` and `toEventTime` cast exactly as they
+    * did after inference — an int temp becomes a double, a mistyped number
+    * fails the cast.
+    */
+  val ReadSchema: StructType = StructType(
+    Schemas.mood.fieldNames.sorted.map(StructField(_, StringType)) :+
+      StructField("_corrupt_record", StringType))
+
   /** Full load: NDJSON path → validated mood rows → sink. */
   def loadNdjson(spark: SparkSession, path: String, sink: BatchSink): ExportResult = {
     val raw = spark.read
+      .schema(ReadSchema)
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
     run(raw, sink)
@@ -43,21 +63,19 @@ object ExportPipeline {
         if (d.columns.contains(c)) d.withColumn(c, col(c).cast(t)) else d
       }
 
-  /** Core transform, source-agnostic (tests feed literal frames). */
+  /** Core transform, source-agnostic (tests feed literal frames). The
+    * empty gate fails before anything is written.
+    */
   def run(raw: DataFrame, sink: BatchSink): ExportResult = {
     val clean = coerceMoodDrift(Parse.dropCorrupt(raw))
+      .withColumn("event_time", TimeOps.toEventTime(col("event_time")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val read = clean.count()
+      val counts = clean.select(count(lit(1)), count(when(Validate.ValidMood, 1))).head()
+      val (read, valid) = (counts.getLong(0), counts.getLong(1))
       require(read > 0, "quality gate failed: export input is empty")
-      val validated = Validate.validMood(
-          clean.withColumn("event_time", TimeOps.toEventTime(col("event_time"))))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val valid = validated.count()
-        sink.write(validated)
-        ExportResult(read, valid, valid)
-      } finally { validated.unpersist(); () }
+      sink.write(Validate.validMood(clean))
+      ExportResult(read, valid, valid)
     } finally { clean.unpersist(); () }
   }
 }

@@ -27,9 +27,7 @@ object QualityCheck {
         count(lit(1)).as("total"),
         sum(required.map(c => when(col(c).isNull, 1L).otherwise(0L)).reduce(_ + _))
           .as("missing"),
-        sum(when(col("event_time").isNotNull && col("intersection").isNotNull &&
-          col("weather").isNotNull && col("avg_speed") > 0, 0L).otherwise(1L))
-          .as("invalid"))
+        sum(when(Validate.ValidMood, 0L).otherwise(1L)).as("invalid"))
       .head()
     val total = agg.getAs[Long]("total")
     val missing = Option(agg.getAs[Any]("missing")).fold(0L)(_.asInstanceOf[Long])

@@ -141,9 +141,18 @@ class CurationStream(
           buckets = 16, keepNewestSegments = 1)
         Dedup.FingerprintStore.purgeSuperseded(s, dedupStoreDir): Unit
       })
-      BudgetStream.compact(s, budgetStateDir, keepNewestSegments = 1)
-      BudgetStream.purgeSuperseded(s, budgetStateDir)
-      dedupSide.join() // propagates the dedup side's failure, if any
+      var budgetFailure: Throwable = null
+      try {
+        BudgetStream.compact(s, budgetStateDir, keepNewestSegments = 1)
+        BudgetStream.purgeSuperseded(s, budgetStateDir)
+      } catch { case t: Throwable => budgetFailure = t; throw t }
+      finally {
+        // joined on every path, so no compaction outlives this batch: the
+        // dedup side's failure propagates, or rides on the budget side's
+        // failure as a suppressed exception
+        try dedupSide.join()
+        catch { case t: Throwable if budgetFailure != null => budgetFailure.addSuppressed(t) }
+      }
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Multimodal
+import graft.ops.Validate
 import graft.pipeline.QualityCheck
 
 class QualityCheckSpec extends SparkSpec {
@@ -32,6 +33,19 @@ class QualityCheckSpec extends SparkSpec {
     assert(exports == 0)
     val empty = QualityCheck.run(moodDf(Seq.empty), Seq("event_time"))
     assert(!empty.passed && empty.total == 0)
+  }
+
+  test("one validity rule: the gate's invalid count is the rows validMood drops") {
+    val df = moodDf(Seq(
+      (Some("2025-04-19 16:10:00"), Some("komitas"), Some("clear"), Some(42.0)),
+      (None, Some("komitas"), Some("clear"), Some(42.0)),                        // no event_time
+      (Some("2025-04-19 16:12:00"), None, Some("clear"), Some(42.0)),            // no intersection
+      (Some("2025-04-19 16:13:00"), Some("komitas"), None, Some(42.0)),          // no weather
+      (Some("2025-04-19 16:14:00"), Some("komitas"), Some("clear"), Some(0.0)),  // speed not > 0
+      (Some("2025-04-19 16:15:00"), Some("komitas"), Some("clear"), None)))      // no speed
+    val report = QualityCheck.run(df, Seq("event_time"))
+    assert(report.total == 6 && report.invalid == 5)
+    assert(report.invalid == report.total - Validate.validMood(df).count())
   }
 
   test("multimodal resize + frame sampling keep map-only shapes") {

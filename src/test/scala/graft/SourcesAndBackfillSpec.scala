@@ -54,6 +54,33 @@ class SourcesAndBackfillSpec extends SparkSpec {
       element_at(typedLit(Vocab.BackfillMoodMap), col("sentiment"))).count() == 0)
   }
 
+  /** Per-day counts plus an order-independent hash of every row (the
+    * wrapping sum of per-row xxhash64s, taken in the suite's UTC session).
+    */
+  private def pin(df: org.apache.spark.sql.DataFrame): (Seq[(String, Long)], Long) = {
+    val perDay = df.groupBy(to_date(col("event_time")).cast("string").as("d")).count()
+      .orderBy("d").collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val hash = df.select(xxhash64(df.columns.map(col).toIndexedSeq: _*)).collect()
+      .map(_.getLong(0)).sum
+    (perDay, hash)
+  }
+
+  test("backfill golden pins: per-day counts and row hash stay bit-for-bit") {
+    // captured from a one-range-per-day generator: slicing the rows
+    // differently must not move a single value
+    val short = Backfill.generate(spark, LocalDate.of(2024, 3, 10), days = 7, seed = 7L)
+    assert(pin(short) == (Seq("2024-03-04" -> 31L, "2024-03-05" -> 47L,
+      "2024-03-06" -> 27L, "2024-03-07" -> 32L, "2024-03-08" -> 32L,
+      "2024-03-09" -> 33L, "2024-03-10" -> 28L), 2635456326257555146L))
+    val wide = Backfill.generate(spark, LocalDate.of(2025, 6, 20), 5, 5000, 5000, 7L)
+    assert(pin(wide) == ((16 to 20).map(d => s"2025-06-$d" -> 5000L), 8299248919733032449L))
+    // the driver-side count is the written table's row count
+    val dir = tmpDir("graft_bf_pin")
+    val n = Backfill.run(spark, new ParquetSink(s"$dir/mood"),
+      LocalDate.of(2024, 3, 10), days = 7, seed = 7L)
+    assert(n == 230 && spark.read.parquet(s"$dir/mood").count() == n)
+  }
+
   test("backfill runs through the standard sink path with the canonical schema") {
     val dir = tmpDir("graft_bf")
     val n = Backfill.run(spark, new ParquetSink(s"$dir/mood"),
