@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.util.SegmentStore
 
 /** Persisted duplicate-CLUSTER map with INCREMENTAL connected components
   * — the missing member of the store family (FingerprintStore holds
@@ -82,66 +83,14 @@ object ClusterStore {
   private def keysDir(dir: String) = s"$dir/keys"
 
   /** Committed map-segment paths, oldest first (`_SUCCESS`-gated). */
-  def segments(s: SparkSession, dir: String): Seq[String] = {
-    val p = new Path(mapDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-      .sortBy(segId) // NUMERIC: lexicographic puts seg_100000 before seg_99999
-  }
+  def segments(s: SparkSession, dir: String): Seq[String] =
+    SegmentStore.segments(s, mapDir(dir)).map(_._2)
 
-  private def segId(path: String): Long =
-    path.substring(path.lastIndexOf("seg_") + 4).toLong
-
-  /** Newest committed map generation: (table, dataSub, buckets,
-    * foldedBelow). Marker protocol mirrors FingerprintStore — the data
-    * lives under the store dir, the catalog entry is a bucketed-read
-    * handle re-registered on demand after a session restart.
+  /** Newest committed map generation (marker `table sub buckets
+    * foldedBelow`).
     */
-  private def currentGen(
-      s: SparkSession, dir: String): Option[(String, String, Int, Long)] = {
-    val p = new Path(mapDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-      .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-      .lastOption.map { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      }.filter(_.nonEmpty).map { content =>
-        content.split("\t") match {
-          case Array(table, sub, b, below) => (table, sub, b.toInt, below.toLong)
-          case other => sys.error(
-            s"malformed cluster-store generation marker in $dir: " +
-              other.mkString("\\t"))
-        }
-      }
-  }
-
-  private def tableFor(prefix: String, dir: String, gen: Int): String = {
-    val h = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
-    f"${prefix}_${h}_g$gen%05d"
-  }
-
-  private def currentGenTable(
-      s: SparkSession, dir: String): Option[(String, Long)] =
-    currentGen(s, dir).map { case (table, sub, buckets, below) =>
-      if (!s.catalog.tableExists(table)) {
-        val loc = new Path(new Path(mapDir(dir)), sub).toString
-        s.sql(
-          s"""CREATE TABLE $table (node BIGINT, component BIGINT)
-             |USING PARQUET
-             |CLUSTERED BY (node) SORTED BY (node) INTO $buckets BUCKETS
-             |LOCATION '$loc'""".stripMargin)
-      }
-      (table, below)
-    }
+  private def currentGen(s: SparkSession, dir: String): Option[SegmentStore.Gen] =
+    SegmentStore.currentGen(s, mapDir(dir))
 
   private def emptyMap(s: SparkSession): DataFrame = graft.util.Frames.emptyLocal(s, mapSchema)
 
@@ -166,21 +115,13 @@ object ClusterStore {
     * exactly the FingerprintStore stream discipline.
     */
   def loadBefore(s: SparkSession, dir: String, belowSegId: Long): DataFrame = {
-    val gen = currentGenTable(s, dir)
-    val below = gen.map(_._2).getOrElse(0L)
-    require(below <= belowSegId,
-      s"cluster-store compaction folded segments up to $below, beyond the " +
-        s"requested history bound $belowSegId — compact with " +
-        "keepNewestSegments >= 1 while a stream feeds the store")
-    val segs = segments(s, dir)
-      .filter(p => segId(p) >= below && segId(p) < belowSegId)
-    val genRows = gen.map { case (t, _) =>
-      s.table(t).select(col("node"), col("component"), lit(-1L).as("__seg")) }
-    val segRows = segs.map(p =>
+    val (gen, segs) = SegmentStore.history(s, mapDir(dir), belowSegId)
+    val genRows = gen.map(g => s.table(SegmentStore.table(s, mapDir(dir), g, mapSchema, "node"))
+      .select(col("node"), col("component"), lit(-1L).as("__seg")))
+    val segRows = segs.map { case (id, p) =>
       s.read.schema(mapSchema).parquet(p)
-        .select(col("node"), col("component"), lit(segId(p)).as("__seg")))
-    val all = (genRows.toSeq ++ segRows).reduceOption(_ unionByName _)
-    all match {
+        .select(col("node"), col("component"), lit(id).as("__seg")) }
+    (genRows.toSeq ++ segRows).reduceOption(_ unionByName _) match {
       case None => emptyMap(s)
       case Some(u) => u.groupBy(col("node"))
         .agg(max_by(col("component"), col("__seg")).as("component"))
@@ -290,14 +231,7 @@ object ClusterStore {
         case None => load(s, dir)
       })
     val contracted = contractEdges(edges, m, mapIsEmpty)
-    val seg = {
-      val idx = epoch.getOrElse {
-        val existingMax = segments(s, dir).map(segId).maxOption
-        val below = currentGen(s, dir).map(_._4).getOrElse(0L)
-        math.max(existingMax.map(_ + 1).getOrElse(0L), below)
-      }
-      f"${mapDir(dir)}/seg_$idx%05d"
-    }
+    val seg = SegmentStore.segPath(mapDir(dir), epoch.getOrElse(nextMapId(s, dir)))
     // no isEmpty pre-probe: it would cost a full evaluation of the
     // contracted plan per ingest, and connectedComponents handles an
     // empty edge set (one signature job) — an edge-free batch just
@@ -313,16 +247,12 @@ object ClusterStore {
     graft.util.Described(s, "cs:mapseg")(
       segRows.write.mode("overwrite").parquet(seg))
     // register store-novel keys (first-owner semantics, min id per key)
-    val keyIdx = epoch.getOrElse {
-      Dedup.FingerprintStore.segments(s, kd)
-        .map(p => p.substring(p.lastIndexOf("seg_") + 4).toLong)
-        .maxOption.map(_ + 1).getOrElse(0L)
-    }
+    val keyIdx = epoch.getOrElse(SegmentStore.nextId(s, kd))
     graft.util.Described(s, "cs:keyseg")(
       keys.groupBy(col("fp")).agg(min(col("id")).as("doc_id"))
         .join(store.select(col("fp")), Seq("fp"), "left_anti")
         .select(col("fp"), col("doc_id"))
-        .write.mode("overwrite").parquet(f"$kd/seg_$keyIdx%05d"))
+        .write.mode("overwrite").parquet(SegmentStore.segPath(kd, keyIdx)))
     // both per-epoch caches are ingest-internal (the key-segment write
     // above is their last consumer; the returned frame reads the
     // committed parquet) — release by direct handle so a long epoch
@@ -499,48 +429,43 @@ object ClusterStore {
       .localCheckpoint(true)
     // segment index bases — the exact values the sequential loop's
     // per-ingest filesystem probes would have produced
-    val segIdx0 = {
-      val existingMax = segments(s, dir).map(segId).maxOption
-      val below = currentGen(s, dir).map(_._4).getOrElse(0L)
-      math.max(existingMax.map(_ + 1).getOrElse(0L), below)
-    }
-    val keyIdx0 = Dedup.FingerprintStore.segments(s, kd)
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toLong)
-      .maxOption.map(_ + 1).getOrElse(0L)
+    val segIdx0 = nextMapId(s, dir)
+    val keyIdx0 = SegmentStore.nextId(s, kd)
     var mapIsEmpty = segments(s, dir).isEmpty && currentGen(s, dir).isEmpty
     var m = if (mapIsEmpty) emptyMap(s) else load(s, dir).localCheckpoint(true)
     // the key-segment writes are independent of the map loop (each
     // filters the checkpointed regs; distinct output dirs), so all of
     // them run on driver side-threads while the inherently-sequential
-    // contraction/CC loop below keeps the main thread (guide §2.6)
-    val keyWrites = bs.zipWithIndex.map { case (b, i) =>
-      java.util.concurrent.CompletableFuture.runAsync(() =>
-        regs.filter(col("b") === b).select(col("fp"), col("doc_id"))
-          .write.mode("overwrite").parquet(f"$kd/seg_${keyIdx0 + i}%05d"))
+    // contraction/CC loop below keeps the main thread (guide §2.6);
+    // every one is joined before this returns or throws
+    val keyWrites = bs.toSeq.zipWithIndex.map { case (b, i) => () =>
+      regs.filter(col("b") === b).select(col("fp"), col("doc_id"))
+        .write.mode("overwrite").parquet(SegmentStore.segPath(kd, keyIdx0 + i))
     }
-    val committedAll = bs.zipWithIndex.map { case (b, i) =>
-      val edges = edgesAll.filter(col("b") === b)
-        .select(col("a"), col("e").as("b"))
-      val contracted = contractEdges(edges, m, mapIsEmpty)
-      val seg = f"${mapDir(dir)}/seg_${segIdx0 + i}%05d"
-      segRowsFor(contracted, m, mapIsEmpty).write
-        .mode("overwrite").parquet(seg)
-      val committed = s.read.schema(mapSchema).parquet(seg)
-      // running map: one latest-wins fold over the just-committed delta
-      // — the in-memory equivalent of the sequential loop's per-ingest
-      // segment resolve
-      m =
-        if (mapIsEmpty) committed.localCheckpoint(true)
-        else m.select(col("node"), col("component"), lit(0L).as("__seg"))
-          .unionByName(committed.select(col("node"), col("component"),
-            lit(1L).as("__seg")))
-          .groupBy(col("node"))
-          .agg(max_by(col("component"), col("__seg")).as("component"))
-          .localCheckpoint(true)
-      mapIsEmpty = false
-      committed.withColumn(batchCol, lit(b))
+    val committedAll = SegmentStore.withWrites(keyWrites) {
+      bs.toSeq.zipWithIndex.map { case (b, i) =>
+        val edges = edgesAll.filter(col("b") === b)
+          .select(col("a"), col("e").as("b"))
+        val contracted = contractEdges(edges, m, mapIsEmpty)
+        val seg = SegmentStore.segPath(mapDir(dir), segIdx0 + i)
+        segRowsFor(contracted, m, mapIsEmpty).write
+          .mode("overwrite").parquet(seg)
+        val committed = s.read.schema(mapSchema).parquet(seg)
+        // running map: one latest-wins fold over the just-committed
+        // delta — the in-memory equivalent of the sequential loop's
+        // per-ingest segment resolve
+        m =
+          if (mapIsEmpty) committed.localCheckpoint(true)
+          else m.select(col("node"), col("component"), lit(0L).as("__seg"))
+            .unionByName(committed.select(col("node"), col("component"),
+              lit(1L).as("__seg")))
+            .groupBy(col("node"))
+            .agg(max_by(col("component"), col("__seg")).as("component"))
+            .localCheckpoint(true)
+        mapIsEmpty = false
+        committed.withColumn(batchCol, lit(b))
+      }
     }
-    keyWrites.foreach(_.join()) // propagate any key write's failure
     committedAll.reduce(_ unionByName _)
       .select(col(batchCol), col("node"), col("component"))
   }
@@ -559,45 +484,12 @@ object ClusterStore {
       buckets: Int,
       tablePrefix: String = "graft_cluster_store",
       keepNewestSegments: Int = 0): String = {
-    require(buckets > 0, "buckets must be positive")
-    val p = new Path(mapDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p)
-    // gen markers ordered NUMERICALLY and matched with \d{5,}: %05d
-    // widens past 99999, where a 5-digit-only regex would lose the
-    // newest marker and a lexicographic sort would mis-order it
-    val prevMarker = fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-      .map(_.getPath.getName)
-      .sortBy(_.stripPrefix("gen_").toLong).lastOption
     val prev = currentGen(s, dir)
-    val prevTable = currentGenTable(s, dir).map(_._1)
-    val gen = prevMarker.map(_.stripPrefix("gen_").toInt + 1).getOrElse(1)
-    val segs = segments(s, dir).filter(q =>
-        segId(q) >= prev.map(_._4).getOrElse(0L))
-      .dropRight(keepNewestSegments)
-    val foldedBelow = segs.map(segId).maxOption.map(_ + 1)
-      .orElse(prev.map(_._4)).getOrElse(0L)
-    val folded = loadBefore(s, dir, foldedBelow) // resolved fold scope
-    val table = tableFor(tablePrefix, dir, gen)
-    val dataSub = f"gen_data_$gen%05d"
-    val dataDir = new Path(p, dataSub).toString
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    folded.write
-      .bucketBy(buckets, "node").sortBy("node")
-      .option("path", dataDir)
-      .mode("overwrite").saveAsTable(table)
-    val tmp = new Path(p, f"gen_$gen%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$table\t$dataSub\t$buckets\t$foldedBelow".getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new Path(p, f"gen_$gen%05d"))
-    prevTable.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-    prevMarker.foreach(mk => fs.delete(new Path(p, mk), false): Unit)
-    prev.foreach { case (_, sub, _, _) =>
-      fs.delete(new Path(p, sub), true): Unit
-    }
-    segs.foreach(sp => fs.delete(new Path(sp), true): Unit)
+    val folded = SegmentStore.foldScope(s, mapDir(dir), prev, keepNewestSegments)
+    val foldedBelow = folded.lastOption.fold(prev.fold(0L)(_.below))(_._1 + 1)
+    val table = SegmentStore.commitBucketed(s, mapDir(dir), prev, folded,
+      loadBefore(s, dir, foldedBelow), // resolved fold scope
+      "node", buckets, tablePrefix, Some(foldedBelow))
     Dedup.FingerprintStore.compact(s, keysDir(dir), buckets,
       tablePrefix = s"${tablePrefix}_keys",
       keepNewestSegments = keepNewestSegments)
@@ -626,56 +518,21 @@ object ClusterStore {
     *
     * @return paths deleted.
     */
-  def purgeSuperseded(s: SparkSession, dir: String): Seq[String] = {
-    val p = new Path(mapDir(dir))
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val deleted = Seq.newBuilder[String]
-    if (fs.exists(p)) {
-      val markers = fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-        .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-      markers.dropRight(1).foreach { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        content.split("\t") match {
-          case Array(table, sub, _, _) =>
-            s.sql(s"DROP TABLE IF EXISTS $table")
-            val data = new Path(p, sub)
-            if (fs.exists(data)) {
-              fs.delete(data, true)
-              deleted += data.toString
-            }
-          case _ => // malformed stale marker: just drop the marker below
-        }
-        fs.delete(st.getPath, false)
-        deleted += st.getPath.toString
-      }
-      fs.listStatus(p).toSeq
-        .filter(st => st.isFile &&
-          st.getPath.getName.matches("gen_\\d{5,}\\.tmp"))
-        .foreach { st =>
-          fs.delete(st.getPath, false)
-          deleted += st.getPath.toString
-        }
-      val below = currentGen(s, dir).map(_._4).getOrElse(0L)
-      segments(s, dir).filter(q => segId(q) < below).foreach { q =>
-        fs.delete(new Path(q), true)
-        deleted += q
-      }
-    }
-    deleted ++= Dedup.FingerprintStore.purgeSuperseded(s, keysDir(dir))
-    deleted.result()
-  }
+  def purgeSuperseded(s: SparkSession, dir: String): Seq[String] =
+    SegmentStore.purge(s, mapDir(dir)) ++
+      Dedup.FingerprintStore.purgeSuperseded(s, keysDir(dir))
 
   /** Drop this store's catalog handles (both substores) — gate/test
     * cleanup; the on-disk data is the caller's to delete.
     */
-  def dropTables(s: SparkSession, dir: String): Unit = {
-    currentGenTable(s, dir).foreach { case (t, _) =>
-      s.sql(s"DROP TABLE IF EXISTS $t") }
-    Dedup.FingerprintStore.currentGenTable(s, keysDir(dir))
-      .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-  }
+  def dropTables(s: SparkSession, dir: String): Unit =
+    (currentGen(s, dir) ++ SegmentStore.currentGen(s, keysDir(dir)))
+      .flatMap(_.table).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+
+  /** Id the next non-epoch ingest claims: past the newest committed
+    * segment and never below the generation's bound (a segment there
+    * would be shadowed by the generation).
+    */
+  private def nextMapId(s: SparkSession, dir: String): Long =
+    math.max(SegmentStore.nextId(s, mapDir(dir)), currentGen(s, dir).fold(0L)(_.below))
 }

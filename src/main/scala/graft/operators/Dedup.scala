@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
+import graft.util.SegmentStore
 
 /** Corpus deduplication operators — the training-data-pipeline workhorses.
   *
@@ -139,7 +140,6 @@ object Dedup {
     * [[graft.operators.Retrieval.appendPostings]].
     */
   object FingerprintStore {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -151,16 +151,8 @@ object Dedup {
       * partial directory that is never read and is overwritten by the
       * next ingest claiming that index.
       */
-    def segments(s: SparkSession, dir: String): Seq[String] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
-        .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.toString)
-        .sortBy(segId) // NUMERIC: seg_100000 sorts before seg_99999 as text
-    }
+    def segments(s: SparkSession, dir: String): Seq[String] =
+      SegmentStore.segments(s, dir).map(_._2)
 
     /** The accumulated store: the current compacted GENERATION (a
       * catalog table bucketed by fp, if [[compact]] has run) unioned
@@ -175,105 +167,54 @@ object Dedup {
       * see (its own earlier half-commit is not history).
       */
     def loadBefore(s: SparkSession, dir: String, belowSegId: Long): DataFrame = {
-      val segs = segments(s, dir).filter(p => segId(p) < belowSegId)
-      val gen = currentGenTable(s, dir)
-        .map(t => s.table(t).select(col("fp"), col("doc_id")))
-      val seg =
+      val (gen, segs) = SegmentStore.history(s, dir, belowSegId)
+      rows(s, dir, gen, segs)
+    }
+
+    /** The generation's rows (if any) unioned with `segs`. */
+    private def rows(
+        s: SparkSession, dir: String, gen: Option[SegmentStore.Gen],
+        segs: Seq[(Long, String)]): DataFrame = {
+      val genRows = gen.map(g => s.table(SegmentStore.table(s, dir, g, schema, "fp"))
+        .select(col("fp"), col("doc_id")))
+      val segRows =
         if (segs.isEmpty) None
-        else Some(s.read.schema(schema).parquet(segs: _*))
-      (gen, seg) match {
-        case (Some(g), Some(p)) => g.unionByName(p)
-        case (Some(g), None) => g
-        case (None, Some(p)) => p
-        case (None, None) => graft.util.Frames.emptyLocal(s, schema)
-      }
-    }
-
-    /** Numeric id of a segment path (`…/seg_00042` → 42). */
-    def segId(path: String): Long =
-      path.substring(path.lastIndexOf("seg_") + 4).toLong
-
-    /** Store-scoped catalog identifier: the name embeds a hash of the
-      * store directory, so two stores compacted with the same
-      * `tablePrefix` can NEVER write the same table name (they used to,
-      * silently replacing each other's dedup history).
-      */
-    private[graft] def tableFor(tablePrefix: String, dir: String, gen: Int): String = {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(10)
-      f"${tablePrefix}_${h}_g$gen%05d"
-    }
-
-    /** The newest committed generation, read from the highest `gen_*`
-      * marker file in the store dir. The marker's CONTENT is
-      * `<table>\t<data subdir>\t<buckets>` — the DATA lives under the
-      * store dir (the catalog entry is just a bucketed-read handle over
-      * it), so the store is fully self-describing on the filesystem and
-      * survives a session restart with the default in-memory catalog.
-      */
-    private def currentGen(s: SparkSession, dir: String): Option[(String, String, Int)] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-        .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-        .lastOption.map { st =>
-          val in = fs.open(st.getPath)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        }.filter(_.nonEmpty).map { content =>
-          content.split("\t") match {
-            case Array(table, sub, b) => (table, sub, b.toInt)
-            case other => sys.error(
-              s"malformed fingerprint-store generation marker in $dir: " +
-                other.mkString("\\t"))
-          }
-        }
+        else Some(s.read.schema(schema).parquet(segs.map(_._2): _*))
+      (genRows ++ segRows).reduceOption(_ unionByName _)
+        .getOrElse(graft.util.Frames.emptyLocal(s, schema))
     }
 
     /** Name of the newest committed generation's catalog table,
       * registering it first if this session's catalog has never seen it
-      * (fresh session over a persisted store): the marker carries the
-      * data subdirectory and bucket count, so the bucketed-read handle
-      * is recreated as an external table over the existing files —
-      * load after restart stays exchange-free, not just readable.
+      * (fresh session over a persisted store, [[SegmentStore.table]]).
+      * The marker's content is `<table>\t<data subdir>\t<buckets>`: the
+      * data lives under the store dir, so the store survives a session
+      * restart with the default in-memory catalog.
       */
     def currentGenTable(s: SparkSession, dir: String): Option[String] =
-      currentGen(s, dir).map { case (table, sub, buckets) =>
-        if (!s.catalog.tableExists(table)) {
-          val loc = new Path(new Path(dir), sub).toString
-          s.sql(
-            s"""CREATE TABLE $table (fp STRING, doc_id BIGINT)
-               |USING PARQUET
-               |CLUSTERED BY (fp) SORTED BY (fp) INTO $buckets BUCKETS
-               |LOCATION '$loc'""".stripMargin)
-        }
-        table
-      }
+      SegmentStore.currentGen(s, dir)
+        .map(SegmentStore.table(s, dir, _, schema, "fp"))
 
     /** Fold the current generation + every committed segment into a NEW
-      * generation: a catalog table bucketed (and sorted) by fp. After a
+      * generation: a catalog table bucketed (and sorted) by fp, scoped
+      * to the store dir ([[SegmentStore.commitBucketed]]). After a
       * compaction the per-ingest anti-join reads the store side
       * co-located — no Exchange on the store, only the (small) batch
       * side shuffles to the bucket count; segments appended afterwards
       * ride a union until the next compaction re-folds them.
       *
-      * The generation's DATA is parquet under the store dir itself
-      * (`gen_data_%05d/`); the catalog entry is an EXTERNAL bucketed
-      * table over it, name scoped to the store dir via [[tableFor]].
-      * A session restart with the default in-memory catalog loses the
-      * entry but not the data — [[currentGenTable]] re-registers the
-      * handle from the marker, so the store is never bricked and two
-      * stores can never overwrite each other's history.
+      * The marker carries no `foldedBelow` bound: the generation covers
+      * every segment it folded, and a folded segment a crash left
+      * behind is re-folded by the next compaction. The store is a SET
+      * of fingerprints, so such a duplicate row is harmless to an fp
+      * anti-join. Single concurrent writer, like segment ingest itself.
       *
-      * Commit protocol: write the bucketed data, then atomically rename
-      * a marker file (`gen_%05d`, content = table + data subdir +
-      * buckets) into the store dir; ONLY then drop the previous
-      * generation and delete the folded segments. A crash anywhere
-      * leaves a SUPERSET of the store (stale table/segments), which an
-      * fp anti-join is insensitive to, and the next compaction
-      * reclaims. Single concurrent writer, like segment ingest itself.
+      * `keepNewestSegments > 0` spares the newest segments from the fold
+      * — REQUIRED (=1) while a stream feeds the store: Structured
+      * Streaming may replay its most recent epoch, and the replay
+      * re-derives that epoch's survivors from its own segment file
+      * (see dedupeStreamStaged). Batch-loop ingest
+      * (dedupeIncrementalStaged) never replays, so 0 folds everything.
       *
       * @return the new generation's table name
       */
@@ -283,113 +224,23 @@ object Dedup {
         buckets: Int,
         tablePrefix: String = "graft_fp_store",
         keepNewestSegments: Int = 0): String = {
-      require(buckets > 0, "buckets must be positive")
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(p)
-      // numeric marker order + \d{5,}: %05d widens past 99999, where a
-      // 5-digit-only regex would lose the newest marker and a
-      // lexicographic sort would mis-order it (seg_100000 < seg_99999)
-      val prevMarker = fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-        .map(_.getPath.getName)
-        .sortBy(_.stripPrefix("gen_").toLong).lastOption
-      val prev = currentGen(s, dir)
-      val prevTable = currentGenTable(s, dir)
-      val gen = prevMarker.map(_.stripPrefix("gen_").toInt + 1).getOrElse(1)
-      // keepNewestSegments > 0 spares the newest segments from the fold
-      // — REQUIRED (=1) while a stream feeds the store: Structured
-      // Streaming may replay its most recent epoch, and the replay
-      // re-derives that epoch's survivors from its own segment file
-      // (see dedupeStreamStaged); folding it away would break the
-      // replay. Batch-loop ingest (dedupeIncrementalStaged) never
-      // replays, so 0 folds everything.
-      val segs = segments(s, dir).dropRight(keepNewestSegments)
-      val table = tableFor(tablePrefix, dir, gen)
-      val dataSub = f"gen_data_$gen%05d"
-      val dataDir = new Path(p, dataSub).toString
-      val folded =
-        if (segs.isEmpty)
-          prevTable
-            .map(t => s.table(t).select(col("fp"), col("doc_id")))
-            .getOrElse(graft.util.Frames.emptyLocal(s, schema))
-        else prevTable
-          .map(t => s.table(t).select(col("fp"), col("doc_id")))
-          .map(_.unionByName(s.read.schema(schema).parquet(segs: _*)))
-          .getOrElse(s.read.schema(schema).parquet(segs: _*))
-      // a crashed prior attempt at this gen may have left the table
-      // registered over a half-written dir — drop the handle so the
-      // external overwrite starts clean
-      s.sql(s"DROP TABLE IF EXISTS $table")
-      folded.write
-        .bucketBy(buckets, "fp").sortBy("fp")
-        .option("path", dataDir)
-        .mode("overwrite").saveAsTable(table)
-      // commit: temp-write + rename, atomic on HDFS-like filesystems
-      val tmp = new Path(p, f"gen_$gen%05d.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(s"$table\t$dataSub\t$buckets".getBytes("UTF-8"))
-      finally out.close()
-      fs.rename(tmp, new Path(p, f"gen_$gen%05d"))
-      // cleanup strictly after the commit: the handle, the marker, the
-      // prior generation's data dir, and the folded segments
-      prevTable.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      prevMarker.foreach(m => fs.delete(new Path(p, m), false): Unit)
-      prev.foreach { case (_, sub, _) =>
-        fs.delete(new Path(p, sub), true): Unit
-      }
-      segs.foreach(seg => fs.delete(new Path(seg), true): Unit)
-      table
+      val prev = SegmentStore.currentGen(s, dir)
+      val folded = SegmentStore.foldScope(s, dir, prev, keepNewestSegments)
+      SegmentStore.commitBucketed(s, dir, prev, folded, rows(s, dir, prev, folded),
+        "fp", buckets, tablePrefix, foldedBelow = None)
     }
 
     /** GC of crash debris a compaction's post-commit cleanup never got
       * to: every NON-newest generation marker (with its catalog handle
-      * and data directory) and any leftover `gen_*.tmp` commit files.
-      * All of it is invisible to [[load]] (which reads only the newest
-      * marker), so purging is safe whenever the single writer isn't
-      * mid-compact; a crash mid-purge just leaves less debris for the
-      * next purge. Folded SEGMENTS a crashed cleanup left behind are
-      * reclaimed by the next [[compact]] (it re-folds every committed
-      * segment), so they are not this method's job.
+      * and data directory) and any leftover `gen_*.tmp` commit files
+      * ([[SegmentStore.purge]]). Folded SEGMENTS a crashed cleanup left
+      * behind are reclaimed by the next [[compact]], which re-folds
+      * every committed segment.
       *
       * @return paths deleted.
       */
-    def purgeSuperseded(s: SparkSession, dir: String): Seq[String] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return Seq.empty
-      val markers = fs.listStatus(p).toSeq
-        .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-        .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-      val stale = markers.dropRight(1)
-      val tmps = fs.listStatus(p).toSeq
-        .filter(st => st.isFile &&
-          st.getPath.getName.matches("gen_\\d{5,}\\.tmp"))
-      val deleted = Seq.newBuilder[String]
-      stale.foreach { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        content.split("\t") match {
-          case Array(table, sub, _) =>
-            s.sql(s"DROP TABLE IF EXISTS $table")
-            val data = new Path(p, sub)
-            if (fs.exists(data)) {
-              fs.delete(data, true)
-              deleted += data.toString
-            }
-          case _ => // malformed stale marker: just drop the marker below
-        }
-        fs.delete(st.getPath, false)
-        deleted += st.getPath.toString
-      }
-      tmps.foreach { st =>
-        fs.delete(st.getPath, false)
-        deleted += st.getPath.toString
-      }
-      deleted.result()
-    }
+    def purgeSuperseded(s: SparkSession, dir: String): Seq[String] =
+      SegmentStore.purge(s, dir)
   }
 
   /** [[dedupeIncremental]] with the store persistence built in — the
@@ -412,7 +263,7 @@ object Dedup {
       textCol: String,
       idCol: String): DataFrame = {
     val s = batch.sparkSession
-    val existing = FingerprintStore.segments(s, storeDir)
+    val nextIdx = SegmentStore.nextId(s, storeDir)
     // gen table (bucketed, shuffle-free side) + post-compaction segments
     val store = FingerprintStore.load(s, storeDir)
     // a null-text doc has a null fingerprint; stored as-is it would pass
@@ -426,10 +277,7 @@ object Dedup {
       .withColumn("fp", coalesce(col("fp"), lit("__null_text__")))
       .join(store.select(col("fp")), Seq("fp"), "left_anti")
       .select(col("fp"), col("keep_id").cast("long").as("doc_id"))
-    val nextIdx = existing
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
-    val seg = f"$storeDir/seg_$nextIdx%05d"
+    val seg = SegmentStore.segPath(storeDir, nextIdx)
     // overwrite: reclaims a partial (uncommitted) directory left by a
     // crashed attempt at the same index
     keepers.write.mode("overwrite").parquet(seg)
@@ -466,15 +314,12 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     import graft.functions.BloomFunctions
     val s = batch.sparkSession
-    val existing = FingerprintStore.segments(s, storeDir)
+    val nextIdx = SegmentStore.nextId(s, storeDir)
     val store = FingerprintStore.load(s, storeDir)
     val keepers = exact(batch, textCol, idCol)
       .withColumn("fp", coalesce(col("fp"), lit("__null_text__")))
       .select(col("fp"), col("keep_id").cast("long").as("doc_id"))
-    val nextIdx = existing
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
-    val seg = f"$storeDir/seg_$nextIdx%05d"
+    val seg = SegmentStore.segPath(storeDir, nextIdx)
     // parquet/catalog row count: metadata-only, no data scan
     val storeRows = store.count()
     if (storeRows == 0L) {
@@ -519,10 +364,9 @@ object Dedup {
       idCol: String,
       batchId: Long): DataFrame = {
     val s = batch.sparkSession
-    val segName = f"seg_$batchId%05d"
-    val seg = s"$storeDir/$segName"
+    val seg = SegmentStore.segPath(storeDir, batchId)
     val alreadyCommitted =
-      FingerprintStore.segments(s, storeDir).exists(_.endsWith(segName))
+      SegmentStore.segments(s, storeDir).exists(_._1 == batchId)
     if (!alreadyCommitted) {
       val store = FingerprintStore.loadBefore(s, storeDir, batchId)
       val keepers = exact(batch, textCol, idCol)
@@ -575,7 +419,7 @@ object Dedup {
       bands: Int = 4,
       ngram: Int = 2): DataFrame = {
     val s = batch.sparkSession
-    val existing = FingerprintStore.segments(s, storeDir)
+    val nextIdx = SegmentStore.nextId(s, storeDir)
     val store = FingerprintStore.load(s, storeDir)
     // materialize the band keys ONCE: the frame feeds four consumers
     // (both sides of the within-batch self-join, the store probe, the
@@ -591,10 +435,7 @@ object Dedup {
       .localCheckpoint(false)
     val dropIds = nearDropIds(keys, store, idCol)
     val newKeys = nearNewKeys(keys, store, idCol)
-    val nextIdx = existing
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
-    val seg = f"$storeDir/seg_$nextIdx%05d"
+    val seg = SegmentStore.segPath(storeDir, nextIdx)
     newKeys.write.mode("overwrite").parquet(seg)
     batch.join(dropIds, Seq(idCol), "left_anti")
   }
@@ -621,7 +462,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     import graft.functions.BloomFunctions
     val s = batch.sparkSession
-    val existing = FingerprintStore.segments(s, storeDir)
+    val nextIdx = SegmentStore.nextId(s, storeDir)
     val store = FingerprintStore.load(s, storeDir)
     val storeRows = store.count() // metadata-only
     val keys = bandKeys(
@@ -653,10 +494,7 @@ object Dedup {
             .join(store.select(col("fp")), Seq("fp"), "left_anti"))
         (drops, news)
       }
-    val nextIdx = existing
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
-    val seg = f"$storeDir/seg_$nextIdx%05d"
+    val seg = SegmentStore.segPath(storeDir, nextIdx)
     newKeys.write.mode("overwrite").parquet(seg)
     batch.join(dropIds, Seq(idCol), "left_anti")
   }
@@ -719,8 +557,7 @@ object Dedup {
       bands: Int = 4,
       ngram: Int = 2): DataFrame = {
     val s = batch.sparkSession
-    val segName = f"seg_$batchId%05d"
-    val seg = s"$storeDir/$segName"
+    val seg = SegmentStore.segPath(storeDir, batchId)
     // materialized once for its four consumers (see
     // dedupeNearIncrementalStaged); replay determinism is unaffected —
     // the checkpoint just pins the same deterministic computation
@@ -731,7 +568,7 @@ object Dedup {
       .localCheckpoint(false)
     val store = FingerprintStore.loadBefore(s, storeDir, batchId)
     val alreadyCommitted =
-      FingerprintStore.segments(s, storeDir).exists(_.endsWith(segName))
+      SegmentStore.segments(s, storeDir).exists(_._1 == batchId)
     if (!alreadyCommitted)
       nearNewKeys(keys, store, idCol).write.mode("overwrite").parquet(seg)
     batch.join(nearDropIds(keys, store, idCol), Seq(idCol), "left_anti")
@@ -1347,22 +1184,13 @@ object Dedup {
     * suites are human-curated; the probe dedups residual overlap).
     */
   object EvalGramStore {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
     val schema: StructType = StructType(Seq(StructField("g", StringType)))
 
-    def segments(s: SparkSession, dir: String): Seq[String] = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
-        .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.toString)
-        .sortBy(p => p.substring(p.lastIndexOf("seg_") + 4).toLong) // numeric
-    }
+    def segments(s: SparkSession, dir: String): Seq[String] =
+      SegmentStore.segments(s, dir).map(_._2)
 
     /** Every registered suite's grams as one schema-pinned relation. */
     def load(s: SparkSession, dir: String): DataFrame = {
@@ -1374,16 +1202,12 @@ object Dedup {
 
     /** Append one eval suite's distinct `n`-grams as the next segment. */
     def registerEval(
-        eval: DataFrame, dir: String, textCol: String, n: Int = 3): Unit = {
-      val s = eval.sparkSession
-      val nextIdx = segments(s, dir)
-        .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-        .maxOption.map(_ + 1).getOrElse(0)
+        eval: DataFrame, dir: String, textCol: String, n: Int = 3): Unit =
       eval
         .select(explode(array_distinct(wordNgrams(col(textCol), n))).as("g"))
         .distinct()
-        .write.mode("overwrite").parquet(f"$dir/seg_$nextIdx%05d")
-    }
+        .write.mode("overwrite").parquet(SegmentStore.segPath(dir,
+          SegmentStore.nextId(eval.sparkSession, dir)))
   }
 
   /** [[decontaminate]] against the accumulated [[EvalGramStore]]: drop
@@ -1912,7 +1736,7 @@ object Dedup {
     require(maxBacklogBatches >= 1,
       "backfill: maxBacklogBatches must be >= 1")
     val s = batches.sparkSession
-    val existing = FingerprintStore.segments(s, storeDir)
+    val nextIdx = SegmentStore.nextId(s, storeDir)
     val store = FingerprintStore.load(s, storeDir)
     val base0 = graft.util.OperatorCaches.persisted(
       Similarity.spread(batches.select(
@@ -1958,9 +1782,6 @@ object Dedup {
       .join(seen, Seq("fp"), "left")
       .filter(col("g").isNotNull &&
         (col("cnt") >= 2 || col("__minb") < col("__b") || col("__seen")))
-    val nextIdx = existing
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
     // one committed segment per batch, ascending — the layout the
     // sequential loop would have produced; the distinct-batch collect
     // (and the per-batch segment-write job count) is bounded by
@@ -1979,18 +1800,17 @@ object Dedup {
     // dirs, every one reading the occ cache — warm: the bs collect
     // above materialized it — against the PINNED pre-backfill `seen`
     // list), so they run concurrently on driver side-threads
-    // (guide §2.6); join() propagates any write's failure
-    bs.zipWithIndex.map { case (b, i) =>
-      java.util.concurrent.CompletableFuture.runAsync(() =>
-        occ.filter(col("g").isNotNull &&
-            col("__minb") === b && col("__b") === b)
-          .groupBy(col("g"))
-          .agg(min(col(idCol).cast("long")).as("doc_id"))
-          .select(col("g").cast("string").as("fp"), col("doc_id"))
-          .join(seen.select(col("fp")), Seq("fp"), "left_anti")
-          .write.mode("overwrite")
-          .parquet(f"$storeDir/seg_${nextIdx + i}%05d"))
-    }.foreach(_.join())
+    // (guide §2.6), every one joined before this returns or throws
+    SegmentStore.withWrites(bs.toSeq.zipWithIndex.map { case (b, i) => () =>
+      occ.filter(col("g").isNotNull &&
+          col("__minb") === b && col("__b") === b)
+        .groupBy(col("g"))
+        .agg(min(col(idCol).cast("long")).as("doc_id"))
+        .select(col("g").cast("string").as("fp"), col("doc_id"))
+        .join(seen.select(col("fp")), Seq("fp"), "left_anti")
+        .write.mode("overwrite")
+        .parquet(SegmentStore.segPath(storeDir, nextIdx + i))
+    })(())
     (base, occ, dup)
   }
 
@@ -2009,7 +1829,7 @@ object Dedup {
       idCol: String,
       k: Int): (DataFrame, DataFrame, DataFrame) = {
     val s = batch.sparkSession
-    val existing = FingerprintStore.segments(s, storeDir)
+    val nextIdx = SegmentStore.nextId(s, storeDir)
     val store = FingerprintStore.load(s, storeDir)
     // persist (not eager-checkpoint) both the tokenized base and the
     // occurrence frame: the segment write below is then the batch's ONE
@@ -2052,16 +1872,13 @@ object Dedup {
     // grow every later probe's build side for zero information (a
     // replayed batch appends an empty segment). Overwrite reclaims a
     // crashed attempt's partial dir at the same index.
-    val nextIdx = existing
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
     graft.util.Described(s, "span:seg")(
       occ.filter(col("g").isNotNull)
         .groupBy(col("g"))
         .agg(min(col(idCol).cast("long")).as("doc_id"))
         .select(col("g").cast("string").as("fp"), col("doc_id"))
         .join(seen, Seq("fp"), "left_anti")
-        .write.mode("overwrite").parquet(f"$storeDir/seg_$nextIdx%05d"))
+        .write.mode("overwrite").parquet(SegmentStore.segPath(storeDir, nextIdx)))
     (base, occ, dup)
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.util.SegmentStore
 
 /** Inverted-index retrieval over the document corpus — the primitives a
   * training-data pipeline uses to FIND things in 100 TB of text (mining
@@ -154,14 +155,11 @@ object Retrieval {
     */
   def appendPostings(
       batch: DataFrame, dir: String, textCol: String, idCol: String): Unit = {
-    val s = batch.sparkSession
-    val nextIdx = postingsSegments(s, dir)
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
     postings(batch, textCol, idCol)
       .select(col("tok"), col("doc_id").cast("long").as("doc_id"),
         col("tf"), col("dl"))
-      .write.mode("overwrite").parquet(f"$dir/seg_$nextIdx%05d")
+      .write.mode("overwrite").parquet(SegmentStore.segPath(dir,
+        SegmentStore.nextId(batch.sparkSession, dir)))
   }
 
   /** Delete support: document tombstones land as immutable
@@ -180,10 +178,6 @@ object Retrieval {
     * is a broadcast anti-join: map-only against the postings scan.
     */
   def appendTombstones(deletedIds: DataFrame, idCol: String, dir: String): Unit = {
-    val s = deletedIds.sparkSession
-    val nextIdx = segments(s, dir, "del_")
-      .map(p => p.substring(p.lastIndexOf("del_") + 4).toInt)
-      .maxOption.map(_ + 1).getOrElse(0)
     val cast = deletedIds.select(col(idCol).cast("long").as("doc_id"))
       .distinct()
     // fail fast on null/uncastable ids — a null tombstone row never
@@ -191,12 +185,13 @@ object Retrieval {
     require(cast.filter(col("doc_id").isNull).isEmpty,
       s"appendTombstones: column `$idCol` contains null or non-numeric " +
         "ids — they cannot match any indexed document")
-    cast.write.mode("overwrite").parquet(f"$dir/del_$nextIdx%05d")
+    cast.write.mode("overwrite").parquet(SegmentStore.segPath(dir,
+      SegmentStore.nextId(deletedIds.sparkSession, dir, "del_"), "del_"))
   }
 
   /** All tombstoned doc ids (distinct across delete segments). */
   def loadTombstones(s: SparkSession, dir: String): DataFrame = {
-    val segs = segments(s, dir, "del_")
+    val segs = SegmentStore.segments(s, dir, "del_").map(_._2)
     if (segs.isEmpty)
       graft.util.Frames.emptyLocal(s,
         org.apache.spark.sql.types.StructType(Seq(
@@ -221,18 +216,7 @@ object Retrieval {
       org.apache.spark.sql.types.LongType)))
 
   def postingsSegments(s: SparkSession, dir: String): Seq[String] =
-    segments(s, dir, "seg_")
-
-  private def segments(s: SparkSession, dir: String, prefix: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
-      .filter(st => fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-      .sortBy(p => p.substring(p.lastIndexOf(prefix) + prefix.length).toLong)
-  }
+    SegmentStore.segments(s, dir).map(_._2)
 
   /** All committed segments as one schema-pinned relation. */
   def loadPostings(s: SparkSession, dir: String): DataFrame = {

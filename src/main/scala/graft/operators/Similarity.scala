@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
+import graft.util.SegmentStore
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -151,7 +152,6 @@ object Similarity {
   }
 
   object IvfIndex {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.SparkSession
 
     /** Committed segment names under `cells/` (`base`, `delta_00000`, …),
@@ -161,23 +161,14 @@ object Similarity {
       * every load) and is overwritten by the next append claiming that
       * index.
       */
-    def committedSegs(spark: SparkSession, path: String): Seq[String] = {
-      val p = new Path(s"$path/cells")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-        .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-        .map(_.getPath.getName.stripPrefix("seg="))
-        // base first, then deltas in NUMERIC id order (lexicographic
-        // would put delta_100000 before delta_99999)
-        .sortBy(n =>
-          if (n == "base") -1L else n.stripPrefix("delta_").toLong)
-    }
+    def committedSegs(spark: SparkSession, path: String): Seq[String] =
+      (if (SegmentStore.committed(spark, s"$path/cells/seg=base")) Seq("base") else Nil) ++
+        deltaSegments(spark, path)
 
     /** Committed APPEND segments only (excludes the base build). */
     def deltaSegments(spark: SparkSession, path: String): Seq[String] =
-      committedSegs(spark, path).filterNot(_ == "base")
+      SegmentStore.segments(spark, s"$path/cells", "seg=delta_")
+        .map { case (_, p) => p.substring(p.lastIndexOf("/seg=") + 5) }
 
     private[graft] def loadCenters(
         spark: SparkSession, path: String): Seq[Seq[Double]] =
@@ -231,15 +222,13 @@ object Similarity {
         vecCol: String,
         idCol: String): Unit = {
       val centers = loadCenters(spark, path)
-      val nextIdx = deltaSegments(spark, path)
-        .map(_.stripPrefix("delta_").toInt)
-        .maxOption.map(_ + 1).getOrElse(0)
+      val nextIdx = SegmentStore.nextId(spark, s"$path/cells", "seg=delta_")
       val raw = batch.select(col(idCol).as("neighbor_id"), asDouble(col(vecCol)).as("cv"))
       spread(raw)
         .withColumn("cell", element_at(nearestCells(col("cv"), centers, 1), 1))
         .repartition(col("cell")) // same small-files guard as save()
         .write.mode("overwrite").partitionBy("cell")
-        .parquet(f"$path/cells/seg=delta_$nextIdx%05d")
+        .parquet(SegmentStore.segPath(s"$path/cells", nextIdx, "seg=delta_"))
     }
 
     /** DELETE vectors from a saved index — the q101-postings contract on
@@ -257,15 +246,6 @@ object Similarity {
         path: String,
         ids: DataFrame,
         idCol: String): Unit = {
-      val p = new Path(s"$path/tombs")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val nextIdx =
-        if (!fs.exists(p)) 0
-        else fs.listStatus(p).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("del_"))
-          .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-          .map(_.getPath.getName.stripPrefix("del_").toInt)
-          .maxOption.map(_ + 1).getOrElse(0)
       val cast = ids.select(col(idCol).cast("long").as("neighbor_id"))
         .distinct()
       // fail fast on null/uncastable ids: a null written into the
@@ -275,19 +255,14 @@ object Similarity {
       require(cast.filter(col("neighbor_id").isNull).isEmpty,
         s"IvfIndex.delete: column `$idCol` contains null or " +
           "non-numeric ids — they cannot match any indexed vector")
-      cast.write.mode("overwrite").parquet(f"$path/tombs/del_$nextIdx%05d")
+      val tombs = s"$path/tombs"
+      cast.write.mode("overwrite").parquet(SegmentStore.segPath(tombs,
+        SegmentStore.nextId(spark, tombs, "del_"), "del_"))
     }
 
     /** All tombstoned ids (distinct across committed delete segments). */
     def tombstones(spark: SparkSession, path: String): DataFrame = {
-      val p = new Path(s"$path/tombs")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val segs =
-        if (!fs.exists(p)) Seq.empty[String]
-        else fs.listStatus(p).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("del_"))
-          .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-          .map(_.getPath.toString)
+      val segs = SegmentStore.segments(spark, s"$path/tombs", "del_").map(_._2)
       if (segs.isEmpty)
         graft.util.Frames.emptyLocal(spark,
           org.apache.spark.sql.types.StructType(Seq(

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions
+import graft.util.SegmentStore
 
 /** Streaming token-budget admission — q96's mixture quota run as an
   * INGEST policy instead of a ranking pass: documents arrive in order,
@@ -165,48 +167,22 @@ object BudgetStream {
     }
 
   /** GC of crash debris (stale generations, `gen_*.tmp`, segments
-    * orphaned below `foldedBelow`) — see [[MeterGc.purgeSuperseded]].
+    * orphaned below `foldedBelow`) — see [[SegmentStore.purge]].
     */
   def purgeSuperseded(s: SparkSession, dir: String): Seq[String] =
-    MeterGc.purgeSuperseded(s, dir, "m_")
+    SegmentStore.purge(s, dir, "m_")
 
-  private def segPath(dir: String, id: Long) = f"$dir/m_$id%05d"
+  private def segPath(dir: String, id: Long) = SegmentStore.segPath(dir, id, "m_")
 
-  /** Newest committed generation: (dataSub, foldedBelow, genNo) — the
-    * QualityStream marker protocol over per-source spent rows.
-    */
-  private def currentGen(
-      s: SparkSession, dir: String): Option[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-      .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-      .lastOption.map { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        val genNo = st.getPath.getName.stripPrefix("gen_").toLong
-        content.split("\t") match {
-          case Array(sub, below) => (sub, below.toLong, genNo)
-          case other => sys.error(
-            s"malformed budget-meter generation marker in $dir: " +
-              other.mkString("\\t"))
-        }
-      }
-  }
+  private def meterSchema(srcCol: String) = StructType(Seq(
+    StructField(srcCol, StringType), StructField("__spent", LongType)))
 
   /** Fold committed per-source meter segments (except the newest
     * `keepNewestSegments`) into ONE generation — one row per source,
-    * spent summed — absorbing any previous generation. The
-    * [[graft.streaming.QualityStream.compact]] contract exactly:
-    * keep ≥ 1 while a stream feeds the store (a replayed epoch reads
-    * strictly below itself and [[loadSpent]] fails loudly past the
-    * bound); sum-safe under crashes because the reader drops segments
-    * below `foldedBelow` by id, so half-deleted folds can never
-    * double-count.
+    * spent summed — absorbing any previous generation
+    * ([[SegmentStore.compactSums]]). Keep ≥ 1 while a stream feeds the
+    * store: a replayed epoch reads strictly below itself and
+    * [[loadSpent]] fails loudly past the bound.
     *
     * @return the new `foldedBelow` bound, or -1 if nothing to fold.
     */
@@ -214,59 +190,9 @@ object BudgetStream {
       s: SparkSession,
       dir: String,
       srcCol: String = "source",
-      keepNewestSegments: Int = 1): Long = {
-    require(keepNewestSegments >= 0,
-      "compact: keepNewestSegments must be >= 0")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val prev = currentGen(s, dir)
-    val prevBelow = prev.map(_._2).getOrElse(0L)
-    val segs = committedSegments(s, dir)
-      .filter(_._1 >= prevBelow)
-      .dropRight(keepNewestSegments)
-    if (segs.isEmpty) return -1L
-    val foldedBelow = segs.map(_._1).max + 1
-    val genNo = prev.map(_._3 + 1).getOrElse(1L)
-    val dataSub = f"gen_data_$genNo%05d"
-    val sources = prev.map(g => new org.apache.hadoop.fs.Path(p, g._1)
-      .toString).toSeq ++ segs.map(_._2)
-    // file-count-BOUNDED generation write, not coalesce(1): one row per
-    // SOURCE domain — millions at 100 TB — must not serialize through a
-    // single write task (the FrontierStream.compact rationale verbatim;
-    // local[32] layout unchanged: 32 shuffle partitions → 1 file).
-    s.read.parquet(sources: _*)
-      .groupBy(col(srcCol)).agg(sum(col("__spent")).as("__spent"))
-      .coalesce(math.max(1, s.sessionState.conf.numShufflePartitions / 32))
-      .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(p, dataSub).toString)
-    val tmp = new org.apache.hadoop.fs.Path(p, f"gen_$genNo%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$dataSub\t$foldedBelow".getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(p, f"gen_$genNo%05d"))
-    prev.foreach { case (sub, _, n) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, f"gen_$n%05d"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(p, sub), true): Unit
-    }
-    segs.foreach { case (_, path) =>
-      fs.delete(new org.apache.hadoop.fs.Path(path), true): Unit
-    }
-    foldedBelow
-  }
-
-  private def committedSegments(
-      s: SparkSession, dir: String): Seq[(Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("m_"))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.getName.stripPrefix("m_").toLong ->
-        st.getPath.toString)
-      .sortBy(_._1)
-  }
+      keepNewestSegments: Int = 1): Long =
+    SegmentStore.compactSums(s, dir, meterSchema(srcCol), Seq(srcCol),
+      keepNewestSegments, "m_")
 
   /** Per-source meter from the generation (if any) plus every committed
     * segment with id in `[foldedBelow, beforeId)` (pass Long.MaxValue
@@ -276,25 +202,6 @@ object BudgetStream {
     */
   def loadSpent(
       s: SparkSession, dir: String, beforeId: Long,
-      srcCol: String = "source"): DataFrame = {
-    val gen = currentGen(s, dir)
-    val foldedBelow = gen.map(_._2).getOrElse(0L)
-    require(foldedBelow <= beforeId,
-      s"budget-meter compaction folded segments up to $foldedBelow, " +
-        s"beyond the requested history bound $beforeId — compact with " +
-        "keepNewestSegments >= 1 while a stream feeds the store")
-    val segs = gen.map(g => s"$dir/${g._1}").toSeq ++
-      committedSegments(s, dir)
-        .filter { case (id, _) => id >= foldedBelow && id < beforeId }
-        .map(_._2)
-    if (segs.isEmpty)
-      graft.util.Frames.emptyLocal(s,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(srcCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__spent",
-            org.apache.spark.sql.types.LongType))))
-    else s.read.parquet(segs: _*)
-      .groupBy(col(srcCol)).agg(sum(col("__spent")).as("__spent"))
-  }
+      srcCol: String = "source"): DataFrame =
+    SegmentStore.loadSums(s, dir, beforeId, meterSchema(srcCol), Seq(srcCol), "m_")
 }

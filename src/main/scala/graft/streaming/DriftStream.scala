@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.util.SegmentStore
 
 /** STREAMING corpus-drift monitor — q127's
   * ([[graft.operators.Profile.tokenDrift]]) live twin, the lambda
@@ -64,22 +65,6 @@ object DriftStream {
         expr("coalesce(cnt * 1000000L div tot, 0L)").as("ppm_base"))
   }
 
-  private def segPath(stateDir: String, id: Long): String =
-    f"$stateDir/seg_$id%05d"
-
-  private def committedSegments(
-      s: SparkSession, stateDir: String): Seq[(Long, String)] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.getName.stripPrefix("seg_").toLong ->
-        st.getPath.toString)
-      .sortBy(_._1)
-  }
-
   /** Delete segments that no FUTURE (or replayed) report can read —
     * the retention/GC a windowed meter needs instead of a fold: batch
     * k's report reads `(k − window, k]`, batch ids only move forward,
@@ -93,17 +78,9 @@ object DriftStream {
     */
   def purge(s: SparkSession, stateDir: String, window: Int): Seq[Long] = {
     require(window >= 1, "purge: window must be >= 1")
-    val segs = committedSegments(s, stateDir)
-    segs.map(_._1).maxOption match {
-      case None => Seq.empty
-      case Some(maxId) =>
-        val fs = new Path(stateDir)
-          .getFileSystem(s.sparkContext.hadoopConfiguration)
-        val dead = segs.filter { case (id, _) => id <= maxId - window }
-        dead.foreach { case (_, path) =>
-          fs.delete(new Path(path), true): Unit
-        }
-        dead.map(_._1)
+    SegmentStore.segments(s, stateDir).lastOption.fold(Seq.empty[Long]) {
+      case (maxId, _) =>
+        SegmentStore.dropBelow(s, stateDir, maxId - window + 1).map(_._1)
     }
   }
 
@@ -131,8 +108,8 @@ object DriftStream {
         explode(graft.functions.TextFunctions.tokens(col(textCol))).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cnt"))
-      .write.mode("overwrite").parquet(segPath(stateDir, batchId))
-    val winSegs = committedSegments(s, stateDir)
+      .write.mode("overwrite").parquet(SegmentStore.segPath(stateDir, batchId))
+    val winSegs = SegmentStore.segments(s, stateDir)
       .filter { case (id, _) => id > batchId - window && id <= batchId }
       .map(_._2)
     val win = s.read.schema(segSchema).parquet(winSegs: _*)

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.util.SegmentStore
 
 /** Streaming crawl-frontier scheduler — q165/q166 run as an INGEST
   * policy: discovered URLs arrive in micro-batches and each domain's
@@ -140,103 +143,28 @@ object FrontierStream {
       }
     }
 
-  /** GC of crash debris — see [[MeterGc.purgeSuperseded]]. */
+  /** GC of crash debris — see [[SegmentStore.purge]]. */
   def purgeSuperseded(s: SparkSession, dir: String): Seq[String] =
-    MeterGc.purgeSuperseded(s, dir, "m_")
+    SegmentStore.purge(s, dir, "m_")
 
-  private def segPath(dir: String, id: Long) = f"$dir/m_$id%05d"
+  private def segPath(dir: String, id: Long) = SegmentStore.segPath(dir, id, "m_")
 
-  private def currentGen(
-      s: SparkSession, dir: String): Option[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-      .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-      .lastOption.map { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        val genNo = st.getPath.getName.stripPrefix("gen_").toLong
-        content.split("\t") match {
-          case Array(sub, below) => (sub, below.toLong, genNo)
-          case other => sys.error(
-            s"malformed frontier-meter generation marker in $dir: " +
-              other.mkString("\\t"))
-        }
-      }
-  }
+  private def meterSchema(domainCol: String) = StructType(Seq(
+    StructField(domainCol, StringType), StructField("__assigned", LongType)))
 
   /** Fold committed meter segments (except the newest
     * `keepNewestSegments`) into ONE generation — one row per domain,
     * assigned counts summed — absorbing any previous generation. The
     * BudgetStream.compact contract exactly: keep ≥ 1 while a stream
-    * feeds the store; sum-safe under crashes (readers drop segments
-    * below `foldedBelow` by id, so half-deleted folds cannot
-    * double-count).
+    * feeds the store; sum-safe under crashes.
     */
   def compact(
       s: SparkSession,
       dir: String,
       domainCol: String = "domain",
-      keepNewestSegments: Int = 1): Long = {
-    require(keepNewestSegments >= 0,
-      "compact: keepNewestSegments must be >= 0")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val prev = currentGen(s, dir)
-    val prevBelow = prev.map(_._2).getOrElse(0L)
-    val segs = committedSegments(s, dir)
-      .filter(_._1 >= prevBelow)
-      .dropRight(keepNewestSegments)
-    if (segs.isEmpty) return -1L
-    val foldedBelow = segs.map(_._1).max + 1
-    val genNo = prev.map(_._3 + 1).getOrElse(1L)
-    val dataSub = f"gen_data_$genNo%05d"
-    val sources = prev.map(g => new org.apache.hadoop.fs.Path(p, g._1)
-      .toString).toSeq ++ segs.map(_._2)
-    // file-count-BOUNDED generation write, not coalesce(1): the meter
-    // is one row per DOMAIN — millions of rows at 100 TB — and a
-    // single-task write is the serialization class r17/r18 removed
-    // everywhere else. 1/32 of the shuffle partitions keeps the gate's
-    // local[32] layout identical (32 partitions → 1 file) while a
-    // production session with thousands of shuffle partitions fans the
-    // write out; readers are directory-based.
-    s.read.parquet(sources: _*)
-      .groupBy(col(domainCol)).agg(sum(col("__assigned")).as("__assigned"))
-      .coalesce(math.max(1, s.sessionState.conf.numShufflePartitions / 32))
-      .write.mode("overwrite")
-      .parquet(new org.apache.hadoop.fs.Path(p, dataSub).toString)
-    val tmp = new org.apache.hadoop.fs.Path(p, f"gen_$genNo%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$dataSub\t$foldedBelow".getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(p, f"gen_$genNo%05d"))
-    prev.foreach { case (sub, _, n) =>
-      fs.delete(new org.apache.hadoop.fs.Path(p, f"gen_$n%05d"), false)
-      fs.delete(new org.apache.hadoop.fs.Path(p, sub), true): Unit
-    }
-    segs.foreach { case (_, path) =>
-      fs.delete(new org.apache.hadoop.fs.Path(path), true): Unit
-    }
-    foldedBelow
-  }
-
-  private def committedSegments(
-      s: SparkSession, dir: String): Seq[(Long, String)] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("m_"))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.getName.stripPrefix("m_").toLong ->
-        st.getPath.toString)
-      .sortBy(_._1)
-  }
+      keepNewestSegments: Int = 1): Long =
+    SegmentStore.compactSums(s, dir, meterSchema(domainCol), Seq(domainCol),
+      keepNewestSegments, "m_")
 
   /** Per-domain assigned counts from the generation (if any) plus every
     * committed segment with id in `[foldedBelow, beforeId)`. Fails
@@ -245,25 +173,7 @@ object FrontierStream {
     */
   def loadAssigned(
       s: SparkSession, dir: String, beforeId: Long,
-      domainCol: String = "domain"): DataFrame = {
-    val gen = currentGen(s, dir)
-    val foldedBelow = gen.map(_._2).getOrElse(0L)
-    require(foldedBelow <= beforeId,
-      s"frontier-meter compaction folded segments up to $foldedBelow, " +
-        s"beyond the requested history bound $beforeId — compact with " +
-        "keepNewestSegments >= 1 while a stream feeds the store")
-    val segs = gen.map(g => s"$dir/${g._1}").toSeq ++
-      committedSegments(s, dir)
-        .filter { case (id, _) => id >= foldedBelow && id < beforeId }
-        .map(_._2)
-    if (segs.isEmpty)
-      graft.util.Frames.emptyLocal(s,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(domainCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__assigned",
-            org.apache.spark.sql.types.LongType))))
-    else s.read.parquet(segs: _*)
-      .groupBy(col(domainCol)).agg(sum(col("__assigned")).as("__assigned"))
-  }
+      domainCol: String = "domain"): DataFrame =
+    SegmentStore.loadSums(s, dir, beforeId, meterSchema(domainCol),
+      Seq(domainCol), "m_")
 }

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.LmScore
+import graft.util.SegmentStore
 
 /** STREAMING quality meter — q136's
   * ([[graft.operators.LmScore.bigramPerplexity]]) live twin, the lambda
@@ -53,64 +53,15 @@ object QualityStream {
     StructField("nll_micro", LongType)))
 
   private def segPath(stateDir: String, id: Long): String =
-    f"$stateDir/seg_$id%05d"
-
-  private def committedSegments(
-      s: org.apache.spark.sql.SparkSession,
-      stateDir: String): Seq[(Long, String)] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(st => st.getPath.getName.stripPrefix("seg_").toLong ->
-        st.getPath.toString)
-      .sortBy(_._1)
-  }
-
-  /** Newest committed generation: (dataSub, foldedBelow, genNo) from
-    * the highest `gen_*` marker; the generation row covers segments
-    * with id strictly below `foldedBelow`.
-    */
-  private def currentGen(
-      s: org.apache.spark.sql.SparkSession,
-      stateDir: String): Option[(String, Long, Long)] = {
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("gen_\\d{5,}"))
-      .sortBy(_.getPath.getName.stripPrefix("gen_").toLong)
-      .lastOption.map { st =>
-        val in = fs.open(st.getPath)
-        val content =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        val genNo = st.getPath.getName.stripPrefix("gen_").toLong
-        content.split("\t") match {
-          case Array(sub, below) => (sub, below.toLong, genNo)
-          case other => sys.error(
-            s"malformed quality-meter generation marker in $stateDir: " +
-              other.mkString("\\t"))
-        }
-      }
-  }
+    SegmentStore.segPath(stateDir, id)
 
   /** Fold committed segments (except the newest `keepNewestSegments`)
     * into ONE generation row — the cumulative (n_docs, n_keep,
     * nll_micro) over everything folded, absorbing any previous
-    * generation. Keep ≥ 1 while a stream feeds the store: Structured
-    * Streaming may replay its most recent epoch, whose report requires
-    * `foldedBelow ≤ batchId` ([[meterStaged]] fails loudly otherwise).
-    *
-    * Commit protocol = the FingerprintStore shape: write the one-row
-    * parquet under `gen_data_<n>/`, atomically rename the `gen_<n>`
-    * marker (content = data subdir + foldedBelow), THEN delete the
-    * previous generation and the folded segments. A crash anywhere
-    * leaves a superset the reader cannot double-count (segments below
-    * `foldedBelow` are excluded by id, stale generations by marker
-    * ordering) and the next compaction reclaims.
+    * generation ([[SegmentStore.compactSums]]). Keep ≥ 1 while a stream
+    * feeds the store: Structured Streaming may replay its most recent
+    * epoch, whose report requires `foldedBelow ≤ batchId`
+    * ([[meterStaged]] fails loudly otherwise).
     *
     * @return the new `foldedBelow` bound, or -1 if there was nothing
     *         to fold (no new generation committed).
@@ -118,41 +69,8 @@ object QualityStream {
   def compact(
       s: org.apache.spark.sql.SparkSession,
       stateDir: String,
-      keepNewestSegments: Int = 1): Long = {
-    require(keepNewestSegments >= 0,
-      "compact: keepNewestSegments must be >= 0")
-    val p = new Path(stateDir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val prev = currentGen(s, stateDir)
-    val prevBelow = prev.map(_._2).getOrElse(0L)
-    val segs = committedSegments(s, stateDir)
-      .filter(_._1 >= prevBelow)
-      .dropRight(keepNewestSegments)
-    if (segs.isEmpty) return -1L
-    val foldedBelow = segs.map(_._1).max + 1
-    val genNo = prev.map(_._3 + 1).getOrElse(1L)
-    val dataSub = f"gen_data_$genNo%05d"
-    val sources = prev.map(g => new Path(p, g._1).toString).toSeq ++
-      segs.map(_._2)
-    s.read.schema(segSchema).parquet(sources: _*)
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_keep")).as("n_keep"),
-        sum(col("nll_micro")).as("nll_micro"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(new Path(p, dataSub).toString)
-    val tmp = new Path(p, f"gen_$genNo%05d.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$dataSub\t$foldedBelow".getBytes("UTF-8"))
-    finally out.close()
-    fs.rename(tmp, new Path(p, f"gen_$genNo%05d"))
-    // cleanup strictly after the commit — all invisible to readers now
-    prev.foreach { case (sub, _, n) =>
-      fs.delete(new Path(p, f"gen_$n%05d"), false)
-      fs.delete(new Path(p, sub), true): Unit
-    }
-    segs.foreach { case (_, path) => fs.delete(new Path(path), true): Unit }
-    foldedBelow
-  }
+      keepNewestSegments: Int = 1): Long =
+    SegmentStore.compactSums(s, stateDir, segSchema, Nil, keepNewestSegments)
 
   /** Sequential-ingest core: score `batch` under the frozen `model`,
     * land its one-row summary as segment `batchId`, and report the
@@ -181,20 +99,12 @@ object QualityStream {
           1L).otherwise(0L)).as("n_keep"),
         sum(coalesce(col("nll_micro"), lit(0L))).as("nll_micro"))
       .write.mode("overwrite").parquet(segPath(stateDir, batchId))
-    val gen = currentGen(s, stateDir)
-    val foldedBelow = gen.map(_._2).getOrElse(0L)
-    require(foldedBelow <= batchId,
-      s"quality-meter compaction folded segments up to $foldedBelow, " +
-        s"beyond this epoch $batchId — compact with " +
-        "keepNewestSegments >= 1 while a stream feeds the store")
-    val segs = gen.map(g => s"$stateDir/${g._1}").toSeq ++
-      committedSegments(s, stateDir)
-        .filter { case (id, _) => id >= foldedBelow && id <= batchId }
-        .map(_._2)
-    val cum = s.read.schema(segSchema).parquet(segs: _*)
-      .agg(sum(col("n_docs")).as("cum_docs"),
-        sum(col("n_keep")).as("cum_keep"),
-        sum(col("nll_micro")).as("cum_nll_micro"))
+    // history strictly below this epoch (fails loudly if a fold
+    // covered it), plus the epoch's own segment
+    val cum = SegmentStore.sums(s.read.schema(segSchema).parquet(
+        SegmentStore.historyPaths(s, stateDir, batchId) :+
+          segPath(stateDir, batchId): _*), segSchema, Nil)
+      .toDF("cum_docs", "cum_keep", "cum_nll_micro")
     s.read.schema(segSchema).parquet(segPath(stateDir, batchId))
       .crossJoin(broadcast(cum))
       .select(lit(batchId).as("batch_id"), col("n_docs"), col("n_keep"),
@@ -243,9 +153,9 @@ object QualityStream {
       .start()
 
   /** GC of crash debris (stale generations, `gen_*.tmp`, segments
-    * orphaned below `foldedBelow`) — see [[MeterGc.purgeSuperseded]].
+    * orphaned below `foldedBelow`) — see [[SegmentStore.purge]].
     */
   def purgeSuperseded(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[String] =
-    MeterGc.purgeSuperseded(s, dir, "seg_")
+    SegmentStore.purge(s, dir)
 }

@@ -360,4 +360,24 @@ class ClusterStoreSpec extends SparkSpec {
       oneShot(b1.unionByName(b2).unionByName(b3).unionByName(b4)))
     ClusterStore.dropTables(spark, dir)
   }
+
+  test("ingestBackfill: a failing map write leaves no key-segment write running") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("graft_cstore_fail")
+    // `map` is a FILE, so the first map-segment write throws while the
+    // key-segment writes run on side threads
+    val out = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(new Path(s"$dir/map"), true)
+    out.write("not a directory".getBytes("UTF-8")); out.close()
+    val n = 32
+    val backlog = (0 until n).flatMap(b =>
+        Seq((b.toLong, 10L * b + 1, fill(s"t$b")), (b.toLong, 10L * b + 2, fill(s"t$b"))))
+      .toDF("bt", "doc_id", "text")
+    intercept[Exception] {
+      ClusterStore.ingestBackfill(backlog, "bt", dir, "text", "doc_id")
+    }
+    // every key write was joined before the exception left the call
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(Dedup.FingerprintStore.segments(spark, s"$dir/keys").size == n)
+  }
 }
