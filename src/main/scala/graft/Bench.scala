@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Benchmark main — runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) on local[32] and prints one JSON line
@@ -127,14 +128,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores, 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen paths once on the smallest SF so measured numbers
     // reflect steady-state execution, not first-query class loading

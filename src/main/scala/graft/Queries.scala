@@ -582,25 +582,8 @@ object Queries {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** ANN via sign-LSH co-bucketing — not SQL-expressible (random
-    * hyperplanes); rows-only check. This corpus has WEAK neighbor
-    * separation (top-5 cosine ≈ 0.35–0.45 vs background ≈ 0, per-plane
-    * agreement ≈ 0.63), so the bucketing runs few bits × many tables
-    * (4 × 8 ⇒ measured recall@5 ≈ 0.8 at ~40% candidate fraction);
-    * high-bit few-table settings suit strongly-clustered corpora.
-    */
-  def annLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter(col("vec_id") < 10)
-    Similarity.lshTopK(emb, queries, "embedding", "vec_id", dim = 64, k = 5,
-        bits = 4, tables = 8)
-      .select(col("query_id"), col("rank").cast("long").as("rank"),
-        col("neighbor_id"), col("cosine"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
   /** Gate-certification dump for q27 — NOT the production serving path
-    * (that is [[annLsh]]/`Similarity.lshTopK`, whose ranking the random
+    * (that is `Similarity.lshTopK`, whose ranking the random
     * hyperplanes make non-SQL-expressible). Model: q39's
     * [[sketchProfile]] — certify the approximate result against ground
     * truth IN-QUERY and dump only oracle-predictable columns, so DuckDB
@@ -627,6 +610,10 @@ object Queries {
   def annLshCertified(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 10)
+    // few bits × many tables: this corpus has WEAK neighbor separation
+    // (top-5 cosine ≈ 0.35–0.45 vs background ≈ 0, per-plane agreement
+    // ≈ 0.63), so 4 × 8 gives recall@5 ≈ 0.8 at ~40% candidate fraction;
+    // high-bit few-table settings suit strongly-clustered corpora
     val lsh = Similarity.lshTopK(emb, queries, "embedding", "vec_id", dim = 64,
         k = 5, bits = 4, tables = 8)
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
@@ -3774,28 +3761,28 @@ object Queries {
       // over the same small embedding table (separate output dirs, no
       // shared state), so two run on driver side-threads while Lloyd
       // training runs here (guide §2.6 — concurrent jobs backfill each
-      // other's stragglers; job-count, not data, is this gate's cost)
-      // 1) saved IVF served PRUNED (nprobe = nlist/2 — the production
-      // setting; full probe is exact and would certify nothing)
-      val ivfBuild = java.util.concurrent.CompletableFuture.runAsync(() =>
-        Similarity.buildIvfIndex(emb, "embedding", "vec_id", nlist = 8)
-          .save(s"$root/ivf"))
-      // 2) IVF-PQ at nprobe = 4 of 8 (q119's fixed books/centers)
+      // other's stragglers; job-count, not data, is this gate's cost).
+      // Both builds are joined before the call returns or throws, so
+      // neither writes under `root` after the finally below clears it.
       val books = Seq.tabulate(4)(_ => Seq.tabulate(8)(j =>
         Seq.tabulate(16)(i => if (i == 2 * j) 1.0 else 0.0)))
       val centers = (0 until 8).map(j =>
         Seq.tabulate(64)(i => if (i == j * 8) 1.0 else 0.0))
-      val pqBuild = java.util.concurrent.CompletableFuture.runAsync(() =>
-        Similarity.buildIvfPq(emb, "embedding", "vec_id", centers, books)
+      val trained = graft.util.SegmentStore.withWrites(Seq(
+        // 1) saved IVF served PRUNED (nprobe = nlist/2 — the production
+        // setting; full probe is exact and would certify nothing)
+        () => Similarity.buildIvfIndex(emb, "embedding", "vec_id", nlist = 8)
+          .save(s"$root/ivf"),
+        // 2) IVF-PQ at nprobe = 4 of 8 (q119's fixed books/centers)
+        () => Similarity.buildIvfPq(emb, "embedding", "vec_id", centers, books)
           .repartition(col("cell"))
           .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$root/cells"))
-      // 3) trained PQ (q123's Lloyd iterations from the axis-unit
-      // seeds) — driver-side collects per iteration, so it keeps the
-      // main thread while the two writes above proceed
-      val trained = Similarity.pqTrain(emb, "embedding", "vec_id", books,
-        iters = 2)
-      ivfBuild.join(); pqBuild.join() // propagate either side's failure
+          .parquet(s"$root/cells"))) {
+        // 3) trained PQ (q123's Lloyd iterations from the axis-unit
+        // seeds) — driver-side collects per iteration, so it keeps the
+        // main thread while the two writes above proceed
+        Similarity.pqTrain(emb, "embedding", "vec_id", books, iters = 2)
+      }
       val ivfServed = Similarity.ivfQuery(
           Similarity.IvfIndex.load(s, s"$root/ivf"), queries,
           "embedding", "vec_id", k = 5, nprobe = 4)

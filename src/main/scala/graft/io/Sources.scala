@@ -104,16 +104,3 @@ final class JdbcSource(url: String, table: String, props: java.util.Properties)
 final class ParquetSource(path: String) extends BatchSource {
   def read(spark: SparkSession): DataFrame = spark.read.parquet(path)
 }
-
-/** NDJSON file as a BatchSource (corrupt-capture enabled, P7-ready). */
-final class NdjsonSource(path: String) extends BatchSource {
-  def read(spark: SparkSession): DataFrame =
-    spark.read.option("columnNameOfCorruptRecord", "_corrupt_record").json(path)
-}
-
-/** Raw Kafka-shaped frames (binary `value` column) from any format — applies
-  * the engine's cast→from_json→flatten ingest chain (P1–P3).
-  */
-object RawIngest {
-  def apply(raw: DataFrame, schema: StructType): DataFrame = Parse.ingest(raw, schema)
-}

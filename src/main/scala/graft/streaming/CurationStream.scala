@@ -134,24 +134,16 @@ class CurationStream(
       // catalog tables), so their compaction jobs overlap on one small
       // driver thread (guide §2.6 — the second compact's tasks backfill
       // executors the first's tail leaves idle); each store's own
-      // compact → purge order is preserved on its thread
+      // compact → purge order is preserved on its thread; the dedup side
+      // is joined on every path, so no compaction outlives this batch
       val s = records.sparkSession
-      val dedupSide = java.util.concurrent.CompletableFuture.runAsync(() => {
+      graft.util.SegmentStore.withWrites(Seq { () =>
         Dedup.FingerprintStore.compact(s, dedupStoreDir,
           buckets = 16, keepNewestSegments = 1)
         Dedup.FingerprintStore.purgeSuperseded(s, dedupStoreDir): Unit
-      })
-      var budgetFailure: Throwable = null
-      try {
+      }) {
         BudgetStream.compact(s, budgetStateDir, keepNewestSegments = 1)
         BudgetStream.purgeSuperseded(s, budgetStateDir)
-      } catch { case t: Throwable => budgetFailure = t; throw t }
-      finally {
-        // joined on every path, so no compaction outlives this batch: the
-        // dedup side's failure propagates, or rides on the budget side's
-        // failure as a suppressed exception
-        try dedupSide.join()
-        catch { case t: Throwable if budgetFailure != null => budgetFailure.addSuppressed(t) }
       }
     }
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 import graft.operators.Merge
+import graft.util.SegmentStore
 
 /** A concurrent writer's commit or live claim was detected — the merge
   * in flight was built on a base snapshot that no longer is (or soon
@@ -176,11 +177,8 @@ class ParquetUpsertTable(
 
   /** Committed version names (dirs whose `_SUCCESS` exists), oldest first. */
   def committedVersions: Seq[String] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName).sorted
+    SegmentStore.segments(spark, root.toString, "v_")
+      .map { case (_, v) => new Path(v).getName }
 
   /** Name of the newest committed version (e.g. "v_00000000000000000003"). */
   def latestVersion: Option[String] = committedVersions.lastOption
@@ -376,14 +374,9 @@ class PartitionedUpsertTable(
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(s"$partCol="))
       .map(_.getPath.getName).sorted
 
-  private def committedVersionsIn(partDir: String): Seq[String] = {
-    val p = new Path(root, partDir)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
-      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.getName).sorted
-  }
+  private def committedVersionsIn(partDir: String): Seq[String] =
+    SegmentStore.segments(spark, new Path(root, partDir).toString, "v_")
+      .map { case (_, v) => new Path(v).getName }
 
   private def latestIn(partDir: String): Option[String] =
     committedVersionsIn(partDir).lastOption

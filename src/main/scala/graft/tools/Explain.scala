@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.util.Sessions
 
 /** Dev tool: print the formatted physical plan and wall time for named
   * queries. `runMain graft.tools.Explain <sfDir> <q1,q2,...|all> [--no-plan]`
@@ -12,13 +11,7 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val which = args.lift(1).getOrElse("all")
     val showPlan = !args.contains("--no-plan")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores, 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (which == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,8 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+
+import graft.util.Sessions
 
 /** Dev profiler: runs one named SparkEntry query and prints every Spark
   * job it launches (description + wall duration) — the tool that turns a
@@ -20,13 +21,7 @@ object JobProfile {
     // the same tool at both counts
     val cpus = sys.env.get("GRAFT_PROFILE_CPUS")
       .flatMap(_.toIntOption).filter(_ >= 1).getOrElse(32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toString, 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Sessions
 
 /** Scale-up generator for local scale-proof runs (`sf1` from `sf0.1`):
   * replicates the three big tables `factor`× with SHARD-AWARE remapping so
@@ -34,13 +35,7 @@ object ScaleData {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCores, 32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // unionByName: a positional unionAll would silently mis-map columns if

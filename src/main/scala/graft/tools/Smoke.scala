@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.util.Sessions
 
 /** Mimics the driver's t1 smoke: a BARE session (no graft-specific confs —
   * in particular no nanosAsLong preset) running SparkEntry.entry. Proves the
@@ -10,10 +9,7 @@ import graft.SparkEntry
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.bare("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows: $n")

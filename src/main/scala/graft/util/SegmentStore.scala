@@ -71,9 +71,16 @@ object SegmentStore {
 
   private val MarkerName = """gen_(\d{5,})""".r
 
+  /** The store dir's file system and qualified path. Every kernel path
+    * derives from it: a relative `dir` otherwise resolves against the
+    * working directory for segments and deletes but against
+    * `spark.sql.warehouse.dir` for a catalog table's `path`/`LOCATION`,
+    * and no purge would ever find the generation data written there.
+    */
   private def fsOf(s: SparkSession, dir: String): (FileSystem, Path) = {
     val p = new Path(dir)
-    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(p))
   }
 
   private def list(fs: FileSystem, p: Path): Seq[FileStatus] =
@@ -111,8 +118,8 @@ object SegmentStore {
   def segPath(dir: String, id: Long, prefix: String = "seg_"): String =
     f"$dir/$prefix$id%05d"
 
-  private def dataDir(dir: String, gen: Gen): String =
-    new Path(new Path(dir), gen.sub).toString
+  private def dataDir(s: SparkSession, dir: String, gen: Gen): String =
+    new Path(fsOf(s, dir)._2, gen.sub).toString
 
   private def markers(fs: FileSystem, p: Path): Seq[(Long, Path)] =
     list(fs, p).filter(_.isFile).flatMap(st => st.getPath.getName match {
@@ -161,7 +168,7 @@ object SegmentStore {
       s: SparkSession, dir: String, beforeId: Long,
       prefix: String = "seg_"): Seq[String] = {
     val (gen, segs) = history(s, dir, beforeId, prefix)
-    gen.map(dataDir(dir, _)).toSeq ++ segs.map(_._2)
+    gen.map(dataDir(s, dir, _)).toSeq ++ segs.map(_._2)
   }
 
   /** The segments a compaction folds: committed ids at or above the
@@ -187,7 +194,7 @@ object SegmentStore {
       folded: Seq[(Long, String)])(write: String => Unit): Unit = {
     val (fs, p) = fsOf(s, dir)
     fs.mkdirs(p)
-    write(dataDir(dir, gen))
+    write(new Path(p, gen.sub).toString)
     val tmp = new Path(p, f"gen_${gen.no}%05d.tmp")
     val out = fs.create(tmp, true)
     try out.write(gen.marker.getBytes("UTF-8"))
@@ -247,7 +254,7 @@ object SegmentStore {
         s"""CREATE TABLE $t (${schema.toDDL})
            |USING PARQUET
            |CLUSTERED BY ($key) SORTED BY ($key) INTO ${gen.buckets.get} BUCKETS
-           |LOCATION '${dataDir(dir, gen)}'""".stripMargin)
+           |LOCATION '${dataDir(s, dir, gen)}'""".stripMargin)
     t
   }
 
@@ -341,7 +348,7 @@ object SegmentStore {
       // one row per key (millions of domains at 100 TB); 1/32 of the
       // shuffle partitions keeps a local[32] layout at one file
       sums(s.read.schema(schema)
-          .parquet(prev.map(dataDir(dir, _)).toSeq ++ folded.map(_._2): _*),
+          .parquet(prev.map(dataDir(s, dir, _)).toSeq ++ folded.map(_._2): _*),
           schema, keys)
         .coalesce(math.max(1, s.sessionState.conf.numShufflePartitions / 32))
         .write.mode("overwrite").parquet(out)
@@ -349,8 +356,10 @@ object SegmentStore {
     gen.below
   }
 
-  /** Run `main` while the independent segment `writes` run on side
-    * threads. Every write is joined before this returns or throws, so
+  /** Run `main` while the independent `writes` run on side threads —
+    * the engine's one driver-side fork: segment writes of the store
+    * backfills, q183's index builds, the curation stream's second
+    * compaction. Every write is joined before this returns or throws, so
     * none outlives the call: the first failure propagates (`main`'s
     * first) and later ones ride along as suppressed exceptions.
     */

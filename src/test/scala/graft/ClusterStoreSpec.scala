@@ -163,40 +163,6 @@ class ClusterStoreSpec extends SparkSpec {
     ClusterStore.dropTables(spark, dir)
   }
 
-  test("ClusterStream: live cluster map through a real stream with self-maintenance") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = tmpDir("graft_cstream")
-    val outDir = tmpDir("graft_cstream_out")
-    val cs = new graft.streaming.ClusterStream(
-      spark, storeDir, outDir, "text", "doc_id")
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text")
-      .writeStream
-      .option("checkpointLocation", tmpDir("graft_cstream_ckpt"))
-      .foreachBatch(cs.sink(compactEvery = 2, buckets = 4))
-      .start()
-    val e0 = Seq((1L, fill("aa")), (2L, fill("aa")), (3L, fill("bb")))
-    val e1 = Seq((13L, fill("bb")))
-    val e2 = Seq((23L, fill("aa")), (24L, fill("cc")))
-    try {
-      mem.addData(e0); q.processAllAvailable()
-      mem.addData(e1); q.processAllAvailable()
-      mem.addData(e2); q.processAllAvailable() // compacts after epoch 2
-      val got = cs.clusterMap()
-        .collect().map(r => r.getAs[Long]("node") ->
-          r.getAs[Long]("component")).toMap
-      assert(got == oneShot((e0 ++ e1 ++ e2).toDF("doc_id", "text")))
-      // the epoch-2 fold left at most the spared newest map segment
-      assert(ClusterStore.segments(spark, storeDir).size <= 1)
-      // per-epoch deltas landed idempotently under batch=<id>
-      val d1 = spark.read.parquet(s"$outDir/batch=1")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(d1 == Set((3L, 3L), (13L, 3L))) // 13 linked singleton 3
-    } finally q.stop()
-    ClusterStore.dropTables(spark, storeDir)
-  }
-
   /** Full store state: map segment id -> row set, key segment id ->
     * row set, plus the resolved map — the identity a backfill must
     * reproduce byte-for-byte (up to parquet row layout).

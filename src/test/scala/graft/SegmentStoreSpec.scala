@@ -176,6 +176,46 @@ class SegmentStoreSpec extends SparkSpec {
     Seq(fpTable, mapTable).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
+  test("relative store dir: generations land in the store dir, and purge reclaims them") {
+    // relative to the working directory, as a caller's relative path is
+    val rel = s"target/segstore-rel-${java.util.UUID.randomUUID()}"
+    val leaked = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), rel)
+    Seq(new Path(rel), leaked).foreach(p => SparkSpec.registerForCleanup(
+      java.nio.file.Paths.get(fs.makeQualified(p).toUri)))
+    val fpDir = s"$rel/fp"
+    val cDir = s"$rel/cluster"
+    val text = (1 to 12).map(i => s"w$i").mkString(" ")
+    def docs(ids: Long*): DataFrame =
+      ids.map(i => (i, s"$text $i")).toDF("doc_id", "text")
+    def fpRound(ids: Long*): Unit = {
+      Dedup.dedupeIncrementalStaged(docs(ids: _*), fpDir, "text", "doc_id").collect()
+      Dedup.FingerprintStore.compact(spark, fpDir, buckets = 2,
+        tablePrefix = "graft_relfp"): Unit
+    }
+    def clusterRound(ids: Long*): Unit = {
+      ClusterStore.ingest(docs(ids: _*), cDir, "text", "doc_id")
+      ClusterStore.compact(spark, cDir, buckets = 2, tablePrefix = "graft_relc"): Unit
+    }
+    try {
+      fpRound(1L, 2L); fpRound(3L)
+      clusterRound(1L, 2L); clusterRound(3L)
+      Dedup.FingerprintStore.purgeSuperseded(spark, fpDir)
+      ClusterStore.purgeSuperseded(spark, cDir)
+      assert(!fs.exists(leaked), s"generation data written under $leaked")
+      // each substore holds exactly its current generation's data dir
+      Seq(fpDir, s"$cDir/map", s"$cDir/keys").foreach { d =>
+        val subs = fs.listStatus(new Path(d)).map(_.getPath.getName)
+          .filter(_.startsWith("gen_data_")).toSeq
+        assert(subs == SegmentStore.currentGen(spark, d).map(_.sub).toSeq, d)
+      }
+      assert(Dedup.FingerprintStore.load(spark, fpDir).count() == 3L)
+    } finally {
+      ClusterStore.dropTables(spark, cDir)
+      SegmentStore.currentGen(spark, fpDir).flatMap(_.table)
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("withWrites: every forked write is joined before the call returns or throws") {
     val done = new java.util.concurrent.atomic.AtomicInteger()
     val slow = () => { Thread.sleep(300); done.incrementAndGet(): Unit }

@@ -1,105 +1,6 @@
 package graft
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
-
-import graft.streaming.Sessionize
-import graft.streaming.Sessionize.{Event, Session}
-
 class SessionizeSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("streaming sessionizer closes sessions after the inactivity gap") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = Sessionize.sessions(in.toDS())
-      .writeStream.format("memory").queryName("sessions_out")
-      .option("checkpointLocation",
-        tmpDir("sess-ckpt"))
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      // user 1: two bursts 2 h apart → two sessions; user 2: one burst
-      in.addData(
-        Event(1L, ts("2024-01-01 10:00:00"), 1.0),
-        Event(1L, ts("2024-01-01 10:10:00"), 2.0),
-        Event(2L, ts("2024-01-01 10:05:00"), 5.0))
-      q.processAllAvailable()
-      in.addData(Event(1L, ts("2024-01-01 12:00:00"), 3.0))
-      q.processAllAvailable()
-      // advance watermark far past everything to flush open sessions
-      in.addData(Event(9L, ts("2024-01-01 23:00:00"), 0.0))
-      q.processAllAvailable()
-      in.addData(Event(9L, ts("2024-01-02 23:00:00"), 0.0))
-      q.processAllAvailable()
-
-      val got = spark.table("sessions_out").as[Session].collect()
-        .filter(_.user_id <= 2).sortBy(s => (s.user_id, s.session_start.getTime))
-      assert(got.length == 3, s"expected 3 closed sessions, got ${got.toSeq}")
-      assert(got(0) == Session(1L, ts("2024-01-01 10:00:00"), 2, 3.0))
-      assert(got(1) == Session(1L, ts("2024-01-01 12:00:00"), 1, 3.0))
-      assert(got(2) == Session(2L, ts("2024-01-01 10:05:00"), 1, 5.0))
-    } finally q.stop()
-  }
-
-  test("streaming flatMapGroupsWithState sessions match batch session_window row-for-row") {
-    import org.apache.spark.sql.functions.{session_window, count, sum, lit, col}
-    implicit val ctx = spark.sqlContext
-
-    // fixture exercising the session-boundary cases: a gap of exactly the
-    // 30-min window (user 2 — native session_window MERGES the touching
-    // windows, so one session), an out-of-order but non-late event
-    // extending an open session (user 1's 10:10 arrives in batch 2), and
-    // a straddling close (user 1's 11:05 opens a second session)
-    val batch1 = Seq(
-      Event(1L, ts("2024-01-01 10:00:00"), 1.0),
-      Event(1L, ts("2024-01-01 10:29:59"), 2.5),
-      Event(2L, ts("2024-01-01 10:00:00"), 0.25),
-      Event(2L, ts("2024-01-01 10:30:00"), 0.5),
-      Event(3L, ts("2024-01-01 09:15:00"), 4.0))
-    val batch2 = Seq(
-      Event(1L, ts("2024-01-01 10:10:00"), 1.5),
-      Event(1L, ts("2024-01-01 11:05:00"), 3.0))
-
-    // ground truth: the native batch operator over the same rows
-    val expected = (batch1 ++ batch2).toDS()
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(col("user_id"), col("session_window.start").as("session_start"),
-        col("n_events"), col("sum_value"))
-      .as[Session].collect().toSet
-    assert(expected.size == 4, s"fixture should yield 4 sessions: $expected")
-
-    val in = MemoryStream[Event]
-    val q = Sessionize.sessions(in.toDS())
-      .writeStream.format("memory").queryName("sessions_parity")
-      .option("checkpointLocation",
-        tmpDir("sess-parity-ckpt"))
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      in.addData(batch1: _*)
-      q.processAllAvailable()
-      in.addData(batch2: _*)
-      q.processAllAvailable()
-      // two sentinel batches: the first advances the watermark past every
-      // session's timeout, the second lets the event-time timeouts fire
-      in.addData(Event(99L, ts("2024-01-02 10:00:00"), 0.0))
-      q.processAllAvailable()
-      in.addData(Event(99L, ts("2024-01-03 10:00:00"), 0.0))
-      q.processAllAvailable()
-
-      val got = spark.table("sessions_parity").as[Session].collect()
-        .filter(_.user_id != 99L).toSet
-      assert(got == expected,
-        s"streaming sessions diverge from batch session_window:\n  streaming=$got\n  batch=$expected")
-    } finally q.stop()
-  }
-
   test("batch session_window agrees with the lag-based oracle shape at sf0.001") {
     val got = Queries.sessionize(spark, sf0001)
     assert(got.count() > 0)

@@ -185,7 +185,7 @@ class SimilaritySpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val truth = pairs(Similarity.bruteForceTopK(emb, q, "embedding", "vec_id", k = 5))
     // few-bits × many-tables, matched to this corpus's weak neighbor
-    // separation (q27's instantiation — see Queries.annLsh scaladoc)
+    // separation (q27's instantiation — see Queries.annLshCertified)
     val lsh = pairs(Similarity.lshTopK(emb, q, "embedding", "vec_id",
       dim = 64, k = 5, bits = 4, tables = 8))
     val lshRecall = (lsh & truth).size.toDouble / truth.size
@@ -757,5 +757,31 @@ class SimilaritySpec extends SparkSpec {
     val p = Similarity.centroidOutliers(poisoned, "embedding", "vec_id",
       "label", bottomPerMille = 200)
     assert(p.filter(col("id") === 999L).count() == 0L)
+  }
+
+  test("q183: a failed PQ training leaves no index build running") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 40-dim vectors: the IVF builds take them, but the third 16-dim PQ
+    // subspace is short, so the training on the main thread fails
+    val dir = tmpDir("graft_q183_fail")
+    val rnd = new scala.util.Random(7)
+    (0 until 200).map(i => (i.toLong, Seq.fill(40)(rnd.nextFloat()), i % 4))
+      .toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        starts.add(js.time): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[Exception](Queries.annRecallGate(spark, dir))
+      val left = System.currentTimeMillis()
+      assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+      Thread.sleep(2000)
+      assert(!starts.asScala.exists(_ > left),
+        "an index build started a job after the query threw")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -12,13 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Tables.events works everywhere.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.util.Sessions.local("4", 4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def sf0001 = "/root/testdata/sf0.001"
