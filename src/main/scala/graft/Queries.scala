@@ -9,6 +9,7 @@ import graft.model.Vocab
 import graft.operators.{Cluster, ClusterStore, Dedup, Layout, Merge, Multimodal, Profile, Retrieval, Similarity, Skew}
 import graft.ops._
 import graft.pipeline.MoodPipeline
+import graft.util.SegmentStore
 
 /** The engine's query surface over the driver test corpus — one entry per
   * implemented operator family (SURVEY.md §2 + training-data extensions).
@@ -31,6 +32,20 @@ object Queries {
   /** l_extendedprice * (1 - l_discount) as an exact 4-decimal product. */
   private def revenueDec(price: Column, disc: Column): Column =
     dec2(price) * (lit(1).cast("decimal(3,2)") - disc.cast("decimal(3,2)"))
+
+  /** The one scratch lifecycle of the gates that write: `body` gets a
+    * fresh temp dir, and on return or throw every store generation's
+    * catalog handle under it is dropped ([[SegmentStore.dropTables]])
+    * and the dir deleted — Bench/Verify call each gate per round, and a
+    * long-lived service must not accumulate /tmp residue or handles. A
+    * result that reads from the dir must materialize inside `body`.
+    */
+  private[graft] def scratch[A](s: SparkSession, prefix: String)(body: String => A): A = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toString
+    try body(root)
+    finally try SegmentStore.dropTables(s, root)
+    finally graft.io.Sinks.truncatePath(s, root)
+  }
 
   // ------------------------------------------------------------------ //
   // Relational core (lineitem / orders / customer / nation / region)
@@ -687,8 +702,7 @@ object Queries {
   def annIvfSaved(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 10)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
-    try {
+    scratch(s, "graft_ivf_idx") { path =>
       Similarity.buildIvfIndex(emb, "embedding", "vec_id", nlist = 16).save(path)
       val loaded = Similarity.IvfIndex.load(s, path)
       val result = Similarity.ivfQuery(loaded, queries, "embedding", "vec_id", k = 5, nprobe = 16)
@@ -703,7 +717,7 @@ object Queries {
       // directly — this collect exists only so the GATE can clean up /tmp.
       import scala.jdk.CollectionConverters._
       s.createDataFrame(result.collect().toSeq.asJava, result.schema)
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q75: the saved IVF index grows INCREMENTALLY — build on the first
@@ -719,8 +733,7 @@ object Queries {
   def annIvfAppend(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 10)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
-    try {
+    scratch(s, "graft_ivf_app") { path =>
       val maxId = emb.agg(max(col("vec_id"))).first().getLong(0)
       val (t1, t2) = (maxId * 3 / 5, maxId * 4 / 5)
       Similarity.buildIvfIndex(emb.filter(col("vec_id") <= t1),
@@ -737,7 +750,7 @@ object Queries {
         .orderBy(col("query_id"), col("rank"))
       import scala.jdk.CollectionConverters._
       s.createDataFrame(result.collect().toSeq.asJava, result.schema)
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** Symmetric int8 scalar quantization of the embedding table — the 4×
@@ -1054,8 +1067,6 @@ object Queries {
     ss.conf.set("spark.sql.shuffle.partitions", "8")
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.load(ss, dir, "events").schema
-    val out = java.nio.file.Files.createTempDirectory("graft_stream_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt").toString
     // file stream source needs a directory. The events table is a single
     // FILE in the driver corpus (stream the sf dir, glob-filtered to it)
     // but a parquet DIRECTORY in scaled/production layouts (stream it
@@ -1067,29 +1078,27 @@ object Queries {
     val src =
       if (evFs.getFileStatus(evPath).isDirectory) reader.parquet(evPath.toString)
       else reader.option("pathGlobFilter", "events.parquet").parquet(dir)
-    val q = Tables.normalizeTs(src)
-      .withColumn("minute", TimeOps.truncMinute(col("ts")))
-      .withWatermark("minute", "1 minute")
-      .groupBy(col("minute"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        Aggregates.exactAvg(col("value")).as("avg_value"))
-      .writeStream
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("overwrite").parquet(out)
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    // materialize the (cardinality-bounded) result off the temp sink, then
-    // delete both temp dirs — Bench/Verify call this per round, and a
-    // long-lived service must not accumulate /tmp/graft_stream_* residue
-    try s.read.parquet(out).orderBy(col("minute"), col("event_type"))
-      .localCheckpoint(eager = true)
-    finally {
-      graft.io.Sinks.truncatePath(s, out)
-      graft.io.Sinks.truncatePath(s, ckpt)
+    scratch(s, "graft_stream") { root =>
+      val out = s"$root/out"
+      val q = Tables.normalizeTs(src)
+        .withColumn("minute", TimeOps.truncMinute(col("ts")))
+        .withWatermark("minute", "1 minute")
+        .groupBy(col("minute"), col("event_type"))
+        .agg(count(lit(1)).as("n_events"),
+          Aggregates.exactAvg(col("value")).as("avg_value"))
+        .writeStream
+        .outputMode("complete")
+        .option("checkpointLocation", s"$root/ckpt")
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("overwrite").parquet(out)
+        }
+        .start()
+      try q.processAllAvailable()
+      finally q.stop()
+      // materialize the (cardinality-bounded) result off the temp sink
+      // before the scratch dir goes
+      s.read.parquet(out).orderBy(col("minute"), col("event_type"))
+        .localCheckpoint(eager = true)
     }
   }
 
@@ -1238,9 +1247,8 @@ object Queries {
     * literal TRUE. Collected to a local relation (rows = number of
     * days) so the gate can clean up the temp dir, like q47.
     */
-  def compactLayout(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    try {
+  def compactLayout(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_layout") { out =>
       val table = Layout.compactByDay(Tables.events(s, dir), "ts", "event_id", out)
       val audit = Layout.auditByDay(table, "event_id")
         .select(col("day").cast("string").as("day"), col("n_rows"),
@@ -1249,8 +1257,7 @@ object Queries {
         .orderBy(col("day"))
       import scala.jdk.CollectionConverters._
       s.createDataFrame(audit.collect().toSeq.asJava, audit.schema)
-    } finally graft.io.Sinks.truncatePath(s, out)
-  }
+    }
 
   /** q57: CDC merge — a deterministic change batch (every tenth user's
     * events arrive again an hour later with a doubled value) upserted
@@ -1383,9 +1390,8 @@ object Queries {
     * latest-wins window — sequential sink application and global
     * merge must agree.
     */
-  def cdcApply(s: SparkSession, dir: String): DataFrame = {
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_cdc_tbl").toString
-    try {
+  def cdcApply(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cdc_tbl") { tableDir =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -1400,8 +1406,7 @@ object Queries {
         .withColumn("value", col("value") * 3), 2)
       table.snapshot().get.orderBy(col("event_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, tableDir)
-  }
+    }
 
   /** q62: CDC apply WITH tombstones — batch 1 updates every 10th user
     * (+1h, 2×) and deletes every 7th user's events at ts+2h; batch 2
@@ -1413,9 +1418,8 @@ object Queries {
     * sequential sink application agree with the global replay (see
     * [[graft.operators.Merge.applyChanges]]).
     */
-  def cdcDeletes(s: SparkSession, dir: String): DataFrame = {
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_cdc_del").toString
-    try {
+  def cdcDeletes(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cdc_del") { tableDir =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -1440,8 +1444,7 @@ object Queries {
         2)
       table.snapshot().get.orderBy(col("event_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, tableDir)
-  }
+    }
 
   /** q63: partition-scoped CDC — the events snapshot bulk-loaded into a
     * day-partitioned table (day derived from the ORIGINAL ts, so it is
@@ -1453,9 +1456,8 @@ object Queries {
     * latest-wins window — partition scoping, like salting, must be
     * invisible in the result.
     */
-  def cdcPartitioned(s: SparkSession, dir: String): DataFrame = {
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_cdc_part").toString
-    try {
+  def cdcPartitioned(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cdc_part") { tableDir =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -1486,8 +1488,66 @@ object Queries {
         2)
       table.snapshot().get.orderBy(col("event_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, tableDir)
+    }
+
+  /** q64's and q72's planted corpus as three ascending-id epochs: the
+    * documents plus a full id-shifted copy, EXACT (q64 — the synthetic
+    * corpus carries no exact duplicates, so the plant, q54's
+    * plant-and-remove discipline, makes the later epochs genuinely DROP
+    * docs against the store) or NEAR, with two tokens appended (q72).
+    */
+  private def copyEpochs(s: SparkSession, dir: String, near: Boolean): Seq[DataFrame] = {
+    val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
+    val text = if (near) concat(col("text"), lit(" qz17 qz18")) else col("text")
+    val docs = docs0.unionByName(
+      docs0.select((col("doc_id") + lit(m1)).as("doc_id"), text.as("text")))
+    val maxId = 2 * m1 - 1
+    val (t1, t2) = (maxId / 3, 2 * maxId / 3)
+    Seq(docs.filter(col("doc_id") <= t1),
+      docs.filter(col("doc_id") > t1 && col("doc_id") <= t2),
+      docs.filter(col("doc_id") > t2))
   }
+
+  /** q67's planted corpus as three batches: the documents, an id-shifted
+    * EXACT copy (every band matches — the whole batch must drop against
+    * the first's stored keys), and an id-shifted NEAR copy with two
+    * tokens appended (bands match iff the appended bigrams don't
+    * displace a banded minimum — decided identically by both engines).
+    */
+  private def copyBatches(s: SparkSession, dir: String): Seq[DataFrame] = {
+    val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
+    val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
+    Seq(docs0,
+      docs0.select((col("doc_id") + lit(m1)).as("doc_id"), col("text")),
+      docs0.select((col("doc_id") + lit(2 * m1)).as("doc_id"),
+        concat(col("text"), lit(" qz17 qz18")).as("text")))
+  }
+
+  /** The shared body of the six fingerprint-store dedup gates: `ingest`
+    * (epoch, store dir, epoch id) runs the three epochs in id order
+    * against one scratch store, which is compacted into a bucketed
+    * generation (table prefix `graft_<gate>_store`) after the second;
+    * the result is the survivors' union. A `stream` gate replays the
+    * second epoch after its commit (at-least-once delivery) and emits
+    * the REPLAY's survivors, and its compaction spares the newest
+    * segment — the replayable epoch's.
+    */
+  private def threeEpochDedupGate(
+      s: SparkSession, gate: String, epochs: Seq[DataFrame], stream: Boolean)(
+      ingest: (DataFrame, String, Long) => DataFrame): DataFrame =
+    scratch(s, s"graft_${gate}_gate") { storeDir =>
+      def run(i: Int) = ingest(epochs(i), storeDir, i.toLong).localCheckpoint(true)
+      val r0 = run(0)
+      if (stream) run(1)
+      val r1 = run(1)
+      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8,
+        tablePrefix = s"graft_${gate}_store",
+        keepNewestSegments = if (stream) 1 else 0)
+      val r2 = run(2)
+      r0.unionByName(r1).unionByName(r2).orderBy(col("doc_id"))
+        .localCheckpoint(true)
+    }
 
   /** q64: incremental corpus dedup through the persisted
     * [[graft.operators.Dedup.FingerprintStore]], WITH a mid-sequence
@@ -1500,38 +1560,9 @@ object Queries {
     * which is exactly what the oracle's one-window replay computes —
     * the storage layout must be invisible in the result.
     */
-  def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_fp_gate").toString
-    val prefix = "graft_q64_store"
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // the synthetic corpus carries no exact duplicates — plant a full
-      // id-shifted copy (q54's plant-and-remove discipline) so the
-      // later batches genuinely DROP docs against the store, not just
-      // append to it
-      val maxId0 = docs0.agg(max(col("doc_id"))).first().getLong(0)
-      val docs = docs0.unionByName(docs0.select(
-        (col("doc_id") + lit(maxId0 + 1)).as("doc_id"), col("text")))
-      val maxId = 2 * maxId0 + 1
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val b1 = Dedup.dedupeIncrementalStaged(
-        docs.filter(col("doc_id") <= t1), storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      val b2 = Dedup.dedupeIncrementalStaged(
-        docs.filter(col("doc_id") > t1 && col("doc_id") <= t2),
-        storeDir, "text", "doc_id").localCheckpoint(true)
-      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8, tablePrefix = prefix)
-      val b3 = Dedup.dedupeIncrementalStaged(
-        docs.filter(col("doc_id") > t2), storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      b1.unionByName(b2).unionByName(b3).orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
-    }
-  }
+  def incrementalDedup(s: SparkSession, dir: String): DataFrame =
+    threeEpochDedupGate(s, "q64", copyEpochs(s, dir, near = false), stream = false)(
+      (e, store, _) => Dedup.dedupeIncrementalStaged(e, store, "text", "doc_id"))
 
   /** q74: q64's three-batch incremental ingest driven through the
     * BLOOM-prefiltered store probe
@@ -1544,42 +1575,10 @@ object Queries {
     * codegen'd probe is
     * [[org.apache.spark.sql.graft.BloomMightContain]].
     */
-  def bloomDedup(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_bloom_gate").toString
-    val prefix = "graft_q74_store"
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val maxId0 = docs0.agg(max(col("doc_id"))).first().getLong(0)
-      val docs = docs0.unionByName(docs0.select(
-        (col("doc_id") + lit(maxId0 + 1)).as("doc_id"), col("text")))
-      val maxId = 2 * maxId0 + 1
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val b1 = Dedup.dedupeIncrementalBloomStaged(
-        docs.filter(col("doc_id") <= t1), storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      val b2 = Dedup.dedupeIncrementalBloomStaged(
-        docs.filter(col("doc_id") > t1 && col("doc_id") <= t2),
-        storeDir, "text", "doc_id").localCheckpoint(true)
-      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8, tablePrefix = prefix)
-      val b3 = Dedup.dedupeIncrementalBloomStaged(
-        docs.filter(col("doc_id") > t2), storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      b1.unionByName(b2).unionByName(b3).orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
-    }
-  }
+  def bloomDedup(s: SparkSession, dir: String): DataFrame =
+    threeEpochDedupGate(s, "q74", copyEpochs(s, dir, near = false), stream = false)(
+      (e, store, _) => Dedup.dedupeIncrementalBloomStaged(e, store, "text", "doc_id"))
 
-  /** q65: overlapping document chunking — every doc split into
-    * 100-char windows with 20-char overlap (stride 80), the
-    * context-window prep of a training/RAG pipeline. Map-only: one
-    * scan, a sequence explode, substr arithmetic — no shuffle until
-    * the gate's final sort. See
-    * [[graft.functions.TextFunctions.chunkStarts]].
-    */
   /** q66: TF-IDF top-5 terms per document — tokenize once, term
     * frequency per (doc, token), document frequency off the SAME
     * aggregated frame (the df shuffle moves vocabulary-sized data, not
@@ -1615,6 +1614,13 @@ object Queries {
       .orderBy(col("doc_id"), col("rk"))
   }
 
+  /** q65: overlapping document chunking — every doc split into
+    * 100-char windows with 20-char overlap (stride 80), the
+    * context-window prep of a training/RAG pipeline. Map-only: one
+    * scan, a sequence explode, substr arithmetic — no shuffle until
+    * the gate's final sort. See
+    * [[graft.functions.TextFunctions.chunkStarts]].
+    */
   def chunkDocs(s: SparkSession, dir: String): DataFrame = {
     val (chunkLen, overlap) = (100, 20)
     val stride = chunkLen - overlap
@@ -1641,42 +1647,24 @@ object Queries {
     * replayable epoch's history intact. Batch ids are the epoch ids a
     * checkpointed foreachBatch would deliver, so the gate is
     * deterministic; the real MemoryStream + checkpoint drive of the
-    * same code path lives in DedupSpec/DedupStream specs. Oracle =
+    * same code path is CurationStreamSpec's three-epoch case. Oracle =
     * q64's one-window global min-id-per-fingerprint replay: epochs,
     * segment keying, replay, and compaction must all be invisible.
     */
-  def streamingDedup(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_stream_gate").toString
-    val prefix = "graft_q68_store"
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val maxId0 = docs0.agg(max(col("doc_id"))).first().getLong(0)
-      val docs = docs0.unionByName(docs0.select(
-        (col("doc_id") + lit(maxId0 + 1)).as("doc_id"), col("text")))
-      val maxId = 2 * maxId0 + 1
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val e0 = docs.filter(col("doc_id") <= t1)
-      val e1 = docs.filter(col("doc_id") > t1 && col("doc_id") <= t2)
-      val e2 = docs.filter(col("doc_id") > t2)
-      val r0 = Dedup.dedupeStreamStaged(e0, storeDir, "text", "doc_id", 0L)
-        .localCheckpoint(true)
-      Dedup.dedupeStreamStaged(e1, storeDir, "text", "doc_id", 1L)
-        .localCheckpoint(true)
-      // the replayed epoch's survivors are what the gate emits
-      val r1 = Dedup.dedupeStreamStaged(e1, storeDir, "text", "doc_id", 1L)
-        .localCheckpoint(true)
-      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8,
-        tablePrefix = prefix, keepNewestSegments = 1)
-      val r2 = Dedup.dedupeStreamStaged(e2, storeDir, "text", "doc_id", 2L)
-        .localCheckpoint(true)
-      r0.unionByName(r1).unionByName(r2).orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
-    }
-  }
+  def streamingDedup(s: SparkSession, dir: String): DataFrame =
+    threeEpochDedupGate(s, "q68", copyEpochs(s, dir, near = false), stream = true)(
+      (e, store, id) => Dedup.dedupeStreamStaged(e, store, "text", "doc_id", id))
+
+  /** q72: streaming NEAR-dup dedup on the gate — q68's epoch protocol
+    * (three ascending-id epochs, the middle one replayed after commit,
+    * a newest-segment-sparing compaction mid-sequence) applied to the
+    * MinHash band store (q67's semantics): cross-epoch near-duplicates
+    * drop, and the oracle's one-pass band-drop collapse must see none of
+    * the machinery. Corpus = documents ∪ suffixed near-dup copies.
+    */
+  def streamingNearDedup(s: SparkSession, dir: String): DataFrame =
+    threeEpochDedupGate(s, "q72", copyEpochs(s, dir, near = true), stream = true)(
+      (e, store, id) => Dedup.dedupeNearStreamStaged(e, store, "text", "doc_id", id))
 
   /** q67: incremental NEAR-dup dedup through the persisted MinHash
     * band store (see
@@ -1684,84 +1672,16 @@ object Queries {
     * ascending-id ingest batches with a mid-sequence bucketed
     * compaction, exactly q64's protocol, but matching on LSH band keys
     * instead of exact fingerprints. The corpus is the documents table
-    * plus TWO planted full copies (q54's plant-and-remove discipline):
-    * an id-shifted EXACT copy (every band matches — the whole second
-    * batch must drop against the first's stored bands) and an
-    * id-shifted NEAR copy with two tokens appended (bands match iff
-    * the appended bigrams don't displace a banded minimum — decided
-    * identically by both engines). Ascending ids make the sequential
-    * greedy policy equal ONE global "drop b when a smaller-id a shares
-    * a band" pass, which is the oracle's window; segments, the
-    * compaction, and owner-aware replay matching must all be invisible
-    * in the result.
+    * plus TWO planted full copies (q54's plant-and-remove discipline,
+    * `copyBatches`): an id-shifted EXACT copy and an id-shifted NEAR
+    * copy. Ascending ids make the sequential greedy policy equal ONE
+    * global "drop b when a smaller-id a shares a band" pass, which is
+    * the oracle's window; segments, the compaction, and owner-aware
+    * replay matching must all be invisible in the result.
     */
-  /** Streaming NEAR-dup dedup on the gate — q68's epoch protocol (three
-    * ascending-id epochs, the middle one replayed after commit, a
-    * newest-segment-sparing compaction mid-sequence) applied to the
-    * MinHash band store (q67's semantics): cross-epoch near-duplicates
-    * drop, and the oracle's one-pass band-drop collapse must see none of
-    * the machinery. Corpus = documents ∪ suffixed near-dup copies.
-    */
-  def streamingNearDedup(s: SparkSession, dir: String): DataFrame = {
-    val storeDir =
-      java.nio.file.Files.createTempDirectory("graft_nearstream_gate").toString
-    val prefix = "graft_q72_store"
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val docs = docs0.unionByName(docs0.select(
-        (col("doc_id") + lit(m1)).as("doc_id"),
-        concat(col("text"), lit(" qz17 qz18")).as("text")))
-      val maxId = 2 * m1 - 1
-      val (t1, t2) = (maxId / 3, 2 * maxId / 3)
-      val e0 = docs.filter(col("doc_id") <= t1)
-      val e1 = docs.filter(col("doc_id") > t1 && col("doc_id") <= t2)
-      val e2 = docs.filter(col("doc_id") > t2)
-      val r0 = Dedup.dedupeNearStreamStaged(e0, storeDir, "text", "doc_id", 0L)
-        .localCheckpoint(true)
-      Dedup.dedupeNearStreamStaged(e1, storeDir, "text", "doc_id", 1L)
-        .localCheckpoint(true)
-      // the replayed epoch's survivors are what the gate emits
-      val r1 = Dedup.dedupeNearStreamStaged(e1, storeDir, "text", "doc_id", 1L)
-        .localCheckpoint(true)
-      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8,
-        tablePrefix = prefix, keepNewestSegments = 1)
-      val r2 = Dedup.dedupeNearStreamStaged(e2, storeDir, "text", "doc_id", 2L)
-        .localCheckpoint(true)
-      r0.unionByName(r1).unionByName(r2).orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
-    }
-  }
-
-  def incrementalNearDedup(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_sig_gate").toString
-    val prefix = "graft_q67_store"
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val b1 = docs0
-      val b2 = docs0.select((col("doc_id") + lit(m1)).as("doc_id"), col("text"))
-      val b3 = docs0.select((col("doc_id") + lit(2 * m1)).as("doc_id"),
-        concat(col("text"), lit(" qz17 qz18")).as("text"))
-      val r1 = Dedup.dedupeNearIncrementalStaged(b1, storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      val r2 = Dedup.dedupeNearIncrementalStaged(b2, storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8, tablePrefix = prefix)
-      val r3 = Dedup.dedupeNearIncrementalStaged(b3, storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      r1.unionByName(r2).unionByName(r3).orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
-    }
-  }
+  def incrementalNearDedup(s: SparkSession, dir: String): DataFrame =
+    threeEpochDedupGate(s, "q67", copyBatches(s, dir), stream = false)(
+      (b, store, _) => Dedup.dedupeNearIncrementalStaged(b, store, "text", "doc_id"))
 
   /** q76: q67's three-batch NEAR-dup ingest driven through the
     * BLOOM-prefiltered band-store probe
@@ -1771,31 +1691,9 @@ object Queries {
     * the near-dup store, where the probe is bands× wider and the
     * prefilter correspondingly more valuable).
     */
-  def bloomNearDedup(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_bsig_gate").toString
-    val prefix = "graft_q76_store"
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val b1 = docs0
-      val b2 = docs0.select((col("doc_id") + lit(m1)).as("doc_id"), col("text"))
-      val b3 = docs0.select((col("doc_id") + lit(2 * m1)).as("doc_id"),
-        concat(col("text"), lit(" qz17 qz18")).as("text"))
-      val r1 = Dedup.dedupeNearIncrementalBloomStaged(b1, storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      val r2 = Dedup.dedupeNearIncrementalBloomStaged(b2, storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      Dedup.FingerprintStore.compact(s, storeDir, buckets = 8, tablePrefix = prefix)
-      val r3 = Dedup.dedupeNearIncrementalBloomStaged(b3, storeDir, "text", "doc_id")
-        .localCheckpoint(true)
-      r1.unionByName(r2).unionByName(r3).orderBy(col("doc_id"))
-        .localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
-    }
-  }
+  def bloomNearDedup(s: SparkSession, dir: String): DataFrame =
+    threeEpochDedupGate(s, "q76", copyBatches(s, dir), stream = false)(
+      (b, store, _) => Dedup.dedupeNearIncrementalBloomStaged(b, store, "text", "doc_id"))
 
   /** q77: INCREMENTAL train/eval decontamination — q53's eval split
     * registered into the persisted
@@ -1805,9 +1703,8 @@ object Queries {
     * must equal one global decontamination against the suites' union →
     * q53's oracle verbatim.
     */
-  def incrementalDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    val storeDir = java.nio.file.Files.createTempDirectory("graft_eval_gate").toString
-    try {
+  def incrementalDecontaminate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_eval_gate") { storeDir =>
       val docs = Tables.documents(s, dir)
       val isEval = col("doc_id") % 97 === 0
       val mid = docs.agg(max(col("doc_id"))).first().getLong(0) / 2
@@ -1820,8 +1717,7 @@ object Queries {
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, storeDir)
-  }
+    }
 
   /** q78: inverted-index phrase search — three data-derived bigram
     * phrases (tokens 2–3 of docs 3, 7, 11) probed against the postings
@@ -1883,9 +1779,8 @@ object Queries {
     * q79's oracle verbatim. A new corpus batch costs one batch-sized
     * postings build, never a re-index.
     */
-  def incrementalBm25(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_post_gate").toString
-    try {
+  def incrementalBm25(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_post_gate") { idxDir =>
       val docs = Tables.documents(s, dir)
       val mid = docs.agg(max(col("doc_id"))).first().getLong(0) / 2
       Retrieval.appendPostings(docs.filter(col("doc_id") <= mid), idxDir, "text", "doc_id")
@@ -1903,8 +1798,7 @@ object Queries {
           col("doc_id"), col("score"))
         .orderBy(col("query_id"), col("rk"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, idxDir)
-  }
+    }
 
   /** q81: change-data-feed between two table versions —
     * [[graft.operators.Merge.diffSnapshots]] over `snapshotAt(0)` vs
@@ -1915,9 +1809,8 @@ object Queries {
     * WITHOUT replaying them. The oracle recomputes both states from
     * the change definitions (q62's window form) and joins them.
     */
-  def cdcDiff(s: SparkSession, dir: String): DataFrame = {
-    val tableDir = java.nio.file.Files.createTempDirectory("graft_cdc_diff").toString
-    try {
+  def cdcDiff(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cdc_diff") { tableDir =>
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
@@ -1946,8 +1839,7 @@ object Queries {
           col("value_before"), col("value_after"))
         .orderBy(col("event_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, tableDir)
-  }
+    }
 
   /** q82: incremental statistics maintenance — q58's profile surface
     * (minus the one non-mergeable stat, the distinct count) maintained
@@ -2346,23 +2238,13 @@ object Queries {
   private def backlogGramStoreGate(
       s: SparkSession,
       dir: String)(
-      run: (DataFrame, String) => DataFrame): DataFrame = {
-    val storeDir =
-      java.nio.file.Files.createTempDirectory("graft_backlog_gate").toString
-    try {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val shift = docs.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val backlog = docs.withColumn("b", lit(0L))
-        .unionByName(docs
-          .select((col("doc_id") + shift).as("doc_id"), col("text"))
-          .withColumn("b", lit(1L)))
-        .unionByName(docs
-          .select((col("doc_id") + 2 * shift).as("doc_id"),
-            concat(col("text"), lit(" qz17 qz18")).as("text"))
-          .withColumn("b", lit(2L)))
+      run: (DataFrame, String) => DataFrame): DataFrame =
+    scratch(s, "graft_backlog_gate") { storeDir =>
+      val backlog = copyBatches(s, dir).zipWithIndex
+        .map { case (b, i) => b.withColumn("b", lit(i.toLong)) }
+        .reduce(_ unionByName _)
       run(backlog, storeDir).orderBy(col("doc_id")).localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, storeDir)
-  }
+    }
 
   /** q131: q89's ingest backlog run through the fused one-pass backfill
     * — same output, same oracle, a third of the corpus passes.
@@ -2451,9 +2333,8 @@ object Queries {
     * still come from the full corpus (a deleted doc's text remains a
     * perfectly good query; it just can no longer be a RESULT).
     */
-  def bm25WithDeletes(s: SparkSession, dir: String): DataFrame = {
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_post_del").toString
-    try {
+  def bm25WithDeletes(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_post_del") { idxDir =>
       val docs = Tables.documents(s, dir)
       val mid = docs.agg(max(col("doc_id"))).first().getLong(0) / 2
       Retrieval.appendPostings(docs.filter(col("doc_id") <= mid), idxDir, "text", "doc_id")
@@ -2480,8 +2361,7 @@ object Queries {
           col("doc_id"), col("score"))
         .orderBy(col("query_id"), col("rk"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, idxDir)
-  }
+    }
 
   /** q102: streaming token-budget admission — three sequential ingest
     * batches (doc_id thirds) through the persisted per-source meter
@@ -2495,10 +2375,8 @@ object Queries {
     * one source-keyed window pass in (doc_id) order — segments, the
     * replay, the meter store, and the fold must all be invisible.
     */
-  def streamingTokenBudget(s: SparkSession, dir: String): DataFrame = {
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_budget_gate").toString
-    try {
+  def streamingTokenBudget(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_budget_gate") { stateDir =>
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("text"))
       val maxId = docs.agg(max(col("doc_id"))).first().getLong(0)
@@ -2517,8 +2395,7 @@ object Queries {
       val r2 = run(col("doc_id") > t2, 2L)
       r0.unionByName(r1).unionByName(r2).orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, stateDir)
-  }
+    }
 
   /** q103: exact-count stratified sample — the 12 smallest-hash docs of
     * every source ([[graft.operators.Sampling.stratifiedTopK]]): the
@@ -2632,8 +2509,7 @@ object Queries {
   def annIvfDeletes(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 10)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
-    try {
+    scratch(s, "graft_ivf_del") { path =>
       val maxId = emb.agg(max(col("vec_id"))).first().getLong(0)
       val t1 = maxId * 3 / 5
       Similarity.buildIvfIndex(emb.filter(col("vec_id") <= t1),
@@ -2651,7 +2527,7 @@ object Queries {
         .orderBy(col("query_id"), col("rank"))
       import scala.jdk.CollectionConverters._
       s.createDataFrame(result.collect().toSeq.asJava, result.schema)
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q108: per-source DATA CARD — the summary table a curated corpus
@@ -2783,8 +2659,7 @@ object Queries {
     // fallback mis-binds the corpus attribute against the probe row
     // (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). Bounded output is collected
     // (k × 3 rows) so the temp table can be deleted, like q47/q75.
-    val path = java.nio.file.Files.createTempDirectory("graft_rag").toString
-    try {
+    scratch(s, "graft_rag") { path =>
       chunks.select(col("chunk_id"), embed.as("vec"))
         .write.mode("overwrite").parquet(s"$path/chunk_vecs")
       val vecs = s.read.parquet(s"$path/chunk_vecs")
@@ -2807,7 +2682,7 @@ object Queries {
         .orderBy(col("query_id"), col("rank"))
       import scala.jdk.CollectionConverters._
       s.createDataFrame(result.collect().toSeq.asJava, result.schema)
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q112: conversion funnel — the ordered-sequence analytics staple:
@@ -3001,16 +2876,9 @@ object Queries {
       s: SparkSession,
       dir: String,
       prefix: String)(
-      run: (DataFrame, String) => DataFrame): DataFrame = {
-    val storeDir =
-      java.nio.file.Files.createTempDirectory("graft_gram_gate").toString
-    try {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val shift = docs.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val b0 = docs
-      val b1 = docs.select((col("doc_id") + shift).as("doc_id"), col("text"))
-      val b2 = docs.select((col("doc_id") + 2 * shift).as("doc_id"),
-        concat(col("text"), lit(" qz17 qz18")).as("text"))
+      run: (DataFrame, String) => DataFrame): DataFrame =
+    scratch(s, "graft_gram_gate") { storeDir =>
+      val Seq(b0, b1, b2) = copyBatches(s, dir)
       val p0 = run(b0, storeDir)
       val p1 = run(b1, storeDir)
       // ONE eager checkpoint for both pre-compaction results: their
@@ -3024,19 +2892,14 @@ object Queries {
       Dedup.FingerprintStore.compact(s, storeDir, buckets = 8, tablePrefix = prefix)
       // the third batch's scan pins post-compaction state and nothing
       // mutates the store after it — it stays lazy until the final
-      // checkpoint, which must still run BEFORE the finally-block
-      // truncates the store
+      // checkpoint, which must still run BEFORE the scratch cleanup
+      // deletes the store
       val p2 = run(b2, storeDir)
       // no terminal orderBy: the driver's hash gate sorts canon rows
       // itself, and a total sort of the output (sample job + range
       // exchange) is exactly what a 100 TB emit would not do
       p01.unionByName(p2).localCheckpoint(true)
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(s, storeDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, storeDir)
     }
-  }
 
   /** q118: product-quantization ADC top-k — the serving tier q94's
     * scalar quantization graduates into at billion-vector scale
@@ -3085,8 +2948,7 @@ object Queries {
       Seq.tabulate(8)(j => Seq.tabulate(16)(i => if (i == 2 * j) 1.0 else 0.0)))
     val centers = (0 until 8).map(j =>
       Seq.tabulate(64)(i => if (i == j * 8) 1.0 else 0.0))
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfpq").toString
-    try {
+    scratch(s, "graft_ivfpq") { path =>
       graft.operators.Similarity
         .buildIvfPq(emb, "embedding", "vec_id", centers, codebooks)
         .repartition(col("cell"))
@@ -3101,7 +2963,7 @@ object Queries {
         .orderBy(col("query_id"), col("rank"))
       import scala.jdk.CollectionConverters._
       s.createDataFrame(result.collect().toSeq.asJava, result.schema)
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q120: token-weighted sample — the 12 docs per source with the
@@ -3208,10 +3070,8 @@ object Queries {
     * report proves the retention GC is replay-invisible: delete a LIVE
     * segment and the window re-aggregation (and the hash) breaks.
     */
-  def streamDriftGate(s: SparkSession, dir: String): DataFrame = {
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_drift_gate").toString
-    try {
+  def streamDriftGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_drift_gate") { stateDir =>
       val docs = Tables.documents(s, dir)
       val base = graft.streaming.DriftStream.baselinePpm(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), "text")
@@ -3228,8 +3088,7 @@ object Queries {
       reports.reduce(_ unionByName _)
         .orderBy(col("batch_id"), col("source"), col("tok"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, stateDir)
-  }
+    }
 
   /** q129: PERSISTED incremental cluster map — q52's cluster assignment
     * maintained through [[graft.operators.ClusterStore]] instead of
@@ -3244,47 +3103,45 @@ object Queries {
     * recursive-CTE closure over the union corpus (q52's oracle shape on
     * q67's corpus). Output = q52's schema.
     */
-  def clusterStoreGate(s: SparkSession, dir: String): DataFrame = {
-    val storeDir =
-      java.nio.file.Files.createTempDirectory("graft_cstore_gate").toString
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val b1 = docs0
-      val b2 = docs0.select((col("doc_id") + lit(m1)).as("doc_id"), col("text"))
-      val b3 = docs0.select((col("doc_id") + lit(2 * m1)).as("doc_id"),
-        concat(col("text"), lit(" qz17 qz18")).as("text"))
+  def clusterStoreGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cstore_gate") { storeDir =>
+      val Seq(b1, b2, b3) = copyBatches(s, dir)
       ClusterStore.ingest(b1, storeDir, "text", "doc_id")
       ClusterStore.ingest(b2, storeDir, "text", "doc_id")
       ClusterStore.compact(s, storeDir, buckets = 8,
         tablePrefix = "graft_q129_store")
       ClusterStore.ingest(b3, storeDir, "text", "doc_id")
-      // persist the resolved map: TWO consumers of the one labeling
-      // action (the membership join and the size rollup) otherwise
-      // each re-run the segment fold + latest-wins aggregate inside
-      // the same execution (§1.2 don't compute twice)
-      val m = graft.util.OperatorCaches.persisted(
-        ClusterStore.load(s, storeDir).withColumnRenamed("node", "doc_id"))
-      // q52's two-phase size rollup (groupBy the membership map + join
-      // back, singletons = literal 1) — not a cluster-keyed window,
-      // which would serialize the giant LSH component on one task
-      val sizes = m.groupBy(col("component"))
-        .agg(count(lit(1)).as("__csize"))
-      val out = b1.unionByName(b2).unionByName(b3).select(col("doc_id"))
-        .join(m, Seq("doc_id"), "left")
-        .join(sizes, Seq("component"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("cluster_id"),
-          coalesce(col("__csize"), lit(1L)).as("cluster_size"))
-        // no terminal orderBy - the hash gate is order-insensitive and
-        // the sort cost a sample job + range exchange per run
-        .localCheckpoint(true)
-      graft.util.OperatorCaches.releaseFrames(s, Seq(m))
-      out
-    } finally {
-      ClusterStore.dropTables(s, storeDir)
-      graft.io.Sinks.truncatePath(s, storeDir)
+      clusterLabels(s, storeDir, b1.unionByName(b2).unionByName(b3))
     }
+
+  /** q52's labeling of `docs` off the cluster store in `storeDir` (the
+    * q129/q144 tail): membership from the resolved map, sizes from q52's
+    * two-phase rollup, singletons labeled by their own id.
+    */
+  private def clusterLabels(s: SparkSession, storeDir: String, docs: DataFrame): DataFrame = {
+    // persist the resolved map: TWO consumers of the one labeling
+    // action (the membership join and the size rollup) otherwise
+    // each re-run the segment fold + latest-wins aggregate — the
+    // priciest subtree — inside the same execution (§1.2 don't
+    // compute twice)
+    val m = graft.util.OperatorCaches.persisted(
+      ClusterStore.load(s, storeDir).withColumnRenamed("node", "doc_id"))
+    // q52's two-phase size rollup (groupBy the membership map + join
+    // back, singletons = literal 1) — not a cluster-keyed window,
+    // which would serialize the giant LSH component on one task
+    val sizes = m.groupBy(col("component"))
+      .agg(count(lit(1)).as("__csize"))
+    val out = docs.select(col("doc_id"))
+      .join(m, Seq("doc_id"), "left")
+      .join(sizes, Seq("component"), "left")
+      .select(col("doc_id"),
+        coalesce(col("component"), col("doc_id")).as("cluster_id"),
+        coalesce(col("__csize"), lit(1L)).as("cluster_size"))
+      // no terminal orderBy - the hash gate is order-insensitive and
+      // the sort cost a sample job + range exchange per run
+      .localCheckpoint(true)
+    graft.util.OperatorCaches.releaseFrames(s, Seq(m))
+    out
   }
 
   /** q144: FUSED-BACKFILL cluster-store ingest — q129's three-batch
@@ -3297,43 +3154,14 @@ object Queries {
     * loop (spec-asserted), so the oracle is the SAME one-shot
     * recursive-CTE closure as q129. Output = q52's schema.
     */
-  def clusterBackfillGate(s: SparkSession, dir: String): DataFrame = {
-    val storeDir =
-      java.nio.file.Files.createTempDirectory("graft_cbackfill_gate").toString
-    try {
-      val docs0 = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val m1 = docs0.agg(max(col("doc_id"))).first().getLong(0) + 1
-      val backlog = docs0.select(lit(0L).as("bt"), col("doc_id"), col("text"))
-        .unionByName(docs0.select(lit(1L).as("bt"),
-          (col("doc_id") + lit(m1)).as("doc_id"), col("text")))
-        .unionByName(docs0.select(lit(2L).as("bt"),
-          (col("doc_id") + lit(2 * m1)).as("doc_id"),
-          concat(col("text"), lit(" qz17 qz18")).as("text")))
+  def clusterBackfillGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cbackfill_gate") { storeDir =>
+      val backlog = copyBatches(s, dir).zipWithIndex
+        .map { case (b, i) => b.select(lit(i.toLong).as("bt"), col("doc_id"), col("text")) }
+        .reduce(_ unionByName _)
       ClusterStore.ingestBackfill(backlog, "bt", storeDir, "text", "doc_id")
-      // persist the resolved map — see clusterStoreGate; here the
-      // resolve is 3 uncompacted segments + latest-wins, the priciest
-      // subtree of the labeling execution, and it appeared TWICE
-      val m = graft.util.OperatorCaches.persisted(
-        ClusterStore.load(s, storeDir).withColumnRenamed("node", "doc_id"))
-      // q52's two-phase size rollup — see clusterStoreGate
-      val sizes = m.groupBy(col("component"))
-        .agg(count(lit(1)).as("__csize"))
-      val out = backlog.select(col("doc_id"))
-        .join(m, Seq("doc_id"), "left")
-        .join(sizes, Seq("component"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("cluster_id"),
-          coalesce(col("__csize"), lit(1L)).as("cluster_size"))
-        // no terminal orderBy - the hash gate is order-insensitive and
-        // the sort cost a sample job + range exchange per run
-        .localCheckpoint(true)
-      graft.util.OperatorCaches.releaseFrames(s, Seq(m))
-      out
-    } finally {
-      ClusterStore.dropTables(s, storeDir)
-      graft.io.Sinks.truncatePath(s, storeDir)
+      clusterLabels(s, storeDir, backlog)
     }
-  }
 
   /** q145: HTML main-content extraction — the boilerplate-removal stage
     * before any text operator ([[graft.operators.Html.extractMain]]).
@@ -3594,9 +3422,7 @@ object Queries {
       c.cast("string"))
     val docs = Tables.documents(s, dir)
     val mk = graft.util.OperatorCaches.mark()
-    val path =
-      java.nio.file.Files.createTempDirectory("graft_crawlloop").toString
-    try {
+    scratch(s, "graft_crawlloop") { path =>
       val frontier = docs.select(urlOf(d).as("url"),
         concat(lit("site"), pmod(d, lit(7)).cast("string"),
           lit(".example.com")).as("domain"),
@@ -3686,7 +3512,7 @@ object Queries {
         .localCheckpoint(true) // terminal action: the caches are consumed
       graft.util.OperatorCaches.releaseSince(s, mk)
       out
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q183: served-path ANN recall certification — retrieval QUALITY on
@@ -3713,9 +3539,7 @@ object Queries {
     val emb = Tables.embeddings(s, dir)
     val queries = emb.filter(col("vec_id") < 20)
     val mk = graft.util.OperatorCaches.mark()
-    val root =
-      java.nio.file.Files.createTempDirectory("graft_annrec").toString
-    try {
+    scratch(s, "graft_annrec") { root =>
       val bfCos = graft.util.OperatorCaches.persisted(
         Similarity.bruteForceTopK(emb, queries, "embedding", "vec_id",
             k = 5)
@@ -3763,7 +3587,7 @@ object Queries {
       // training runs here (guide §2.6 — concurrent jobs backfill each
       // other's stragglers; job-count, not data, is this gate's cost).
       // Both builds are joined before the call returns or throws, so
-      // neither writes under `root` after the finally below clears it.
+      // neither writes under `root` after the scratch cleanup clears it.
       val books = Seq.tabulate(4)(_ => Seq.tabulate(8)(j =>
         Seq.tabulate(16)(i => if (i == 2 * j) 1.0 else 0.0)))
       val centers = (0 until 8).map(j =>
@@ -3815,7 +3639,7 @@ object Queries {
         .localCheckpoint(true) // terminal action: caches + index dirs done
       graft.util.OperatorCaches.releaseSince(s, mk)
       out
-    } finally graft.io.Sinks.truncatePath(s, root)
+    }
   }
 
   /** q184: compression-ratio quality gate —
@@ -4000,10 +3824,8 @@ object Queries {
     * flatMapGroupsWithState twin is spec-parity-tested in
     * `FrontierStreamSpec`.
     */
-  def streamFrontierGate(s: SparkSession, dir: String): DataFrame = {
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_frontier_gate").toString
-    try {
+  def streamFrontierGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_frontier_gate") { stateDir =>
       import s.implicits._
       val d = col("doc_id")
       val dom = concat(lit("site"),
@@ -4043,10 +3865,7 @@ object Queries {
       val r2 = run(epoch(t2, Long.MaxValue), 2L).localCheckpoint(true)
       r0.unionByName(r1).unionByName(r2).orderBy(col("url"))
         .localCheckpoint(true)
-    } finally {
-      graft.io.Sinks.truncatePath(s, stateDir)
     }
-  }
 
   /** q190: STREAMING crawl-curation ingest on the oracle gate — the
     * q153 chain's streaming twin [[graft.streaming.CurationStream]]
@@ -4105,12 +3924,10 @@ object Queries {
   }
 
   /** q190's gate body — see the scaladoc above [[streamCurationGate]]. */
-  def streamCurationGate(s: SparkSession, dir: String): DataFrame = {
-    val root =
-      java.nio.file.Files.createTempDirectory("graft_cstream_gate").toString
-    val (dedupDir, budgetDir, outDir) =
-      (s"$root/dedup", s"$root/budget", s"$root/out")
-    try {
+  def streamCurationGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cstream_gate") { root =>
+      val (dedupDir, budgetDir, outDir) =
+        (s"$root/dedup", s"$root/budget", s"$root/out")
       // multi-file WET write (NO coalesce(1)): collapsing would pull
       // the markup-build join into one task, and a real crawl delivers
       // many WET files per epoch anyway — the reader is directory-based
@@ -4145,12 +3962,7 @@ object Queries {
           col("admitted"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally {
-      graft.operators.Dedup.FingerprintStore.currentGenTable(s, dedupDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, root)
     }
-  }
 
   /** q191: CurationStream's CHECKPOINTED RUNTIME path on the oracle
     * gate — q190 drives `processBatch`/`sink` directly; this gate
@@ -4171,12 +3983,10 @@ object Queries {
     * `cum_before` after the restart point; the oracle (q190's one-pass
     * replay minus the epoch column) catches one token of drift.
     */
-  def streamCurationRestartGate(s: SparkSession, dir: String): DataFrame = {
-    val root =
-      java.nio.file.Files.createTempDirectory("graft_cstream_rst").toString
-    val (dedupDir, budgetDir, outDir) =
-      (s"$root/dedup", s"$root/budget", s"$root/out")
-    try {
+  def streamCurationRestartGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_cstream_rst") { root =>
+      val (dedupDir, budgetDir, outDir) =
+        (s"$root/dedup", s"$root/budget", s"$root/out")
       // range-partitioned WET staging: file k holds a contiguous
       // doc_id range below file k+1's (the batch-invariance contract
       // above); still a distributed write — no single-task collapse
@@ -4218,12 +4028,7 @@ object Queries {
         .select(col("doc_id"), col("source"), col("n_tokens"),
           col("cum_before"), col("admitted"))
         .localCheckpoint(true)
-    } finally {
-      graft.operators.Dedup.FingerprintStore.currentGenTable(s, dedupDir)
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      graft.io.Sinks.truncatePath(s, root)
     }
-  }
 
   /** q179: URL-template mining — [[graft.operators.Urls.pathTemplate]]:
     * digit runs mask to `{n}` so a million product pages collapse to
@@ -4489,25 +4294,26 @@ object Queries {
       status.as("status"), reason.as("reason"), ctype.as("ctype"),
       location.as("location"),
       when(m10 === 8, lit("not found")).otherwise(body).as("body"))
-    val path =
-      java.nio.file.Files.createTempDirectory("graft_warc").toString
-    graft.io.Wet
-      .toResponseRecords(rendered, "uri", "status", "reason", "ctype",
-        "location", "body")
-      .write.mode("overwrite")
-      .option("lineSep", graft.io.Wet.RecordSeparator)
-      .text(s"$path/warc")
-    graft.io.Wet.readResponses(s, s"$path/warc")
-      .select(
-        regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long")
-          .as("doc_id"),
-        col("target_uri"), col("status"), col("content_type"),
-        col("location"),
-        octet_length(col("body")).cast("long").as("body_len"),
-        coalesce(col("status") === 200 &&
-          col("content_type") === "text/html", lit(false)).as("fetch_ok"),
-        col("status").between(300, 399).as("redirect"))
-      .orderBy(col("doc_id"))
+    scratch(s, "graft_warc") { path =>
+      graft.io.Wet
+        .toResponseRecords(rendered, "uri", "status", "reason", "ctype",
+          "location", "body")
+        .write.mode("overwrite")
+        .option("lineSep", graft.io.Wet.RecordSeparator)
+        .text(s"$path/warc")
+      graft.io.Wet.readResponses(s, s"$path/warc")
+        .select(
+          regexp_extract(col("target_uri"), "([0-9]+)$", 1).cast("long")
+            .as("doc_id"),
+          col("target_uri"), col("status"), col("content_type"),
+          col("location"),
+          octet_length(col("body")).cast("long").as("body_len"),
+          coalesce(col("status") === 200 &&
+            col("content_type") === "text/html", lit(false)).as("fetch_ok"),
+          col("status").between(300, 399).as("redirect"))
+        .orderBy(col("doc_id"))
+        .localCheckpoint(true)
+    }
   }
 
   /** q172: hreflang variant clusters —
@@ -5230,10 +5036,8 @@ object Queries {
         lit(".example.com/doc/"), id))
     val rendered = picked.select(col("doc_id"),
       markup.as("wet_text"), uri.as("uri"))
-    val path =
-      java.nio.file.Files.createTempDirectory("graft_chain").toString
-    val mk = graft.util.OperatorCaches.mark()
-    try {
+    scratch(s, "graft_chain") { path =>
+      val mk = graft.util.OperatorCaches.mark()
       // multi-file WET write (NO coalesce(1)) — the q190 r17 lesson:
       // collapsing pulls the whole markup-build join into one task (a
       // measured sf1 scale-killer); the reader is directory-based and
@@ -5342,7 +5146,7 @@ object Queries {
         .localCheckpoint(true) // terminal action: temp dir + caches freed
       graft.util.OperatorCaches.releaseSince(s, mk)
       out
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q152: public-suffix registered domains — q146's blocklist/rollup
@@ -5482,8 +5286,7 @@ object Queries {
         lit(")")).as("text"),
       concat(lit("https://crawl.example.com/doc/"), col("doc_id"))
         .as("uri"))
-    val path = java.nio.file.Files.createTempDirectory("graft_wet").toString
-    try {
+    scratch(s, "graft_wet") { path =>
       graft.io.Wet.toRecords(docs, "text", "uri")
         .write.mode("overwrite")
         .option("lineSep", graft.io.Wet.RecordSeparator).text(s"$path/wet")
@@ -5495,7 +5298,7 @@ object Queries {
           col("length_ok"))
         .orderBy(col("doc_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, path)
+    }
   }
 
   /** q149: outlink graph extraction — the web-graph stage composing
@@ -5803,10 +5606,8 @@ object Queries {
     * columns then come from gen + segments ≥ 1, so a fold that lost or
     * double-counted a row breaks the hash.
     */
-  def streamQualityGate(s: SparkSession, dir: String): DataFrame = {
-    val stateDir =
-      java.nio.file.Files.createTempDirectory("graft_qmeter_gate").toString
-    try {
+  def streamQualityGate(s: SparkSession, dir: String): DataFrame =
+    scratch(s, "graft_qmeter_gate") { stateDir =>
       val docs = Tables.documents(s, dir)
       val model = graft.operators.LmScore.trainBigramLm(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), "text", topK = 512)
@@ -5823,8 +5624,7 @@ object Queries {
       }.reduce(_ unionByName _)
         .orderBy(col("batch_id"))
         .localCheckpoint(true)
-    } finally graft.io.Sinks.truncatePath(s, stateDir)
-  }
+    }
 
   /** q143: cluster-level quality propagation — "duplication propagates
     * contamination": q52's duplicate clusters joined to q87's exact-

@@ -526,8 +526,7 @@ object ClusterStore {
     * cleanup; the on-disk data is the caller's to delete.
     */
   def dropTables(s: SparkSession, dir: String): Unit =
-    (currentGen(s, dir) ++ SegmentStore.currentGen(s, keysDir(dir)))
-      .flatMap(_.table).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    SegmentStore.dropTables(s, dir)
 
   /** Id the next non-epoch ingest claims: past the newest committed
     * segment and never below the generation's bound (a segment there

@@ -79,51 +79,14 @@ object Dedup {
     diag.unionByName(off)
   }
 
-  /** Incremental (cross-batch) exact dedup — the realistic corpus-build
-    * loop at 100 TB: dedupe each NEW ingest batch against the accumulated
-    * fingerprint store instead of re-deduping the whole corpus. Returns
-    * `(survivors, updatedStore)`: rows of `batch` that are neither
-    * in-batch duplicates (smallest-id keeper wins, as [[exact]]) nor
-    * already fingerprinted in `store`, plus the store with the survivors'
-    * fingerprints appended. The store is fingerprint-only (16-byte md5 +
-    * id per distinct doc — a sliver of the corpus).
-    *
-    * IN-MEMORY SEAM ONLY: the returned store is a LAZY plan stacking one
-    * union per batch — loop it unmaterialized and every prior batch's
-    * work re-executes each iteration (O(n²) ingest). For any loop, use
-    * [[dedupeIncrementalStaged]], which builds the materialization in
-    * (per-batch segment write + single-scan reload); this tuple form
-    * exists for single-step composition inside an already-materialized
-    * pipeline stage.
-    */
-  def dedupeIncremental(
-      batch: DataFrame,
-      store: DataFrame,
-      textCol: String,
-      idCol: String): (DataFrame, DataFrame) = {
-    val keepers = exact(batch, textCol, idCol)
-      .join(store.select(col("fp")), Seq("fp"), "left_anti")
-    val survivors = batch
-      .join(keepers.select(col("keep_id").as(idCol)), Seq(idCol), "left_semi")
-    (survivors, store.unionByName(
-      keepers.select(col("fp"), col("keep_id").as("doc_id"))))
-  }
-
-  /** Empty fingerprint store (fp, doc_id) to seed an incremental build. */
-  def emptyStore(s: org.apache.spark.sql.SparkSession): DataFrame = {
-    import s.implicits._
-    Seq.empty[(String, Long)].toDF("fp", "doc_id")
-  }
-
   /** Filesystem-backed fingerprint store for [[dedupeIncrementalStaged]]:
     * a directory of immutable parquet SEGMENTS (`seg_00000`, `seg_00001`,
     * …), one appended per ingested batch, schema pinned to
     * (fp: string, doc_id: long). Loading reads the committed segment
     * files directly, so the store's plan is ONE parquet relation no
-    * matter how many batches were ingested — the lineage cut that the
-    * in-memory [[dedupeIncremental]] tuple API leaves to the caller (and
-    * that, forgotten, degrades an ingest loop to O(n²): each returned
-    * store stacks another union over every prior batch's plan).
+    * matter how many batches were ingested — an in-memory store frame
+    * returned per batch would stack another union over every prior
+    * batch's plan and degrade an ingest loop to O(n²).
     *
     * CONCURRENCY CONTRACT — one writer per store, by design: segment
     * indices are claimed by listing, so two concurrent ingests could
@@ -243,48 +206,31 @@ object Dedup {
       SegmentStore.purge(s, dir)
   }
 
-  /** [[dedupeIncremental]] with the store persistence built in — the
-    * scale-safe ingest loop. Each call loads the accumulated store from
-    * `storeDir` (one parquet scan), anti-joins the batch's fingerprints
-    * against it, APPENDS the batch's new fingerprints as a fresh
-    * immutable segment, and derives the surviving rows from that
-    * materialized segment — so per-batch cost is one pass over the batch
-    * plus one anti-join against the store, independent of how many
-    * batches came before. Nothing ever reads a file it is writing: the
-    * segment list is fixed before the new segment is created. Replaying
-    * a batch appends an empty segment and returns no survivors
-    * (idempotent ingest). At 100 TB, compact the segment directory into
-    * a table bucketed by `fp` periodically so the per-ingest anti-join
-    * co-locates without reshuffling history.
+  /** Incremental (cross-batch) exact dedup through the persisted
+    * [[FingerprintStore]] — the scale-safe corpus-build loop: each call
+    * anti-joins the batch's fingerprints against the accumulated store
+    * (one parquet scan), APPENDS the batch's new fingerprints as a fresh
+    * immutable segment at the next unused id, and derives the surviving
+    * rows — neither in-batch duplicates (smallest-id keeper wins, as
+    * [[exact]]) nor already fingerprinted — from that materialized
+    * segment. Per-batch cost is one pass over the batch plus one
+    * anti-join against the store, independent of how many batches came
+    * before. Re-ingesting a batch appends an empty segment and returns
+    * no survivors (idempotent ingest). At 100 TB, compact the segment
+    * directory into a table bucketed by `fp` periodically so the
+    * per-ingest anti-join co-locates without reshuffling history.
+    *
+    * This is [[dedupeStreamStaged]] at the next unused segment id: the
+    * history below that id is the whole store, and no committed segment
+    * sits at it, so the replay skip never fires.
     */
   def dedupeIncrementalStaged(
       batch: DataFrame,
       storeDir: String,
       textCol: String,
-      idCol: String): DataFrame = {
-    val s = batch.sparkSession
-    val nextIdx = SegmentStore.nextId(s, storeDir)
-    // gen table (bucketed, shuffle-free side) + post-compaction segments
-    val store = FingerprintStore.load(s, storeDir)
-    // a null-text doc has a null fingerprint; stored as-is it would pass
-    // the anti-join in EVERY later batch (null never equi-matches null).
-    // A sentinel — unreachable by md5's 32-hex output — keeps null-text
-    // docs deduping across batches through a plain (bucketable)
-    // equi-join; a null-SAFE join would break the post-compaction
-    // co-located read (hash keys wrap in coalesce, losing bucket
-    // alignment).
-    val keepers = exact(batch, textCol, idCol)
-      .withColumn("fp", coalesce(col("fp"), lit("__null_text__")))
-      .join(store.select(col("fp")), Seq("fp"), "left_anti")
-      .select(col("fp"), col("keep_id").cast("long").as("doc_id"))
-    val seg = SegmentStore.segPath(storeDir, nextIdx)
-    // overwrite: reclaims a partial (uncommitted) directory left by a
-    // crashed attempt at the same index
-    keepers.write.mode("overwrite").parquet(seg)
-    val committed = s.read.schema(FingerprintStore.schema).parquet(seg)
-    batch.join(committed.select(col("doc_id").cast(batch.schema(idCol).dataType).as(idCol)),
-      Seq(idCol), "left_semi")
-  }
+      idCol: String): DataFrame =
+    fpIngest(batch, storeDir, textCol, idCol,
+      SegmentStore.nextId(batch.sparkSession, storeDir))(novelKeepers)
 
   /** [[dedupeIncrementalStaged]] with a bloom prefilter on the store
     * probe — the 100 TB ingest-loop shape. Identical output by
@@ -314,35 +260,27 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     import graft.functions.BloomFunctions
     val s = batch.sparkSession
-    val nextIdx = SegmentStore.nextId(s, storeDir)
-    val store = FingerprintStore.load(s, storeDir)
-    val keepers = exact(batch, textCol, idCol)
-      .withColumn("fp", coalesce(col("fp"), lit("__null_text__")))
-      .select(col("fp"), col("keep_id").cast("long").as("doc_id"))
-    val seg = SegmentStore.segPath(storeDir, nextIdx)
-    // parquet/catalog row count: metadata-only, no data scan
-    val storeRows = store.count()
-    if (storeRows == 0L) {
-      // empty history — every keeper is new; no bloom, no join
-      keepers.write.mode("overwrite").parquet(seg)
-    } else {
-      val bloom = BloomFunctions.bloomFor(store, "fp", storeRows, fpp)
-      val staging = f"$storeDir/tmp_probe_$nextIdx%05d"
-      keepers
-        .withColumn("maybe_seen", BloomFunctions.mightContain(bloom, col("fp")))
-        .write.mode("overwrite").parquet(staging)
-      val staged = s.read.parquet(staging)
-      val definiteNew = staged.filter(!col("maybe_seen"))
-      val candidates = staged.filter(col("maybe_seen"))
-        .join(store.select(col("fp")), Seq("fp"), "left_anti")
-      definiteNew.unionByName(candidates)
-        .select(col("fp"), col("doc_id"))
-        .write.mode("overwrite").parquet(seg)
-      graft.io.Sinks.truncatePath(s, staging)
+    val segId = SegmentStore.nextId(s, storeDir)
+    val staging = f"$storeDir/tmp_probe_$segId%05d"
+    val survivors = fpIngest(batch, storeDir, textCol, idCol, segId) { (found, store) =>
+      val keepers = found.select(col("fp"), col("keep_id").cast("long").as("doc_id"))
+      // parquet/catalog row count: metadata-only, no data scan
+      val storeRows = store.count()
+      if (storeRows == 0L) keepers // empty history — no bloom, no join
+      else {
+        val bloom = BloomFunctions.bloomFor(store, "fp", storeRows, fpp)
+        keepers
+          .withColumn("maybe_seen", BloomFunctions.mightContain(bloom, col("fp")))
+          .write.mode("overwrite").parquet(staging)
+        val staged = s.read.parquet(staging)
+        staged.filter(!col("maybe_seen"))
+          .unionByName(staged.filter(col("maybe_seen"))
+            .join(store.select(col("fp")), Seq("fp"), "left_anti"))
+          .select(col("fp"), col("doc_id"))
+      }
     }
-    val committed = s.read.schema(FingerprintStore.schema).parquet(seg)
-    batch.join(committed.select(col("doc_id").cast(batch.schema(idCol).dataType).as(idCol)),
-      Seq(idCol), "left_semi")
+    graft.io.Sinks.truncatePath(s, staging)
+    survivors
   }
 
   /** [[dedupeIncrementalStaged]] for Structured Streaming's foreachBatch
@@ -362,24 +300,49 @@ object Dedup {
       storeDir: String,
       textCol: String,
       idCol: String,
-      batchId: Long): DataFrame = {
+      batchId: Long): DataFrame =
+    fpIngest(batch, storeDir, textCol, idCol, batchId)(novelKeepers)
+
+  /** The one exact-fingerprint ingest core: segment `segId` of
+    * `storeDir` is this batch's. Unless it already committed (a replayed
+    * epoch), the batch's keepers (fp, keep_id, dup_count) and the store
+    * history strictly below `segId` go through `novel`, whose (fp,
+    * doc_id) rows commit as the segment. Survivors are the batch rows
+    * whose id the committed segment holds — read back, so a replay
+    * re-derives the identical set. Nothing ever reads a file it is
+    * writing: the history is fixed before the segment is created.
+    */
+  private def fpIngest(
+      batch: DataFrame, storeDir: String, textCol: String, idCol: String,
+      segId: Long)(novel: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val s = batch.sparkSession
-    val seg = SegmentStore.segPath(storeDir, batchId)
-    val alreadyCommitted =
-      SegmentStore.segments(s, storeDir).exists(_._1 == batchId)
-    if (!alreadyCommitted) {
-      val store = FingerprintStore.loadBefore(s, storeDir, batchId)
+    val seg = SegmentStore.segPath(storeDir, segId)
+    if (!SegmentStore.segments(s, storeDir).exists(_._1 == segId)) {
+      // a null-text doc has a null fingerprint; stored as-is it would
+      // pass the anti-join in EVERY later batch (null never equi-matches
+      // null). A sentinel — unreachable by md5's 32-hex output — keeps
+      // null-text docs deduping across batches through a plain
+      // (bucketable) equi-join; a null-SAFE join would break the
+      // post-compaction co-located read (hash keys wrap in coalesce,
+      // losing bucket alignment).
       val keepers = exact(batch, textCol, idCol)
         .withColumn("fp", coalesce(col("fp"), lit("__null_text__")))
-        .join(store.select(col("fp")), Seq("fp"), "left_anti")
-        .select(col("fp"), col("keep_id").cast("long").as("doc_id"))
-      keepers.write.mode("overwrite").parquet(seg)
+      // overwrite: reclaims a partial (uncommitted) directory left by a
+      // crashed attempt at the same id
+      novel(keepers, FingerprintStore.loadBefore(s, storeDir, segId))
+        .write.mode("overwrite").parquet(seg)
     }
-    val keepers = s.read.schema(FingerprintStore.schema).parquet(seg)
-    batch.join(
-      keepers.select(col("doc_id").cast(batch.schema(idCol).dataType).as(idCol)),
+    val committed = s.read.schema(FingerprintStore.schema).parquet(seg)
+    batch.join(committed.select(col("doc_id").cast(batch.schema(idCol).dataType).as(idCol)),
       Seq(idCol), "left_semi")
   }
+
+  /** Keepers the store has never fingerprinted (the plain probe: one
+    * anti-join against the store, gen table bucketed and shuffle-free).
+    */
+  private def novelKeepers(keepers: DataFrame, store: DataFrame): DataFrame =
+    keepers.join(store.select(col("fp")), Seq("fp"), "left_anti")
+      .select(col("fp"), col("keep_id").cast("long").as("doc_id"))
 
   /** Incremental NEAR-dup dedup through the persisted store — the
     * cross-batch twin of [[dedupeIncrementalStaged]], closing the gap
@@ -409,6 +372,9 @@ object Dedup {
     * a replayed batch idempotent: its own keys, re-seen in the store,
     * are owned by itself. Docs with no shingles (null/short text) carry
     * no keys and always survive — run exact dedup first for those.
+    *
+    * This is [[dedupeNearStreamStaged]] at the next unused segment id,
+    * as [[dedupeIncrementalStaged]] is [[dedupeStreamStaged]].
     */
   def dedupeNearIncrementalStaged(
       batch: DataFrame,
@@ -417,28 +383,9 @@ object Dedup {
       idCol: String,
       k: Int = 8,
       bands: Int = 4,
-      ngram: Int = 2): DataFrame = {
-    val s = batch.sparkSession
-    val nextIdx = SegmentStore.nextId(s, storeDir)
-    val store = FingerprintStore.load(s, storeDir)
-    // materialize the band keys ONCE: the frame feeds four consumers
-    // (both sides of the within-batch self-join, the store probe, the
-    // register write) and its lineage is the full tokenize+minhash scan —
-    // unmaterialized, that scan re-runs per consumer (measured 3.1× the
-    // corpus ratio at 10× data). The frame is skinny (id, fp) × bands;
-    // at 100 TB stage it under storeDir instead of executor storage.
-    val keys = bandKeys(
-      minhashSignatures(batch, textCol, idCol, k, ngram), idCol, bands)
-      // LAZY checkpoint (r17 verdict #3): the epoch's segment write is
-      // the next action and materializes these blocks inside its own
-      // job — the dedicated eager action per epoch was pure job count
-      .localCheckpoint(false)
-    val dropIds = nearDropIds(keys, store, idCol)
-    val newKeys = nearNewKeys(keys, store, idCol)
-    val seg = SegmentStore.segPath(storeDir, nextIdx)
-    newKeys.write.mode("overwrite").parquet(seg)
-    batch.join(dropIds, Seq(idCol), "left_anti")
-  }
+      ngram: Int = 2): DataFrame =
+    bandIngest(batch, storeDir, textCol, idCol, k, bands, ngram,
+      SegmentStore.nextId(batch.sparkSession, storeDir))(nearProbe(idCol))
 
   /** [[dedupeNearIncrementalStaged]] with a bloom prefilter on BOTH
     * store probes — [[dedupeIncrementalBloomStaged]]'s trick applied to
@@ -461,16 +408,10 @@ object Dedup {
       ngram: Int = 2,
       fpp: Double = 0.01): DataFrame = {
     import graft.functions.BloomFunctions
-    val s = batch.sparkSession
-    val nextIdx = SegmentStore.nextId(s, storeDir)
-    val store = FingerprintStore.load(s, storeDir)
-    val storeRows = store.count() // metadata-only
-    val keys = bandKeys(
-      minhashSignatures(batch, textCol, idCol, k, ngram), idCol, bands)
-      .localCheckpoint(false) // lazy — the segment write materializes
-    val (dropIds, newKeys) =
-      if (storeRows == 0L) (nearDropIds(keys, store, idCol),
-        nearNewKeys(keys, store, idCol))
+    bandIngest(batch, storeDir, textCol, idCol, k, bands, ngram,
+      SegmentStore.nextId(batch.sparkSession, storeDir)) { (keys, store) =>
+      val storeRows = store.count() // metadata-only
+      if (storeRows == 0L) nearProbe(idCol)(keys, store)
       else {
         val bloom = BloomFunctions.bloomFor(store, "fp", storeRows, fpp)
         val flagged = keys
@@ -488,16 +429,50 @@ object Dedup {
           .agg(min(col(idCol)).cast("long").as("doc_id"),
             max(col("maybe_seen")).as("maybe_seen"))
           .localCheckpoint(false) // lazy — both consumers evaluate in
-                                  // the segment-write action below
+                                  // the segment-write action
         val news = agged.filter(!col("maybe_seen")).drop("maybe_seen")
           .unionByName(agged.filter(col("maybe_seen")).drop("maybe_seen")
             .join(store.select(col("fp")), Seq("fp"), "left_anti"))
         (drops, news)
       }
-    val seg = SegmentStore.segPath(storeDir, nextIdx)
-    newKeys.write.mode("overwrite").parquet(seg)
+    }
+  }
+
+  /** The one band-key ingest core: segment `segId` of `storeDir` is this
+    * batch's. The batch's band keys are materialized ONCE — the frame
+    * feeds four consumers (both sides of the within-batch self-join, the
+    * store probe, the register write) and its lineage is the full
+    * tokenize+minhash scan; unmaterialized, that scan re-runs per
+    * consumer (measured 3.1× the corpus ratio at 10× data). `probe`
+    * takes them and the store history strictly below `segId` to (drop
+    * ids, keys to register); the keys commit as the segment unless it
+    * already committed (a replayed epoch). Survivors are re-derived,
+    * not read back (see [[dedupeNearStreamStaged]]).
+    */
+  private def bandIngest(
+      batch: DataFrame, storeDir: String, textCol: String, idCol: String,
+      k: Int, bands: Int, ngram: Int, segId: Long)(
+      probe: (DataFrame, DataFrame) => (DataFrame, DataFrame)): DataFrame = {
+    val s = batch.sparkSession
+    val keys = bandKeys(
+      minhashSignatures(batch, textCol, idCol, k, ngram), idCol, bands)
+      // LAZY checkpoint (r17 verdict #3): the epoch's segment write (or,
+      // on a committed replay, the caller's survivors action) is the
+      // next action and materializes these blocks inside its own job —
+      // the dedicated eager action per epoch was pure job count. The
+      // frame is skinny (id, fp) × bands; at 100 TB stage it under
+      // storeDir instead of executor storage.
+      .localCheckpoint(false)
+    val (dropIds, newKeys) = probe(keys, FingerprintStore.loadBefore(s, storeDir, segId))
+    if (!SegmentStore.segments(s, storeDir).exists(_._1 == segId))
+      newKeys.write.mode("overwrite").parquet(SegmentStore.segPath(storeDir, segId))
     batch.join(dropIds, Seq(idCol), "left_anti")
   }
+
+  /** The plain band probe: every store and in-batch owner match. */
+  private def nearProbe(idCol: String)(
+      keys: DataFrame, store: DataFrame): (DataFrame, DataFrame) =
+    (nearDropIds(keys, store, idCol), nearNewKeys(keys, store, idCol))
 
   /** Near-dup drop set: batch docs with any band key owned by a
     * smaller-id doc — across batches (store owner) or within the batch
@@ -555,24 +530,8 @@ object Dedup {
       batchId: Long,
       k: Int = 8,
       bands: Int = 4,
-      ngram: Int = 2): DataFrame = {
-    val s = batch.sparkSession
-    val seg = SegmentStore.segPath(storeDir, batchId)
-    // materialized once for its four consumers (see
-    // dedupeNearIncrementalStaged); replay determinism is unaffected —
-    // the checkpoint just pins the same deterministic computation
-    val keys = bandKeys(
-      minhashSignatures(batch, textCol, idCol, k, ngram), idCol, bands)
-      // lazy — the segment write (or, on a committed replay, the
-      // caller's survivors action) materializes the blocks
-      .localCheckpoint(false)
-    val store = FingerprintStore.loadBefore(s, storeDir, batchId)
-    val alreadyCommitted =
-      SegmentStore.segments(s, storeDir).exists(_._1 == batchId)
-    if (!alreadyCommitted)
-      nearNewKeys(keys, store, idCol).write.mode("overwrite").parquet(seg)
-    batch.join(nearDropIds(keys, store, idCol), Seq(idCol), "left_anti")
-  }
+      ngram: Int = 2): DataFrame =
+    bandIngest(batch, storeDir, textCol, idCol, k, bands, ngram, batchId)(nearProbe(idCol))
 
   /** Per-document combined LSH band keys: one row per (doc, band),
     * `fp = "b<band>:<md5 of the band's signature slice>"` — the single-

@@ -258,6 +258,25 @@ object SegmentStore {
     t
   }
 
+  /** Drop the catalog handle of every generation marker anywhere under
+    * `root` — each store's there, current or superseded. The on-disk
+    * data is the caller's to delete.
+    */
+  def dropTables(s: SparkSession, root: String): Unit = {
+    val (fs, p) = fsOf(s, root)
+    if (fs.exists(p)) {
+      val files = fs.listFiles(p, true)
+      while (files.hasNext) {
+        val m = files.next().getPath
+        m.getName match {
+          case MarkerName(n) => Gen.parse(n.toLong, read(fs, m)).flatMap(_.table)
+            .foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+          case _ =>
+        }
+      }
+    }
+  }
+
   /** Delete every segment dir, committed or not, with id < `below`.
     * @return the (id, path) pairs deleted.
     */

@@ -332,34 +332,6 @@ class DedupSpec extends SparkSpec {
     assert(exact((1L, 2L)) == 1.0 && exact.contains((1L, 3L))) // uncapped sees all
   }
 
-  test("incremental dedup: new batches dedupe against the accumulated store") {
-    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.select("doc_id").collect().map(_.getLong(0)).toSet
-
-    val batch1 = Seq(
-      (1L, "alpha content"), (2L, "ALPHA   content"), (3L, "beta content")
-    ).toDF("doc_id", "text")
-    val (s1, store1) = Dedup.dedupeIncremental(
-      batch1, Dedup.emptyStore(spark), "text", "doc_id")
-    assert(ids(s1) == Set(1L, 3L)) // in-batch dup 2 collapses to keeper 1
-    assert(store1.count() == 2)
-
-    val batch2 = Seq(
-      (4L, "beta content"),        // known from batch 1 -> dropped
-      (5L, "gamma content"),       // new -> survives
-      (6L, "gamma content"),       // in-batch dup of 5
-      (7L, " GAMMA  content ")     // normalizes to the same -> dup of 5
-    ).toDF("doc_id", "text")
-    val (s2, store2) = Dedup.dedupeIncremental(batch2, store1, "text", "doc_id")
-    assert(ids(s2) == Set(5L))
-    assert(store2.count() == 3) // alpha, beta, gamma — one fp per distinct doc
-
-    // replaying an already-ingested batch is a no-op (idempotent ingest)
-    val (s3, store3) = Dedup.dedupeIncremental(batch2, store2, "text", "doc_id")
-    assert(ids(s3).isEmpty)
-    assert(store3.count() == 3)
-  }
-
   test("staged incremental dedup: persisted store, plan size flat across batches") {
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -419,60 +391,6 @@ class DedupSpec extends SparkSpec {
       == Set(4L))
   }
 
-  test("streaming dedup: cross-batch dups drop through a real stream; replay exact") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = tmpDir("graft_stream_fp")
-    val outDir = tmpDir("graft_stream_corpus")
-    val dedup = new graft.streaming.DedupStream(
-      spark, storeDir, outDir, "text", "doc_id")
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text")
-      .writeStream
-      .option("checkpointLocation", tmpDir("graft_stream_fp_ckpt"))
-      .foreachBatch(dedup.sink())
-      .start()
-    try {
-      mem.addData((1L, "alpha body"), (2L, "beta body"))
-      q.processAllAvailable()
-      mem.addData((3L, "ALPHA   body"), (4L, "gamma body")) // 3 dups 1
-      q.processAllAvailable()
-      val corpus = dedup.corpus().collect()
-        .map(_.getAs[Long]("doc_id")).toSet
-      assert(corpus == Set(1L, 2L, 4L))
-    } finally q.stop()
-    // at-least-once replay of the NEWEST epoch (the only one Structured
-    // Streaming can redeliver): identical survivors, no store growth
-    val segsBefore = Dedup.FingerprintStore.segments(spark, storeDir)
-    val replayed = Dedup.dedupeStreamStaged(
-      Seq((3L, "ALPHA   body"), (4L, "gamma body")).toDF("doc_id", "text"),
-      storeDir, "text", "doc_id", batchId = 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(replayed == Set(4L))
-    assert(Dedup.FingerprintStore.segments(spark, storeDir) == segsBefore)
-  }
-
-  test("self-maintaining dedup sink: compactEvery folds into the generation mid-stream") {
-    val storeDir = tmpDir("graft_stream_fp_auto")
-    val outDir = tmpDir("graft_stream_corpus_auto")
-    val dedup = new graft.streaming.DedupStream(
-      spark, storeDir, outDir, "text", "doc_id")
-    val sink = dedup.sink(compactEvery = 2, buckets = 4)
-    sink(Seq((1L, "alpha body"), (2L, "beta body")).toDF("doc_id", "text"), 0L)
-    sink(Seq((3L, "gamma body")).toDF("doc_id", "text"), 1L)
-    // epoch 2 compacts after its write: segments 0..1 fold, 2 is spared
-    sink(Seq((4L, "ALPHA body"), (5L, "delta body")).toDF("doc_id", "text"), 2L)
-    assert(Dedup.FingerprintStore.segments(spark, storeDir)
-      .map(p => p.substring(p.lastIndexOf("seg_") + 4).toLong) == Seq(2L))
-    assert(Dedup.FingerprintStore.currentGenTable(spark, storeDir).nonEmpty)
-    // post-fold epoch still dedups against the WHOLE history
-    sink(Seq((6L, "beta body"), (7L, "epsilon body")).toDF("doc_id", "text"), 3L)
-    val corpus = dedup.corpus().collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(corpus == Set(1L, 2L, 3L, 5L, 7L)) // 4 dups 1, 6 dups 2
-    Dedup.FingerprintStore.currentGenTable(spark, storeDir)
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
   test("streaming dedup: replay survives a compaction that spares the newest segment") {
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
@@ -496,60 +414,6 @@ class DedupSpec extends SparkSpec {
         == Set(6L))
     } finally {
       Dedup.FingerprintStore.currentGenTable(spark, dir)
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
-
-  test("streaming NEAR-dup: band matches drop through a real stream; replay + compaction exact") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val storeDir = tmpDir("graft_nearstream_fp")
-    val outDir = tmpDir("graft_nearstream_corpus")
-    val dedup = new graft.streaming.DedupStream(
-      spark, storeDir, outDir, "text", "doc_id")
-    implicit val sc = spark.sqlContext
-    val mem = MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text")
-      .writeStream
-      .option("checkpointLocation", tmpDir("graft_nearstream_ckpt"))
-      .foreachBatch(dedup.nearSink(k = 8, bands = 4, ngram = 2))
-      .start()
-    try {
-      // doc 3 extends doc 1 with an ALREADY-PRESENT bigram: different
-      // fingerprint (not an exact dup) but an identical distinct-bigram
-      // set → identical MinHash bands — a guaranteed near-dup
-      mem.addData((1L, "w x y z w x"), (2L, "p q p q"))
-      q.processAllAvailable()
-      mem.addData((3L, "w x y z w x y"), (4L, "unrelated tokens here now"))
-      q.processAllAvailable()
-      val corpus = dedup.corpus().collect().map(_.getAs[Long]("doc_id")).toSet
-      assert(corpus == Set(1L, 2L, 4L))
-    } finally q.stop()
-    // newest-epoch replay: byte-identical survivors, no store growth
-    val segsBefore = Dedup.FingerprintStore.segments(spark, storeDir)
-    val replayed = Dedup.dedupeNearStreamStaged(
-      Seq((3L, "w x y z w x y"), (4L, "unrelated tokens here now"))
-        .toDF("doc_id", "text"),
-      storeDir, "text", "doc_id", batchId = 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(replayed == Set(4L))
-    assert(Dedup.FingerprintStore.segments(spark, storeDir) == segsBefore)
-    try {
-      Dedup.FingerprintStore.compact(spark, storeDir, buckets = 4,
-        tablePrefix = "fp_nearstream", keepNewestSegments = 1)
-      // replay still exact after the fold spared the newest segment
-      assert(Dedup.dedupeNearStreamStaged(
-        Seq((3L, "w x y z w x y"), (4L, "unrelated tokens here now"))
-          .toDF("doc_id", "text"),
-        storeDir, "text", "doc_id", batchId = 1)
-        .collect().map(_.getLong(0)).toSet == Set(4L))
-      // folded band history still near-dedupes the next epoch
-      val e2 = Seq((5L, "p q p q p"), (6L, "totally different words"))
-        .toDF("doc_id", "text")
-      assert(Dedup.dedupeNearStreamStaged(
-        e2, storeDir, "text", "doc_id", batchId = 2)
-        .collect().map(_.getLong(0)).toSet == Set(6L))
-    } finally {
-      Dedup.FingerprintStore.currentGenTable(spark, storeDir)
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }

@@ -163,4 +163,28 @@ class QueriesSpec extends SparkSpec {
       assert(r.getAs[Long]("n_events") == exact(k)._2)
     }
   }
+
+  test("q173 deletes its WARC scratch dir once the result is materialized") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def warcDirs: Set[String] =
+      Option(tmp.list()).toSeq.flatten.filter(_.startsWith("graft_warc")).toSet
+    val before = warcDirs
+    assert(Queries.warcHttpGate(spark, sf0001).count() > 0)
+    val leaked = warcDirs.diff(before)
+    assert(leaked.isEmpty, s"q173 left scratch dirs behind: $leaked")
+  }
+
+  test("Queries.scala creates temp dirs and drops catalog tables only inside scratch") {
+    val src = scala.io.Source.fromFile("src/main/scala/graft/Queries.scala", "UTF-8")
+    val text = try src.mkString finally src.close()
+    val start = text.indexOf("def scratch[")
+    assert(start >= 0, "the scratch helper is gone")
+    val end = text.indexOf("\n  }\n", start)
+    def outside(needle: String): Seq[Int] =
+      needle.r.findAllMatchIn(text).map(_.start).filter(i => i < start || i > end).toSeq
+    assert("createTempDirectory".r.findAllMatchIn(text).size == 1)
+    assert(outside("createTempDirectory").isEmpty)
+    assert(outside("DROP TABLE").isEmpty,
+      "drop generation handles through scratch / SegmentStore.dropTables")
+  }
 }

@@ -216,6 +216,45 @@ class SegmentStoreSpec extends SparkSpec {
     }
   }
 
+  test("scratch: every store generation's handle under the root is dropped, the root deleted, on return and on throw") {
+    val text = (1 to 12).map(i => s"w$i").mkString(" ")
+    def docs(ids: Long*): DataFrame =
+      ids.map(i => (i, s"$text $i")).toDF("doc_id", "text")
+    // one compacted FingerprintStore and one compacted ClusterStore (map
+    // + keys substores) side by side under the scratch root
+    def fill(root: String): Seq[String] = {
+      val (fpDir, cDir) = (s"$root/fp", s"$root/cluster")
+      Dedup.dedupeIncrementalStaged(docs(1L, 2L), fpDir, "text", "doc_id").collect()
+      Dedup.FingerprintStore.compact(spark, fpDir, buckets = 2,
+        tablePrefix = "graft_scratch_fp"): Unit
+      ClusterStore.ingest(docs(1L, 2L), cDir, "text", "doc_id")
+      ClusterStore.compact(spark, cDir, buckets = 2, tablePrefix = "graft_scratch_c"): Unit
+      val tables = Seq(fpDir, s"$cDir/map", s"$cDir/keys")
+        .flatMap(d => SegmentStore.currentGen(spark, d).flatMap(_.table))
+      assert(tables.size == 3 && tables.forall(spark.catalog.tableExists))
+      tables
+    }
+    def cleaned(root: String, tables: Seq[String]): Unit = {
+      assert(tables.size == 3)
+      assert(!tables.exists(spark.catalog.tableExists), tables)
+      assert(!exists(root), root)
+    }
+    var root = ""
+    var tables = Seq.empty[String]
+    assert(graft.Queries.scratch(spark, "graft_scratch_ok") { r =>
+      root = r; tables = fill(r); 7
+    } == 7)
+    cleaned(root, tables)
+    val ex = intercept[IllegalStateException] {
+      graft.Queries.scratch(spark, "graft_scratch_fail") { r =>
+        root = r; tables = fill(r)
+        throw new IllegalStateException("body")
+      }
+    }
+    assert(ex.getMessage == "body")
+    cleaned(root, tables)
+  }
+
   test("withWrites: every forked write is joined before the call returns or throws") {
     val done = new java.util.concurrent.atomic.AtomicInteger()
     val slow = () => { Thread.sleep(300); done.incrementAndGet(): Unit }
