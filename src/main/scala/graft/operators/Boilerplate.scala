@@ -27,12 +27,8 @@ import org.apache.spark.sql.functions._
   * map-side into one line-keyed exchange; the frequent-line set is
   * bounded by Σ lines / minDocs (a line needs ≥ minDocs distinct docs
   * to qualify) — template-chrome-sized in practice, so the verdict
-  * join BROADCASTS by default and the corpus side never shuffles for
-  * it. The bound is an upper bound, not a guarantee: a pathological
-  * corpus (tiny minDocs × enormous duplication) can push the set past
-  * driver memory, so `broadcastFrequent = false` degrades the verdict
-  * to a shuffle join instead of a driver OOM. Reassembly is the one
-  * inherent doc-keyed exchange.
+  * join BROADCASTS and the corpus side never shuffles for it.
+  * Reassembly is the one inherent doc-keyed exchange.
   */
 object Boilerplate {
 
@@ -72,7 +68,6 @@ object Boilerplate {
       textCol: String,
       idCol: String,
       minDocs: Long,
-      broadcastFrequent: Boolean = true,
       maxLinesPerDoc: Long = 1000000L): DataFrame = {
     require(minDocs >= 2,
       "removeFrequentLines: minDocs must be >= 2 (at 1 everything is " +
@@ -80,11 +75,10 @@ object Boilerplate {
     require(maxLinesPerDoc >= 1, "removeFrequentLines: maxLinesPerDoc >= 1")
     val ls = graft.util.OperatorCaches.persisted(
       lines(docs, textCol, idCol))
-    val frequent0 = ls.select(col(idCol), col("ln")).distinct()
+    val frequent = broadcast(ls.select(col(idCol), col("ln")).distinct()
       .groupBy(col("ln")).agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= minDocs)
-      .select(col("ln"), lit(true).as("__rm"))
-    val frequent = if (broadcastFrequent) broadcast(frequent0) else frequent0
+      .select(col("ln"), lit(true).as("__rm")))
     val agg = ls
       .join(frequent, Seq("ln"), "left")
       .groupBy(col(idCol))

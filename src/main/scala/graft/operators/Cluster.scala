@@ -65,14 +65,12 @@ object Cluster {
     * full vertex set never rides through the iteration.
     *
     * Materialization: each round's edge set is localCheckpoint'ed
-    * (eager) — right for a single-machine gate; for a long-running
-    * cluster job pass `stagingDir` to stage rounds as parquet instead
-    * (durable across executor loss, like Dedup.dedupeCorpus's seam).
+    * (lazily: the round's signature aggregate materializes it).
     * Convergence is detected exactly (count + except on the
     * materialized frames — by then the edge set is stars, a sliver of
     * the input), bounded by `maxRounds` as a safety net at ~2 log₂ n.
-    */
-  /** @param localFinishEdges size gate for the LOCAL FINISH fast path:
+    *
+    * @param localFinishEdges size gate for the LOCAL FINISH fast path:
     *   when the canonicalized edge set is no larger than this (counted
     *   by the same aggregate that seeds convergence detection — no
     *   extra job) AND both node columns are BIGINT, the components are
@@ -85,8 +83,7 @@ object Cluster {
     *   labels are identical (min node id per component), and larger
     *   graphs take the O(log² n) distributed path unchanged. Pass 0 to
     *   force the distributed path.
-    */
-  /** @param noSelfLoops caller's guarantee that `edges` contains no
+    * @param noSelfLoops caller's guarantee that `edges` contains no
     *   a == b row (LSH pair emitters produce strictly a < b; the
     *   ClusterStore contraction filters them). When true, the
     *   self-loop-singleton branch — a filter + distinct + anti-join
@@ -100,24 +97,9 @@ object Cluster {
       srcCol: String,
       dstCol: String,
       maxRounds: Int = 25,
-      stagingDir: Option[String] = None,
       localFinishEdges: Long = 500000L,
       noSelfLoops: Boolean = false): DataFrame = {
     val s = edges.sparkSession
-    // LAZY local checkpoint: every materialize below is immediately
-    // followed by signature()'s aggregate, so marking the frame and
-    // letting that aggregate be the materializing job halves the action
-    // count per round (eager checkpoint + signature = 2 driver actions;
-    // lazy + signature = 1) — lineage still truncates at first
-    // materialization, so the per-round plan-blowup the checkpoint
-    // exists to stop is unchanged. The stagingDir seam stays a durable
-    // parquet write (its own action) for real-cluster runs.
-    def materialize(df: DataFrame, round: Int): DataFrame = stagingDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(f"$dir/cc_round_$round%03d")
-        s.read.parquet(f"$dir/cc_round_$round%03d")
-      case None => df.localCheckpoint(false)
-    }
     val raw = edges.select(
       least(col(srcCol), col(dstCol)).as("a"),
       greatest(col(srcCol), col(dstCol)).as("b"))
@@ -152,7 +134,14 @@ object Cluster {
           expr("bit_xor(xxhash64(a, b))")).head())
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var cur = materialize(canon, 0)
+    // LAZY local checkpoint: each round's checkpoint is immediately
+    // followed by signature()'s aggregate, so marking the frame and
+    // letting that aggregate be the materializing job halves the action
+    // count per round (eager checkpoint + signature = 2 driver actions;
+    // lazy + signature = 1) — lineage still truncates at first
+    // materialization, so the per-round plan-blowup the checkpoint
+    // exists to stop is unchanged.
+    var cur = canon.localCheckpoint(false)
     val longCols = Seq(srcCol, dstCol).forall(c =>
       edges.schema(c).dataType == org.apache.spark.sql.types.LongType)
     // LOCAL-FINISH gate by LIMIT-COLLECT, not a pre-counting aggregate:
@@ -206,7 +195,7 @@ object Cluster {
     var converged = curSig._1 == 0L
     var round = 1
     while (!converged && round <= maxRounds) {
-      val next = materialize(smallStar(largeStar(cur)), round)
+      val next = smallStar(largeStar(cur)).localCheckpoint(false)
       val nextSig = signature(next, round)
       converged = nextSig == curSig &&
         graft.util.Described(s, "cc:confirm")(next.exceptAll(cur).isEmpty)
@@ -257,37 +246,22 @@ object Cluster {
     * (eager) — exactly [[connectedComponents]]' discipline, because the
     * alternative re-plans iteration i's whole join chain inside
     * iteration i+1's plan: harmless at 3 iterations, quadratic analysis
-    * cost and a codegen blowup at PageRank's real 20–50. For a
-    * long-running cluster job pass `stagingDir` to stage rounds as
-    * parquet instead (durable across executor loss).
+    * cost and a codegen blowup at PageRank's real 20–50.
     */
   def pagerankInt(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int,
-      scale: Long = 1000000000000L,
-      stagingDir: Option[String] = None): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, "pagerankInt: iters must be >= 1")
-    val s = edges.sparkSession
-    def materialize(df: DataFrame, iter: Int): DataFrame = stagingDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(f"$dir/pr_iter_$iter%03d")
-        s.read.parquet(f"$dir/pr_iter_$iter%03d")
-      case None => df.localCheckpoint(true)
-    }
     // materialize the EDGES once, not just deg: every iteration joins
     // them, and an unmaterialized lineage re-runs the caller's whole
     // graph construction (link extraction, dedup, distinct) once per
     // round — iters× the build cost for zero benefit (the standard
     // Pregel discipline: the edge list is the loop invariant)
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-    val e = stagingDir match {
-      case Some(dir) =>
-        e0.write.mode("overwrite").parquet(s"$dir/pr_edges")
-        s.read.parquet(s"$dir/pr_edges")
-      case None => e0.localCheckpoint(true)
-    }
+    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .localCheckpoint(true)
     val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(eager = true) // reused every round; freeze it once
     val n = deg.count()
@@ -305,7 +279,7 @@ object Cluster {
       // the LAST iteration stays lazy: the caller's one action runs the
       // final join over the frozen previous round, so the gate pays no
       // extra materialization job for it
-      pr = if (i == iters) next else materialize(next, i)
+      pr = if (i == iters) next else next.localCheckpoint(true)
     }
     pr
   }
@@ -326,7 +300,7 @@ object Cluster {
     * operator contract — the oracle unrolls the identical expression.
     *
     * Same discipline as [[pagerankInt]]: edges materialized once (loop
-    * invariant), per-round localCheckpoint/staging, weights must be
+    * invariant), per-round localCheckpoint, weights must be
     * ≥ 1 (a zero-weight edge is "no edge" — drop it upstream), sinks
     * without out-edges are truncated (documented restriction).
     */
@@ -336,24 +310,11 @@ object Cluster {
       dstCol: String,
       weightCol: String,
       iters: Int,
-      scale: Long = 1000000000000L,
-      stagingDir: Option[String] = None): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, "pagerankWeightedInt: iters must be >= 1")
-    val s = edges.sparkSession
-    def materialize(df: DataFrame, iter: Int): DataFrame = stagingDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(f"$dir/prw_iter_$iter%03d")
-        s.read.parquet(f"$dir/prw_iter_$iter%03d")
-      case None => df.localCheckpoint(true)
-    }
-    val e0 = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
+    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"),
       col(weightCol).cast("long").as("w"))
-    val e = stagingDir match {
-      case Some(dir) =>
-        e0.write.mode("overwrite").parquet(s"$dir/prw_edges")
-        s.read.parquet(s"$dir/prw_edges")
-      case None => e0.localCheckpoint(true)
-    }
+      .localCheckpoint(true)
     val wout = e.groupBy(col("u")).agg(sum(col("w")).as("wout"))
       .localCheckpoint(eager = true)
     val n = wout.count()
@@ -368,7 +329,7 @@ object Cluster {
       val next = wout.join(sums, col("u") === col("v"))
         .select(col("u").as("node"), col("wout"),
           (lit(base) + expr("(850 * s) div 1000")).as("pr"))
-      pr = if (i == iters) next else materialize(next, i)
+      pr = if (i == iters) next else next.localCheckpoint(true)
     }
     pr
   }
@@ -394,34 +355,19 @@ object Cluster {
     * sums (the PageRank shape exactly); hub frames checkpointed per
     * round, edges + degrees frozen once as loop invariants.
     */
-  /** @param stagingDir durable-parquet seam for the per-iteration
-    *   materializations (the connectedComponents/pagerankInt
-    *   discipline): on a real cluster with dynamic allocation,
-    *   localCheckpoint blocks die with their executors — pass a
-    *   directory to stage rounds as parquet instead. Results are
-    *   bit-identical (integer recurrence either way).
-    */
   def salsaInt(
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
       iters: Int,
-      scale: Long = 1000000000000L,
-      stagingDir: Option[String] = None): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, "salsaInt: iters must be >= 1")
-    val s = edges.sparkSession
-    def stage(df: DataFrame, name: String): DataFrame = stagingDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(s"$dir/salsa_$name")
-        s.read.parquet(s"$dir/salsa_$name")
-      case None => df.localCheckpoint(true)
-    }
-    val e = stage(edges.select(col(srcCol).as("u"), col(dstCol).as("v")),
-      "edges")
-    val outd = stage(e.groupBy(col("u")).agg(count(lit(1)).as("outdeg")),
-      "outd")
-    val ind = stage(e.groupBy(col("v")).agg(count(lit(1)).as("indeg")),
-      "ind")
+    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+      .localCheckpoint(true)
+    val outd = e.groupBy(col("u")).agg(count(lit(1)).as("outdeg"))
+      .localCheckpoint(true)
+    val ind = e.groupBy(col("v")).agg(count(lit(1)).as("indeg"))
+      .localCheckpoint(true)
     val nh = outd.count()
     require(nh > 0, "salsaInt: empty edge list")
     var hub = outd.select(col("u").as("hn"), col("outdeg"),
@@ -435,13 +381,13 @@ object Cluster {
         .select(col("v").as("an"), col("indeg"), col("auth"))
       // the final sweep's auth freezes BEFORE the hub half consumes it,
       // so the caller's one action replays neither half
-      if (i == iters) auth = stage(auth, f"auth_$i%03d")
+      if (i == iters) auth = auth.localCheckpoint(true)
       val hRaw = e.join(auth, col("v") === col("an"))
         .select(col("u"), expr("auth div indeg").as("c"))
         .groupBy(col("u")).agg(sum(col("c")).as("hub"))
       val next = outd.join(hRaw, Seq("u"))
         .select(col("u").as("hn"), col("outdeg"), col("hub"))
-      hub = if (i == iters) next else stage(next, f"hub_$i%03d")
+      hub = if (i == iters) next else next.localCheckpoint(true)
     }
     hub.select(col("hn").as("node"), col("hub"))
       .join(auth.select(col("an").as("node"), col("auth")),

@@ -562,15 +562,8 @@ object Dedup {
     * Returns the surviving rows of `docs`, original schema.
     *
     * Lineage note: the survivor frame feeds three branches (signatures,
-    * gram verification, final anti-join) and is recomputed per branch — a
-    * production 100 TB run materializes each stage to a table between
-    * branches (exact-dedup output, then candidate pairs, then survivors)
-    * rather than caching a corpus-sized frame in executor memory.
-    *
-    * @param stagingDir when set, the thrice-consumed exact-dedup stage is
-    *   MATERIALIZED to `stagingDir/survivors` as a parquet table instead of
-    *   executor storage — the 100 TB path (durable across executor loss,
-    *   no cache pressure); when None, in-session persist + eager checkpoint.
+    * gram verification, final anti-join); it and the gram frame are
+    * persisted so each runs once, and the result is checkpointed eagerly.
     */
   def dedupeCorpus(
       docs: DataFrame,
@@ -579,32 +572,19 @@ object Dedup {
       threshold: Double = 0.8,
       k: Int = 8,
       bands: Int = 4,
-      ngram: Int = 3,
-      stagingDir: Option[String] = None): DataFrame = {
+      ngram: Int = 3): DataFrame = {
     val exactKeep = exact(docs, textCol, idCol).select(col("keep_id").as(idCol))
     // the exact-dedup output feeds three consumers (signatures, gram
     // verification, final anti-join); make it run once.
-    val joined = docs.join(exactKeep, idCol)
-    val survivors = stagingDir match {
-      case Some(dir) =>
-        joined.write.mode("overwrite").parquet(s"$dir/survivors")
-        docs.sparkSession.read.parquet(s"$dir/survivors")
-      case None =>
-        joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    val survivors = docs.join(exactKeep, idCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // tokenize ONCE: the gram arrays feed both the minhash signatures and
     // the jaccard verification (tokenization is the dominant per-row cost;
     // deriving both consumers from one persisted gram frame saves two full
     // regex passes over the surviving corpus)
-    val grams0 = survivors.select(col(idCol),
+    val grams = survivors.select(col(idCol),
       array_distinct(wordNgrams(col(textCol), ngram)).as("grams"))
-    val grams = stagingDir match {
-      case Some(dir) =>
-        grams0.write.mode("overwrite").parquet(s"$dir/grams")
-        docs.sparkSession.read.parquet(s"$dir/grams")
-      case None =>
-        grams0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = minhashFromGrams(grams, idCol, k)
     val cand = lshCandidates(sigs, idCol, bands)
     // verify candidates with exact jaccard, blocked by nothing further
@@ -618,18 +598,14 @@ object Dedup {
             size(array_intersect(col("ga"), col("gb")))).cast("double")).as("j"))
       .filter(col("j") >= threshold)
     val dropIds = verified.select(col("id_b").as(idCol)).distinct()
-    val antiJoined = survivors.join(dropIds, Seq(idCol), "left_anti")
-    if (stagingDir.isDefined) antiJoined // inputs are durable tables: stay lazy
-    else {
-      // materialize eagerly (truncating lineage) so the survivors/grams
-      // caches can be released HERE instead of leaking for the session
-      // lifetime; the checkpoint blocks are reclaimed by the ContextCleaner
-      // once the returned frame is unreferenced, unlike an explicit persist
-      val result = antiJoined.localCheckpoint(true)
-      survivors.unpersist()
-      grams.unpersist()
-      result
-    }
+    // materialize eagerly (truncating lineage) so the survivors/grams
+    // caches can be released HERE instead of leaking for the session
+    // lifetime; the checkpoint blocks are reclaimed by the ContextCleaner
+    // once the returned frame is unreferenced, unlike an explicit persist
+    val result = survivors.join(dropIds, Seq(idCol), "left_anti").localCheckpoint(true)
+    survivors.unpersist()
+    grams.unpersist()
+    result
   }
 
   /** MinHash signatures from PRE-COMPUTED distinct-gram arrays (the shared
@@ -744,8 +720,8 @@ object Dedup {
     * costs more than shuffling skinny (block, gram) rows, and on realistic
     * sparse-overlap corpora the explode form shuffles only genuinely shared
     * grams while the pair form still pays for every block pair.
-    */
-  /** @param maxDf hot-gram guard: grams whose within-block document
+    *
+    * @param maxDf hot-gram guard: grams whose within-block document
     *   frequency exceeds `maxDf` are dropped from CANDIDATE GENERATION only
     *   (the (block, gram) self-join is quadratic in per-gram df — one
     *   stopword gram in a big block is a df² straggler at scale); surviving
@@ -1193,116 +1169,9 @@ object Dedup {
   }
 
   // --------------------------------------------------------------------- //
-  // Embedding near-dup
+  // Duplicated spans (ExactSubstr)
   // --------------------------------------------------------------------- //
 
-  /** Embedding-cosine near-duplicate pairs above `threshold`.
-    *
-    * Default path: sign-LSH co-bucketing (Similarity.lshBuckets) — only
-    * vectors sharing a bucket are compared, so the pairwise phase is an
-    * equi-join (one shuffle, no cross product) and survives any corpus
-    * size; recall < 1.0 by design (tunable via `bits`/`tables`).
-    * The exhaustive O(n²) nested-loop variant is gated behind an explicit
-    * `allPairs = true` — it is correct only for corpora small enough that
-    * n²/2 cosines is an acceptable single-stage cost.
-    *
-    * @param dim embedding dimensionality (needed to draw LSH hyperplanes)
-    */
-  def embeddingNearDups(
-      vecs: DataFrame,
-      vecCol: String,
-      idCol: String,
-      threshold: Double,
-      dim: Int,
-      bits: Int = 8,
-      tables: Int = 2,
-      allPairs: Boolean = false): DataFrame = {
-    val v = vecs.select(col(idCol), VectorFunctions.asDouble(col(vecCol)).as("v"))
-    // spread: a single-file corpus would otherwise put every cosine on one
-    // task (no-op when the scan is already parallel enough)
-    val spread = Similarity.spread(v)
-    if (allPairs) {
-      val a = spread.as("a")
-      val b = v.as("b")
-      a.join(b, col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(
-          col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-          VectorFunctions.cosine(col("a.v"), col("b.v")).as("cosine"))
-        .filter(col("cosine") >= threshold)
-    } else {
-      val buckets = Similarity.lshBuckets(spread, "v", idCol, dim, bits, tables)
-      val a = buckets.as("a")
-      val b = buckets.as("b")
-      a.join(b,
-          col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-            col(s"a.$idCol") < col(s"b.$idCol"))
-        .select(
-          col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-          VectorFunctions.cosine(col("a.v"), col("b.v")).as("cosine"))
-        .filter(col("cosine") >= threshold)
-        .dropDuplicates("id_a", "id_b")
-    }
-  }
-
-  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    * arXiv:2303.09540): partition the embedding space into cells, then
-    * drop every vector that has a smaller-id cell-mate with cosine ≥
-    * `threshold`. Returns the SURVIVORS with their `cell` id (all input
-    * columns preserved).
-    *
-    * `planes` are explicit separating hyperplanes; a vector's cell is the
-    * bit-fold of its dot-product signs. Axis-aligned unit planes make the
-    * cell a pure coordinate-sign code — deterministic and reproducible by
-    * any SQL engine (an oracle indexes the array directly); gaussian
-    * planes (the [[Similarity.lshBuckets]] draw) slot in unchanged when
-    * recall matters more than cross-engine checkability. SemDeDup proper
-    * uses k-means cells; sign cells keep the same within-cell pruning
-    * semantics with a build-free, data-independent assignment.
-    *
-    * Scale shape: one map-side cell assignment, one per-cell self
-    * equi-join (never a global cross product), one anti-join back — and
-    * the domination rule ("ANY smaller-id near neighbor kills you",
-    * dropped vectors still dominate) is chain-free, so survivors are
-    * decided in ONE pairwise round with no iteration. Cosines are rounded
-    * to 6 dp before thresholding so cell membership at the boundary is
-    * ulp-stable across engines and re-runs. Within-cell work is quadratic
-    * in cell OCCUPANCY, so hold occupancy constant as the corpus grows by
-    * adding planes (cells = 2^planes; SemDeDup's k-means k plays the same
-    * role) — the fixed 4-plane gate instantiation is sized for the test
-    * corpus, not a scaling policy.
-    */
-  /** ExactSubstr-style duplicated-SPAN profile (Lee et al. 2021,
-    * "Deduplicating Training Data Makes Language Models Better",
-    * arXiv:2107.06499): find every token span of length `k` that occurs
-    * MORE THAN ONCE anywhere in the corpus (cross-doc or self-repeat),
-    * merge each document's duplicated positions into maximal islands, and
-    * report per-doc span/coverage counts — the span-level complement of
-    * doc-level exact/near dedup (a doc can be 40% boilerplate yet unique
-    * as a whole; doc-level dedup keeps all of it, span-level flags the
-    * 40%).
-    *
-    * Dataflow (three shuffles, all on compact keys):
-    *  1. explode each doc into (pos, xxhash64(k-gram)) occurrences —
-    *     the gram arrays are built once from a bound token attribute
-    *     (the collapsed Catalyst form re-runs the tokenizer per
-    *     element); the frame is persisted (OperatorCaches) so both
-    *     consumers below read it once;
-    *  2. per-gram occurrence counts as a TWO-PHASE aggregate:
-    *     `groupBy(g).count()` (map-side partials collapse a hot gram to
-    *     one row per task before the exchange) joined back on `g`. NOT
-    *     `count() OVER (PARTITION BY gram)` — a window lands a viral
-    *     gram's (a license header in millions of docs) every occurrence
-    *     in ONE task's sort buffer; the join back is also keyed on `g`
-    *     but AQE's skew-join splitting can fan a hot key's probe rows
-    *     across tasks, which no window buffer can;
-    *  3. per-doc gaps-and-islands over the surviving positions (every
-    *     interval is exactly k tokens, so "new island when
-    *     pos > prev_max_end + 1") — one doc-keyed shuffle, then the
-    *     island fold.
-    *
-    * Output: (idCol, n_tokens, dup_spans, dup_tokens, dup_ratio) for
-    * EVERY input doc (zero-coverage docs included).
-    */
   /** Shared front end of the ExactSubstr pair ([[dupSpanProfile]] /
     * [[stripDupSpans]]): `(base, dup)` where `base` carries the bound
     * token array per doc and `dup` is the (idCol, pos) stream of k-gram
@@ -1397,6 +1266,38 @@ object Dedup {
   private def nTokensFromOcc(occ: DataFrame, idCol: String): DataFrame =
     occ.groupBy(col(idCol)).agg(first(col("n_tokens")).as("n_tokens"))
 
+  /** ExactSubstr-style duplicated-SPAN profile (Lee et al. 2021,
+    * "Deduplicating Training Data Makes Language Models Better",
+    * arXiv:2107.06499): find every token span of length `k` that occurs
+    * MORE THAN ONCE anywhere in the corpus (cross-doc or self-repeat),
+    * merge each document's duplicated positions into maximal islands, and
+    * report per-doc span/coverage counts — the span-level complement of
+    * doc-level exact/near dedup (a doc can be 40% boilerplate yet unique
+    * as a whole; doc-level dedup keeps all of it, span-level flags the
+    * 40%).
+    *
+    * Dataflow (three shuffles, all on compact keys):
+    *  1. explode each doc into (pos, xxhash64(k-gram)) occurrences —
+    *     the gram arrays are built once from a bound token attribute
+    *     (the collapsed Catalyst form re-runs the tokenizer per
+    *     element); the frame is persisted (OperatorCaches) so both
+    *     consumers below read it once;
+    *  2. per-gram occurrence counts as a TWO-PHASE aggregate:
+    *     `groupBy(g).count()` (map-side partials collapse a hot gram to
+    *     one row per task before the exchange) joined back on `g`. NOT
+    *     `count() OVER (PARTITION BY gram)` — a window lands a viral
+    *     gram's (a license header in millions of docs) every occurrence
+    *     in ONE task's sort buffer; the join back is also keyed on `g`
+    *     but AQE's skew-join splitting can fan a hot key's probe rows
+    *     across tasks, which no window buffer can;
+    *  3. per-doc gaps-and-islands over the surviving positions (every
+    *     interval is exactly k tokens, so "new island when
+    *     pos > prev_max_end + 1") — one doc-keyed shuffle, then the
+    *     island fold.
+    *
+    * Output: (idCol, n_tokens, dup_spans, dup_tokens, dup_ratio) for
+    * EVERY input doc (zero-coverage docs included).
+    */
   def dupSpanProfile(
       docs: DataFrame,
       textCol: String,
@@ -1841,6 +1742,37 @@ object Dedup {
     (base, occ, dup)
   }
 
+  // --------------------------------------------------------------------- //
+  // Semantic dedup
+  // --------------------------------------------------------------------- //
+
+  /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
+    * arXiv:2303.09540): partition the embedding space into cells, then
+    * drop every vector that has a smaller-id cell-mate with cosine ≥
+    * `threshold`. Returns the SURVIVORS with their `cell` id (all input
+    * columns preserved).
+    *
+    * `planes` are explicit separating hyperplanes; a vector's cell is the
+    * bit-fold of its dot-product signs. Axis-aligned unit planes make the
+    * cell a pure coordinate-sign code — deterministic and reproducible by
+    * any SQL engine (an oracle indexes the array directly); gaussian
+    * planes (the [[Similarity.lshBuckets]] draw) slot in unchanged when
+    * recall matters more than cross-engine checkability. SemDeDup proper
+    * uses k-means cells; sign cells keep the same within-cell pruning
+    * semantics with a build-free, data-independent assignment.
+    *
+    * Scale shape: one map-side cell assignment, one per-cell self
+    * equi-join (never a global cross product), one anti-join back — and
+    * the domination rule ("ANY smaller-id near neighbor kills you",
+    * dropped vectors still dominate) is chain-free, so survivors are
+    * decided in ONE pairwise round with no iteration. Cosines are rounded
+    * to 6 dp before thresholding so cell membership at the boundary is
+    * ulp-stable across engines and re-runs. Within-cell work is quadratic
+    * in cell OCCUPANCY, so hold occupancy constant as the corpus grows by
+    * adding planes (cells = 2^planes; SemDeDup's k-means k plays the same
+    * role) — the fixed 4-plane gate instantiation is sized for the test
+    * corpus, not a scaling policy.
+    */
   def semanticDedup(
       vecs: DataFrame,
       vecCol: String,

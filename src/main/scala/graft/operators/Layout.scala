@@ -90,27 +90,17 @@ object Layout {
   /** Rewrite `df` under `outDir` partitioned by day(`tsCol`), one file
     * per day, rows sorted by `sortCol` within each file. Returns the
     * rewritten table (read back through the partition-pruned layout).
-    *
-    * At 100 TB a single file per day may exceed the healthy file size;
-    * `maxRecordsPerFile` > 0 rolls each day's (still sorted) stream
-    * into bounded files — Spark's native knob, deterministic given the
-    * sort, and the day partition still prunes. (A salt-column
-    * repartition is NOT used: hash partitioning gives no guarantee
-    * distinct salts land on distinct tasks, so the file count would be
-    * nondeterministic.)
     */
   def compactByDay(
       df: DataFrame,
       tsCol: String,
       sortCol: String,
-      outDir: String,
-      maxRecordsPerFile: Long = 0L): DataFrame = {
+      outDir: String): DataFrame = {
     val spark = df.sparkSession
     df.withColumn("day", to_date(col(tsCol)))
       .repartition(col("day"))
       .sortWithinPartitions(col("day"), col(sortCol))
       .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("day").parquet(outDir)
     spark.read.parquet(outDir)
   }

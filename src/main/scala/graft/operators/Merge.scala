@@ -34,11 +34,9 @@ object Merge {
     * sides of the exchange — each map task keeps only its local top-1
     * per key before shuffling, so a key updated many times ships one
     * row, not its history (plan-asserted: exactly one key-partitioned
-    * Exchange). At 100 TB the base side dominates; a Union discards
-    * its children's partitioning, so THIS shape always shuffles the
-    * base — use [[upsertLatestKeyed]] against a key-bucketed base
-    * table to confine the shuffle to the updates side. Deletes ride
-    * [[applyChanges]]' tombstone path.
+    * Exchange). A Union discards its children's partitioning, so this
+    * shape always shuffles the base. Deletes ride [[applyChanges]]'
+    * tombstone path.
     */
   def upsertLatest(
       base: DataFrame,
@@ -52,68 +50,60 @@ object Merge {
       base.limit(0).select((keyCols :+ versionCol).map(col): _*),
       keyCols, versionCol)
 
-  /** [[upsertLatest]] for a MAINTAINED base table — one that already
-    * holds at most one row per key (what every merge in this file
-    * outputs) — shaped so a key-bucketed base never shuffles: the
-    * updates collapse to their per-key winner first (one Exchange over
-    * the SMALL side), then a full-outer join against the base picks
-    * the survivor per key, updates beating base at equal versions.
-    * When the base is a table bucketed (and sorted) by the key, the
-    * join reads it co-located — the plan's ONLY Exchange is the
-    * updates side (spec-asserted via SelectedBucketsCount + exchange
-    * count). This is the 100 TB ingest-loop shape: the billion-row
-    * base pays a local sort-merge against yesterday's layout, the
-    * million-row batch pays the lone shuffle. Semantics are pinned to
-    * [[upsertLatest]] by a bit-equality spec; the union+window form
-    * stays the general path (it also accepts multi-row-per-key bases).
-    * Size `buckets` to the ingest parallelism (mismatched bucket vs
-    * shuffle-partition counts make the planner fall back to a
-    * re-shuffle of both sides).
+  /** Additive fold of a delta's per-key partial aggregates into a
+    * maintained aggregate-state table — incremental MATERIALIZED-VIEW
+    * maintenance for the sum/count family: after every fold the state
+    * equals the one-shot aggregate over all data ever folded, but each
+    * fold touches only the delta plus one join against the state.
+    *
+    * `base` and `deltaAgg` share the schema `keyCols ++ additive
+    * columns`; the fold is a null-safe full-outer join on the keys with
+    * column-wise addition (typed zero for the side missing a key; a
+    * group whose partials are NULL on BOTH sides stays NULL, matching
+    * SQL's sum over an all-null group), cast
+    * back to the base column's type so the state schema is FIXED across
+    * folds (size the decimal for the lifetime total, not the delta).
+    * avg/stddev derive from (sum, count) states; min/max fold the same
+    * way with `greatest`/`least` — not provided here because they are
+    * not retractable.
+    *
+    * Scale shape: the lone data-sized cost is aggregating the delta
+    * BEFORE the fold (caller does it, so the partial agg fuses with the
+    * delta scan); the join is state-sized. The keys join with `<=>`,
+    * so a NULL key (e.g. day-of-null-timestamp) stays ONE state group
+    * across folds; Spark plans null-safe keys as derived (coalesce,
+    * isnull) pairs, which a key-bucketed layout cannot satisfy, so the
+    * state side shuffles too.
     */
-  def upsertLatestKeyed(
+  def foldAdditive(
       base: DataFrame,
-      updates: DataFrame,
-      keyCols: Seq[String],
-      versionCol: String): DataFrame = {
-    require(!(base.columns ++ updates.columns)
-      .exists(c => c == "__rn" || c == "__b" || c == "__u"),
-      "upsertLatestKeyed reserves __rn/__b/__u as working columns")
-    val missing = base.columns.filterNot(updates.columns.contains)
-    require(missing.isEmpty,
-      s"updates must carry every base column; missing: ${missing.mkString(", ")}")
-    val nonKey = base.columns.filterNot(keyCols.contains).toSeq
-    // per-key winner among the updates: same deterministic order as
-    // applyChanges (version desc, then content-desc tie-break) so a
-    // replayed batch reproduces the identical survivor
-    val tieExprs = base.schema.fields
-      .filterNot(f => keyCols.contains(f.name) || f.name == versionCol)
-      .toSeq.map { f =>
-        if (org.apache.spark.sql.catalyst.expressions.RowOrdering.isOrderable(f.dataType))
-          col(f.name).desc
-        else xxhash64(to_json(struct(col(f.name)))).desc
-      }
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(versionCol).desc +: tieExprs: _*)
-    val u1 = updates.select(base.columns.map(col).toSeq: _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-    // pack each side's payload into one struct so the full-outer join's
-    // null-side detection is a single IsNull; the projection preserves
-    // the base scan's bucketed output partitioning
-    val bs = base.select(keyCols.map(col) :+
-      struct(nonKey.map(col): _*).as("__b"): _*)
-    val us = u1.select(keyCols.map(col) :+
-      struct(nonKey.map(col): _*).as("__u"): _*)
-    val winner = when(col("__u").isNull, col("__b"))
-      .when(col("__b").isNull, col("__u"))
-      // exact-version tie goes to the update (the CDC convention)
-      .when(col("__u").getField(versionCol) >= col("__b").getField(versionCol),
-        col("__u"))
-      .otherwise(col("__b"))
-    bs.join(us, keyCols, "full_outer")
-      .select(keyCols.map(col) :+ winner.as("__w"): _*)
-      .select(keyCols.map(col) ++ nonKey.map(c => col(s"__w.$c")): _*)
+      deltaAgg: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    require(base.columns.sorted.sameElements(deltaAgg.columns.sorted),
+      s"state/delta schemas differ: ${base.columns.mkString(",")} vs " +
+        deltaAgg.columns.mkString(","))
+    val addCols = base.columns.filterNot(keyCols.contains).toSeq
+    val b = base.as("b")
+    val d = deltaAgg
+      .select(keyCols.map(col) ++ addCols.map(c => col(c).as(s"__d_$c")): _*)
+      .as("d")
+    val cond = keyCols.map(k => col(s"b.$k") <=> col(s"d.$k")).reduce(_ && _)
+    b.join(d, cond, "full_outer").select(
+      keyCols.map(k => coalesce(col(s"b.$k"), col(s"d.$k")).as(k)) ++
+        addCols.map { c =>
+          val t = base.schema(c).dataType
+          val zero = lit(0).cast(t)
+          // both-NULL stays NULL: SQL sum over an all-null group is NULL,
+          // and the fold must equal the one-shot aggregate — substituting
+          // the typed zero is only correct when at least one side carries
+          // a real partial (a NULL partial folded with a real one drops
+          // out, exactly like sum ignoring nulls)
+          when(col(s"b.$c").isNull && col(s"__d_$c").isNull,
+            lit(null).cast(t))
+            .otherwise(
+              (coalesce(col(s"b.$c"), zero) + coalesce(col(s"__d_$c"), zero))
+                .cast(t)).as(c)
+        }: _*)
   }
 
   /** Latest-wins merge of `updates` AND `deletes` into `base`. A
@@ -137,92 +127,18 @@ object Merge {
     * during periodic compaction (they are a filter, not a merge cost —
     * one boolean column through the same single shuffle).
     *
-    * `allowSchemaEvolution = true` accepts an `updates` frame whose
-    * payload columns are a superset of `base`'s (the lakehouse
-    * schema-evolution convention): new columns ride through, base rows
-    * read null there. Update rows still replace the WHOLE row — a
-    * column the updates frame omits entirely is null on update winners
-    * too, so it refuses frames MISSING base payload columns (partial
-    * updates are a different operator); keys and the version column
-    * must always be present.
+    * `updates` must carry exactly the base's columns: update rows
+    * replace the WHOLE row, so a frame MISSING a base column is refused
+    * (partial updates are a different operator), and so is one carrying
+    * a column the base lacks (the table schema is fixed).
     */
-  /** Additive fold of a delta's per-key partial aggregates into a
-    * maintained aggregate-state table — incremental MATERIALIZED-VIEW
-    * maintenance for the sum/count family: after every fold the state
-    * equals the one-shot aggregate over all data ever folded, but each
-    * fold touches only the delta plus one join against the state.
-    *
-    * `base` and `deltaAgg` share the schema `keyCols ++ additive
-    * columns`; the fold is a null-safe full-outer join on the keys with
-    * column-wise addition (typed zero for the side missing a key; a
-    * group whose partials are NULL on BOTH sides stays NULL, matching
-    * SQL's sum over an all-null group), cast
-    * back to the base column's type so the state schema is FIXED across
-    * folds (size the decimal for the lifetime total, not the delta).
-    * avg/stddev derive from (sum, count) states; min/max fold the same
-    * way with `greatest`/`least` — not provided here because they are
-    * not retractable.
-    *
-    * Scale shape: the lone data-sized cost is aggregating the delta
-    * BEFORE the fold (caller does it, so the partial agg fuses with the
-    * delta scan); the join is state-sized. Against a key-bucketed state
-    * table the join reads the state co-located — only the (small) delta
-    * partials shuffle, exactly the [[upsertLatestKeyed]] property
-    * (plan-asserted in CurationSpec).
-    */
-  /** @param nullSafeKeys true (default) joins with `<=>` so a NULL key
-    *   (e.g. day-of-null-timestamp) stays ONE state group across folds;
-    *   Spark plans null-safe keys as derived (coalesce, isnull) pairs,
-    *   which a key-bucketed layout cannot satisfy — so a bucketed state
-    *   table only skips its exchange with `nullSafeKeys = false`, the
-    *   right setting when keys are known non-null (enforce at ingest).
-    *   This is the real tradeoff, not an implementation shortcut:
-    *   bucket-co-located null-safe joins would need the layout itself
-    *   to hash the derived keys.
-    */
-  def foldAdditive(
-      base: DataFrame,
-      deltaAgg: DataFrame,
-      keyCols: Seq[String],
-      nullSafeKeys: Boolean = true): DataFrame = {
-    require(base.columns.sorted.sameElements(deltaAgg.columns.sorted),
-      s"state/delta schemas differ: ${base.columns.mkString(",")} vs " +
-        deltaAgg.columns.mkString(","))
-    val addCols = base.columns.filterNot(keyCols.contains).toSeq
-    val b = base.as("b")
-    val d = deltaAgg
-      .select(keyCols.map(col) ++ addCols.map(c => col(c).as(s"__d_$c")): _*)
-      .as("d")
-    val cond = keyCols.map { k =>
-      if (nullSafeKeys) col(s"b.$k") <=> col(s"d.$k")
-      else col(s"b.$k") === col(s"d.$k")
-    }.reduce(_ && _)
-    b.join(d, cond, "full_outer").select(
-      keyCols.map(k => coalesce(col(s"b.$k"), col(s"d.$k")).as(k)) ++
-        addCols.map { c =>
-          val t = base.schema(c).dataType
-          val zero = lit(0).cast(t)
-          // both-NULL stays NULL: SQL sum over an all-null group is NULL,
-          // and the fold must equal the one-shot aggregate — substituting
-          // the typed zero is only correct when at least one side carries
-          // a real partial (a NULL partial folded with a real one drops
-          // out, exactly like sum ignoring nulls)
-          when(col(s"b.$c").isNull && col(s"__d_$c").isNull,
-            lit(null).cast(t))
-            .otherwise(
-              (coalesce(col(s"b.$c"), zero) + coalesce(col(s"__d_$c"), zero))
-                .cast(t)).as(c)
-        }: _*)
-  }
-
   def applyChanges(
       base: DataFrame,
       updates: DataFrame,
       deletes: DataFrame,
       keyCols: Seq[String],
       versionCol: String,
-      keepTombstones: Boolean = false,
-      allowSchemaEvolution: Boolean = false): DataFrame = {
+      keepTombstones: Boolean = false): DataFrame = {
     require(!(base.columns ++ updates.columns ++ deletes.columns)
       .exists(c => c == "__src" || c == "__rn"),
       "applyChanges reserves __src/__rn as working columns")
@@ -234,19 +150,12 @@ object Merge {
     require(missingFromUpdates.isEmpty,
       s"updates must carry every base column (full-row replacement); " +
         s"missing: ${missingFromUpdates.mkString(", ")}")
-    val newCols = updates.schema.fields
-      .filterNot(f => base.columns.contains(f.name)).toSeq
-    require(allowSchemaEvolution || newCols.isEmpty,
-      s"updates carry columns absent from base " +
-        s"(${newCols.map(_.name).mkString(", ")}); pass " +
-        "allowSchemaEvolution = true to widen the table")
-    val b0 = {
-      // evolution: base rows read null in the batch's new columns
-      val widened = newCols.foldLeft(base)((df, f) =>
-        df.withColumn(f.name, lit(null).cast(f.dataType)))
-      if (widened.columns.contains(TombstoneCol)) widened
-      else widened.withColumn(TombstoneCol, lit(false))
-    }
+    val newCols = updates.columns.filterNot(base.columns.contains)
+    require(newCols.isEmpty,
+      s"updates carry columns absent from base: ${newCols.mkString(", ")}")
+    val b0 =
+      if (base.columns.contains(TombstoneCol)) base
+      else base.withColumn(TombstoneCol, lit(false))
     val dataFields = b0.schema.fields.filterNot(_.name == TombstoneCol).toSeq
     // pad tombstones to the table schema: key + version (and any other
     // column the deletes frame carries, e.g. a partition column)
@@ -299,8 +208,7 @@ object Merge {
     * Schemas must agree on the non-key columns.
     *
     * Scale: ONE key shuffle per side (none at all when both snapshots
-    * are read from a key-bucketed layout — the upsertLatestKeyed
-    * argument); change detection is a codegen'd null-safe conjunction,
+    * are read from a key-bucketed layout); change detection is a codegen'd null-safe conjunction,
     * no per-column joins. Feed it `snapshotAt(v1)` / `snapshotAt(v2)`
     * of a [[graft.streaming.ParquetUpsertTable]] to answer "what did
     * batches v1+1..v2 do to the table" without replaying them.

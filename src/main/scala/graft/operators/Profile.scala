@@ -1,28 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType, StringType}
 
 /** Table profiling — the data-QA sweep a corpus build runs before and
   * after every curation stage: per-column non-null count, null count,
-  * distinct count, min/max. With exact distincts the profile runs as
-  * one column-pruned single-distinct aggregate PER COLUMN (no Expand —
-  * see [[profile]]); with approx distincts everything rides a single
-  * scan and one aggregate row.
-  *
-  * Two output surfaces:
-  *   - [[profile]] (the default, and the one on the oracle gate):
-  *     min/max of NUMERIC columns are emitted as scaled BIGINT
-  *     centi-units (`min_c100`/`max_c100` = value × 100); min/max of
-  *     STRING columns ride `min_str`/`max_str`. Integers hash
-  *     identically in every engine and survive any type-inferring
-  *     hasher — no rendering, no canonicalization, nothing version-
-  *     dependent on the hashed surface.
-  *   - [[profileRendered]]: the human-facing variant that renders every
-  *     min/max as a string in one shared column pair, canonicalized via
-  *     [[canonicalNumber]]. Kept for dashboards/reports; engines
-  *     disagree on decimal rendering, so it stays OFF the hash gate.
+  * distinct count, min/max. The profile runs as one column-pruned
+  * single-distinct aggregate PER COLUMN (no Expand — see [[profile]]).
+  * Min/max of NUMERIC columns are emitted as scaled BIGINT centi-units
+  * (`min_c100`/`max_c100` = value × 100); min/max of STRING columns
+  * ride `min_str`/`max_str`. Integers hash identically in every engine
+  * and survive any type-inferring hasher — no rendering, no
+  * canonicalization, nothing version-dependent on the hashed surface.
   */
 object Profile {
 
@@ -82,26 +72,6 @@ object Profile {
       .limit(topK)
   }
 
-  /** Rendered numbers whose fractional part ends in a zero — the one
-    * string shape engines disagree on when rendering a DECIMAL
-    * ("1013.70" vs "1013.7" across DuckDB versions). Java-regex ∩ RE2
-    * subset (see TextFunctions.PiiPatterns) so a SQL oracle can
-    * evaluate the same pattern verbatim.
-    */
-  val TrailingZeroDecimal: String = "^-?[0-9]+\\.[0-9]*0$"
-
-  /** Canonical numeric rendering: IF the string is a decimal ending in
-    * a fractional zero, strip the trailing zeros (then a bare trailing
-    * dot), so "1013.70", "1013.7" and "1013.700" all read "1013.7" no
-    * matter which engine rendered them. Non-matching strings (integers,
-    * text columns) pass through untouched. Used by [[profileRendered]]
-    * only.
-    */
-  def canonicalNumber(c: Column): Column =
-    when(c.rlike(TrailingZeroDecimal),
-      regexp_replace(regexp_replace(c, "0+$", ""), "\\.$", ""))
-      .otherwise(c)
-
   /** One row per profiled column: (col_name, n, n_nulls, n_distinct,
     * min_c100, max_c100, min_str, max_str).
     *
@@ -111,15 +81,10 @@ object Profile {
     * DECIMAL so the ×100 is exact arithmetic, not float). String
     * columns carry min/max in the `_str` pair. Any other type (date,
     * timestamp, …) is rendered into the `_str` pair via a plain cast.
-    * The unused pair is NULL, so all column types share one schema and
-    * the whole profile stays a single stack() over one aggregate row.
-    *
-    * `exact = false` swaps the distinct counts for
-    * approx_count_distinct — the 100 TB default, where the Expand
-    * multiplier and the exact-distinct shuffle are the cost that
-    * matters and ±2% on a QA dashboard is free.
+    * The unused pair is NULL, so the per-column rows of every column
+    * type share one schema.
     */
-  def profile(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     val types: Map[String, DataType] =
       df.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -139,51 +104,28 @@ object Profile {
           min(col(c).cast("string")).as("min_str"),
           max(col(c).cast("string")).as("max_str"))
     }
-    if (exact) {
-      // EXACT distincts: one single-distinct aggregate PER COLUMN,
-      // unioned. Several countDistinct's in one aggregate plan through
-      // Expand — every input row is replicated once per distinct column
-      // (|cols|+1 projections through the partial agg and the
-      // exchange), which at table scale is the dominant cost of the
-      // whole profile. A single-distinct aggregate needs no Expand
-      // (two-phase partial-distinct plan), and each branch's scan is
-      // column-pruned to just its own column — on columnar storage the
-      // |cols| branch scans together read the same bytes as the one
-      // wide scan, with the ×(|cols|+1) row replication gone entirely.
-      val rows = cols.map { c =>
-        val (minN, maxN, minS, maxS) = bounds(c)
-        df.agg(
-            count(col(c)).as("n"),
-            sum(when(col(c).isNull, 1L).otherwise(0L)).as("n_nulls"),
-            countDistinct(col(c)).as("n_distinct"),
-            minN, maxN, minS, maxS)
-          .select(lit(c).as("col_name"), col("n"), col("n_nulls"),
-            col("n_distinct"), col("min_c100"), col("max_c100"),
-            col("min_str"), col("max_str"))
-      }
-      rows.reduce(_.unionByName(_))
-    } else {
-      // approx distincts are ordinary (mergeable) aggregates — no
-      // Expand to dodge, so the whole profile rides ONE scan and one
-      // |cols|-wide aggregate row
-      val aggs = cols.flatMap { c =>
-        val (minN, maxN, minS, maxS) = bounds(c)
-        Seq(
-          count(col(c)).as(s"${c}__n"),
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-          approx_count_distinct(col(c)).as(s"${c}__nd"),
-          minN.as(s"${c}__minc"), maxN.as(s"${c}__maxc"),
-          minS.as(s"${c}__mins"), maxS.as(s"${c}__maxs"))
-      }
-      val one = df.agg(aggs.head, aggs.tail: _*)
-      val stackArgs = cols.map { c =>
-        s"'$c', `${c}__n`, `${c}__nulls`, `${c}__nd`, " +
-          s"`${c}__minc`, `${c}__maxc`, `${c}__mins`, `${c}__maxs`"
-      }.mkString(", ")
-      one.selectExpr(
-        s"stack(${cols.size}, $stackArgs) AS " +
-          "(col_name, n, n_nulls, n_distinct, min_c100, max_c100, min_str, max_str)")
+    // One single-distinct aggregate PER COLUMN,
+    // unioned. Several countDistinct's in one aggregate plan through
+    // Expand — every input row is replicated once per distinct column
+    // (|cols|+1 projections through the partial agg and the
+    // exchange), which at table scale is the dominant cost of the
+    // whole profile. A single-distinct aggregate needs no Expand
+    // (two-phase partial-distinct plan), and each branch's scan is
+    // column-pruned to just its own column — on columnar storage the
+    // |cols| branch scans together read the same bytes as the one
+    // wide scan, with the ×(|cols|+1) row replication gone entirely.
+    val rows = cols.map { c =>
+      val (minN, maxN, minS, maxS) = bounds(c)
+      df.agg(
+          count(col(c)).as("n"),
+          sum(when(col(c).isNull, 1L).otherwise(0L)).as("n_nulls"),
+          countDistinct(col(c)).as("n_distinct"),
+          minN, maxN, minS, maxS)
+        .select(lit(c).as("col_name"), col("n"), col("n_nulls"),
+          col("n_distinct"), col("min_c100"), col("max_c100"),
+          col("min_str"), col("max_str"))
     }
+    rows.reduce(_.unionByName(_))
   }
 
   /** MERGEABLE per-batch profile — [[profile]] minus the distinct
@@ -246,35 +188,5 @@ object Profile {
         max(col("max_c100")).as("max_c100"),
         min(col("min_str")).as("min_str"),
         max(col("max_str")).as("max_str"))
-  }
-
-  /** Human-facing profile: (col_name, n, n_nulls, n_distinct,
-    * min_value, max_value) with every min/max rendered as a string so
-    * columns of different types share one output pair — callers should
-    * pre-cast doubles to DECIMAL for engine-stable rendering (plain
-    * double→string formatting diverges across engines above 1e7), and
-    * the rendering is canonicalized via [[canonicalNumber]]. Decimal
-    * rendering is engine-version-dependent, so this surface is for
-    * reports, not for cross-engine hash comparison — use [[profile]]
-    * on any correctness gate.
-    */
-  def profileRendered(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
-    require(cols.nonEmpty, "profile needs at least one column")
-    val aggs = cols.flatMap { c =>
-      Seq(
-        count(col(c)).as(s"${c}__n"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}__nulls"),
-        (if (exact) countDistinct(col(c))
-         else approx_count_distinct(col(c))).as(s"${c}__nd"),
-        canonicalNumber(min(col(c)).cast("string")).as(s"${c}__min"),
-        canonicalNumber(max(col(c)).cast("string")).as(s"${c}__max"))
-    }
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    val stackArgs = cols.map { c =>
-      s"'$c', `${c}__n`, `${c}__nulls`, `${c}__nd`, `${c}__min`, `${c}__max`"
-    }.mkString(", ")
-    one.selectExpr(
-      s"stack(${cols.size}, $stackArgs) AS " +
-        "(col_name, n, n_nulls, n_distinct, min_value, max_value)")
   }
 }

@@ -49,24 +49,10 @@ object Redirects {
     *         source; terminal/hops NULL and unresolved=true for walks
     *         still mid-chain after 2^doublings steps.
     */
-  /** @param stagingDir durable-parquet seam for the per-doubling
-    *   materializations (the connectedComponents discipline): on a
-    *   real cluster, localCheckpoint blocks die with their executors —
-    *   pass a directory to stage rounds as parquet instead. Identical
-    *   results either way.
-    */
   def resolve(edges: DataFrame, srcCol: String, dstCol: String,
-              doublings: Int = 3,
-              stagingDir: Option[String] = None): DataFrame = {
+              doublings: Int = 3): DataFrame = {
     require(doublings >= 0 && doublings <= 16,
       s"doublings must be in [0,16], got $doublings")
-    val spark = edges.sparkSession
-    def stage(df: DataFrame, round: Int): DataFrame = stagingDir match {
-      case Some(dir) =>
-        df.write.mode("overwrite").parquet(f"$dir/jump_$round%03d")
-        spark.read.parquet(f"$dir/jump_$round%03d")
-      case None => df.localCheckpoint(true)
-    }
     // a NULL endpoint is not an edge (a 301 whose Location header was
     // missing): dropped here, so its source simply never appears in
     // the output — the terminal/hops-NULL-iff-unresolved contract
@@ -88,7 +74,7 @@ object Redirects {
         .select(col("a.u").as("u"),
           coalesce(col("bv"), col("a.v")).as("v"),
           (col("a.s") + coalesce(col("bs"), lit(0L))).as("s"))
-      jump = stage(next, k)
+      jump = next.localCheckpoint(true)
       k += 1
     }
 

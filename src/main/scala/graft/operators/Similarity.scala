@@ -994,27 +994,17 @@ object Similarity {
     *
     * `maxCandidates` bounds the per-query group the greedy loop will
     * work on (default 1024): a corpus-sized group means the caller fed
-    * the rerank raw ANN input instead of a top-N window. The DEFAULT
-    * (`strictLimit = true`) is a hard failure with a pointed message —
-    * a silently truncated rerank would return results computed from a
-    * different candidate set than the caller supplied, which is the
-    * kind of wrong-but-plausible output no log line can excuse.
-    * Callers who explicitly opt into `strictLimit = false` get
-    * truncate-and-log: the group is deterministically cut to its
-    * `maxCandidates` most relevant members (rel desc, id asc — a total
-    * order, so the cut is stable) and the executor logs a WARN through
-    * the Spark log4j logger naming the query group. MMR only ever
-    * promotes a candidate whose relevance term can beat the
-    * incumbents, so the far tail of a huge group was never going to
-    * place in a top-k anyway — but the truncation is the caller's
-    * decision, not the library's.
+    * the rerank raw ANN input instead of a top-N window. An oversized
+    * group is a hard failure with a pointed message — a silently
+    * truncated rerank would return results computed from a different
+    * candidate set than the caller supplied, which is the kind of
+    * wrong-but-plausible output no log line can excuse.
     */
   def mmrRerank(
       candidates: DataFrame,
       k: Int,
       lambdaPct: Int = 70,
-      maxCandidates: Int = 1024,
-      strictLimit: Boolean = true): DataFrame = {
+      maxCandidates: Int = 1024): DataFrame = {
     require(k >= 1, "mmrRerank: k must be >= 1")
     require(lambdaPct >= 0 && lambdaPct <= 100,
       "mmrRerank: lambdaPct must be in [0, 100]")
@@ -1022,29 +1012,15 @@ object Similarity {
       s"mmrRerank: maxCandidates ($maxCandidates) must be >= k ($k)")
     val l = lambdaPct
     val maxC = maxCandidates
-    val strict = strictLimit
     val sel = udf((cands: Seq[org.apache.spark.sql.Row]) => {
       // reranking is an in-process greedy loop over ONE query's top-N
       // window — a corpus-sized group here means the caller skipped the
-      // ANN stage. strict (DEFAULT) → fail loudly; opt-in non-strict →
-      // truncate to the maxC most relevant (deterministic total order)
-      // and log a WARN through the executor's Spark logger.
-      if (strict) require(cands.length <= maxC,
+      // ANN stage: fail loudly.
+      require(cands.length <= maxC,
         s"mmrRerank: candidate group of ${cands.length} exceeds " +
           s"maxCandidates=$maxC — rerank a bounded per-query top-N " +
           "(run an ANN/top-k stage first), or raise maxCandidates")
-      val kept =
-        if (cands.length <= maxC) cands
-        else {
-          org.apache.logging.log4j.LogManager.getLogger("graft.Similarity")
-            .warn(
-              s"mmrRerank: candidate group of ${cands.length} exceeds " +
-                s"maxCandidates=$maxC — truncating to the $maxC most " +
-                "relevant (rel desc, id asc); run an ANN/top-k stage " +
-                "first or raise maxCandidates")
-          cands.sortBy(r => (-r.getDouble(1), r.getLong(0))).take(maxC)
-        }
-      val arr = kept.map(r => (r.getLong(0), r.getDouble(1),
+      val arr = cands.map(r => (r.getLong(0), r.getDouble(1),
         r.getSeq[Double](2).toArray)).toArray
       def cos(a: Array[Double], b: Array[Double]): Double = {
         var i = 0; var d = 0.0; var na = 0.0; var nb = 0.0

@@ -151,7 +151,6 @@ class ParquetUpsertTable(
     keyCols: Seq[String],
     versionCol: String,
     keepVersions: Int = 2,
-    allowSchemaEvolution: Boolean = false,
     writerId: String = "writer") {
   // >= 2: a concurrent reader that resolved the previous version must
   // still find its files after the next commit's GC (the handoff
@@ -245,8 +244,7 @@ class ParquetUpsertTable(
     claims.acquire(version, baseToken, () => latestVersion)
     try
       commitVersion(Merge.applyChanges(base, updates, deletes, keyCols,
-        versionCol, keepTombstones = true,
-        allowSchemaEvolution = allowSchemaEvolution), version)
+        versionCol, keepTombstones = true), version)
     finally claims.release(version)
   }
 
@@ -325,12 +323,10 @@ class ParquetUpsertTable(
   * Scale: work per batch = Σ size of touched partitions — the win over
   * full-table COW, which pays the whole table regardless. Commits run
   * one distributed job per touched partition (a CDC batch touches few
-  * — that is the point of partitioning by a key-stable column),
-  * submitted through a bounded thread pool (`maxConcurrentRewrites`)
-  * so a wide batch pays ~max rewrite latency, not the sum; each
-  * rewrite lands `filesPerRewrite` key-sorted files, composing with
-  * [[graft.operators.Layout.compactByDay]]'s layout discipline instead
-  * of spraying shuffle-partition-count small files per version.
+  * — that is the point of partitioning by a key-stable column), one
+  * after another; each rewrite lands one key-sorted file, composing
+  * with [[graft.operators.Layout.compactByDay]]'s layout discipline
+  * instead of spraying shuffle-partition-count small files per version.
   */
 class PartitionedUpsertTable(
     spark: SparkSession,
@@ -339,15 +335,10 @@ class PartitionedUpsertTable(
     versionCol: String,
     partCol: String,
     keepVersions: Int = 2,
-    filesPerRewrite: Int = 1,
-    maxConcurrentRewrites: Int = 4,
-    allowSchemaEvolution: Boolean = false,
     writerId: String = "writer") {
   require(keepVersions >= 2, "keepVersions must be >= 2")
   require(!keyCols.contains(versionCol) && partCol != versionCol,
     "versionCol must be distinct from keys and partition column")
-  require(filesPerRewrite >= 1 && maxConcurrentRewrites >= 1,
-    "filesPerRewrite and maxConcurrentRewrites must be >= 1")
 
   private val root = new Path(dir)
   private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -615,15 +606,14 @@ class PartitionedUpsertTable(
           val base = partitionFull(partDir).getOrElse(
             graft.util.Frames.emptyLocal(spark, updates.schema))
           val merged = Merge.applyChanges(base, ups.filter(partEq),
-            dels.filter(partEq), keyCols, versionCol, keepTombstones = true,
-            allowSchemaEvolution = allowSchemaEvolution)
+            dels.filter(partEq), keyCols, versionCol, keepTombstones = true)
           val target = new Path(new Path(root, partDir), version)
-          // coalesce bounds the output to a few well-sized files (a raw
+          // coalesce bounds the output to one file (a raw
           // window merge would spray shuffle.partitions files into a
           // partition-sized dir — the small-file tax Layout.compactByDay
           // exists to undo); the key sort AFTER the coalesce keeps
           // monotone min/max column chunks for row-group pruning
-          merged.coalesce(filesPerRewrite)
+          merged.coalesce(1)
             .sortWithinPartitions(keyCols.map(col): _*)
             .write.mode("overwrite").parquet(target.toString)
           val stale = committedVersionsIn(partDir).dropRight(keepVersions)
@@ -632,27 +622,7 @@ class PartitionedUpsertTable(
             fs.delete(new Path(new Path(root, partDir), v), true): Unit)
         }
       }
-      // partitions are disjoint dirs merged from disjoint slices — the
-      // rewrites are independent jobs, so run them through a bounded
-      // pool instead of serially (a 30-partition batch pays ~max job
-      // latency, not the sum; Spark's scheduler is thread-safe)
-      if (touched.length <= 1 || maxConcurrentRewrites == 1)
-        touched.foreach(rewrite)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(maxConcurrentRewrites, touched.length))
-        try {
-          val tasks = touched.map { pv =>
-            new java.util.concurrent.Callable[Unit] { def call(): Unit = rewrite(pv) }
-          }
-          pool.invokeAll(java.util.Arrays.asList(tasks: _*))
-            .forEach { f =>
-              try f.get()
-              catch { case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause }
-            }
-        } finally pool.shutdown()
-      }
+      touched.foreach(rewrite)
       // table-level commit: every touched partition is in, land the
       // manifest (a replayed batch whose manifest exists is a no-op)
       commitManifest(touched.map(pv => s"$partCol=$pv").toSeq, version)
@@ -693,7 +663,7 @@ class PartitionedUpsertTable(
         partitionFull(partDir).foreach { cur =>
           val pruned = cur.filter(
             !(col(Merge.TombstoneCol) && col(versionCol) < horizon))
-          pruned.coalesce(filesPerRewrite)
+          pruned.coalesce(1)
             .sortWithinPartitions(keyCols.map(col): _*)
             .write.mode("overwrite")
             .parquet(new Path(new Path(root, partDir), version).toString)

@@ -1,11 +1,12 @@
 package graft.util
 
-import java.util.concurrent.{CompletableFuture, CompletionException}
+import java.util.concurrent.{CompletionException, ForkJoinPool}
 
 import scala.util.Try
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions.{col, sum}
 import org.apache.spark.sql.types.StructType
 
@@ -378,23 +379,31 @@ object SegmentStore {
   /** Run `main` while the independent `writes` run on side threads —
     * the engine's one driver-side fork: segment writes of the store
     * backfills, q183's index builds, the curation stream's second
-    * compaction. Every write is joined before this returns or throws, so
+    * compaction. Each fork carries the calling thread's active session
+    * and local properties (job group, job description), so a
+    * `cancelJobGroup` on the caller's group reaches the forks' jobs too,
+    * and they carry the caller's `Described` label unless they set
+    * their own. Every write is joined before this returns or throws, so
     * none outlives the call: the first failure propagates (`main`'s
     * first) and later ones ride along as suppressed exceptions.
     */
   def withWrites[A](writes: Seq[() => Unit])(main: => A): A = {
-    val forks = writes.map(w => CompletableFuture.runAsync(() => w()))
+    val session = SparkSession.active.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // the write's failure comes back as a value: the capture restores the
+    // pool thread's own properties only when its body returns normally
+    val forks = writes.map(w =>
+      SQLExecution.withThreadLocalCaptured(session, ForkJoinPool.commonPool())(Try(w())))
     var failure: Throwable = null
     val result = try Some(main) catch { case t: Throwable => failure = t; None }
     forks.foreach { f =>
-      try f.join()
-      catch {
-        case t: Throwable =>
-          val cause = t match {
-            case c: CompletionException if c.getCause != null => c.getCause
-            case other => other
-          }
-          if (failure == null) failure = cause else failure.addSuppressed(cause)
+      val cause =
+        try f.join().failed.toOption.orNull
+        catch {
+          case c: CompletionException if c.getCause != null => c.getCause
+          case t: Throwable => t
+        }
+      if (cause != null) {
+        if (failure == null) failure = cause else failure.addSuppressed(cause)
       }
     }
     if (failure != null) throw failure

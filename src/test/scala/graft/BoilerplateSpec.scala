@@ -39,11 +39,6 @@ class BoilerplateSpec extends SparkSpec {
       (4L, 0L, 0L, ""))
     assert(rows(Boilerplate.removeFrequentLines(
       docs, "text", "doc_id", minDocs = 3L)) == want)
-    // the shuffle-join fallback (the driver-OOM escape hatch for a
-    // pathological frequent set) is result-identical
-    assert(rows(Boilerplate.removeFrequentLines(
-      docs, "text", "doc_id", minDocs = 3L,
-      broadcastFrequent = false)) == want)
     graft.util.OperatorCaches.release(spark)
   }
 

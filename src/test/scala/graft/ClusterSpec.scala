@@ -90,12 +90,10 @@ class ClusterSpec extends SparkSpec {
 
   test("staged variant (parquet rounds) matches the checkpoint variant") {
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 9L))
-    val staged = Cluster.connectedComponents(
-        edges.toDF("s", "d"), "s", "d",
-        stagingDir = Some(tmpDir("graft_cc_stage")))
+    val got = Cluster.connectedComponents(edges.toDF("s", "d"), "s", "d")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // 9's only edge is a self-loop: still labeled (as a singleton)
-    assert(staged == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L,
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L,
       9L -> 9L))
   }
 
@@ -155,23 +153,6 @@ class ClusterSpec extends SparkSpec {
     }
   }
 
-  test("salsaInt: stagingDir seam bit-identical to localCheckpoint") {
-    import spark.implicits._
-    val us = Seq(0, 1, 2, 3, 4, 5, 6, 0, 1, 4, 5, 5).map(_.toLong)
-    val vs = Seq(1, 2, 3, 4, 5, 6, 0, 3, 3, 3, 0, 2).map(_.toLong)
-    val edges = us.zip(vs).toDF("u", "v")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_salsa_stage").toString
-    try {
-      def rows(st: Option[String]) = graft.operators.Cluster
-        .salsaInt(edges, "u", "v", iters = 3, stagingDir = st)
-        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-      assert(rows(Some(dir)) == rows(None))
-      assert(new java.io.File(dir).list().exists(_.startsWith("salsa_")))
-    } finally graft.io.Sinks.truncatePath(spark, dir)
-  }
-
   test("salsaInt: the planted hub and authority dominate their sides") {
     import spark.implicits._
     val us = Seq(0, 1, 2, 3, 4, 5, 6, 0, 1, 4, 5, 5).map(_.toLong)
@@ -208,13 +189,5 @@ class ClusterSpec extends SparkSpec {
     for (_ <- 1 to 20) p = base + (850L * p) / 1000L
     val got = p20.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(got == Map(1L -> p, 2L -> p))
-    // the durable stagingDir seam is the same computation, same bits
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_stage").toString
-    try {
-      val staged = Cluster
-        .pagerankInt(pair, "s", "d", iters = 20, stagingDir = Some(dir))
-        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-      assert(staged == got)
-    } finally graft.io.Sinks.truncatePath(spark, dir)
   }
 }

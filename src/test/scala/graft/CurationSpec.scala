@@ -167,42 +167,6 @@ class CurationSpec extends SparkSpec {
     assert(got.length == 1 && got.head.getString(2) == "u3")
   }
 
-  test("upsertLatestKeyed matches upsertLatest; a bucketed base merges with ONE exchange") {
-    val base = (1L to 200L).map(i => (i, i % 7, s"p$i")).toDF("k", "v", "payload")
-    val updates = Seq(
-      (1L, 100L, "u1"), (1L, 100L, "t-tie"), // same-version tie inside the batch
-      (2L, 0L, "stale"),                     // must lose to the base row
-      (5L, 5 % 7L, "tie-upd"),               // exact tie vs base: update wins
-      (300L, 1L, "insert")                   // pure insert
-    ).toDF("k", "v", "payload")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-        .sortBy(_._1).toSeq
-    // semantics pinned to the union+window form, bit for bit
-    assert(rows(Merge.upsertLatestKeyed(base, updates, Seq("k"), "v")) ==
-      rows(Merge.upsertLatest(base, updates, Seq("k"), "v")))
-
-    // the 100 TB shape: base bucketed+sorted by the key — the merge's
-    // only Exchange is the (small) updates side
-    spark.sql("DROP TABLE IF EXISTS merge_bucketed_base")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      base.write.bucketBy(4, "k").sortBy("k").saveAsTable("merge_bucketed_base")
-      val bb = spark.table("merge_bucketed_base")
-      val merged = Merge.upsertLatestKeyed(bb, updates, Seq("k"), "v")
-      val plan = merged.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount"),
-        s"base side not read as bucketed:\n$plan")
-      assert("Exchange".r.findAllIn(plan).size == 1,
-        s"expected the updates side's lone exchange:\n$plan")
-      // and the co-located plan still produces the identical table
-      assert(rows(merged) == rows(Merge.upsertLatest(base, updates, Seq("k"), "v")))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS merge_bucketed_base")
-    }
-  }
-
   test("foldAdditive: sequential folds equal one-shot agg; bucketed state folds with ONE exchange") {
     val raw = Seq(
       (Some("a"), 1L, 10L), (Some("a"), 2L, 5L), (Some("b"), 3L, 7L),
@@ -225,30 +189,6 @@ class CurationSpec extends SparkSpec {
     // nullability may widen, names/types must not
     assert(state.schema.map(f => (f.name, f.dataType)) ==
       empty.schema.map(f => (f.name, f.dataType)))
-
-    // the MV-maintenance shape at scale: state bucketed by key → the
-    // fold's only Exchange is the delta's partial aggregate
-    spark.sql("DROP TABLE IF EXISTS fold_state_b")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      // nullSafeKeys=false (keys non-null here): <=> plans as derived
-      // (coalesce, isnull) join keys a bucketed layout can't satisfy
-      val nn = raw.filter(col("k").isNotNull)
-      agg(nn).write.bucketBy(4, "k").sortBy("k").saveAsTable("fold_state_b")
-      val folded = Merge.foldAdditive(
-        spark.table("fold_state_b"), agg(nn), Seq("k"), nullSafeKeys = false)
-      val plan = folded.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount"),
-        s"state side not read as bucketed:\n$plan")
-      assert("Exchange".r.findAllIn(plan).size == 1,
-        s"expected the delta side's lone exchange:\n$plan")
-      // folding the whole input once more exactly doubles every state
-      assert(rows(folded) == rows(agg(nn)).map {
-        case (k, n, sx) => (k, 2 * n, 2 * sx) })
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      spark.sql("DROP TABLE IF EXISTS fold_state_b")
-    }
   }
 
   test("q95/q96 gates: integer cuts, best-first order, empty docs never kept") {
@@ -343,35 +283,6 @@ class CurationSpec extends SparkSpec {
       rows(Profile.mergeProfiles(Seq(ps(0), Profile.mergeProfiles(ps.drop(1))))))
   }
 
-  test("profileRendered: string surface with canonical decimal rendering (off the gate)") {
-    val df = Seq(
-      (Some(1L), Some("x")), (Some(2L), None), (Some(2L), Some("y")),
-      (None, Some("x"))
-    ).toDF("num", "s")
-    val got = Profile.profileRendered(df, Seq("num", "s")).collect()
-      .map(r => r.getString(0) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4), r.getString(5)))
-      .toMap
-    assert(got("num") == ((3L, 1L, 2L, "1", "2")))
-    assert(got("s") == ((3L, 1L, 2L, "x", "y")))
-    // the canonicalization itself: trailing fractional zeros collapse
-    val dec = Seq("1013.70").toDF("raw")
-      .select(col("raw").cast("decimal(18,2)").as("d"))
-    val rendered = Profile.profileRendered(dec, Seq("d")).collect().head
-    assert(rendered.getString(4) == "1013.7")
-  }
-
-  test("profile approx variant agrees on small cardinalities") {
-    val df = (1L to 50L).map(i => (i % 7, s"v${i % 5}")).toDF("a", "b")
-    val exact = Profile.profile(df, Seq("a", "b")).collect()
-      .map(r => r.getString(0) -> r.getLong(3)).toMap
-    val approx = Profile.profile(df, Seq("a", "b"), exact = false).collect()
-      .map(r => r.getString(0) -> r.getLong(3)).toMap
-    assert(exact == Map("a" -> 7L, "b" -> 5L))
-    // HLL at tiny cardinalities is exact in practice; allow ±1 to stay honest
-    approx.foreach { case (c, n) => assert(math.abs(n - exact(c)) <= 1) }
-  }
-
   test("decontaminate probes eval grams via a broadcast semi-join (no corpus shuffle)") {
     val train = (1L to 200L).map(i => (i, s"tok$i a b c d e")).toDF("doc_id", "text")
     val eval = Seq((900L, "a b c")).toDF("doc_id", "text")
@@ -442,27 +353,6 @@ class CurationSpec extends SparkSpec {
     val bandZ = touching(zs, (0L, 127L), (0L, 31L))
     assert(bandLin == 16)
     assert(bandZ < bandLin, s"z=$bandZ lin=$bandLin")
-  }
-
-  test("compactByDay maxRecordsPerFile rolls a day into bounded sorted files") {
-    val out = tmpDir("graft_layout_split")
-    val rows = (0L until 40L).map { i =>
-      (i, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
-    }
-    val table = Layout.compactByDay(rows.toDF("event_id", "ts"), "ts", "event_id",
-      out, maxRecordsPerFile = 15L)
-    val audit = Layout.auditByDay(table, "event_id").collect().head
-    assert(audit.getAs[Long]("n_rows") == 40L)
-    assert(audit.getAs[Long]("n_files") == 3L) // ceil(40 / 15)
-    // rolling preserved the within-day sort: file min/max ranges are disjoint
-    val ranges = table.select(col("event_id"), input_file_name().as("f"))
-      .groupBy("f").agg(min("event_id").as("lo"), max("event_id").as("hi"))
-      .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi")))
-      .sortBy(_._1)
-    assert(ranges.sliding(2).forall {
-      case Array((_, hi), (lo, _)) => hi < lo
-      case _ => true
-    })
   }
 
   test("diffSnapshots classifies insert/update/delete; unchanged and null-equal rows drop") {

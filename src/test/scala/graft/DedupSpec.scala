@@ -85,32 +85,6 @@ class DedupSpec extends SparkSpec {
     assert(survivors.contains(1L) && survivors.contains(4L) && survivors.contains(5L))
   }
 
-  test("dedupeCorpus staged-to-table path equals the in-memory path") {
-    val dir = tmpDir("graft_stage")
-    val inMem = Dedup.dedupeCorpus(docs, "text", "doc_id", threshold = 0.7,
-      k = 8, bands = 4, ngram = 2)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val staged = Dedup.dedupeCorpus(docs, "text", "doc_id", threshold = 0.7,
-      k = 8, bands = 4, ngram = 2, stagingDir = Some(dir))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(staged == inMem)
-    assert(new java.io.File(s"$dir/survivors").exists()) // stage is a real table
-  }
-
-  test("embedding near-dups via cosine threshold") {
-    val vecs = Seq(
-      (1L, Seq(1.0f, 0.0f)), (2L, Seq(1.0f, 0.01f)), (3L, Seq(0.0f, 1.0f))
-    ).toDF("vec_id", "embedding")
-    val got = Dedup.embeddingNearDups(vecs, "embedding", "vec_id", 0.99, dim = 2)
-      .collect()
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(got == Set((1L, 2L)))
-    val exhaustive = Dedup.embeddingNearDups(vecs, "embedding", "vec_id", 0.99,
-      dim = 2, allPairs = true).collect()
-      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(exhaustive == Set((1L, 2L)))
-  }
-
   test("semanticDedup: smaller-id cell-mate kills, cross-cell near-dup survives") {
     // 2-d space, one axis-aligned plane on dim 0 → 2 cells (sign of x)
     val planes = Seq(Seq(1.0, 0.0))
@@ -298,16 +272,6 @@ class DedupSpec extends SparkSpec {
       2, 50, 0.5).queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoopJoin"), plan)
-  }
-
-  test("embedding near-dups default plan is an equi-join, never a cross product") {
-    val vecs = Seq(
-      (1L, Seq(1.0f, 0.0f)), (2L, Seq(1.0f, 0.01f)), (3L, Seq(0.0f, 1.0f))
-    ).toDF("vec_id", "embedding")
-    val plan = Dedup.embeddingNearDups(vecs, "embedding", "vec_id", 0.5, dim = 2)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
   test("jaccard maxDf: hot grams excluded from candidate gen, scores stay exact") {

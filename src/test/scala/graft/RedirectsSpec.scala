@@ -22,29 +22,6 @@ class RedirectsSpec extends SparkSpec {
           r.getBoolean(3)))
       .toMap
 
-  test("stagingDir seam: parquet-staged rounds equal localCheckpoint") {
-    // the durable-cluster seam (r17 verdict #5): staging each doubling
-    // as parquet must reproduce the checkpointed path's rows exactly
-    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L,
-      10L -> 11L, 11L -> 10L, 20L -> 10L)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_redirects_stage").toString
-    try {
-      val base = resolve(edges)
-      val staged = Redirects
-        .resolve(edges.toDF("src", "dst"), "src", "dst", 3, Some(dir))
-        .collect()
-        .map(r => r.getLong(0) ->
-          ((if (r.isNullAt(1)) None else Some(r.getLong(1))),
-            (if (r.isNullAt(2)) None else Some(r.getLong(2))),
-            r.getBoolean(3)))
-        .toMap
-      assert(staged == base)
-      // the seam actually staged rounds (not silently checkpointed)
-      assert(new java.io.File(dir).list().exists(_.startsWith("jump_")))
-    } finally graft.io.Sinks.truncatePath(spark, dir)
-  }
-
   test("plain chain resolves with exact hop counts") {
     val m = resolve(Seq(1L -> 2L, 2L -> 3L, 3L -> 4L))
     assert(m(1L) === ((Some(4L), Some(3L), false)))

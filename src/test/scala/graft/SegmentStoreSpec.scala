@@ -275,4 +275,75 @@ class SegmentStoreSpec extends SparkSpec {
     assert(ex2.getMessage == "first" && done.get == 1)
     assert(SegmentStore.withWrites(Seq(slow))(7) == 7 && done.get == 2)
   }
+  test("withWrites: every fork's jobs carry the caller's job group and description") {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.rddInfos.exists(_.name == "withWrites_fork")))
+          seen.add((e.properties.getProperty("spark.jobGroup.id"),
+            e.properties.getProperty("spark.job.description")))
+    }
+    val job = () => sc.parallelize(1 to 4, 2).setName("withWrites_fork").count(): Unit
+    sc.addSparkListener(listener)
+    try {
+      for (g <- Seq("q_first", "q_second")) {
+        sc.setJobGroup(g, s"$g desc")
+        try SegmentStore.withWrites(Seq.fill(4)(job))(())
+        finally sc.clearJobGroup()
+      }
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      while (seen.size < 8 && System.nanoTime() < deadline) Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    val got = seen.toArray.toSeq.map(_.asInstanceOf[(String, String)])
+    assert(got.groupBy(identity).map { case (k, v) => k -> v.size } == Map(
+      ("q_first", "q_first desc") -> 4, ("q_second", "q_second desc") -> 4), got)
+  }
+
+  test("withWrites: cancelJobGroup on the caller's group stops a sleeping fork") {
+    val sc = spark.sparkContext
+    val group = "withWrites_cancel"
+    val canceller = new Thread(() => {
+      val deadline = System.nanoTime() + 20L * 1000000000L
+      while (sc.statusTracker.getJobIdsForGroup(group).isEmpty &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      sc.cancelJobGroup(group)
+    })
+    sc.setJobGroup(group, "cancel probe", interruptOnCancel = true)
+    val t0 = System.nanoTime()
+    try {
+      canceller.start()
+      intercept[org.apache.spark.SparkException] {
+        SegmentStore.withWrites(Seq(() =>
+          sc.parallelize(1 to 2, 2).map { x => Thread.sleep(60000); x }.count(): Unit))(())
+      }
+    } finally {
+      sc.clearJobGroup()
+      canceller.join()
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(secs < 30, s"withWrites returned after $secs s")
+  }
+
+  test("src/main forks work only through withWrites and the Bench/Verify watchdogs") {
+    val fork = "Executors\\.|CompletableFuture\\.|withThreadLocalCaptured|new Thread\\b".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .toArray.toSeq.map(_.toString).filter(_.endsWith(".scala"))
+      .filterNot(f => f.endsWith("/Bench.scala") || f.endsWith("/Verify.scala"))
+    assert(files.exists(_.endsWith("/SegmentStore.scala")))
+    val offenders = files.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      val (start, end) =
+        if (!f.endsWith("/SegmentStore.scala")) (-1, -1)
+        else {
+          val st = text.indexOf("def withWrites[")
+          assert(st >= 0, "SegmentStore.withWrites is gone")
+          (st, text.indexOf("\n  }\n", st))
+        }
+      fork.findAllMatchIn(text).map(_.start).filterNot(i => i > start && i < end)
+        .map(i => s"$f:${text.take(i).count(_ == '\n') + 1}")
+    }
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
 }

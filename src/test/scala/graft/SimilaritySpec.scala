@@ -500,19 +500,11 @@ class SimilaritySpec extends SparkSpec {
     val pure = Similarity.mmrRerank(cands, 4, lambdaPct = 100)
       .orderBy(col("rank")).collect().map(_.getAs[Long]("neighbor_id"))
     assert(pure.toSeq == Seq(1L, 2L, 3L, 4L))
-    // an oversized candidate group with EXPLICIT strictLimit = false is
-    // truncate-and-log: deterministic cut to the maxC most relevant by
-    // (rel desc, id asc), then the normal greedy loop
     val big = (1 to 40).map(i =>
         (7L, i.toLong, 1.0 - i * 0.01, Seq(1.0, 0.0, 0.0, 0.0)))
       .toDF("query_id", "neighbor_id", "rel", "cv")
-    val truncated = Similarity
-      .mmrRerank(big, k = 4, lambdaPct = 100, maxCandidates = 32,
-        strictLimit = false)
-      .orderBy(col("rank")).collect().map(_.getAs[Long]("neighbor_id"))
-    assert(truncated.toSeq == Seq(1L, 2L, 3L, 4L)) // top-rel ids survive the cut
-    // the DEFAULT is the hard failure: a corpus-sized group fails the
-    // task loudly instead of silently reranking a truncated set
+    // an oversized group is a hard failure: a corpus-sized group fails
+    // the task loudly instead of silently reranking a truncated set
     val ex = intercept[Exception] {
       Similarity.mmrRerank(big, k = 4, lambdaPct = 70, maxCandidates = 32)
         .collect()

@@ -230,34 +230,17 @@ class UpsertSinkSpec extends SparkSpec {
     import graft.operators.Merge
     val base = Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("k", "v", "p")
     val widened = Seq((2L, 2L, "b2", "extra")).toDF("k", "v", "p", "q")
-    // off by default: widening is an explicit decision, not an accident
+    // widening is refused: the table schema is fixed
     val ex = intercept[IllegalArgumentException] {
       Merge.upsertLatest(base, widened, Seq("k"), "v")
     }
-    assert(ex.getMessage.contains("allowSchemaEvolution"))
+    assert(ex.getMessage.contains("absent from base"))
     // narrowing is never allowed: update rows replace the WHOLE row
     val ex2 = intercept[IllegalArgumentException] {
       Merge.applyChanges(base, Seq((2L, 2L)).toDF("k", "v"),
         base.limit(0).select("k", "v"), Seq("k"), "v")
     }
     assert(ex2.getMessage.contains("full-row replacement"))
-    val got = Merge.applyChanges(base, widened,
-      base.limit(0).select("k", "v"), Seq("k"), "v",
-      allowSchemaEvolution = true)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getString(2), Option(r.getString(3))))).toMap
-    assert(got == Map(1L -> (("a", None)), 2L -> (("b2", Some("extra")))))
-    // end-to-end through the versioned table: the stored schema widens,
-    // prior rows read null in the new column
-    val dir = tmpDir("graft_upsert_evolve")
-    val t = new ParquetUpsertTable(spark, dir, Seq("k"), "v",
-      allowSchemaEvolution = true)
-    t.applyBatch(Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("k", "v", "p"), 0)
-    t.applyBatch(Seq((2L, 2L, "b2", "x")).toDF("k", "v", "p", "q"), 1)
-    val snap = t.snapshot().get.collect()
-      .map(r => r.getAs[Long]("k") ->
-        ((r.getAs[String]("p"), Option(r.getAs[String]("q"))))).toMap
-    assert(snap == Map(1L -> (("a", None)), 2L -> (("b2", Some("x")))))
   }
 
   test("non-orderable (map) payload columns merge; reserved names rejected both sides") {
@@ -398,13 +381,12 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("multi-partition batch rewrites concurrently, bounded files per version") {
     val dir = tmpDir("graft_part_multi")
-    val t = new PartitionedUpsertTable(spark, dir, Seq("k"), "v", "day",
-      filesPerRewrite = 1, maxConcurrentRewrites = 3)
+    val t = new PartitionedUpsertTable(spark, dir, Seq("k"), "v", "day")
     t.applyBatch(Seq(
       (1L, 1L, "a1", "2024-01-01"),
       (2L, 1L, "b1", "2024-01-02"),
       (3L, 1L, "c1", "2024-01-03")).toDF("k", "v", "p", "day"), 0)
-    // one batch touching all three partitions → three concurrent rewrites
+    // one batch touching all three partitions → three rewrites
     t.applyChanges(Seq(
       (1L, 2L, "a2", "2024-01-01"),
       (2L, 2L, "b2", "2024-01-02"),
@@ -414,7 +396,7 @@ class UpsertSinkSpec extends SparkSpec {
       1L -> ((2L, "a2", "2024-01-01")),
       2L -> ((2L, "b2", "2024-01-02")),
       4L -> ((1L, "d1", "2024-01-03"))))
-    // every committed version dir holds exactly filesPerRewrite data files
+    // every committed version dir holds exactly one data file
     t.partitionDirs.foreach { p =>
       val v1 = new java.io.File(dir, s"$p/v_00000000000000000001")
       assert(v1.isDirectory, s"$p not rewritten by the multi-partition batch")

@@ -11,8 +11,14 @@ name occurs outside its own declaration block; a def when its name occurs
 outside its own body. Comments are ignored, string literals are not (a
 class named in a conf string is a real reference).
 
-The match is by bare name, so a name shared with any other symbol counts
-as referenced: the scan can miss an unreached entry, not invent one.
+The match is by bare name, with one exception: a member of an `object`
+whose bare name another main type also declares as a def counts only
+`Owner.name` references (or bare uses in a file that imports the
+owner's members) and any use inside the owner's own file. So
+`Queries.embeddingNearDups` no longer hides a `Dedup.embeddingNearDups`
+that only specs call. Any other name shared with another symbol still
+counts as referenced: the scan can miss an unreached entry, not invent
+one.
 The scan is one level deep: code reached only from a listed entry shows
 up once that entry is gone. `SparkEntry`, `Bench` and `Verify` are the
 roots the driver runs and are never listed, nor are `main` and the Scala
@@ -111,6 +117,9 @@ KEEP = {
     "graft.operators.Dedup.FingerprintStore.currentGenTable":
         inside("DedupSpec 'FingerprintStore.compact folds segments into a "
                "bucketed generation', q64"),
+    "graft.util.OperatorCaches.release":
+        inside("BoilerplateSpec 'remove at threshold: every occurrence, "
+               "order kept, one row per doc', q148"),
     # spec-only code that fails the rule, left for a follow-up change
     "graft.streaming.BudgetStream.admissions":
         deferred("2 BudgetStreamSpec cases"),
@@ -119,17 +128,26 @@ KEEP = {
                  "of ingestCore"),
     "graft.operators.Boilerplate.lineDocFrequency":
         deferred("1 BoilerplateSpec case"),
-    "graft.operators.Merge.upsertLatestKeyed": deferred("1 CurationSpec case"),
     "graft.operators.Multimodal.resize":
         deferred("2 MultimodalSpec cases and 1 QualityCheckSpec case, "
                  "with sampleFrames"),
     "graft.operators.Multimodal.sampleFrames":
         deferred("the same 3 cases as resize"),
-    "graft.operators.Profile.profileRendered":
-        deferred("1 CurationSpec case"),
     "graft.operators.Skew.saltedJoin": deferred("1 SkewAndSqlSpec case"),
     "graft.pipeline.SummaryPipeline.fullSummary":
         deferred("1 SummaryPipelineSpec case"),
+    # the self-maintaining foreachBatch adapters around reached staged
+    # cores: named only by specs once shared bare names stopped counting
+    "graft.streaming.BudgetStream.sink": deferred("1 BudgetStreamSpec case"),
+    "graft.streaming.FrontierStream.sink":
+        deferred("1 FrontierStreamSpec case"),
+    "graft.streaming.DriftStream.monitor":
+        deferred("2 DriftStreamSpec cases"),
+    "graft.streaming.QualityStream.monitor":
+        deferred("2 QualityStreamSpec cases"),
+    "graft.operators.ClusterStore.purgeSuperseded":
+        deferred("ClusterStoreSpec 'purgeSuperseded: crash debris…' and "
+                 "the purge step of SegmentStoreSpec 'relative store dir…'"),
 }
 
 TYPE_RE = re.compile(
@@ -224,11 +242,25 @@ class Source:
         return [k for k, l in enumerate(self.code)
                 if k not in skip and pat.search(l)]
 
+    def names_member(self, owner, name):
+        """Whether this file names `owner.name`, qualified or through an
+        import of the owner's members."""
+        text = "\n".join(self.code)
+        o, n = re.escape(owner), re.escape(name)
+        if re.search(r"(?<![\w$])" + o + r"\s*\.\s*" + n + r"(?![\w$])", text):
+            return True
+        imported = re.search(
+            r"import\s+[\w.]*(?<![\w$])" + o + r"\.(_|\{[^}]*(?<![\w$])"
+            + n + r"(?![\w$])[^}]*\})", text)
+        return bool(imported) and bool(self.names(name, set()))
+
 
 def declarations(src):
-    """(kind, qualified name, bare name, line, skip range) for every
-    top-level type and every public member def of a public type."""
-    out, stack = [], []  # stack: (indent, qualified name, public)
+    """(kind, qualified name, bare name, line, skip range, owner) for
+    every top-level type and every public member def of a public type
+    (`owner` is the simple name of a def's enclosing `object`, else
+    None), and the (owner, bare name) of every member def of any type."""
+    out, members, stack = [], set(), []  # stack: (indent, qn, public, object?)
     lines = src.skel
     for k, line in enumerate(lines):
         if not line.strip():
@@ -242,38 +274,50 @@ def declarations(src):
             qn = f"{owner}.{t.group(4)}"
             public = "private" not in t.group(2) and (not stack or stack[-1][2])
             if not stack:
-                out.append(("type", qn, t.group(4), k, range(k, block_end(lines, k))))
-            stack.append((ind, qn, public))
+                out.append(("type", qn, t.group(4), k,
+                            range(k, block_end(lines, k)), None))
+            stack.append((ind, qn, public, t.group(3) == "object"))
             continue
         d = DEF_RE.match(line)
-        if d and stack and stack[-1][0] == ind - 2 and stack[-1][2]:
+        if d and stack and stack[-1][0] == ind - 2:
             mods, name = d.group(2), d.group(3)
-            if ("private" in mods or "protected" in mods or "override" in mods
-                    or name in SKIP_DEFS):
+            members.add((stack[-1][1], name))
+            if (not stack[-1][2] or "private" in mods or "protected" in mods
+                    or "override" in mods or name in SKIP_DEFS):
                 continue
+            owner = stack[-1][1].rsplit(".", 1)[1] if stack[-1][3] else None
             out.append(("def", f"{stack[-1][1]}.{name}", name, k,
-                        range(k, block_end(lines, k))))
-    return out
+                        range(k, block_end(lines, k)), owner))
+    return out, members
 
 
 def scan(root):
     mains = [Source(root, p) for p in scala_files(root, "src/main/scala")]
     bench = [Source(root, p) for p in scala_files(root, "perfbench/scala")]
     specs = [Source(root, p) for p in scala_files(root, "src/test/scala")]
-    decls = [(src, d) for src in mains for d in declarations(src)]
+    decls, members = [], set()
+    for src in mains:
+        ds, ms = declarations(src)
+        decls += [(src, d) for d in ds]
+        members |= ms
     # companions share a name: a type's own block is every block of it
     own = {}
-    for src, (kind, qn, _, _, rng) in decls:
+    for src, (kind, qn, _, _, rng, _) in decls:
         if kind == "type":
             own.setdefault((src.rel, qn), set()).update(rng)
     unreached_types, rows = set(), []
-    for src, (kind, qn, name, line, rng) in decls:
+    for src, (kind, qn, name, line, rng, owner) in decls:
         if qn in ROOTS or (kind == "def" and any(
                 qn.startswith(t + ".") for t in unreached_types)):
             continue
         skip = own[(src.rel, qn)] if kind == "type" else set(rng)
+        owner_qn = qn.rsplit(".", 1)[0]
+        shared = owner is not None and any(
+            m == name and o != owner_qn for o, m in members)
+        others = [o for o in mains + bench if o is not src]
         reached = bool(src.names(name, skip)) or any(
-            o.names(name, set()) for o in mains + bench if o is not src)
+            o.names_member(owner, name) if shared else o.names(name, set())
+            for o in others)
         if reached:
             continue
         if kind == "type":
