@@ -69,11 +69,6 @@ object Bench {
     )
   }
 
-  /** Per-query seconds of the newest driver-recorded lock (shipped as a
-    * resource; see BASELINE.md) + that lock's calibration total.
-    * Empty map when the resource is missing — flare detection simply
-    * disarms.
-    */
   /** The lock's recorded scale-factor tag (`"sf": "sf0.1"`), if any. */
   def lockSfTag(name: String = "bench_lock.json"): Option[String] =
     lockText(name).flatMap(t =>
@@ -91,6 +86,11 @@ object Bench {
         else None
       }
 
+  /** Per-query seconds of the newest driver-recorded lock (shipped as a
+    * resource; see BASELINE.md) + that lock's calibration total.
+    * Empty map when the resource is missing — flare detection simply
+    * disarms.
+    */
   def loadLock(name: String = "bench_lock.json"):
       (Map[String, Double], Double) = {
     // classpath resource (sbt run/package copy it), else the source

@@ -1053,15 +1053,6 @@ object Oracles {
     WHERE rk <= CASE WHEN source IN ('src0','src1','src2','src3') THEN 15 ELSE 5 END
     ORDER BY source, rk"""
 
-  /** Connected-component labels — transitive closure via recursive CTE,
-    * feasible at oracle scale (the engine side uses O(log² n)
-    * star-contraction instead; see graft.operators.Cluster). Candidate
-    * edges are q20's, verbatim.
-    */
-  /** Shared WITH-body (recursive) of the q52/q97 cluster oracles: LSH
-    * candidate pairs → transitive closure → per-doc min-label cluster
-    * assignment in `asg`.
-    */
   /** Shared candidate-graph CTEs (minhash → LSH bands → pairs → both-
     * direction edges) — the front half of q52/q117/q121.
     */
@@ -1079,6 +1070,10 @@ object Oracles {
       UNION
       SELECT id_b AS u, id_a AS v FROM pairs)"""
 
+  /** Shared WITH-body (recursive) of the q52/q97 cluster oracles: LSH
+    * candidate pairs → transitive closure → per-doc min-label cluster
+    * assignment in `asg`.
+    */
   private lazy val dupClusterCtes: String = s"""$dupEdgesCtes,
     reach(u, v) AS (
       SELECT u, v FROM edges
@@ -1090,6 +1085,11 @@ object Oracles {
              coalesce(least(l.doc_id, l.mn), d.doc_id) AS cluster_id
       FROM documents d LEFT JOIN lbl l ON d.doc_id = l.doc_id)"""
 
+  /** Connected-component labels — transitive closure via recursive CTE,
+    * feasible at oracle scale (the engine side uses O(log² n)
+    * star-contraction instead; see graft.operators.Cluster). Candidate
+    * edges are q20's, verbatim.
+    */
   val dupClusters: String = s"""
     WITH RECURSIVE $dupClusterCtes
     SELECT doc_id, cluster_id,
@@ -2423,12 +2423,6 @@ object Oracles {
       s"ELSE lower(regexp_extract($hp, '^([^:]*)', 1)) END"
   }
 
-  /** Mirrors Queries.domainRankGate: the 7-domain ring plant, anchor
-    * extraction, PSL domain keys, DISTINCT directed edges (self-loops
-    * and NULLs dropped), then three unrolled all-integer PageRank
-    * iterations (the q121 recurrence — identical truncation points,
-    * BIGINT-cast sums) over string domain nodes.
-    */
   /** Shared q154/q158 oracle prefix: the ring plant, anchor
     * extraction, and PSL domain keys — ends in `ed0 (u, v)`, one row
     * per link (multiplicity preserved).
@@ -2484,6 +2478,12 @@ object Oracles {
              nullif(${pslCaseSql("hdst")}, '') AS v
       FROM hu)"""
 
+  /** Mirrors Queries.domainRankGate: the 7-domain ring plant, anchor
+    * extraction, PSL domain keys, DISTINCT directed edges (self-loops
+    * and NULLs dropped), then three unrolled all-integer PageRank
+    * iterations (the q121 recurrence — identical truncation points,
+    * BIGINT-cast sums) over string domain nodes.
+    */
   val domainRank: String = {
     def iter(prev: String, cur: String, c: String) = s"""
     $c AS (
@@ -2782,11 +2782,6 @@ object Oracles {
     FROM m WHERE rn = 1
     ORDER BY doc_id"""
 
-  /** Mirrors Queries.salsaGate / Cluster.salsaInt: the 12-edge lookup
-    * plant, three unrolled SALSA sweeps with the engine's exact
-    * truncation points (`hub div outdeg`, `auth div indeg`), full
-    * outer hub/auth join.
-    */
   /** Mirrors Queries.crawlLoopGate: the scheduled top-maxDepth waves
     * per domain, planted statuses over the SCHEDULED set, a depth-8
     * recursive walk over the response redirect edges (the per-hop dual
@@ -3254,6 +3249,11 @@ object Oracles {
            cum_before < 300 AS admitted
     FROM adm ORDER BY doc_id""")
 
+  /** Mirrors Queries.salsaGate / Cluster.salsaInt: the 12-edge lookup
+    * plant, three unrolled SALSA sweeps with the engine's exact
+    * truncation points (`hub div outdeg`, `auth div indeg`), full
+    * outer hub/auth join.
+    */
   val salsaScores: String = {
     def sweep(prevH: String, a: String, h: String) = s"""
     $a AS (
@@ -5229,12 +5229,6 @@ object Oracles {
     ORDER BY cell, dim"""
   }
 
-  /** Mirrors Queries.qualityModel: md5-stable token→bucket hashing, the
-    * ×10 integer weight formula, exact integer logit sums, and the
-    * z ≥ 0 keep-gate computed pre-sigmoid (identical double from one
-    * division + one subtraction — the only libm call, exp, is inside
-    * the 4 dp-rounded score, q66's transcendental discipline).
-    */
   /** Shared WITH-body of the q95/q96 gates: the q87 exact-integer logit
     * carried per (doc, source), pre-sigmoid double quality (NULL for
     * empty docs → ranks last under NULLS LAST, never kept).
@@ -5308,6 +5302,12 @@ object Oracles {
           FROM sig)
     ORDER BY doc_id"""
 
+  /** Mirrors Queries.qualityModel: md5-stable token→bucket hashing, the
+    * ×10 integer weight formula, exact integer logit sums, and the
+    * z ≥ 0 keep-gate computed pre-sigmoid (identical double from one
+    * division + one subtraction — the only libm call, exp, is inside
+    * the 4 dp-rounded score, q66's transcendental discipline).
+    */
   val qualityModel: String = s"""
     WITH t AS (
       SELECT doc_id, tok

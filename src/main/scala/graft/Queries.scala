@@ -1259,13 +1259,6 @@ object Queries {
       s.createDataFrame(audit.collect().toSeq.asJava, audit.schema)
     }
 
-  /** q57: CDC merge — a deterministic change batch (every tenth user's
-    * events arrive again an hour later with a doubled value) upserted
-    * into the events snapshot, latest version per event_id winning.
-    * The full merged table is dumped: updated keys must carry the new
-    * row, untouched keys must survive exactly once. See
-    * [[graft.operators.Merge]] for the 100 TB shape.
-    */
   /** Incremental aggregation (materialized-view maintenance): the events
     * stream arrives as three disjoint deltas; each delta's per-(day, type)
     * partials fold additively into a maintained state table
@@ -1315,6 +1308,13 @@ object Queries {
       .orderBy(col("z"), col("event_id"))
   }
 
+  /** q57: CDC merge — a deterministic change batch (every tenth user's
+    * events arrive again an hour later with a doubled value) upserted
+    * into the events snapshot, latest version per event_id winning.
+    * The full merged table is dumped: updated keys must carry the new
+    * row, untouched keys must survive exactly once. See
+    * [[graft.operators.Merge]] for the 100 TB shape.
+    */
   def mergeUpsert(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val updates = ev.filter(col("user_id") % 10 === 0)
@@ -2065,23 +2065,6 @@ object Queries {
       .orderBy(col("cell"), col("dim"))
   }
 
-  /** q87: MODEL-based quality filtering — the CCNet/fastText-shaped
-    * linear classifier over hashed bag-of-words features that sits next
-    * to heuristic filters (q41) in every corpus pipeline. The weights
-    * here are a deterministic stand-in (bucket b → ((b·37) mod 21 − 10)
-    * / 10, a fixed formula both engines evaluate identically) — the
-    * POINT is the serving plumbing, which is exactly what a learned
-    * model needs: the feature-hashing trick (md5-stable token → one of
-    * 32 buckets, so the feature space is fixed-width no matter the
-    * vocabulary), an EXACT integer logit numerator (each token
-    * contributes its bucket's ×10 integer weight; summing longs is
-    * order-independent, so the score is bit-stable across engines and
-    * re-runs — no decimal machinery needed), and one double division +
-    * sigmoid at the end. `keep` thresholds on the PRE-sigmoid logit
-    * (z ≥ 0 ⇔ score ≥ 0.5) so the gate never depends on libm's exp.
-    * Map-side partial agg collapses the token explode per partition;
-    * one doc-keyed shuffle total.
-    */
   /** Shared per-doc quality signal for the q95/q96 curation gates: the
     * q87 hashed-feature logit as an EXACT integer (zn) plus its
     * pre-sigmoid double `quality` — one division + one subtraction from
@@ -2166,6 +2149,23 @@ object Queries {
       .orderBy(col("doc_id"))
   }
 
+  /** q87: MODEL-based quality filtering — the CCNet/fastText-shaped
+    * linear classifier over hashed bag-of-words features that sits next
+    * to heuristic filters (q41) in every corpus pipeline. The weights
+    * here are a deterministic stand-in (bucket b → ((b·37) mod 21 − 10)
+    * / 10, a fixed formula both engines evaluate identically) — the
+    * POINT is the serving plumbing, which is exactly what a learned
+    * model needs: the feature-hashing trick (md5-stable token → one of
+    * 32 buckets, so the feature space is fixed-width no matter the
+    * vocabulary), an EXACT integer logit numerator (each token
+    * contributes its bucket's ×10 integer weight; summing longs is
+    * order-independent, so the score is bit-stable across engines and
+    * re-runs — no decimal machinery needed), and one double division +
+    * sigmoid at the end. `keep` thresholds on the PRE-sigmoid logit
+    * (z ≥ 0 ⇔ score ≥ 0.5) so the gate never depends on libm's exp.
+    * Map-side partial agg collapses the token explode per partition;
+    * one doc-keyed shuffle total.
+    */
   def qualityModel(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val w10 = pmod(pmod(TextFunctions.stableHash60(col("tok")), lit(32)) * 37,
@@ -3867,28 +3867,6 @@ object Queries {
         .localCheckpoint(true)
     }
 
-  /** q190: STREAMING crawl-curation ingest on the oracle gate — the
-    * q153 chain's streaming twin [[graft.streaming.CurationStream]]
-    * driven end-to-end through its REAL foreachBatch sink (not a
-    * reimplementation): synthesized WET records (every 11th page
-    * chrome-only so extract bites, every 13th-residue-4 a
-    * `meta robots noindex` publisher opt-out, page text block-shared
-    * per 10-block with every 40th-residue-20 block REUSING the text of
-    * the block 200 ids back — the cross-epoch exact-duplicate plant)
-    * flow as three ascending-id epochs through extract → noindex →
-    * langid routing ({en, it}) → the persisted fingerprint store →
-    * the persisted per-domain token-budget meter. Epoch 1 is REPLAYED
-    * after its commit — and after `compactEvery = 1` has already
-    * folded both stores' older segments (newest spared, the replay-
-    * horizon contract) — so the replay must re-derive byte-identical
-    * decisions THROUGH the compacted generation and rewrite only its
-    * own `batch=1` output. Domains are block-aligned (`site⌊id/10⌋%5`)
-    * so dedup keepers spread over all five budget meters. The oracle
-    * replays the whole chain as one pass (global min-id per
-    * fingerprint over the routed set; budget prefix sums in doc_id
-    * order) — epochs, both stores, the replay, and the compactions
-    * must all be invisible.
-    */
   /** The q190/q191 planted WET corpus: (doc_id, wet_text, uri) pages
     * synthesized from `documents` — chrome-only every 11th id, noindex
     * every 13th-residue-4, per-10-block shared text with the 40th-
@@ -3923,7 +3901,28 @@ object Queries {
     picked.select(d, markup.as("wet_text"), uri.as("uri"))
   }
 
-  /** q190's gate body — see the scaladoc above [[streamCurationGate]]. */
+  /** q190: STREAMING crawl-curation ingest on the oracle gate — the
+    * q153 chain's streaming twin [[graft.streaming.CurationStream]]
+    * driven end-to-end through its REAL foreachBatch sink (not a
+    * reimplementation): synthesized WET records (every 11th page
+    * chrome-only so extract bites, every 13th-residue-4 a
+    * `meta robots noindex` publisher opt-out, page text block-shared
+    * per 10-block with every 40th-residue-20 block REUSING the text of
+    * the block 200 ids back — the cross-epoch exact-duplicate plant)
+    * flow as three ascending-id epochs through extract → noindex →
+    * langid routing ({en, it}) → the persisted fingerprint store →
+    * the persisted per-domain token-budget meter. Epoch 1 is REPLAYED
+    * after its commit — and after `compactEvery = 1` has already
+    * folded both stores' older segments (newest spared, the replay-
+    * horizon contract) — so the replay must re-derive byte-identical
+    * decisions THROUGH the compacted generation and rewrite only its
+    * own `batch=1` output. Domains are block-aligned (`site⌊id/10⌋%5`)
+    * so dedup keepers spread over all five budget meters. The oracle
+    * replays the whole chain as one pass (global min-id per
+    * fingerprint over the routed set; budget prefix sums in doc_id
+    * order) — epochs, both stores, the replay, and the compactions
+    * must all be invisible.
+    */
   def streamCurationGate(s: SparkSession, dir: String): DataFrame =
     scratch(s, "graft_cstream_gate") { root =>
       val (dedupDir, budgetDir, outDir) =
@@ -4881,27 +4880,6 @@ object Queries {
       .orderBy(col("domain"), col("rk"))
   }
 
-  /** q154: domain-authority PageRank — q149's outlink extraction and
-    * q152's registered-domain keys finally meeting q121's all-integer
-    * PageRank: planted pages on a 7-domain ring (`siteK.net` links
-    * `site(K+1).net`, even K adds a `site(K+2).net` skip edge — the
-    * asymmetry that makes authority non-uniform), every page links the
-    * `example.com` hub and some link `badsite.net`. Host-level edges =
-    * DISTINCT (page domain, href domain) pairs through
-    * [[graft.operators.Html.extractLinks]] →
-    * [[graft.operators.PublicSuffix.registeredDomain]]; self-citations
-    * and NULL domains drop; [[graft.operators.Cluster.pagerankInt]]
-    * runs 3 integer iterations. Pure sinks (the hub, the ad domain)
-    * have no out-degree and are absent from the ranking —
-    * `pagerankInt`'s documented truncation. This is the
-    * CommonCrawl-style domain-authority prior a quality mixer
-    * consumes; the oracle unrolls the identical three iterations over
-    * the identically extracted edges.
-    *
-    * Scale shape: extraction + domain keying are map-only; the edge
-    * set is DISTINCT domain pairs (web-graph-sized, not corpus-sized);
-    * each iteration is one edge⋈rank join keyed by domain.
-    */
   /** The 7-domain ring plant + per-link domain edges shared by
     * q154/q158: (u, v) one row per LINK (multiplicity preserved —
     * q154 distincts it, q158 aggregates it into weights).
@@ -4943,6 +4921,27 @@ object Queries {
         col("u") =!= col("v"))
   }
 
+  /** q154: domain-authority PageRank — q149's outlink extraction and
+    * q152's registered-domain keys finally meeting q121's all-integer
+    * PageRank: planted pages on a 7-domain ring (`siteK.net` links
+    * `site(K+1).net`, even K adds a `site(K+2).net` skip edge — the
+    * asymmetry that makes authority non-uniform), every page links the
+    * `example.com` hub and some link `badsite.net`. Host-level edges =
+    * DISTINCT (page domain, href domain) pairs through
+    * [[graft.operators.Html.extractLinks]] →
+    * [[graft.operators.PublicSuffix.registeredDomain]]; self-citations
+    * and NULL domains drop; [[graft.operators.Cluster.pagerankInt]]
+    * runs 3 integer iterations. Pure sinks (the hub, the ad domain)
+    * have no out-degree and are absent from the ranking —
+    * `pagerankInt`'s documented truncation. This is the
+    * CommonCrawl-style domain-authority prior a quality mixer
+    * consumes; the oracle unrolls the identical three iterations over
+    * the identically extracted edges.
+    *
+    * Scale shape: extraction + domain keying are map-only; the edge
+    * set is DISTINCT domain pairs (web-graph-sized, not corpus-sized);
+    * each iteration is one edge⋈rank join keyed by domain.
+    */
   def domainRankGate(s: SparkSession, dir: String): DataFrame =
     graft.operators.Cluster
       .pagerankInt(linkRingEdges(s, dir).distinct(), "u", "v", iters = 3)

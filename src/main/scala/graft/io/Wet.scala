@@ -173,14 +173,6 @@ object Wet {
     parseResponses(spark.createDataset(rdd).toDF("rec"), "rec")
   }
 
-  /** Response-record framing → columns: (warc_type, target_uri,
-    * status [NULL when the status line is unparseable], content_type
-    * [lowercased, parameters after `;` stripped — `text/html;
-    * charset=UTF-8` → `text/html`, NULL when absent], location [the
-    * redirect target header, NULL when absent], body). A crawler's
-    * fetch gate composes on these: keep `status = 200 ∧ content_type =
-    * text/html`, feed 3xx locations to [[graft.operators.Redirects]].
-    */
   /** HTTP-block header probe: LINE-anchored (`(?im)^`), unlike the
     * WARC [[header]] probe — HTTP headers collide on suffixes
     * (`Content-Location` vs `Location`), so a substring match would
@@ -189,6 +181,14 @@ object Wet {
   private def httpHeader(block: org.apache.spark.sql.Column, name: String) =
     regexp_extract(block, s"(?im)^$name:[ \\t]*([^\\r\\n]*)", 1)
 
+  /** Response-record framing → columns: (warc_type, target_uri,
+    * status [NULL when the status line is unparseable], content_type
+    * [lowercased, parameters after `;` stripped — `text/html;
+    * charset=UTF-8` → `text/html`, NULL when absent], location [the
+    * redirect target header, NULL when absent], body). A crawler's
+    * fetch gate composes on these: keep `status = 200 ∧ content_type =
+    * text/html`, feed 3xx locations to [[graft.operators.Redirects]].
+    */
   def parseResponses(raw: DataFrame, recCol: String): DataFrame = {
     val body0 = when(col(recCol).startsWith("WARC/1.0\r\n"),
       substring(col(recCol), 11, Int.MaxValue)).otherwise(col(recCol))

@@ -42,13 +42,6 @@ object Boilerplate {
       .select(col(idCol), col("pos"), trim(col("__raw")).as("ln"))
       .filter(col("ln") =!= "")
 
-  /** Document frequency per distinct trimmed line: (ln, df). */
-  def lineDocFrequency(
-      docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    lines(docs, textCol, idCol)
-      .select(col(idCol), col("ln")).distinct()
-      .groupBy(col("ln")).agg(count(lit(1)).as("df"))
-
   /** Remove every occurrence of a line whose document frequency is
     * ≥ `minDocs`: (`idCol`, n_lines, n_removed, text_clean), one row
     * per input document. `n_lines` counts the doc's non-blank lines.

@@ -107,12 +107,9 @@ object ClusterStore {
     loadBefore(s, dir, Long.MaxValue)
 
   /** As [[load]] but resolving only map segments with id strictly below
-    * `belowSegId` — the history a replayed streaming epoch is allowed
-    * to see ([[ingestEpoch]]'s contract). Fails loudly if a compaction
-    * has folded segments at or beyond the bound into the generation
-    * (their state would leak future labels into the replay): while a
-    * stream feeds the store, compact with `keepNewestSegments = 1`,
-    * exactly the FingerprintStore stream discipline.
+    * `belowSegId` — the fold scope [[compact]] resolves. Fails loudly if
+    * a compaction has folded segments at or beyond the bound into the
+    * generation.
     */
   def loadBefore(s: SparkSession, dir: String, belowSegId: Long): DataFrame = {
     val (gen, segs) = SegmentStore.history(s, mapDir(dir), belowSegId)
@@ -148,47 +145,10 @@ object ClusterStore {
       idCol: String,
       k: Int = 8,
       bands: Int = 4,
-      ngram: Int = 2): DataFrame =
-    ingestCore(batch, dir, textCol, idCol, k, bands, ngram, epoch = None)
-
-  /** [[ingest]] under Structured Streaming's foreachBatch protocol —
-    * segments (map AND keys) are keyed by the MICRO-BATCH id, and the
-    * contraction/probe read history STRICTLY below this epoch
-    * ([[loadBefore]] / FingerprintStore.loadBefore). A replayed epoch
-    * therefore re-derives its state from exactly the history it saw the
-    * first time — neither its own earlier half-commit nor any later
-    * epoch's segment can change the outcome — and overwrites its own
-    * segments with byte-identical rows. Compact with
-    * `keepNewestSegments = 1` between epochs while the stream runs
-    * (the dedupeStreamStaged discipline); single writer per store.
-    */
-  def ingestEpoch(
-      batch: DataFrame,
-      dir: String,
-      textCol: String,
-      idCol: String,
-      batchId: Long,
-      k: Int = 8,
-      bands: Int = 4,
-      ngram: Int = 2): DataFrame =
-    ingestCore(batch, dir, textCol, idCol, k, bands, ngram,
-      epoch = Some(batchId))
-
-  private def ingestCore(
-      batch: DataFrame,
-      dir: String,
-      textCol: String,
-      idCol: String,
-      k: Int,
-      bands: Int,
-      ngram: Int,
-      epoch: Option[Long]): DataFrame = {
+      ngram: Int = 2): DataFrame = {
     val s = batch.sparkSession
     val kd = keysDir(dir)
-    val store = epoch match {
-      case Some(id) => Dedup.FingerprintStore.loadBefore(s, kd, id)
-      case None => Dedup.FingerprintStore.load(s, kd)
-    }
+    val store = Dedup.FingerprintStore.load(s, kd)
     // one tokenize+minhash pass; the frame feeds three consumers
     // (cross-batch probe, within-batch star, key registration) — same
     // materialize-once lesson as dedupeNearIncrementalStaged. LAZY
@@ -212,8 +172,7 @@ object ClusterStore {
       .select(col("id").as("a"), col("wmin").as("b"))
       .filter(col("a") =!= col("b"))
     val edges = cross.unionByName(within)
-    // contract through the current map (history strictly below the
-    // epoch in streaming mode), then CC on batch-sized input. A
+    // contract through the current map, then CC on batch-sized input. A
     // provably-empty map (no committed segments, no generation — a
     // FILESYSTEM check, no Spark job) skips the contraction joins and
     // the map checkpoint entirely: the first ingest of a fresh store is
@@ -226,12 +185,9 @@ object ClusterStore {
       // aggregate materializes the blocks inside its own job, and the
       // four consumers (both contraction sides, old labels, relabel)
       // read the cache instead of re-resolving the segment fold
-      else graft.util.OperatorCaches.persisted(epoch match {
-        case Some(id) => loadBefore(s, dir, id)
-        case None => load(s, dir)
-      })
+      else graft.util.OperatorCaches.persisted(load(s, dir))
     val contracted = contractEdges(edges, m, mapIsEmpty)
-    val seg = SegmentStore.segPath(mapDir(dir), epoch.getOrElse(nextMapId(s, dir)))
+    val seg = SegmentStore.segPath(mapDir(dir), nextMapId(s, dir))
     // no isEmpty pre-probe: it would cost a full evaluation of the
     // contracted plan per ingest, and connectedComponents handles an
     // empty edge set (one signature job) — an edge-free batch just
@@ -247,16 +203,16 @@ object ClusterStore {
     graft.util.Described(s, "cs:mapseg")(
       segRows.write.mode("overwrite").parquet(seg))
     // register store-novel keys (first-owner semantics, min id per key)
-    val keyIdx = epoch.getOrElse(SegmentStore.nextId(s, kd))
+    val keyIdx = SegmentStore.nextId(s, kd)
     graft.util.Described(s, "cs:keyseg")(
       keys.groupBy(col("fp")).agg(min(col("id")).as("doc_id"))
         .join(store.select(col("fp")), Seq("fp"), "left_anti")
         .select(col("fp"), col("doc_id"))
         .write.mode("overwrite").parquet(SegmentStore.segPath(kd, keyIdx)))
-    // both per-epoch caches are ingest-internal (the key-segment write
+    // both per-ingest caches are ingest-internal (the key-segment write
     // above is their last consumer; the returned frame reads the
-    // committed parquet) — release by direct handle so a long epoch
-    // loop holds O(1) cached frames, not O(epochs)
+    // committed parquet) — release by direct handle so a long ingest
+    // loop holds O(1) cached frames, not O(ingests)
     graft.util.OperatorCaches.releaseFrames(s,
       if (mapIsEmpty) Seq(keys) else Seq(keys, m))
     s.read.schema(mapSchema).parquet(seg)
@@ -353,16 +309,13 @@ object ClusterStore {
     * and the per-batch job count, failing fast with a pointer to the
     * sequential [[ingest]] loop (the `Dedup` backfill discipline).
     *
+    * The carried-map and edge frames are localCheckpoint-only: every
+    * durable artifact of the loop (map and key segments) commits to the
+    * store directory per batch, so a lost executor costs at most the
+    * current batch's recompute, not the backlog.
+    *
     * Returns the committed map-segment rows, one per (batch, node):
     * (`batchCol`, node, component).
-    */
-  /** Materialization note (r17 verdict #5 audit): the per-batch
-    * carried-map and edge checkpoints here are localCheckpoint-only BY
-    * DESIGN — every durable artifact of the loop (map segments, key
-    * segments) already commits to the STORE directory as parquet per
-    * batch, so a lost executor costs at most the current batch's
-    * recompute from those committed segments, not the backlog; a
-    * separate stagingDir seam would duplicate the store's own files.
     */
   def ingestBackfill(
       batches: DataFrame,
@@ -473,54 +426,22 @@ object ClusterStore {
   /** Fold the resolved map into a new generation bucketed by `node` and
     * compact the key store. After this the per-ingest contraction join
     * and any consumer keyed by node read the map side exchange-free.
-    * `keepNewestSegments > 0` spares the newest map+key segments from
-    * the fold — REQUIRED (= 1) while a stream feeds the store
-    * ([[ingestEpoch]]): a replayed epoch reads history strictly below
-    * itself, which a fold covering its own segment would corrupt.
     */
   def compact(
       s: SparkSession,
       dir: String,
       buckets: Int,
-      tablePrefix: String = "graft_cluster_store",
-      keepNewestSegments: Int = 0): String = {
+      tablePrefix: String = "graft_cluster_store"): String = {
     val prev = currentGen(s, dir)
-    val folded = SegmentStore.foldScope(s, mapDir(dir), prev, keepNewestSegments)
+    val folded = SegmentStore.foldScope(s, mapDir(dir), prev, 0)
     val foldedBelow = folded.lastOption.fold(prev.fold(0L)(_.below))(_._1 + 1)
     val table = SegmentStore.commitBucketed(s, mapDir(dir), prev, folded,
       loadBefore(s, dir, foldedBelow), // resolved fold scope
       "node", buckets, tablePrefix, Some(foldedBelow))
     Dedup.FingerprintStore.compact(s, keysDir(dir), buckets,
-      tablePrefix = s"${tablePrefix}_keys",
-      keepNewestSegments = keepNewestSegments)
+      tablePrefix = s"${tablePrefix}_keys")
     table
   }
-
-  /** GC of crash debris beyond what [[compact]]'s own post-commit
-    * cleanup reclaims — the purgeTombstones analog for superseded map
-    * state. Unlike the FingerprintStore, the map's NEXT compaction
-    * cannot reclaim stale folded segments: its fold scope starts at the
-    * current generation's `foldedBelow`, so a map segment a crashed
-    * cleanup left BELOW that bound lingers forever (invisible to
-    * [[load]], which drops sub-bound segments by id — harmless, but
-    * dead bytes). This deletes, per substore:
-    *
-    *  - map: committed segments with id < the newest generation's
-    *    `foldedBelow`; every non-newest generation marker with its
-    *    catalog handle and data directory; leftover `gen_*.tmp` files.
-    *  - keys: the FingerprintStore debris
-    *    ([[Dedup.FingerprintStore.purgeSuperseded]]).
-    *
-    * Everything deleted is already invisible to [[load]]/[[loadBefore]]
-    * by the marker's bound or ordering, so the purge is replay-safe;
-    * run it between ingests (single writer), and a crash mid-purge
-    * leaves a harmless superset for the next purge.
-    *
-    * @return paths deleted.
-    */
-  def purgeSuperseded(s: SparkSession, dir: String): Seq[String] =
-    SegmentStore.purge(s, mapDir(dir)) ++
-      Dedup.FingerprintStore.purgeSuperseded(s, keysDir(dir))
 
   /** Drop this store's catalog handles (both substores) — gate/test
     * cleanup; the on-disk data is the caller's to delete.
@@ -528,7 +449,7 @@ object ClusterStore {
   def dropTables(s: SparkSession, dir: String): Unit =
     SegmentStore.dropTables(s, dir)
 
-  /** Id the next non-epoch ingest claims: past the newest committed
+  /** Id the next ingest claims: past the newest committed
     * segment and never below the generation's bound (a segment there
     * would be shadowed by the generation).
     */

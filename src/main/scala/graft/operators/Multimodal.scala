@@ -78,28 +78,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** STUB resize: a real deployment decodes, scales, and re-encodes the
-    * payload (JNI codec / vectorized worker); the stand-in deterministically
-    * truncates the payload to emulate a size-reducing transcode while
-    * keeping the Spark-side shape real (map-only, blobs never shuffled).
-    */
-  def resize(media: DataFrame, targetW: Int, targetH: Int): DataFrame =
-    media.withColumn("payload",
-      expr(s"substring(payload, 1, greatest(1, int(length(payload) * " +
-        s"least(1.0, ${targetW.toLong * targetH} / 76800.0))))"))
-      .withColumn("width", lit(targetW))
-      .withColumn("height", lit(targetH))
-
-  /** STUB frame sampling for video-typed payloads: emits `n` (media_id,
-    * frame_idx, frame_payload) rows per media row via a deterministic
-    * stride — the explode shape a real decoder's frame iterator would have.
-    */
-  def sampleFrames(media: DataFrame, n: Int): DataFrame =
-    media.select(col("media_id"), col("media_type"),
-        posexplode(sequence(lit(0), lit(n - 1))).as(Seq("frame_no", "stride")))
-      .select(col("media_id"), col("media_type"),
-        (col("stride") * lit(1000) / n).cast("int").as("frame_idx"))
-
   /** Declarative (codegen-friendly) variant of the metadata pass for engines
     * where the kernel is expressible as columns — preferred when no native
     * decode is required. Bit-identical to extractFeatures on the stub path.

@@ -22,8 +22,8 @@ object RangeJoin {
     * window contains pointTs. Bin assignment uses second-truncated epoch
     * (monotonic, so truncation never drops a cover bin); the exact
     * predicate runs on full-precision timestamps.
-    */
-  /** @param maxBinsPerInterval replication guard: an outlier interval far
+    *
+    * @param maxBinsPerInterval replication guard: an outlier interval far
     *   longer than `binSeconds` would silently explode into thousands of
     *   replicas (a year at 30-min bins is ~17k rows); the job FAILS with a
     *   clear message instead, telling the caller to raise `binSeconds`.

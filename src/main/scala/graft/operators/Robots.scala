@@ -35,13 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object Robots {
 
-  /** Non-user-agent directives of the `*` groups: (`domainCol`, key,
-    * value) with key ∈ {allow, disallow, crawl-delay} — the shared
-    * parse behind [[rules]] and [[crawlDelays]]. Crawl-delay lines
-    * count as effective lines for group-boundary detection (a
-    * directive between two `User-agent:` lines ENDS the agent stack,
-    * per RFC 9309's group structure).
-    */
   /** All effective `key: value` lines of the robots bodies — comments,
     * CR, and blank lines stripped; keys lowercased: (`domainCol`, pos,
     * key, value). The shared tokenizer behind the group parse and the
@@ -63,6 +56,13 @@ object Robots {
         lower(trim(regexp_extract(col("ln"), "^([^:]+):", 1))).as("key"),
         trim(regexp_extract(col("ln"), "^[^:]+:(.*)$", 1)).as("value"))
 
+  /** Non-user-agent directives of the `*` groups: (`domainCol`, key,
+    * value) with key ∈ {allow, disallow, crawl-delay} — the shared
+    * parse behind [[rules]] and [[crawlDelays]]. Crawl-delay lines
+    * count as effective lines for group-boundary detection (a
+    * directive between two `User-agent:` lines ENDS the agent stack,
+    * per RFC 9309's group structure).
+    */
   private def starGroupDirectives(
       robots: DataFrame,
       domainCol: String,

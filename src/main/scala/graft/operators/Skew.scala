@@ -26,31 +26,6 @@ final case class SkewReport(keys: Seq[Any], maxCount: Long, meanCount: Double) {
   */
 object Skew {
 
-  /** Salted equi-join: replicate each `right` row `salt` times with a salt
-    * id; spray `left` rows uniformly across salts; join on (key, salt).
-    * The hot key's rows land on `salt` tasks instead of one. Correct for
-    * inner and left joins (each left row matches exactly one replica set).
-    */
-  def saltedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      salt: Int,
-      joinType: String = "inner"): DataFrame = {
-    require(salt > 1, "salt must be > 1")
-    // Replicating the RIGHT side is only correct when unmatched right rows
-    // are never emitted: a right/full outer join would emit each unmatched
-    // right row `salt` times. Reject those join types outright.
-    val jt = joinType.toLowerCase.replace("_", "")
-    require(Set("inner", "left", "leftouter", "leftsemi", "semi",
-      "leftanti", "anti").contains(jt),
-      s"saltedJoin: joinType '$joinType' unsupported — right-row-emitting " +
-        "join types would duplicate unmatched right rows once per salt")
-    val l = left.withColumn("__salt", pmod(spark_partition_id() + monotonically_increasing_id(), lit(salt)).cast("int"))
-    val r = right.withColumn("__salt", explode(sequence(lit(0), lit(salt - 1))))
-    l.join(r, Seq(key, "__salt"), joinType).drop("__salt")
-  }
-
   /** Estimate the join-key histogram and return the HEAVY keys: those whose
     * per-key row count exceeds `skewFactor ×` the mean per-key count (and an
     * absolute floor `minCount`, so tiny samples can't promote noise).
@@ -109,8 +84,9 @@ object Skew {
     * (one copy, no replication tax on the long tail). One join either way.
     *
     * Salting is result-invisible: both paths produce exactly the rows of the
-    * plain join (the q59 oracle certifies this). Join-type restrictions as
-    * in [[saltedJoin]].
+    * plain join (the q59 oracle certifies this). Right and full outer
+    * joins are rejected: hot right rows replicate `salt` times, so each
+    * unmatched one would be emitted once per salt.
     *
     * Detection defaults to a 10% row sample (seeded, deterministic): the
     * gate's cost must stay SUBLINEAR in the left table — a full

@@ -26,9 +26,6 @@ object SummaryPipeline {
   def dailySummary(mood: DataFrame, day: LocalDate): DataFrame =
     Aggregates.dailySummary(TimeOps.onDay(mood, "event_time", day))
 
-  /** Whole-history summary (used when no day filter is wanted). */
-  def fullSummary(mood: DataFrame): DataFrame = Aggregates.dailySummary(mood)
-
   /** The full daily_summary_report read path behind the BatchSource seam:
     * production wires `JdbcSource` (the reference's Postgres read,
     * daily_summary_report.py:24-31); tests wire a parquet/NDJSON fixture.

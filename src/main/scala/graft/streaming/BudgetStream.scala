@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.functions.TextFunctions
@@ -17,19 +16,13 @@ import graft.util.SegmentStore
   * pure prefix of the stream and replay-stable — a best-first policy is
   * the batch operator's job, not the stream's).
   *
-  * Two implementations sharing the semantics:
-  *  - [[admitStaged]]: the foreachBatch/sequential-ingest core with a
-  *    PERSISTED per-source meter — state is (source, arrived_tokens)
-  *    per batch, landed as immutable batch-id-keyed segments (the
-  *    store-family protocol: `_SUCCESS`-gated, a replay overwrites its
-  *    OWN segment and reads only strictly-older ones, so recomputing a
-  *    batch is idempotent). The meter frame is |sources|-sized — it
-  *    broadcasts; the only batch-sized work is one source-keyed window.
-  *  - [[admissions]]: the live Structured-Streaming twin via
-  *    flatMapGroupsWithState (state per source = one Long), for
-  *    unbounded streams where micro-batch boundaries are not known in
-  *    advance. Within a micro-batch each group is folded in doc_id
-  *    order so both paths agree batch-for-batch.
+  * [[admitStaged]] is the foreachBatch/sequential-ingest core with a
+  * PERSISTED per-source meter — state is (source, arrived_tokens) per
+  * batch, landed as immutable batch-id-keyed segments (the store-family
+  * protocol: `_SUCCESS`-gated, a replay overwrites its OWN segment and
+  * reads only strictly-older ones, so recomputing a batch is
+  * idempotent). The meter frame is |sources|-sized — it broadcasts; the
+  * only batch-sized work is one source-keyed window.
   *
   * At 100 TB: state is bounded by |sources|, admission is map-side
   * except the per-source ordered window within one batch, and the
@@ -37,30 +30,6 @@ import graft.util.SegmentStore
   * doc dropped? — `cum_before` says).
   */
 object BudgetStream {
-
-  final case class Arrival(doc_id: Long, source: String, n_tokens: Long)
-  final case class Admission(
-      doc_id: Long, source: String, n_tokens: Long,
-      cum_before: Long, admitted: Boolean)
-
-  /** Live stateful variant: one meter Long per source. */
-  def admissions(arrivals: Dataset[Arrival], budget: Long): Dataset[Admission] = {
-    import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, Admission](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[Arrival], state: GroupState[Long]) =>
-          var spent = state.getOption.getOrElse(0L)
-          val out = rows.toSeq.sortBy(_.doc_id).map { a =>
-            val adm = Admission(a.doc_id, src, a.n_tokens, spent, spent < budget)
-            spent += a.n_tokens
-            adm
-          }
-          state.update(spent)
-          out.iterator
-      }
-  }
 
   /** Sequential-ingest core: admit `batch` against the persisted meter,
     * then land this batch's per-source arrivals as segment `batchId`.
@@ -141,30 +110,6 @@ object BudgetStream {
       .select(col(idCol), col(srcCol), col("n_tokens"),
         col("cum_before"), (col("cum_before") < budget).as("admitted"))
   }
-
-  /** foreachBatch adapter: decisions land in `outDir/batch=<id>/`,
-    * overwrite mode, so a replayed epoch rewrites only itself.
-    */
-  /** `compactEvery > 0` makes the meter SELF-MAINTAINING (the
-    * QualityStream.monitor discipline): after every Nth epoch,
-    * [[compact]] folds old per-source segments into the generation,
-    * always sparing the replay horizon (`keepNewestSegments = 1`),
-    * then [[purgeSuperseded]] reclaims any crash debris a previous
-    * compaction's post-commit cleanup never got to.
-    */
-  def sink(
-      stateDir: String, outDir: String,
-      textCol: String, idCol: String, srcCol: String,
-      budget: Long, compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      admitStaged(batch, stateDir, textCol, idCol, srcCol, budget, id)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-        compact(batch.sparkSession, stateDir, srcCol,
-          keepNewestSegments = 1)
-        purgeSuperseded(batch.sparkSession, stateDir): Unit
-      }
-    }
 
   /** GC of crash debris (stale generations, `gen_*.tmp`, segments
     * orphaned below `foldedBelow`) — see [[SegmentStore.purge]].

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.util.SegmentStore
@@ -127,41 +126,4 @@ object DriftStream {
       .filter(col("drift_ppm") >= thresholdPpm)
       .orderBy(col("source"), col("drift_ppm").desc, col("tok"))
   }
-
-  /** Live Structured-Streaming twin: drive [[driftStaged]] per
-    * micro-batch via foreachBatch, landing each epoch's flags under
-    * `outDir/batch_id=<id>` with OVERWRITE — a replayed epoch rewrites
-    * its own directory with identical rows (deterministic report over
-    * an epoch-scoped segment window), so the output table is idempotent
-    * under the checkpoint's replay contract.
-    */
-  /** `purgeEvery > 0` makes the monitor SELF-MAINTAINING: after every
-    * Nth epoch, [[purge]] deletes segments outside every future (or
-    * replayed) window, so a long-lived stream holds O(window) segments
-    * instead of one per epoch since start. Runs after the epoch's own
-    * write — the single-writer window — and is replay-invisible by the
-    * window bound.
-    */
-  def monitor(
-      stream: DataFrame,
-      stateDir: String,
-      outDir: String,
-      checkpointDir: String,
-      textCol: String,
-      srcCol: String,
-      baseline: DataFrame,
-      window: Int,
-      thresholdPpm: Long,
-      purgeEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        driftStaged(df, stateDir, textCol, srcCol, baseline,
-          window, thresholdPpm, id)
-          .write.mode("overwrite").parquet(f"$outDir/batch_id=$id%05d")
-        if (purgeEvery > 0 && id > 0 && id % purgeEvery == 0)
-          purge(df.sparkSession, stateDir, window): Unit
-        ()
-      }
-      .start()
 }

@@ -16,7 +16,7 @@ import graft.util.SegmentStore
   * once a domain has `maxDepth` scheduled fetches, later discoveries
   * are rejected until the next crawl cycle resets the store.
   *
-  * Two implementations sharing the semantics (the BudgetStream shape):
+  * Two implementations sharing the semantics:
   *  - [[assignStaged]]: the foreachBatch/sequential-ingest core with a
   *    PERSISTED per-domain assigned-count meter, landed as immutable
   *    batch-id-keyed segments (the store-family protocol:
@@ -41,6 +41,9 @@ import graft.util.SegmentStore
   */
 object FrontierStream {
 
+  /** Politeness delay of a domain absent from the delay table. */
+  private val DefaultDelayMs = 1000L
+
   final case class Discovered(url: String, domain: String, priority: Long)
   final case class Scheduled(
       url: String, domain: String, priority: Long,
@@ -50,8 +53,7 @@ object FrontierStream {
   def scheduled(
       discovered: Dataset[Discovered],
       delays: Map[String, Long],
-      maxDepth: Long,
-      defaultDelayMs: Long = 1000L): Dataset[Scheduled] = {
+      maxDepth: Long): Dataset[Scheduled] = {
     import discovered.sparkSession.implicits._
     discovered
       .groupByKey(_.domain)
@@ -59,7 +61,7 @@ object FrontierStream {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (dom: String, rows: Iterator[Discovered], state: GroupState[Long]) =>
           val base = state.getOption.getOrElse(0L)
-          val delay = delays.getOrElse(dom, defaultDelayMs)
+          val delay = delays.getOrElse(dom, DefaultDelayMs)
           var i = 0L
           // waves number EVERY arrival (base + batch row index — the
           // staged path's row_number() + prior, so both paths agree
@@ -89,8 +91,7 @@ object FrontierStream {
       priorityCol: String,
       delays: DataFrame,
       maxDepth: Long,
-      batchId: Long,
-      defaultDelayMs: Long = 1000L): DataFrame = {
+      batchId: Long): DataFrame = {
     val s = batch.sparkSession
     val arr = batch.select(col(urlCol), col(domainCol), col(priorityCol))
     val prior = loadAssigned(s, stateDir, batchId, domainCol)
@@ -106,7 +107,7 @@ object FrontierStream {
       .join(broadcast(d), col(domainCol) === col("__dd"), "left")
       .select(col(urlCol), col(domainCol), col(priorityCol), col("wave"),
         ((col("wave") - 1) *
-          coalesce(col("__dm"), lit(defaultDelayMs))).as("eta_ms"),
+          coalesce(col("__dm"), lit(DefaultDelayMs))).as("eta_ms"),
         (col("wave") <= maxDepth).as("scheduled"))
     // meter update: scheduled count = min(prior + arrived, cap) − prior,
     // a pure aggregate — no second window pass
@@ -119,29 +120,6 @@ object FrontierStream {
       .write.mode("overwrite").parquet(segPath(stateDir, batchId))
     decided
   }
-
-  /** foreachBatch adapter: decisions land in `outDir/batch=<id>/`,
-    * overwrite mode, so a replayed epoch rewrites only itself.
-    * `compactEvery > 0` makes the meter SELF-MAINTAINING (the
-    * BudgetStream discipline): fold old segments into the generation,
-    * spare the replay horizon, then GC crash debris.
-    */
-  def sink(
-      stateDir: String, outDir: String,
-      urlCol: String, domainCol: String, priorityCol: String,
-      delays: DataFrame, maxDepth: Long,
-      defaultDelayMs: Long = 1000L,
-      compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, id) => {
-      assignStaged(batch, stateDir, urlCol, domainCol, priorityCol,
-        delays, maxDepth, id, defaultDelayMs)
-        .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-        compact(batch.sparkSession, stateDir, domainCol,
-          keepNewestSegments = 1)
-        purgeSuperseded(batch.sparkSession, stateDir): Unit
-      }
-    }
 
   /** GC of crash debris — see [[SegmentStore.purge]]. */
   def purgeSuperseded(s: SparkSession, dir: String): Seq[String] =

@@ -1,34 +1,31 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.ops.{Aggregates, Joins}
+import graft.ops.Aggregates
 import graft.pipeline.MoodPipeline
 
 /** Streaming composition of the flagship mood dataflow (reference:
   * jobs/spark_mood_tracker.py end-to-end, §2.9 semantics inventory).
   *
-  * Both strategies stream [[perKeyMinutes]], one stateful aggregate over
-  * the three tagged inputs, and produce the reference's output schema:
+  * [[aggregatedJoined]] is the full streaming chain in append mode, with
+  * the reference's output schema. `perKeyMinutes`, one stateful
+  * aggregate, folds the three tagged inputs per key and minute; a second,
+  * per-minute aggregate gathers each minute's traffic rows with its
+  * weather and news, then explode → classify. Two stateful operators, no
+  * stream-stream join; the result equals the left joins of
+  * [[graft.pipeline.MoodPipeline.run]]. Every key of a minute closes under
+  * the shared (min-of-inputs) 1-minute watermark, so the second layer
+  * receives, emits and evicts a minute in the same micro-batch (chained
+  * stateful operators need Spark ≥3.4, SURVEY.md §7 risk #1). State per
+  * open minute: ≤ intersections + 2 rows in layer 1, one row in layer 2.
   *
-  *  1. [[aggregatedJoined]] — the full streaming chain in append mode: a
-  *     second, per-minute aggregate gathers each minute's traffic rows with
-  *     its weather and news, then explode → classify. Two stateful
-  *     operators, no stream-stream join; the result equals the left joins
-  *     of [[graft.pipeline.MoodPipeline.run]]. Every key of a minute closes
-  *     under the shared (min-of-inputs) 1-minute watermark, so the second
-  *     layer receives, emits and evicts a minute in the same micro-batch
-  *     (chained stateful operators need Spark ≥3.4, SURVEY.md §7 risk #1).
-  *     State per open minute: ≤ intersections + 2 rows in layer 1, one row
-  *     in layer 2.
-  *
-  *  2. [[foreachBatchAligned]] — reference-faithful fallback: each
-  *     micro-batch's completed per-key rows are split by side, aligned +
-  *     classified with a BATCH join inside foreachBatch (what the
-  *     reference's sink-side flow effectively does, minus its driver-side
-  *     toPandas collect — ours stays distributed).
+  * The reference aligns the minutes in a sink-side batch join instead. A
+  * `foreachBatch` strategy of that shape lost to this plan on the
+  * `mood_stream` benchmark (higher p50/p99 latency and wall time), so the
+  * engine plans the whole chain incrementally.
   *
   * Unlike the reference, every writer REQUIRES a checkpoint location
   * (the reference configures none and silently loses state on restart —
@@ -61,8 +58,8 @@ object MoodStream {
       .agg(Aggregates.exactAvg(col("v")).as("v"), first(col("label")).as("label"))
   }
 
-  /** Strategy 1: full streaming chain (per-key agg → per-minute agg →
-    * explode → classify).
+  /** The full streaming chain (per-key agg → per-minute agg → explode →
+    * classify).
     */
   def aggregatedJoined(
       traffic: DataFrame,
@@ -86,36 +83,7 @@ object MoodStream {
         "weather", "sentiment", "mood")
   }
 
-  /** Strategy 2: stream the per-key aggregate, split it by side, align +
-    * classify per micro-batch via a batch join (distributed, never
-    * collected), hand the classified frame to `sink`.
-    *
-    * One streaming query (one checkpoint, one trigger) carries all three
-    * inputs — the reference needed two separate queries for the same
-    * split (jobs/spark_news_consumer.py:39-58 double-read).
-    */
-  def foreachBatchAligned(
-      traffic: DataFrame,
-      weather: DataFrame,
-      news: DataFrame,
-      checkpoint: String,
-      watermark: String = "1 minute")(
-      sink: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
-    perKeyMinutes(traffic, weather, news, watermark).writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        def side(s: String, cols: Column*) = batch.filter(col("side") === s).select(cols: _*)
-        val t = side("t", col("event_time"), col("intersection"), col("v").as("avg_speed"))
-        val w = side("w", col("event_time"), col("v").as("avg_temp"), col("label").as("weather"))
-        val n = side("n", col("event_time"), col("label").as("sentiment"))
-        val aligned = MoodPipeline.classifyAligned(Joins.alignMinutes(t, w, n))
-          .select("event_time", "intersection", "avg_speed", "avg_temp",
-            "weather", "sentiment", "mood")
-        sink(aligned, batchId)
-      }
-
-  /** Start strategy 1 into a parquet append sink (checkpointed). */
+  /** Start the chain into a parquet append sink (checkpointed). */
   def startToParquet(
       classified: DataFrame,
       path: String,

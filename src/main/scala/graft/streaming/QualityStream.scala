@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.LmScore
@@ -111,46 +110,6 @@ object QualityStream {
         col("nll_micro"), col("cum_docs"), col("cum_keep"),
         col("cum_nll_micro"))
   }
-
-  /** Live Structured-Streaming twin: drive [[meterStaged]] per
-    * micro-batch via foreachBatch, landing each epoch's meter row under
-    * `outDir/batch_id=<id>` with OVERWRITE — a replayed epoch rewrites
-    * its own directory with identical rows (segments newer than the
-    * epoch are excluded by construction), so the output table is
-    * idempotent under the checkpoint's replay contract.
-    *
-    * `compactEvery > 0` makes the meter SELF-MAINTAINING: after every
-    * Nth epoch, [[compact]] folds the old one-row segments into the
-    * generation (always `keepNewestSegments = 1`, the replay horizon),
-    * so a stream that runs for months holds O(1) segments instead of
-    * one per epoch since start. The fold runs AFTER the epoch's own
-    * write, between epochs — exactly the single-writer window the
-    * store contract requires — and is replay-invisible by the
-    * `foldedBelow` read bound.
-    */
-  def monitor(
-      stream: DataFrame,
-      stateDir: String,
-      outDir: String,
-      checkpointDir: String,
-      textCol: String,
-      idCol: String,
-      model: LmScore.BigramLm,
-      keepMaxMicroNll: Long,
-      compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, id: Long) =>
-        meterStaged(df, stateDir, textCol, idCol, model,
-          keepMaxMicroNll, id)
-          .write.mode("overwrite").parquet(f"$outDir/batch_id=$id%05d")
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-          compact(df.sparkSession, stateDir, keepNewestSegments = 1)
-          purgeSuperseded(df.sparkSession, stateDir): Unit
-        }
-        ()
-      }
-      .start()
 
   /** GC of crash debris (stale generations, `gen_*.tmp`, segments
     * orphaned below `foldedBelow`) — see [[SegmentStore.purge]].

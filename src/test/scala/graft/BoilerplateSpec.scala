@@ -24,13 +24,6 @@ class BoilerplateSpec extends SparkSpec {
     .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
     .sortBy(_._1).toSeq
 
-  test("df counts distinct docs; trim + blank-drop before counting") {
-    val df = Boilerplate.lineDocFrequency(docs, "text", "doc_id")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(df == Map("unique one" -> 1L, "BUY NOW" -> 3L, "keep me" -> 1L,
-      "other text" -> 1L))
-  }
-
   test("remove at threshold: every occurrence, order kept, one row per doc") {
     val want = Seq(
       (1L, 3L, 1L, "unique one\nkeep me"),

@@ -1,69 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-
 import graft.streaming.BudgetStream
-import graft.streaming.BudgetStream.{Admission, Arrival}
 
 class BudgetStreamSpec extends SparkSpec {
   import spark.implicits._
-
-  test("live admissions: per-source meter persists across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Arrival]
-    val q = BudgetStream.admissions(in.toDS(), budget = 10L)
-      .writeStream.format("memory").queryName("budget_out")
-      .option("checkpointLocation", tmpDir("budget-ckpt"))
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      // batch 1: a fills 0→7 (both admitted); b fills 0→9
-      in.addData(
-        Arrival(1L, "a", 4L), Arrival(2L, "a", 3L), Arrival(3L, "b", 9L))
-      q.processAllAvailable()
-      // batch 2: a at 7 (< 10, admitted — meter carried over), then 12
-      // (full, dropped); b at 9 still has room, then 10 is full
-      in.addData(
-        Arrival(4L, "a", 5L), Arrival(5L, "a", 1L),
-        Arrival(6L, "b", 1L), Arrival(7L, "b", 1L))
-      q.processAllAvailable()
-      val got = spark.table("budget_out").as[Admission].collect()
-        .sortBy(_.doc_id).toSeq
-      assert(got == Seq(
-        Admission(1L, "a", 4L, 0L, true),
-        Admission(2L, "a", 3L, 4L, true),
-        Admission(3L, "b", 9L, 0L, true),
-        Admission(4L, "a", 5L, 7L, true),
-        Admission(5L, "a", 1L, 12L, false),
-        Admission(6L, "b", 1L, 9L, true),
-        Admission(7L, "b", 1L, 10L, false)))
-    } finally q.stop()
-  }
-
-  test("live admissions fold each micro-batch group in doc_id order") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Arrival]
-    val q = BudgetStream.admissions(in.toDS(), budget = 5L)
-      .writeStream.format("memory").queryName("budget_ord")
-      .option("checkpointLocation", tmpDir("budget-ord-ckpt"))
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      // delivered out of id order in one batch: 22 must be metered AFTER
-      // 21, so 22 sees cum_before 4 and is admitted, 23 is not
-      in.addData(
-        Arrival(23L, "a", 1L), Arrival(22L, "a", 2L), Arrival(21L, "a", 4L))
-      q.processAllAvailable()
-      val got = spark.table("budget_ord").as[Admission].collect()
-        .sortBy(_.doc_id).toSeq
-      assert(got == Seq(
-        Admission(21L, "a", 4L, 0L, true),
-        Admission(22L, "a", 2L, 4L, true),
-        Admission(23L, "a", 1L, 6L, false)))
-    } finally q.stop()
-  }
 
   test("admitStaged: persisted meter matches the live path; replay idempotent") {
     val dir = tmpDir("budget-staged")
@@ -126,31 +66,6 @@ class BudgetStreamSpec extends SparkSpec {
     assert(BudgetStream.compact(spark, dir, keepNewestSegments = 0) == 3L)
     intercept[IllegalArgumentException] { run(b2, 2L) }
     assert(BudgetStream.compact(spark, dir) == -1L)
-  }
-
-  test("self-maintaining sink: compactEvery folds old segments, decisions identical") {
-    val state = tmpDir("budget-auto-state")
-    val out = tmpDir("budget-auto-out")
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def ex(n: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$state/$n"))
-    def mk(rows: (Long, String, String)*) =
-      rows.toSeq.toDF("doc_id", "source", "text")
-    val sink = BudgetStream.sink(state, out, "text", "doc_id", "source",
-      budget = 6L, compactEvery = 2)
-    sink(mk((1L, "a", "w w w w"), (2L, "a", "x x x")), 0L)
-    sink(mk((3L, "a", "y")), 1L)
-    sink(mk((4L, "a", "z z")), 2L) // compacts after: folds m_0, m_1
-    assert(!ex("m_00000") && !ex("m_00001") && ex("m_00002"))
-    assert(ex("gen_00001"))
-    val got = spark.read
-      .parquet(s"$out/batch=0", s"$out/batch=1", s"$out/batch=2")
-      .collect().map(r => (r.getLong(0), r.getLong(3), r.getBoolean(4)))
-      .sortBy(_._1).toSeq
-    // meter: a spends 4,3 (b0), 1 (b1), 2 (b2) — cum 0,4,7,8
-    assert(got == Seq((1L, 0L, true), (2L, 4L, true), (3L, 7L, false),
-      (4L, 8L, false)))
   }
 
   test("purgeSuperseded reclaims crash debris the reader can't see") {

@@ -130,39 +130,6 @@ class ClusterStoreSpec extends SparkSpec {
     }
   }
 
-  test("epoch protocol: replay of the newest epoch is byte-identical; compaction spares it") {
-    val dir = tmpDir("graft_cstore_epoch")
-    val e0 = Seq((1L, fill("aa")), (2L, fill("aa")), (3L, fill("bb")))
-    val e1 = Seq((13L, fill("bb")))
-    val e2 = Seq((23L, fill("aa")), (24L, fill("cc")))
-    def run(rows: Seq[(Long, String)], id: Long) =
-      ClusterStore.ingestEpoch(rows.toDF("doc_id", "text"), dir,
-          "text", "doc_id", batchId = id)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    run(e0, 0L); run(e1, 1L)
-    // stream-mode compaction spares the newest segment so epoch 1 can
-    // still replay against history strictly below itself
-    ClusterStore.compact(spark, dir, buckets = 4, keepNewestSegments = 1)
-    // replay AFTER the compaction: same rows as the original epoch-1
-    // commit — doc 3 was a singleton until 13 linked to it, so the
-    // epoch-1 segment carries BOTH (3→3) and (13→3)
-    val r1 = run(e1, 1L)
-    assert(r1 == Seq((3L, 3L), (13L, 3L)))
-    val r2 = run(e2, 2L)
-    // replay of epoch 2 after everything: byte-identical
-    assert(run(e2, 2L) == r2)
-    val union = (e0 ++ e1 ++ e2).toDF("doc_id", "text")
-    assert(loadMap(dir) == oneShot(union))
-    // a fold covering the replayed epoch fails LOUDLY, not wrongly
-    ClusterStore.compact(spark, dir, buckets = 4) // folds everything
-    val ex = intercept[IllegalArgumentException] {
-      ClusterStore.ingestEpoch(e2.toDF("doc_id", "text"), dir,
-        "text", "doc_id", batchId = 2L).collect()
-    }
-    assert(ex.getMessage.contains("keepNewestSegments"))
-    ClusterStore.dropTables(spark, dir)
-  }
-
   /** Full store state: map segment id -> row set, key segment id ->
     * row set, plus the resolved map — the identity a backfill must
     * reproduce byte-for-byte (up to parquet row layout).
@@ -266,64 +233,6 @@ class ClusterStoreSpec extends SparkSpec {
     // handles, then load — the marker re-registers them from disk
     ClusterStore.dropTables(spark, dir)
     assert(loadMap(dir) == before)
-    ClusterStore.dropTables(spark, dir)
-  }
-
-  test("purgeSuperseded: crash debris is a harmless superset, then reclaimed; live state untouched") {
-    import org.apache.hadoop.fs.Path
-    val dir = tmpDir("graft_cstore")
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mkFile(path: String, content: String): Unit = {
-      val out = fs.create(new Path(path), true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-    }
-    val b1 = Seq((1L, fill("aa")), (2L, fill("aa"))).toDF("doc_id", "text")
-    val b2 = Seq((3L, fill("aa")), (4L, fill("bb"))).toDF("doc_id", "text")
-    val b3 = Seq((5L, fill("bb"))).toDF("doc_id", "text")
-    ClusterStore.ingest(b1, dir, "text", "doc_id")
-    ClusterStore.ingest(b2, dir, "text", "doc_id")
-    ClusterStore.compact(spark, dir, buckets = 2, tablePrefix = "graft_prg")
-    ClusterStore.ingest(b3, dir, "text", "doc_id")
-    ClusterStore.compact(spark, dir, buckets = 2, tablePrefix = "graft_prg")
-    val before = loadMap(dir)
-    assert(before == oneShot(b1.unionByName(b2).unionByName(b3)))
-    // recreate exactly the debris a crash BETWEEN a compaction's marker
-    // rename and its cleanup leaves: the superseded generation (marker +
-    // data dir), a folded map segment below the new bound, and a commit
-    // tmp file — in BOTH substores
-    mkFile(s"$dir/map/gen_00001", "graft_prg_stale_tbl\tgen_data_00001\t2\t2")
-    Seq((999L, 1L)).toDF("node", "component")
-      .write.mode("overwrite").parquet(s"$dir/map/gen_data_00001")
-    Seq((999L, 1L)).toDF("node", "component")
-      .write.mode("overwrite").parquet(s"$dir/map/seg_00001")
-    mkFile(s"$dir/map/gen_00003.tmp", "half-written")
-    mkFile(s"$dir/keys/gen_00001", "graft_prg_keys_stale_tbl\tgen_data_00001\t2")
-    Seq(("zz", 1L)).toDF("fp", "doc_id")
-      .write.mode("overwrite").parquet(s"$dir/keys/gen_data_00001")
-    // the debris is invisible: stale generations lose to marker order,
-    // sub-bound segments are dropped by id
-    assert(loadMap(dir) == before)
-    val deleted = ClusterStore.purgeSuperseded(spark, dir)
-    assert(deleted.exists(_.endsWith("map/gen_00001")))
-    assert(deleted.exists(_.endsWith("map/gen_data_00001")))
-    assert(deleted.exists(_.endsWith("map/seg_00001")))
-    assert(deleted.exists(_.endsWith("map/gen_00003.tmp")))
-    assert(deleted.exists(_.endsWith("keys/gen_00001")))
-    assert(deleted.exists(_.endsWith("keys/gen_data_00001")))
-    Seq("map/gen_00001", "map/gen_data_00001", "map/seg_00001",
-      "map/gen_00003.tmp", "keys/gen_00001", "keys/gen_data_00001")
-      .foreach(n => assert(!fs.exists(new Path(s"$dir/$n")), n))
-    // the live generation and the resolved map are untouched
-    assert(fs.exists(new Path(s"$dir/map/gen_00002")))
-    assert(loadMap(dir) == before)
-    // idempotent: a second purge finds nothing
-    assert(ClusterStore.purgeSuperseded(spark, dir).isEmpty)
-    // and the store still ingests + compacts normally afterwards
-    val b4 = Seq((6L, fill("aa"))).toDF("doc_id", "text")
-    ClusterStore.ingest(b4, dir, "text", "doc_id")
-    assert(loadMap(dir) ==
-      oneShot(b1.unionByName(b2).unionByName(b3).unionByName(b4)))
     ClusterStore.dropTables(spark, dir)
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.streaming.DriftStream
@@ -89,65 +88,5 @@ class DriftStreamSpec extends SparkSpec {
     // a fresh epoch whose window is all live segments: e2+e3 both read
     // "aa bb", so every ppm sits exactly on the baseline — no flags
     assert(run(Seq((5L, "s1", "aa bb")), 3L).isEmpty)
-  }
-
-  test("self-maintaining monitor: purgeEvery deletes out-of-window segments, flags identical") {
-    implicit val ctx = spark.sqlContext
-    val state = tmpDir("drift-auto-state")
-    val out = tmpDir("drift-auto-out")
-    val in = MemoryStream[(Long, String, String)]
-    val q = DriftStream.monitor(in.toDF().toDF("doc_id", "source", "text"),
-      state, out, tmpDir("drift-auto-ckpt"), "text", "source", baseline,
-      window = 2, thresholdPpm = 200000L, purgeEvery = 1)
-    try {
-      in.addData(e0); q.processAllAvailable()
-      in.addData(e1); q.processAllAvailable()
-      in.addData(e2); q.processAllAvailable()
-      val got = rows(spark.read
-        .schema("batch_id LONG, source STRING, tok STRING, cnt_win LONG," +
-          " ppm_win LONG, ppm_base LONG, drift_ppm LONG")
-        .parquet(s"$out/batch_id=00000", s"$out/batch_id=00001",
-          s"$out/batch_id=00002"))
-      assert(got == want0 ++ want1 ++ want2)
-      // the epoch-2 purge deleted segment 0 (outside every future window)
-      val fs = new org.apache.hadoop.fs.Path(state)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def ex(n: String) =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$state/$n"))
-      assert(!ex("seg_00000") && ex("seg_00001") && ex("seg_00002"))
-    } finally q.stop()
-  }
-
-  test("live monitor: 3 checkpointed epochs land idempotent per-epoch flag tables") {
-    implicit val ctx = spark.sqlContext
-    val state = tmpDir("drift-state")
-    val out = tmpDir("drift-out")
-    val ckpt = tmpDir("drift-ckpt")
-    val in = MemoryStream[(Long, String, String)]
-    val q = DriftStream.monitor(
-      in.toDF().toDF("doc_id", "source", "text"),
-      state, out, ckpt, "text", "source", baseline,
-      window = 2, thresholdPpm = 200000L)
-    try {
-      in.addData(e0); q.processAllAvailable()
-      in.addData(e1); q.processAllAvailable()
-      in.addData(e2); q.processAllAvailable()
-      val got = rows(spark.read
-        .schema("batch_id LONG, source STRING, tok STRING, cnt_win LONG," +
-          " ppm_win LONG, ppm_base LONG, drift_ppm LONG")
-        .parquet(s"$out/batch_id=00000", s"$out/batch_id=00001",
-          s"$out/batch_id=00002"))
-      assert(got == want0 ++ want1 ++ want2)
-      // a replayed epoch overwrites its OWN directory with identical
-      // rows — the foreachBatch output stays idempotent
-      DriftStream.driftStaged(e1.toDF("doc_id", "source", "text"),
-          state, "text", "source", baseline, 2, 200000L, 1L)
-        .write.mode("overwrite").parquet(s"$out/batch_id=00001")
-      val again = rows(spark.read
-        .schema("batch_id LONG, source STRING, tok STRING, cnt_win LONG," +
-          " ppm_win LONG, ppm_base LONG, drift_ppm LONG")
-        .parquet(s"$out/batch_id=00001"))
-      assert(again == want1)
-    } finally q.stop()
   }
 }

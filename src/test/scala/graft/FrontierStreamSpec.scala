@@ -10,7 +10,7 @@ import graft.streaming.FrontierStream.{Discovered, Scheduled}
 /** [[graft.streaming.FrontierStream]]: the politeness ladder climbs
   * across micro-batches, the depth cap holds stream-wide, the staged
   * path matches the live path batch-for-batch, replay is idempotent,
-  * and the meter is self-maintaining under compaction.
+  * and compaction folds the meter sum-exactly.
   */
 class FrontierStreamSpec extends SparkSpec {
   import spark.implicits._
@@ -136,29 +136,6 @@ class FrontierStreamSpec extends SparkSpec {
     // keep=0 folds everything; a replay below the bound fails loudly
     assert(FrontierStream.compact(spark, dir, keepNewestSegments = 0) == 3L)
     intercept[IllegalArgumentException] { run(dir)(mk(("x", "a.com", 1L)), 2L) }
-  }
-
-  test("self-maintaining sink: compactEvery folds, decisions identical") {
-    val dirA = tmpDir("frontier-sink-a")
-    val dirB = tmpDir("frontier-sink-b")
-    val outA = tmpDir("frontier-out-a")
-    val outB = tmpDir("frontier-out-b")
-    val sinkA = FrontierStream.sink(dirA, outA, "url", "domain",
-      "priority", delaysDf, maxDepth = 10L, compactEvery = 2)
-    val sinkB = FrontierStream.sink(dirB, outB, "url", "domain",
-      "priority", delaysDf, maxDepth = 10L)
-    (0L to 4L).foreach { id =>
-      val b = mk((s"u$id", "a.com", id), (s"v$id", "b.com", 1L))
-      sinkA(b, id); sinkB(b, id)
-    }
-    val a = spark.read.parquet(s"$outA/batch=4").orderBy("url").collect()
-    val b = spark.read.parquet(s"$outB/batch=4").orderBy("url").collect()
-    assert(a.toSeq == b.toSeq)
-    // the compacting store folded history into a generation
-    val fs = new org.apache.hadoop.fs.Path(dirA)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.listStatus(new org.apache.hadoop.fs.Path(dirA))
-      .exists(_.getPath.getName.startsWith("gen_")))
   }
 
   test("assignStaged joins the meter broadcast — no batch-side exchange for state") {

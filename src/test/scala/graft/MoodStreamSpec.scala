@@ -127,49 +127,6 @@ class MoodStreamSpec extends SparkSpec {
     assert(r.getAs[String]("mood") == "unknown")
   }
 
-  test("foreachBatch fallback: batch-join alignment per micro-batch") {
-    implicit val ctx = spark.sqlContext
-    val traffic = MemoryStream[TrafficEvent]
-    val weather = MemoryStream[WeatherEvent]
-    val news = MemoryStream[NewsEvent]
-
-    val collected = ArrayBuffer.empty[(Timestamp, String, Double, String, String)]
-    val writer = MoodStream.foreachBatchAligned(
-      traffic.toDF(), weather.toDF(), news.toDF(), tmpDir("fb-ckpt")) {
-      (aligned: DataFrame, _: Long) =>
-        collected ++= aligned.collect().map(r => (
-          r.getAs[Timestamp]("event_time"), r.getAs[String]("intersection"),
-          r.getAs[Double]("avg_speed"), r.getAs[String]("weather"),
-          r.getAs[String]("mood")))
-        ()
-    }
-    val q = writer.start()
-    try {
-      traffic.addData(
-        TrafficEvent("mashtots", "veh-1", Some(20.0), ts("2025-04-19 16:10:10")))
-      weather.addData(WeatherEvent(ts("2025-04-19 16:10:20"), Some(14.0), Some(3.0), "rain_heavy"))
-      news.addData(NewsEvent(ts("2025-04-19 16:10:30"), "x", "neutral"))
-      q.processAllAvailable()
-      // the query watermark is the MIN across all three inputs — every
-      // stream must advance for minute 16:10 to close
-      var minute = 20
-      while (collected.isEmpty && minute < 28) {
-        traffic.addData(TrafficEvent("mashtots", "veh-9", Some(50.0),
-          ts(f"2025-04-19 16:$minute%02d:00")))
-        weather.addData(WeatherEvent(ts(f"2025-04-19 16:$minute%02d:00"),
-          Some(10.0), Some(1.0), "fog"))
-        news.addData(NewsEvent(ts(f"2025-04-19 16:$minute%02d:00"), "x", "neutral"))
-        q.processAllAvailable()
-        minute += 2
-      }
-      assert(collected.nonEmpty, "no aligned batch emitted")
-      val row = collected.find(_._1 == Timestamp.valueOf("2025-04-19 16:10:00"))
-      assert(row.isDefined)
-      assert(row.get == ((Timestamp.valueOf("2025-04-19 16:10:00"), "mashtots",
-        20.0, "rain_heavy", "stressed")))
-    } finally q.stop()
-  }
-
   test("stream vs batch: closed minutes equal MoodPipeline.run less the too-late row") {
     implicit val ctx = spark.sqlContext
     val traffic = MemoryStream[TrafficEvent]

@@ -21,29 +21,4 @@ class MultimodalSpec extends SparkSpec {
     assert(row.getAs[String]("fingerprint") == "900150983cd24fb0d6963f7d28e17f72")
     assert(row.getAs[Int]("width") == 323 && row.getAs[Int]("height") == 243)
   }
-
-  test("resize stub shrinks payloads deterministically and stamps target dims") {
-    val media = Multimodal.asMedia(
-      Seq((1L, "x" * 1000), (2L, "y")).toDF("doc_id", "text"), "doc_id", "text")
-    val out = Multimodal.resize(media, targetW = 160, targetH = 120)
-      .orderBy("media_id").collect()
-    out.foreach { r =>
-      assert(r.getAs[Int]("width") == 160 && r.getAs[Int]("height") == 120)
-    }
-    val big = out(0).getAs[Array[Byte]]("payload")
-    assert(big.length == 250)           // 1000 * (160*120/76800) = quarter size
-    assert(out(1).getAs[Array[Byte]]("payload").length == 1) // floor of 1 byte
-    // map-only: a blob transform must never shuffle the payloads
-    val plan = Multimodal.resize(media, 160, 120).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-  }
-
-  test("frame sampling emits n frames per media row with a deterministic stride") {
-    val media = Multimodal.asMedia(Seq((7L, "vid")).toDF("doc_id", "text"), "doc_id", "text")
-    val frames = Multimodal.sampleFrames(media, n = 4).collect()
-    assert(frames.length == 4)
-    assert(frames.map(_.getAs[Int]("frame_idx")).toSeq == Seq(0, 250, 500, 750))
-    val plan = Multimodal.sampleFrames(media, 4).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan) // explode is map-side
-  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.operators.Multimodal
 import graft.ops.Validate
 import graft.pipeline.QualityCheck
 
@@ -46,17 +45,5 @@ class QualityCheckSpec extends SparkSpec {
     val report = QualityCheck.run(df, Seq("event_time"))
     assert(report.total == 6 && report.invalid == 5)
     assert(report.invalid == report.total - Validate.validMood(df).count())
-  }
-
-  test("multimodal resize + frame sampling keep map-only shapes") {
-    val media = Multimodal.asMedia(
-      Seq((1L, "x" * 1000)).toDF("doc_id", "text"), "doc_id", "text")
-    val resized = Multimodal.resize(media, 160, 120).head()
-    assert(resized.getAs[Int]("width") == 160)
-    assert(resized.getAs[Array[Byte]]("payload").length < 1000)
-    val frames = Multimodal.sampleFrames(media, 4)
-    assert(frames.count() == 4)
-    assert(frames.select("frame_idx").collect().map(_.getInt(0)).toSeq ==
-      Seq(0, 250, 500, 750))
   }
 }

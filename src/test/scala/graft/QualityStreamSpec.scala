@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.LmScore
@@ -116,59 +115,5 @@ class QualityStreamSpec extends SparkSpec {
     assert(exists("gen_00001") && exists("seg_00002"))
     assert(run(e2, 2L) == before)
     assert(QualityStream.purgeSuperseded(spark, dir).isEmpty)
-  }
-
-  test("self-maintaining monitor: compactEvery folds old segments, outputs byte-identical") {
-    implicit val ctx = spark.sqlContext
-    val state = tmpDir("qmeter-auto-state")
-    val out = tmpDir("qmeter-auto-out")
-    val in = MemoryStream[(Long, String)]
-    val q = QualityStream.monitor(in.toDF().toDF("doc_id", "text"),
-      state, out, tmpDir("qmeter-auto-ckpt"), "text", "doc_id", model,
-      keepMaxMicroNll = 800000L, compactEvery = 2)
-    try {
-      in.addData(e0); q.processAllAvailable()
-      in.addData(e1); q.processAllAvailable()
-      in.addData(e2); q.processAllAvailable()
-      val sch = "batch_id LONG, n_docs LONG, n_keep LONG, nll_micro LONG," +
-        " cum_docs LONG, cum_keep LONG, cum_nll_micro LONG"
-      assert(rows(spark.read.schema(sch)
-        .parquet(s"$out/batch_id=00000", s"$out/batch_id=00001",
-          s"$out/batch_id=00002")) == Seq(want0, want1, want2))
-      // the epoch-2 compact folded segments 0 and 1 into the generation
-      val fs = new org.apache.hadoop.fs.Path(state)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def ex(n: String) =
-        fs.exists(new org.apache.hadoop.fs.Path(s"$state/$n"))
-      assert(!ex("seg_00000") && !ex("seg_00001") && ex("seg_00002"))
-      assert(ex("gen_00001"))
-    } finally q.stop()
-  }
-
-  test("live monitor: 3 checkpointed epochs land idempotent per-epoch meter rows") {
-    implicit val ctx = spark.sqlContext
-    val state = tmpDir("qmeter-state")
-    val out = tmpDir("qmeter-out")
-    val ckpt = tmpDir("qmeter-ckpt")
-    val in = MemoryStream[(Long, String)]
-    val q = QualityStream.monitor(in.toDF().toDF("doc_id", "text"),
-      state, out, ckpt, "text", "doc_id", model, keepMaxMicroNll = 800000L)
-    try {
-      in.addData(e0); q.processAllAvailable()
-      in.addData(e1); q.processAllAvailable()
-      in.addData(e2); q.processAllAvailable()
-      val sch = "batch_id LONG, n_docs LONG, n_keep LONG, nll_micro LONG," +
-        " cum_docs LONG, cum_keep LONG, cum_nll_micro LONG"
-      val got = rows(spark.read.schema(sch)
-        .parquet(s"$out/batch_id=00000", s"$out/batch_id=00001",
-          s"$out/batch_id=00002"))
-      assert(got == Seq(want0, want1, want2))
-      // a replayed epoch overwrites its OWN directory with identical rows
-      QualityStream.meterStaged(e1.toDF("doc_id", "text"), state,
-          "text", "doc_id", model, 800000L, 1L)
-        .write.mode("overwrite").parquet(s"$out/batch_id=00001")
-      assert(rows(spark.read.schema(sch).parquet(s"$out/batch_id=00001"))
-        == Seq(want1))
-    } finally q.stop()
   }
 }

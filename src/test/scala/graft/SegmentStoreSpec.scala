@@ -200,7 +200,8 @@ class SegmentStoreSpec extends SparkSpec {
       fpRound(1L, 2L); fpRound(3L)
       clusterRound(1L, 2L); clusterRound(3L)
       Dedup.FingerprintStore.purgeSuperseded(spark, fpDir)
-      ClusterStore.purgeSuperseded(spark, cDir)
+      SegmentStore.purge(spark, s"$cDir/map")
+      Dedup.FingerprintStore.purgeSuperseded(spark, s"$cDir/keys")
       assert(!fs.exists(leaked), s"generation data written under $leaked")
       // each substore holds exactly its current generation's data dir
       Seq(fpDir, s"$cDir/map", s"$cDir/keys").foreach { d =>

@@ -8,28 +8,6 @@ import graft.operators.Skew
 class SkewAndSqlSpec extends SparkSpec {
   import spark.implicits._
 
-  test("saltedJoin equals plain join on a skewed key distribution") {
-    val left = (Seq.fill(500)(("hot", 1)) ++ Seq(("a", 2), ("b", 3))).toDF("k", "lv")
-    val right = Seq(("hot", 10), ("a", 20), ("c", 30)).toDF("k", "rv")
-    val plain = left.join(right, Seq("k")).groupBy($"k")
-      .agg(count(lit(1)).as("n"), sum($"rv").as("s")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = Skew.saltedJoin(left, right, "k", salt = 8).groupBy($"k")
-      .agg(count(lit(1)).as("n"), sum($"rv").as("s")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted == plain)
-    // left join keeps unmatched left rows exactly once per source row
-    val leftJ = Skew.saltedJoin(left, right, "k", salt = 8, joinType = "left")
-    assert(leftJ.count() == left.join(right, Seq("k"), "left").count())
-    // right/full outer would emit unmatched right rows once per salt → rejected
-    intercept[IllegalArgumentException] {
-      Skew.saltedJoin(left, right, "k", salt = 8, joinType = "right")
-    }
-    intercept[IllegalArgumentException] {
-      Skew.saltedJoin(left, right, "k", salt = 8, joinType = "full_outer")
-    }
-  }
-
   test("detectHeavyKeys: flags only the hot key, empty report when unskewed") {
     val skewed = (Seq.fill(500)(("hot", 1)) ++
       (1 to 20).flatMap(i => Seq.fill(4)((s"k$i", i)))).toDF("k", "v")

@@ -30,8 +30,4 @@ class SummaryPipelineSpec extends SparkSpec {
       ("komitas", "relaxed", 2L, 85.0),
       ("mashtots", "stressed", 1L, -4.0)))
   }
-
-  test("fullSummary covers all days") {
-    assert(SummaryPipeline.fullSummary(mood).count() == 2)
-  }
 }

@@ -8,8 +8,12 @@ src/main/scala, prints the ones whose name appears in no other
 src/main/scala or perfbench/scala code, together with the spec files
 (src/test/scala) that do name them. A type counts as referenced when its
 name occurs outside its own declaration block; a def when its name occurs
-outside its own body. Comments are ignored, string literals are not (a
-class named in a conf string is a real reference).
+outside its own body. Comments are ignored. For a type, string
+literals count (a class named in a conf string is a real reference); a
+def counts as used only by code that names it, not by a string literal
+(a column name, an error message; code interpolated into one counts) or
+a `name:` declaration (a case-class field, a parameter or a sibling
+member of the same name).
 
 The match is by bare name, with one exception: a member of an `object`
 whose bare name another main type also declares as a def counts only
@@ -28,7 +32,7 @@ Every listed entry that is kept on purpose carries its reason from KEEP:
 a reference feature it stands in for (with the SURVEY.md line), the
 reference implementation a test compares against, a dev entry point run
 through tools/run_main.sh, a helper inside a case whose subject is
-reached code, or a deferral with the spec cases its deletion takes. An
+reached code, or the stream the only test of a kept analog drives. An
 entry without a reason is a deletion candidate.
 """
 import os
@@ -39,13 +43,6 @@ ROOTS = {"graft.SparkEntry", "graft.Bench", "graft.Verify"}
 SKIP_DEFS = {"main", "apply", "unapply", "toString", "equals", "hashCode"}
 
 ENTRY = "dev entry point (tools/run_main.sh)"
-DIRECTION_D = ("out of scope: ROADMAP direction D adjudicates it against "
-               "aggregatedJoined by benchmark")
-
-
-def deferred(cases):
-    return (f"deferred to ROADMAP direction G: fails the keep rule; deleting "
-            f"it takes {cases}")
 
 
 def inside(case):
@@ -96,14 +93,23 @@ KEEP = {
     "graft.operators.Retrieval.saveIndex":
         "reference implementation: RetrievalSpec 'incremental postings' "
         "compares the folded segments against it",
+    "graft.streaming.FrontierStream.scheduled":
+        "reference implementation: FrontierStreamSpec 'live matches staged "
+        "when SEVERAL rows overflow the cap at once' compares assignStaged "
+        "against it",
+    "graft.operators.Bpe.trainMerges":
+        "reference implementation: BpeSpec 'trainMergesLocal == trainMerges "
+        "on the Sennrich example and edge vocabs' compares trainMergesLocal "
+        "(q90, q93) against it",
     # dev entry points
     "graft.tools.Explain": ENTRY,
     "graft.tools.JobProfile": ENTRY,
     "graft.tools.ScaleData": ENTRY,
     "graft.tools.Smoke": ENTRY,
-    # the two mood-stream strategies left to a benchmark-only change
-    "graft.streaming.MinuteAgg": DIRECTION_D,
-    "graft.streaming.MoodStream.foreachBatchAligned": DIRECTION_D,
+    # the stream the only test of a kept analog drives
+    "graft.streaming.MinuteAgg":
+        "test driver: StreamBackpressureSpec, the only test of "
+        "JsonFileSource's maxFilesPerTrigger, drains its backlog through it",
     # helpers inside cases whose subject is reached code
     "graft.util.OperatorCaches.registeredCount":
         inside("DedupSpec 'allPairsJaccard equals the brute-force exact "
@@ -120,34 +126,19 @@ KEEP = {
     "graft.util.OperatorCaches.release":
         inside("BoilerplateSpec 'remove at threshold: every occurrence, "
                "order kept, one row per doc', q148"),
-    # spec-only code that fails the rule, left for a follow-up change
-    "graft.streaming.BudgetStream.admissions":
-        deferred("2 BudgetStreamSpec cases"),
-    "graft.operators.ClusterStore.ingestEpoch":
-        deferred("ClusterStoreSpec 'epoch protocol' and the epoch branch "
-                 "of ingestCore"),
-    "graft.operators.Boilerplate.lineDocFrequency":
-        deferred("1 BoilerplateSpec case"),
-    "graft.operators.Multimodal.resize":
-        deferred("2 MultimodalSpec cases and 1 QualityCheckSpec case, "
-                 "with sampleFrames"),
-    "graft.operators.Multimodal.sampleFrames":
-        deferred("the same 3 cases as resize"),
-    "graft.operators.Skew.saltedJoin": deferred("1 SkewAndSqlSpec case"),
-    "graft.pipeline.SummaryPipeline.fullSummary":
-        deferred("1 SummaryPipelineSpec case"),
-    # the self-maintaining foreachBatch adapters around reached staged
-    # cores: named only by specs once shared bare names stopped counting
-    "graft.streaming.BudgetStream.sink": deferred("1 BudgetStreamSpec case"),
-    "graft.streaming.FrontierStream.sink":
-        deferred("1 FrontierStreamSpec case"),
-    "graft.streaming.DriftStream.monitor":
-        deferred("2 DriftStreamSpec cases"),
-    "graft.streaming.QualityStream.monitor":
-        deferred("2 QualityStreamSpec cases"),
-    "graft.operators.ClusterStore.purgeSuperseded":
-        deferred("ClusterStoreSpec 'purgeSuperseded: crash debris…' and "
-                 "the purge step of SegmentStoreSpec 'relative store dir…'"),
+    "graft.operators.Dedup.hamming":
+        inside("DedupSpec 'simhash: identical docs equal, hamming to "
+               "unrelated > 0', q22"),
+    "graft.streaming.ParquetUpsertTable.outstandingClaims":
+        inside("UpsertSinkSpec 'optimistic concurrency: a live foreign claim "
+               "aborts the commit, table untouched', q61"),
+    "graft.streaming.PartitionedUpsertTable.outstandingClaims":
+        inside("UpsertSinkSpec 'optimistic concurrency: partitioned table "
+               "claims before touching any partition', q63"),
+    "graft.streaming.QualityStream.purgeSuperseded":
+        inside("QualityStreamSpec 'purgeSuperseded reclaims orphaned "
+               "segments, stale gens, tmps': SegmentStore.purge, which q189 "
+               "and q190 run through the frontier and budget meters"),
 }
 
 TYPE_RE = re.compile(
@@ -159,9 +150,35 @@ DEF_RE = re.compile(
 PKG_RE = re.compile(r"^package\s+([\w.]+)", re.M)
 
 
-def strip(src, keep_strings):
-    """Drop comments; blank string contents too unless keep_strings.
-    Newlines are preserved so line numbers stay valid."""
+def interpolations(body):
+    """The code inside an interpolated string body: each `${...}` block
+    and `$name`, one per space, plus the body's newlines."""
+    out, i, n = [], 0, len(body)
+    while i < n:
+        if body.startswith("$$", i):
+            i += 2
+        elif body.startswith("${", i):
+            depth, j = 1, i + 2
+            while j < n and depth:
+                depth += {"{": 1, "}": -1}.get(body[j], 0)
+                j += 1
+            out.append(" " + body[i + 2:j - 1] + " ")
+            i = j
+        elif body[i] == "$":
+            m = re.match(r"[A-Za-z_]\w*", body[i + 1:])
+            out.append(" " + (m.group(0) if m else "") + " ")
+            i += 1 + (len(m.group(0)) if m else 0)
+        else:
+            if body[i] == "\n":
+                out.append("\n")
+            i += 1
+    return "".join(out)
+
+
+def strip(src, strings):
+    """Drop comments. String literals are kept (`strings="keep"`),
+    blanked ("blank"), or blanked but for the code interpolated into
+    them ("code"). Newlines are preserved so line numbers stay valid."""
     out, i, n = [], 0, len(src)
     while i < n:
         c = src[i]
@@ -184,24 +201,32 @@ def strip(src, keep_strings):
             j = n if j < 0 else j + 3
             while j < n and src[j] == '"':
                 j += 1
-            body = src[i:j]
-            out.append(body if keep_strings else
-                       '""' + "".join(ch for ch in body if ch == "\n"))
+            out.append(literal(src, i, j, strings))
             i = j
         elif c == '"':
             j = i + 1
             while j < n and src[j] != '"' and src[j] != "\n":
                 j += 2 if src[j] == "\\" else 1
-            out.append(src[i:j + 1] if keep_strings else '""')
+            out.append(literal(src, i, j + 1, strings))
             i = j + 1
         elif c == "'" and i + 2 < n and (src[i + 2] == "'" or src[i + 1] == "\\"):
             j = src.find("'", i + 2 if src[i + 1] == "\\" else i + 1)
-            out.append(src[i:j + 1] if keep_strings else "' '")
+            out.append(src[i:j + 1] if strings == "keep" else "' '")
             i = j + 1
         else:
             out.append(c)
             i += 1
     return "".join(out)
+
+
+def literal(src, i, j, strings):
+    """The string literal src[i:j] as `strip` renders it."""
+    body = src[i:j]
+    if strings == "keep":
+        return body
+    if strings == "code" and i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_"):
+        return '"' + interpolations(body) + '"'
+    return '""' + "".join(ch for ch in body if ch == "\n")
 
 
 def indent(line):
@@ -231,28 +256,32 @@ class Source:
     def __init__(self, root, path):
         self.rel = os.path.relpath(path, root)
         raw = open(path, encoding="utf-8").read()
-        self.code = strip(raw, keep_strings=True).split("\n")
-        self.skel = strip(raw, keep_strings=False).split("\n")
+        self.code = strip(raw, "keep").split("\n")
+        self.skel = strip(raw, "blank").split("\n")
+        self.calls = strip(raw, "code").split("\n")
         m = PKG_RE.search("\n".join(self.code))
         self.pkg = m.group(1) if m else ""
 
-    def names(self, name, skip):
-        """Lines (0-based) outside `skip` whose code names `name`."""
-        pat = re.compile(r"(?<![\w$])" + re.escape(name) + r"(?![\w$])")
-        return [k for k, l in enumerate(self.code)
+    def names(self, name, skip, member=False):
+        """Lines (0-based) outside `skip` whose code names `name`. For a
+        `member` def, string literals (but for the code interpolated into
+        them) and `name:` declarations do not count."""
+        pat = re.compile(r"(?<![\w$])" + re.escape(name) + r"(?![\w$])"
+                         + (r"(?!\s*:(?!:))" if member else ""))
+        return [k for k, l in enumerate(self.calls if member else self.code)
                 if k not in skip and pat.search(l)]
 
     def names_member(self, owner, name):
-        """Whether this file names `owner.name`, qualified or through an
-        import of the owner's members."""
-        text = "\n".join(self.code)
+        """Whether this file names the member def `owner.name`, qualified
+        or through an import of the owner's members."""
+        text = "\n".join(self.calls)
         o, n = re.escape(owner), re.escape(name)
         if re.search(r"(?<![\w$])" + o + r"\s*\.\s*" + n + r"(?![\w$])", text):
             return True
         imported = re.search(
             r"import\s+[\w.]*(?<![\w$])" + o + r"\.(_|\{[^}]*(?<![\w$])"
             + n + r"(?![\w$])[^}]*\})", text)
-        return bool(imported) and bool(self.names(name, set()))
+        return bool(imported) and bool(self.names(name, set(), member=True))
 
 
 def declarations(src):
@@ -315,15 +344,16 @@ def scan(root):
         shared = owner is not None and any(
             m == name and o != owner_qn for o, m in members)
         others = [o for o in mains + bench if o is not src]
-        reached = bool(src.names(name, skip)) or any(
-            o.names_member(owner, name) if shared else o.names(name, set())
-            for o in others)
+        member = kind == "def"
+        reached = bool(src.names(name, skip, member)) or any(
+            o.names_member(owner, name) if shared
+            else o.names(name, set(), member) for o in others)
         if reached:
             continue
         if kind == "type":
             unreached_types.add(qn)
         hits = sorted({os.path.basename(o.rel) for o in specs
-                       if o.names(name, set())})
+                       if o.names(name, set(), member)})
         rows.append((kind, qn, f"{src.rel}:{line + 1}", hits))
     return rows
 
