@@ -2385,7 +2385,7 @@ object Queries {
       // fold (it materializes the decision frame to derive the meter),
       // so no per-run localCheckpoint is needed here anymore
       def run(pred: Column, id: Long) = graft.streaming.BudgetStream
-        .admitStaged(docs.filter(pred), stateDir, "text", "doc_id", "source",
+        .admitStaged(docs.filter(pred), stateDir, "text", "doc_id",
           budget = 800L, batchId = id)
       val r0 = run(col("doc_id") <= t1, 0L)
       run(col("doc_id") > t1 && col("doc_id") <= t2, 1L)
@@ -2885,7 +2885,7 @@ object Queries {
       // store scans pin the raw segment paths, which compact() deletes
       // after folding — they must materialize before it runs. Each is a
       // skinny plan over its batch's cached occurrence frame (persisted
-      // by incrementalSpanCore, materialized by its segment write), so
+      // by Dedup.spanCore, materialized by its segment write), so
       // fusing them halves the job count (job count, not data, is this
       // pipeline's cost at gate scale).
       val p01 = p0.unionByName(p1).localCheckpoint(true)
@@ -3849,7 +3849,7 @@ object Queries {
           .select(col("url"), col("domain"), col("priority"))
       def run(e: DataFrame, id: Long): DataFrame =
         graft.streaming.FrontierStream.assignStaged(
-          e, stateDir, "url", "domain", "priority", delays,
+          e, stateDir, "url", "priority", delays,
           maxDepth = cap, batchId = id)
       val r0 = run(epoch(Long.MinValue, t1), 0L).localCheckpoint(true)
       // first delivery of batch 1: execute for its store side-effects but

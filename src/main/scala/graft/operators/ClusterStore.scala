@@ -76,6 +76,13 @@ import graft.util.SegmentStore
   */
 object ClusterStore {
 
+  /** LSH band keys of `docs`: 8 MinHash permutations over word bigrams,
+    * folded into 4 bands — the one signature every ingest registers, so
+    * a store never mixes keys of two parameterizations.
+    */
+  private def bandKeysOf(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+    Dedup.bandKeys(Dedup.minhashSignatures(docs, textCol, idCol, 8, 2), idCol, 4)
+
   val mapSchema: StructType = StructType(Seq(
     StructField("node", LongType), StructField("component", LongType)))
 
@@ -142,10 +149,7 @@ object ClusterStore {
       batch: DataFrame,
       dir: String,
       textCol: String,
-      idCol: String,
-      k: Int = 8,
-      bands: Int = 4,
-      ngram: Int = 2): DataFrame = {
+      idCol: String): DataFrame = {
     val s = batch.sparkSession
     val kd = keysDir(dir)
     val store = Dedup.FingerprintStore.load(s, kd)
@@ -158,8 +162,7 @@ object ClusterStore {
     // job, so the band-key frame no longer costs a dedicated eager
     // action per epoch; every later consumer (within-batch star, key
     // registration) reads the same truncated blocks.
-    val keys = graft.util.OperatorCaches.persisted(Dedup.bandKeys(
-      Dedup.minhashSignatures(batch, textCol, idCol, k, ngram), idCol, bands)
+    val keys = graft.util.OperatorCaches.persisted(bandKeysOf(batch, textCol, idCol)
       .select(col(idCol).cast("long").as("id"), col("fp")))
     // cross-batch stars: batch doc -> the key's first owner
     val cross = keys
@@ -323,9 +326,6 @@ object ClusterStore {
       dir: String,
       textCol: String,
       idCol: String,
-      k: Int = 8,
-      bands: Int = 4,
-      ngram: Int = 2,
       maxBacklogBatches: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(maxBacklogBatches >= 1,
@@ -347,9 +347,7 @@ object ClusterStore {
       struct(col(batchCol).cast("long").as("b"),
         col(idCol).cast("long").as("id")).as("__bid"),
       col(textCol).as("__text"))
-    val keys0 = Dedup.bandKeys(
-        Dedup.minhashSignatures(withB, "__text", "__bid", k, ngram),
-        "__bid", bands)
+    val keys0 = bandKeysOf(withB, "__text", "__bid")
       .select(col("__bid.b").as("b"), col("__bid.id").as("id"), col("fp"))
       .localCheckpoint(true)
     val store = Dedup.FingerprintStore.load(s, kd)

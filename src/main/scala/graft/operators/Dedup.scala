@@ -1173,36 +1173,44 @@ object Dedup {
   // --------------------------------------------------------------------- //
 
   /** Shared front end of the ExactSubstr pair ([[dupSpanProfile]] /
-    * [[stripDupSpans]]): `(base, dup)` where `base` carries the bound
-    * token array per doc and `dup` is the (idCol, pos) stream of k-gram
-    * start positions whose gram occurs ≥ 2 times anywhere in the corpus.
+    * [[stripDupSpans]]): `(base, occ)` where `base` carries the bound
+    * token array per doc and `occ` every k-gram occurrence with its
+    * corpus-wide count (`dupOf` keeps the ones occurring ≥ 2 times).
     */
   private def dupSpanPositions(
       docs: DataFrame,
       textCol: String,
       idCol: String,
-      k: Int): (DataFrame, DataFrame) =
-    spanPositionsFrom(tokenizedBase(docs, textCol, idCol), idCol, k)
+      k: Int): (DataFrame, DataFrame) = {
+    val (base, occ0) = occurrencesOf(tokenizedBase(docs, Seq(idCol), textCol), k)
+    // persisted: BOTH sides of the count join read it (the aggregate side
+    // and the probe side) — without the cache the tokenize + gram-build +
+    // hash pipeline would run twice per evaluation. CACHE CONTRACT:
+    // registered with OperatorCaches — callers release after the terminal
+    // action on the returned frames.
+    (base, countedOccurrences(graft.util.OperatorCaches.persisted(occ0), Seq(idCol))(identity))
+  }
 
-  /** The tokenize-only front of the span pipeline, split out so the
-    * incremental path can persist it ONCE per batch and share it between
-    * the occurrence build and the strip-path token rebuild (which
-    * otherwise re-tokenizes the batch at gate time).
+  /** The tokenize-only front of the span pipeline: the `keys` columns of
+    * `docs` (the doc id last, after any batch tag) plus the doc's `toks`.
     */
   private def tokenizedBase(
       docs: DataFrame,
-      textCol: String,
-      idCol: String): DataFrame =
+      keys: Seq[String],
+      textCol: String): DataFrame =
     // spread: on a single-file test corpus the tokenizer + gram build +
     // hash would otherwise run on ONE task (map-only cost — no-op on a
     // well-partitioned real corpus; q48 discipline)
-    Similarity.spread(docs.select(col(idCol), col(textCol)))
-      .select(col(idCol), tokens(col(textCol)).as("toks"))
+    Similarity.spread(docs.select((keys :+ textCol).map(col): _*))
+      .select(keys.map(col) :+ tokens(col(textCol)).as("toks"): _*)
 
-  private def spanPositionsFrom(
-      base0: DataFrame,
-      idCol: String,
-      k: Int): (DataFrame, DataFrame) = {
+  /** The one occurrence builder of the span pipeline, over a
+    * [[tokenizedBase]] keyed by `keys`: `(base, occ0)` where `base` adds
+    * the gram array and `occ0` is one (keys, n_tokens, pos, g) row per
+    * k-gram occurrence, before any count.
+    */
+  private def occurrencesOf(base0: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    val keys = base0.columns.toSeq.filter(_ != "toks").map(col)
     val base = base0
       // gram build stays on ngramsOfTokens' zip_with fold: the measured
       // alternative (slice-under-transform over a position sequence) is
@@ -1210,14 +1218,13 @@ object Dedup {
       // k-array per position, and nothing stops Catalyst from inlining
       // work into the lambda. The fold builds each gram incrementally
       // with zero per-element allocation beyond the string itself.
-      .select(col(idCol), col("toks"),
-        ngramsOfTokens(col("toks"), k).as("grams"))
+      .select(keys ++ Seq(col("toks"), ngramsOfTokens(col("toks"), k).as("grams")): _*)
     // posexplode_OUTER + per-row n_tokens: a doc with fewer than k tokens
     // still emits one (pos=null, g=null) sentinel row, so the occurrence
     // frame alone carries every doc's token count — the profile needs no
     // second tokenize pass over the corpus. Gram identity is xxhash64 (an
     // 8-byte long), not md5 (a 32-char string): every downstream shuffle
-    // — the count window here, the store probe, the segment fold — keys
+    // — the count aggregate, the store probe, the segment fold — keys
     // on it, and the narrow key measured ~30% faster end-to-end at
     // sf0.1. Only hash EQUALITY is ever used (the hash never reaches an
     // output surface), so a 64-bit space is enough: P(any collision) at
@@ -1225,33 +1232,41 @@ object Dedup {
     // only ever over-flags one span as duplicated. Null grams keep a
     // null g explicitly — xxhash64(NULL) would return the seed, lumping
     // every short doc into one fake "gram".
-    // persisted: BOTH sides of the count join below read it (the
-    // aggregate side and the probe side) — without the cache the
-    // tokenize + gram-build + hash pipeline would run twice per
-    // evaluation. CACHE CONTRACT: registered with OperatorCaches —
-    // callers release after the terminal action on the returned frames.
-    val occ0 = graft.util.OperatorCaches.persisted(base
-      .select(col(idCol), size(col("toks")).cast("long").as("n_tokens"),
-        posexplode_outer(col("grams")).as(Seq("p0", "gram")))
-      .select(col(idCol), col("n_tokens"), (col("p0") + 1).as("pos"),
-        when(col("gram").isNotNull, xxhash64(col("gram"))).as("g")))
-    // occurrence count as a TWO-PHASE aggregate (groupBy + join back),
-    // NOT `count over Window.partitionBy(g)`: a window by gram lands a
-    // hot gram's EVERY occurrence on one task, and the grams this
-    // operator exists to find — site boilerplate duplicated across
-    // 10^6..10^8 pages of a 100 TB crawl — are precisely the keys that
-    // explode. The groupBy's partial aggregation collapses each task's
-    // occurrences to one (g, n) row before the exchange, so the joined
-    // frame is distinct-gram-sized regardless of skew; the join back is
-    // hash-partitioned on g with per-row fan-out handled by the
-    // shuffle, not a single window buffer. Sentinel rows (g null) never
-    // match the inner-side keys and keep cnt = 0 via the left join.
-    val gramCounts = occ0.filter(col("g").isNotNull)
-      .groupBy(col("g")).agg(count(lit(1)).as("cnt"))
-    val occ = occ0.join(gramCounts, Seq("g"), "left")
-      .select(col(idCol), col("n_tokens"), col("pos"), col("g"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
-    (base, occ)
+    val occ0 = base
+      .select(keys ++ Seq(size(col("toks")).cast("long").as("n_tokens"),
+        posexplode_outer(col("grams")).as(Seq("p0", "gram"))): _*)
+      .select(keys ++ Seq(col("n_tokens"), (col("p0") + 1).as("pos"),
+        when(col("gram").isNotNull, xxhash64(col("gram"))).as("g")): _*)
+    (base, occ0)
+  }
+
+  /** Joins each occurrence of `occ0` (keyed by `keys`, the doc id last)
+    * to its gram's count `cnt` — taken per gram and per leading key
+    * (none for the one-shot pair, the batch tag for the store core) —
+    * plus whatever per-gram columns `stats` folds into the count frame.
+    *
+    * The count is a TWO-PHASE aggregate (groupBy + join back), NOT
+    * `count over Window.partitionBy(g)`: a window by gram lands a hot
+    * gram's EVERY occurrence on one task, and the grams this operator
+    * exists to find — site boilerplate duplicated across 10^6..10^8 pages
+    * of a 100 TB crawl — are precisely the keys that explode. The
+    * groupBy's partial aggregation collapses each task's occurrences to
+    * one row per gram before the exchange, so the joined frame is
+    * distinct-gram-sized regardless of skew; the join back is
+    * hash-partitioned with per-row fan-out handled by the shuffle (and
+    * AQE's skew-join splitting), not a single window buffer. Sentinel
+    * rows (g null) never match the count side and keep cnt = 0 via the
+    * left join.
+    */
+  private def countedOccurrences(occ0: DataFrame, keys: Seq[String])(
+      stats: DataFrame => DataFrame): DataFrame = {
+    val by = "g" +: keys.init
+    val counts = stats(occ0.filter(col("g").isNotNull)
+      .groupBy(by.map(col): _*).agg(count(lit(1)).as("cnt")))
+    val extra = counts.columns.toSeq.filterNot((by :+ "cnt").contains)
+    occ0.join(counts, by, "left")
+      .select(keys.map(col) ++ Seq(col("n_tokens"), col("pos"), col("g"),
+        coalesce(col("cnt"), lit(0L)).as("cnt")) ++ extra.map(col): _*)
   }
 
   /** The duplicated-position stream of an occurrence frame: real gram
@@ -1481,7 +1496,7 @@ object Dedup {
       textCol: String,
       idCol: String,
       k: Int): DataFrame = {
-    val (_, occ, dup) = incrementalSpanCore(batch, storeDir, textCol, idCol, k)
+    val (_, occ, dup) = spanCore(batch, None, storeDir, textCol, idCol, k)
     spanProfileOf(nTokensFromOcc(occ, idCol), dup, idCol, k)
   }
 
@@ -1502,7 +1517,7 @@ object Dedup {
       textCol: String,
       idCol: String,
       k: Int): DataFrame = {
-    val (base, occ, dup) = incrementalSpanCore(batch, storeDir, textCol, idCol, k)
+    val (base, _, dup) = spanCore(batch, None, storeDir, textCol, idCol, k)
     stripByDup(base, dup, idCol, k)
   }
 
@@ -1511,20 +1526,9 @@ object Dedup {
     * folding [[dupSpansIncrementalStaged]] over them in ascending
     * `batchCol` order (the catch-up shape: a stalled pipeline restarts
     * with a backlog, and paying the per-batch
-    * tokenize+window+checkpoint pipeline once per queued batch triples
-    * the jobs for zero information).
-    *
-    * The sequential dependency ("batch k probes history < k") is
-    * resolved WITHIN the single pass: per gram, `cnt` counts
-    * occurrences inside the row's own batch (peer frame of the
-    * g-partition window ordered by batch), `minb` is the first batch
-    * carrying the gram (running min over the same sort — one exchange,
-    * one sort, both stats), and a row is duplicated iff
-    * `cnt ≥ 2 ∨ minb < b ∨ gram ∈ pre-existing store` — exactly the
-    * sequential rule, since segment b' (b' < b) holds a gram iff it was
-    * store-novel with `minb = b'`. Segments still commit one-per-batch
-    * (ascending, the sequential loop's layout), each a skinny aggregate
-    * over the one persisted occurrence frame.
+    * tokenize+count+segment-write pipeline once per queued batch
+    * triples the jobs for zero information). Both run the one
+    * [[spanCore]]; an incremental call is its backlog of one.
     *
     * Batch ids within one backfill call must not repeat an (id, batch)
     * pair; the same doc id MAY appear in several batches (each batch
@@ -1533,9 +1537,8 @@ object Dedup {
     * `maxBacklogBatches` guards the driver-side distinct-batch collect
     * (and the one-segment-write-per-batch job count): a backlog past
     * the bound fails fast with a pointer to the sequential
-    * [[dupSpansIncrementalStaged]] loop, which has no driver-side
-    * backlog bound — the [[Bpe.trainMergesLocal]] `maxVocabRows`
-    * discipline.
+    * [[dupSpansIncrementalStaged]] loop, which collects no batch ids —
+    * the [[Bpe.trainMergesLocal]] `maxVocabRows` discipline.
     */
   def dupSpansBackfillStaged(
       batches: DataFrame,
@@ -1545,11 +1548,10 @@ object Dedup {
       idCol: String,
       k: Int,
       maxBacklogBatches: Int = 10000): DataFrame = {
-    val (_, occ, dup) = backfillSpanCore(
-      batches, batchCol, storeDir, textCol, idCol, k, maxBacklogBatches)
-    def bid(df: DataFrame): DataFrame =
-      df.withColumn("__bid", struct(col("__b"), col(idCol)))
-    spanProfileOf(nTokensFromOcc(bid(occ), "__bid"), bid(dup), "__bid", k)
+    val (_, occ, dup) = spanCore(batches, Some((batchCol, maxBacklogBatches)),
+      storeDir, textCol, idCol, k)
+    spanProfileOf(nTokensFromOcc(batchDoc(occ, idCol), "__bid"),
+      batchDoc(dup, idCol), "__bid", k)
       .select(col("__bid").getField(idCol).as(idCol), col("n_tokens"),
         col("dup_spans"), col("dup_tokens"), col("dup_ratio"))
   }
@@ -1565,180 +1567,136 @@ object Dedup {
       idCol: String,
       k: Int,
       maxBacklogBatches: Int = 10000): DataFrame = {
-    val (base, _, dup) = backfillSpanCore(
-      batches, batchCol, storeDir, textCol, idCol, k, maxBacklogBatches)
-    def bid(df: DataFrame): DataFrame =
-      df.withColumn("__bid", struct(col("__b"), col(idCol)))
-    stripByDup(bid(base), bid(dup), "__bid", k)
+    val (base, _, dup) = spanCore(batches, Some((batchCol, maxBacklogBatches)),
+      storeDir, textCol, idCol, k)
+    stripByDup(batchDoc(base, idCol), batchDoc(dup, idCol), "__bid", k)
       .select(col("__bid").getField(idCol).as(idCol), col("n_tokens"),
         col("kept_tokens"), col("clean_text"))
   }
 
-  /** One-pass core of the fused backfill: occurrence frame over the
-    * UNION of batches with per-batch `cnt` and first-batch `__minb`
-    * from TWO-PHASE aggregates (groupBy + join back — the gram-keyed
-    * windows this used to ride land a hot boilerplate gram's every
-    * occurrence in one task's sort buffer; the aggregate collapses per
-    * task before the exchange and the join back is AQE-skew-splittable),
-    * store probe against the pre-backfill segment list, one committed
-    * segment per batch.
-    * CACHE CONTRACT: the tokenized base and occurrence frames are
-    * registered with [[graft.util.OperatorCaches]].
+  /** A backfill frame keyed by (batch, doc): one backlog may carry the
+    * same doc id in several batches.
     */
-  private def backfillSpanCore(
-      batches: DataFrame,
-      batchCol: String,
-      storeDir: String,
-      textCol: String,
-      idCol: String,
-      k: Int,
-      maxBacklogBatches: Int): (DataFrame, DataFrame, DataFrame) = {
-    require(maxBacklogBatches >= 1,
-      "backfill: maxBacklogBatches must be >= 1")
-    val s = batches.sparkSession
-    val nextIdx = SegmentStore.nextId(s, storeDir)
-    val store = FingerprintStore.load(s, storeDir)
-    val base0 = graft.util.OperatorCaches.persisted(
-      Similarity.spread(batches.select(
-          col(batchCol).cast("long").as("__b"), col(idCol), col(textCol)))
-        .select(col("__b"), col(idCol), tokens(col(textCol)).as("toks")))
-    val base = base0.select(col("__b"), col(idCol), col("toks"),
-      ngramsOfTokens(col("toks"), k).as("grams"))
-    // per-batch count and first-batch min as two-phase aggregates over
-    // the persisted occurrence frame: one (g, __b)-keyed groupBy whose
-    // map-side partials collapse a hot gram to one row per (task,
-    // batch) before any exchange, a distinct-gram-sized min over THAT,
-    // and a join back. Sentinel rows (g null) never match and keep
-    // cnt = 0 / __minb null via the left joins (the downstream filters
-    // all require g non-null anyway).
-    // occ0 is NOT persisted: both consumers below rebuild it from the
-    // persisted tokenized base0 (gram-build + hash + explode, map-only)
-    // — cheaper than materializing the occurrence-sized frame, and the
-    // JOINED occ is the frame every downstream consumer reads anyway
-    val occ0 = base
-      .select(col("__b"), col(idCol),
-        size(col("toks")).cast("long").as("n_tokens"),
-        posexplode_outer(col("grams")).as(Seq("p0", "gram")))
-      .select(col("__b"), col(idCol), col("n_tokens"),
-        (col("p0") + 1).as("pos"),
-        when(col("gram").isNotNull, xxhash64(col("gram"))).as("g"))
-    val perBatch = occ0.filter(col("g").isNotNull)
-      .groupBy(col("g"), col("__b")).agg(count(lit(1)).as("cnt"))
-    // fold the first-batch min into the (g, __b)-keyed frame FIRST
-    // (both frames are distinct-gram-sized, the min is a second-phase
-    // aggregate over already-collapsed rows) so the occurrence stream
-    // below shuffles ONCE, on (g, __b) — not once per joined frame
-    val firstB = perBatch.groupBy(col("g"))
-      .agg(min(col("__b")).as("__minb"))
-    val gramStats = perBatch.join(firstB, Seq("g"))
-    val occ = graft.util.OperatorCaches.persisted(occ0
-      .join(gramStats, Seq("g", "__b"), "left")
-      .select(col("__b"), col(idCol), col("n_tokens"), col("pos"),
-        col("g"), coalesce(col("cnt"), lit(0L)).as("cnt"),
-        col("__minb")))
-    val seen = store.select(col("fp")).distinct()
-      .withColumn("__seen", lit(true))
-    val dup = occ.withColumn("fp", col("g").cast("string"))
-      .join(seen, Seq("fp"), "left")
-      .filter(col("g").isNotNull &&
-        (col("cnt") >= 2 || col("__minb") < col("__b") || col("__seen")))
-    // one committed segment per batch, ascending — the layout the
-    // sequential loop would have produced; the distinct-batch collect
-    // (and the per-batch segment-write job count) is bounded by
-    // maxBacklogBatches, failing FAST past the bound instead of
-    // surprising the driver with an unbounded backlog
-    val bs = occ.select(col("__b")).distinct()
-      .limit(maxBacklogBatches + 1)
-      .collect().map(_.getLong(0)).sorted
-    require(bs.length <= maxBacklogBatches,
-      s"backfill: backlog exceeds maxBacklogBatches=$maxBacklogBatches " +
-        "distinct batch ids — raise the bound, or fall back to the " +
-        "sequential incremental loop (dupSpansIncrementalStaged / " +
-        "stripDupSpansIncrementalStaged per batch), which has no " +
-        "driver-side backlog bound")
-    // the per-batch segment writes are INDEPENDENT (distinct output
-    // dirs, every one reading the occ cache — warm: the bs collect
-    // above materialized it — against the PINNED pre-backfill `seen`
-    // list), so they run concurrently on driver side-threads
-    // (guide §2.6), every one joined before this returns or throws
-    SegmentStore.withWrites(bs.toSeq.zipWithIndex.map { case (b, i) => () =>
-      occ.filter(col("g").isNotNull &&
-          col("__minb") === b && col("__b") === b)
-        .groupBy(col("g"))
-        .agg(min(col(idCol).cast("long")).as("doc_id"))
-        .select(col("g").cast("string").as("fp"), col("doc_id"))
-        .join(seen.select(col("fp")), Seq("fp"), "left_anti")
-        .write.mode("overwrite")
-        .parquet(SegmentStore.segPath(storeDir, nextIdx + i))
-    })(())
-    (base, occ, dup)
-  }
+  private def batchDoc(df: DataFrame, idCol: String): DataFrame =
+    df.withColumn("__bid", struct(col("__b"), col(idCol)))
 
-  /** Shared store-probe front half of the incremental ExactSubstr pair:
-    * checkpoints the batch's occurrence frame, decides its duplicated
-    * positions against the store + the batch itself, and commits the
-    * batch's novel grams as the next segment. Returns (base, occ, dup);
-    * `base` stays lazy (only the strip path re-reads the batch text for
-    * the token rebuild), `dup`'s store scan is pinned to the pre-write
-    * segment list so callers may evaluate it after later batches write.
+  /** The one store core of the ExactSubstr ingest, under all four
+    * incremental and backfill entry points. `backlog` is
+    * `Some((batchCol, maxBacklogBatches))` for a backfill and None for
+    * one incremental batch, which is the backlog of one batch tagged 0:
+    * its ids need no collect, so the segment write stays its one eager
+    * action. Returns (base, occ, dup), all tagged with the batch `__b`;
+    * `base` stays lazy (only the strip path reads its tokens), and `dup`'s
+    * store scan is pinned to the pre-write segment list, so callers may
+    * evaluate it after later batches write.
+    *
+    * The sequential dependency ("batch b probes history < b") is
+    * resolved WITHIN the one pass: per gram, `cnt` counts its
+    * occurrences inside the row's own batch, `__minb` is the first batch
+    * carrying it, and a position is duplicated iff
+    * `cnt ≥ 2 ∨ __minb < b ∨ gram ∈ store` — the sequential rule, since
+    * the segment of an earlier batch b' holds a gram iff it was
+    * store-novel with `__minb = b'`. With one batch `__minb` is `b`
+    * itself, so the rule is the incremental `cnt ≥ 2 ∨ gram ∈ store`.
+    * Segments commit one per batch, ascending (the sequential loop's
+    * layout), each a skinny aggregate over the one persisted
+    * occurrence frame.
+    *
+    * CACHE CONTRACT: the tokenized base and the occurrence frame are
+    * registered with [[graft.util.OperatorCaches]] — callers release
+    * after the terminal action on the returned frames.
     */
-  private def incrementalSpanCore(
-      batch: DataFrame,
+  private def spanCore(
+      batches: DataFrame,
+      backlog: Option[(String, Int)],
       storeDir: String,
       textCol: String,
       idCol: String,
       k: Int): (DataFrame, DataFrame, DataFrame) = {
-    val s = batch.sparkSession
+    backlog.foreach { case (_, maxB) =>
+      require(maxB >= 1, "backfill: maxBacklogBatches must be >= 1") }
+    val s = batches.sparkSession
     val nextIdx = SegmentStore.nextId(s, storeDir)
-    val store = FingerprintStore.load(s, storeDir)
-    // persist (not eager-checkpoint) both the tokenized base and the
-    // occurrence frame: the segment write below is then the batch's ONE
-    // eager action, and materializing it populates both caches as a side
-    // effect — the store probe → profile, the per-doc token counts, and
-    // the strip path's token rebuild all read the caches instead of
-    // re-running the tokenize + gram-build + hash + gram-window pipeline
-    // per consumer (the q67/q72 band-key lesson). At gate scale this
-    // pipeline's cost is JOB COUNT, not data volume (~236k occurrence
-    // rows at sf0.1), so halving the eager actions per batch is the
-    // whole optimization; recompute-on-eviction is deterministic, and
-    // both frames are batch-bounded (~one row per token) — at 100 TB
-    // stage them under storeDir instead of executor storage.
-    // CACHE CONTRACT: both frames registered with OperatorCaches —
-    // callers release after the terminal action on the returned frames.
-    val base0 = graft.util.OperatorCaches.persisted(
-      tokenizedBase(batch, textCol, idCol))
-    val (base, occ0) = spanPositionsFrom(base0, idCol, k)
-    val occ = graft.util.OperatorCaches.persisted(occ0)
+    val tag = backlog.fold(lit(0L))(bl => col(bl._1).cast("long"))
+    // persist (not eager-checkpoint) the tokenized base and the joined
+    // occurrence frame: the first action (the backfill's id collect, or
+    // an incremental batch's segment write) populates both caches as a
+    // side effect, and every later consumer — the store probe, the
+    // per-doc token counts, the segment writes, the strip path's token
+    // rebuild — reads them instead of re-running the tokenize +
+    // gram-build + hash + count pipeline. At gate scale this pipeline's
+    // cost is JOB COUNT, not data volume (~236k occurrence rows at
+    // sf0.1). The raw occurrence frame is NOT persisted: both sides of
+    // the count join rebuild it from the tokenized base (gram build +
+    // hash + explode, map-only) — cheaper than materializing an
+    // occurrence-sized frame that only the joined one is read after.
+    val base0 = graft.util.OperatorCaches.persisted(tokenizedBase(
+      batches.withColumn("__b", tag), Seq("__b", idCol), textCol))
+    val (base, occ0) = occurrencesOf(base0, k)
+    // fold the first-batch min into the (g, __b)-keyed count frame
+    // FIRST (both are distinct-gram-sized, the min a second-phase
+    // aggregate over already-collapsed rows), so the occurrence stream
+    // shuffles ONCE, on (g, __b) — not once per joined frame. One
+    // incremental batch is every gram's first batch: no second aggregate.
+    val occ = graft.util.OperatorCaches.persisted(
+      countedOccurrences(occ0, Seq("__b", idCol)) { perBatch =>
+        if (backlog.isEmpty) perBatch.withColumn("__minb", col("__b"))
+        else perBatch.join(
+          perBatch.groupBy(col("g")).agg(min(col("__b")).as("__minb")), Seq("g"))
+      })
     // store probe on the STRING form of the gram hash: the store's fp
     // column is the bucketed/sorted key after a compaction, so keeping
     // the join key = fp lets the history side read exchange-free; only
-    // the (batch-sized) occurrence side converts and shuffles.
-    // Probe shape (r17 verdict #3, job-count fold): self-duplicated
-    // positions (cnt >= 2) need no store at all, and the rest probe via
-    // LEFT SEMI — which tolerates duplicate build-side keys without a
-    // defensive distinct(), so the store side is a bare segment scan
-    // (two fewer AQE stage materializations per action that evaluates
-    // this frame than the old distinct + left-join + flag-filter).
-    val seen = store.select(col("fp"))
-    val dup = occ.filter(col("g").isNotNull && col("cnt") >= 2)
-      .unionByName(
-        occ.filter(col("g").isNotNull && col("cnt") < 2)
-          .withColumn("fp", col("g").cast("string"))
-          .join(seen, Seq("fp"), "left_semi")
-          .drop("fp"))
-    // append the batch's distinct NEW grams (min owner id = deterministic
-    // doc_id for the pinned store schema) as the next segment; grams the
-    // store already holds are anti-joined away — re-appending them would
-    // grow every later probe's build side for zero information (a
-    // replayed batch appends an empty segment). Overwrite reclaims a
-    // crashed attempt's partial dir at the same index.
+    // the occurrence side converts and shuffles. Probe shape (the r17
+    // job-count fold): self-duplicated positions need no store at all,
+    // and the rest probe via LEFT SEMI, which tolerates duplicate
+    // build-side keys without a defensive distinct(), so the store side
+    // is a bare segment scan.
+    val seen = FingerprintStore.load(s, storeDir).select(col("fp"))
+    val live = occ.filter(col("g").isNotNull)
+    val selfDup = col("cnt") >= 2 || col("__minb") < col("__b")
+    val dup = live.filter(selfDup)
+      .unionByName(live.filter(!selfDup)
+        .withColumn("fp", col("g").cast("string"))
+        .join(seen, Seq("fp"), "left_semi")
+        .drop("fp"))
+    // the backfill's distinct-batch collect (and the per-batch
+    // segment-write job count) is bounded by maxBacklogBatches, failing
+    // FAST past the bound instead of surprising the driver with an
+    // unbounded backlog; it also materializes the occ cache before the
+    // forked writes read it
+    val bs = backlog.fold(Seq(0L)) { case (_, maxB) =>
+      val ids = occ.select(col("__b")).distinct()
+        .limit(maxB + 1)
+        .collect().map(_.getLong(0)).sorted.toSeq
+      require(ids.length <= maxB,
+        s"backfill: backlog exceeds maxBacklogBatches=$maxB " +
+          "distinct batch ids — raise the bound, or fall back to the " +
+          "sequential incremental loop (dupSpansIncrementalStaged / " +
+          "stripDupSpansIncrementalStaged per batch), which collects " +
+          "no batch ids")
+      ids
+    }
+    // each batch's distinct store-NOVEL grams (min owner id =
+    // deterministic doc_id for the pinned store schema) land as its own
+    // segment; grams the store already holds are anti-joined away —
+    // re-appending them would grow every later probe's build side for
+    // zero information (a replayed batch appends an empty segment).
+    // Overwrite reclaims a crashed attempt's partial dir at the same
+    // index. The writes are INDEPENDENT (distinct output dirs, each
+    // reading the occ cache against the pinned pre-write `seen` list),
+    // so they run concurrently, every one joined before this returns or
+    // throws.
     graft.util.Described(s, "span:seg")(
-      occ.filter(col("g").isNotNull)
-        .groupBy(col("g"))
-        .agg(min(col(idCol).cast("long")).as("doc_id"))
-        .select(col("g").cast("string").as("fp"), col("doc_id"))
-        .join(seen, Seq("fp"), "left_anti")
-        .write.mode("overwrite").parquet(SegmentStore.segPath(storeDir, nextIdx)))
+      SegmentStore.withWrites(bs.zipWithIndex.map { case (b, i) => () =>
+        live.filter(col("__minb") === b && col("__b") === b)
+          .groupBy(col("g"))
+          .agg(min(col(idCol).cast("long")).as("doc_id"))
+          .select(col("g").cast("string").as("fp"), col("doc_id"))
+          .join(seen, Seq("fp"), "left_anti")
+          .write.mode("overwrite")
+          .parquet(SegmentStore.segPath(storeDir, nextIdx + i))
+      })(()))
     (base, occ, dup)
   }
 

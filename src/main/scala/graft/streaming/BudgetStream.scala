@@ -31,6 +31,9 @@ import graft.util.SegmentStore
   */
 object BudgetStream {
 
+  /** The meter's key column: every batch carries its docs' `source`. */
+  private val SrcCol = "source"
+
   /** Sequential-ingest core: admit `batch` against the persisted meter,
     * then land this batch's per-source arrivals as segment `batchId`.
     * Reads only segments with id < `batchId`, so a replay of batch k
@@ -55,11 +58,9 @@ object BudgetStream {
       stateDir: String,
       textCol: String,
       idCol: String,
-      srcCol: String,
       budget: Long,
       batchId: Long): DataFrame = {
-    val decided = admissionFrame(
-      batch, stateDir, textCol, idCol, srcCol, budget, batchId)
+    val decided = admissionFrame(batch, stateDir, textCol, idCol, budget, batchId)
     // ONE execution of the batch chain per epoch: the decision frame's
     // lineage carries the batch's whole tokenization (and, under
     // CurationStream, the dedup semi-join + extract cache reads), and
@@ -75,7 +76,7 @@ object BudgetStream {
     // its blocks directly.
     val dec = decided.localCheckpoint(eager = true)
     // meter update: every arrived token counts, admitted or not
-    dec.groupBy(col(srcCol)).agg(sum(col("n_tokens")).as("__spent"))
+    dec.groupBy(col(SrcCol)).agg(sum(col("n_tokens")).as("__spent"))
       .write.mode("overwrite").parquet(segPath(stateDir, batchId))
     dec
   }
@@ -91,23 +92,21 @@ object BudgetStream {
       stateDir: String,
       textCol: String,
       idCol: String,
-      srcCol: String,
       budget: Long,
       batchId: Long): DataFrame = {
     val s = batch.sparkSession
     val nTok = size(filter(TextFunctions.tokens(col(textCol)),
       t => t =!= "")).cast("long")
-    val arr = batch.select(col(idCol), col(srcCol),
-      nTok.as("n_tokens"))
-    val prior = loadSpent(s, stateDir, batchId, srcCol)
-    val w = Window.partitionBy(col(srcCol)).orderBy(col(idCol))
+    val arr = batch.select(col(idCol), col(SrcCol), nTok.as("n_tokens"))
+    val prior = loadSpent(s, stateDir, batchId)
+    val w = Window.partitionBy(col(SrcCol)).orderBy(col(idCol))
       .rowsBetween(Window.unboundedPreceding, -1)
     arr
-      .join(broadcast(prior), Seq(srcCol), "left")
+      .join(broadcast(prior), Seq(SrcCol), "left")
       .withColumn("cum_before",
         coalesce(sum(col("n_tokens")).over(w), lit(0L)) +
           coalesce(col("__spent"), lit(0L)))
-      .select(col(idCol), col(srcCol), col("n_tokens"),
+      .select(col(idCol), col(SrcCol), col("n_tokens"),
         col("cum_before"), (col("cum_before") < budget).as("admitted"))
   }
 
@@ -119,8 +118,8 @@ object BudgetStream {
 
   private def segPath(dir: String, id: Long) = SegmentStore.segPath(dir, id, "m_")
 
-  private def meterSchema(srcCol: String) = StructType(Seq(
-    StructField(srcCol, StringType), StructField("__spent", LongType)))
+  private val meterSchema = StructType(Seq(
+    StructField(SrcCol, StringType), StructField("__spent", LongType)))
 
   /** Fold committed per-source meter segments (except the newest
     * `keepNewestSegments`) into ONE generation — one row per source,
@@ -134,9 +133,8 @@ object BudgetStream {
   def compact(
       s: SparkSession,
       dir: String,
-      srcCol: String = "source",
       keepNewestSegments: Int = 1): Long =
-    SegmentStore.compactSums(s, dir, meterSchema(srcCol), Seq(srcCol),
+    SegmentStore.compactSums(s, dir, meterSchema, Seq(SrcCol),
       keepNewestSegments, "m_")
 
   /** Per-source meter from the generation (if any) plus every committed
@@ -145,8 +143,6 @@ object BudgetStream {
     * at or beyond `beforeId` — a replay past the fold bound would
     * silently double-count itself otherwise.
     */
-  def loadSpent(
-      s: SparkSession, dir: String, beforeId: Long,
-      srcCol: String = "source"): DataFrame =
-    SegmentStore.loadSums(s, dir, beforeId, meterSchema(srcCol), Seq(srcCol), "m_")
+  def loadSpent(s: SparkSession, dir: String, beforeId: Long): DataFrame =
+    SegmentStore.loadSums(s, dir, beforeId, meterSchema, Seq(SrcCol), "m_")
 }

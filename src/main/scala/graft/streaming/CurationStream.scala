@@ -106,7 +106,7 @@ class CurationStream(
     val fresh = Dedup.dedupeStreamStaged(
       routed, dedupStoreDir, "main_text", "doc_id", id)
     BudgetStream.admitStaged(
-      fresh, budgetStateDir, "main_text", "doc_id", "source", budget, id)
+      fresh, budgetStateDir, "main_text", "doc_id", budget, id)
   }
 
   /** foreachBatch adapter (direct use:

@@ -41,6 +41,9 @@ import graft.util.SegmentStore
   */
 object FrontierStream {
 
+  /** The meter's key column: every batch carries its URLs' `domain`. */
+  private val DomainCol = "domain"
+
   /** Politeness delay of a domain absent from the delay table. */
   private val DefaultDelayMs = 1000L
 
@@ -87,33 +90,32 @@ object FrontierStream {
       batch: DataFrame,
       stateDir: String,
       urlCol: String,
-      domainCol: String,
       priorityCol: String,
       delays: DataFrame,
       maxDepth: Long,
       batchId: Long): DataFrame = {
     val s = batch.sparkSession
-    val arr = batch.select(col(urlCol), col(domainCol), col(priorityCol))
-    val prior = loadAssigned(s, stateDir, batchId, domainCol)
+    val arr = batch.select(col(urlCol), col(DomainCol), col(priorityCol))
+    val prior = loadAssigned(s, stateDir, batchId)
     val d = delays.select(col("domain").as("__dd"),
       col("delay_ms").cast("long").as("__dm"))
-    val w = Window.partitionBy(col(domainCol))
+    val w = Window.partitionBy(col(DomainCol))
       .orderBy(col(priorityCol).desc, col(urlCol).asc)
     val decided = arr
-      .join(broadcast(prior), Seq(domainCol), "left")
+      .join(broadcast(prior), Seq(DomainCol), "left")
       .withColumn("wave",
         row_number().over(w).cast("long") +
           coalesce(col("__assigned"), lit(0L)))
-      .join(broadcast(d), col(domainCol) === col("__dd"), "left")
-      .select(col(urlCol), col(domainCol), col(priorityCol), col("wave"),
+      .join(broadcast(d), col(DomainCol) === col("__dd"), "left")
+      .select(col(urlCol), col(DomainCol), col(priorityCol), col("wave"),
         ((col("wave") - 1) *
           coalesce(col("__dm"), lit(DefaultDelayMs))).as("eta_ms"),
         (col("wave") <= maxDepth).as("scheduled"))
     // meter update: scheduled count = min(prior + arrived, cap) − prior,
     // a pure aggregate — no second window pass
-    arr.groupBy(col(domainCol)).agg(count(lit(1)).as("__n"))
-      .join(broadcast(prior), Seq(domainCol), "left")
-      .select(col(domainCol),
+    arr.groupBy(col(DomainCol)).agg(count(lit(1)).as("__n"))
+      .join(broadcast(prior), Seq(DomainCol), "left")
+      .select(col(DomainCol),
         (least(coalesce(col("__assigned"), lit(0L)) + col("__n"),
           lit(maxDepth)) - coalesce(col("__assigned"), lit(0L)))
           .as("__assigned"))
@@ -127,8 +129,8 @@ object FrontierStream {
 
   private def segPath(dir: String, id: Long) = SegmentStore.segPath(dir, id, "m_")
 
-  private def meterSchema(domainCol: String) = StructType(Seq(
-    StructField(domainCol, StringType), StructField("__assigned", LongType)))
+  private val meterSchema = StructType(Seq(
+    StructField(DomainCol, StringType), StructField("__assigned", LongType)))
 
   /** Fold committed meter segments (except the newest
     * `keepNewestSegments`) into ONE generation — one row per domain,
@@ -139,9 +141,8 @@ object FrontierStream {
   def compact(
       s: SparkSession,
       dir: String,
-      domainCol: String = "domain",
       keepNewestSegments: Int = 1): Long =
-    SegmentStore.compactSums(s, dir, meterSchema(domainCol), Seq(domainCol),
+    SegmentStore.compactSums(s, dir, meterSchema, Seq(DomainCol),
       keepNewestSegments, "m_")
 
   /** Per-domain assigned counts from the generation (if any) plus every
@@ -149,9 +150,6 @@ object FrontierStream {
     * loudly if a compaction folded segments at or beyond `beforeId` —
     * a replay past the fold bound would silently double-count itself.
     */
-  def loadAssigned(
-      s: SparkSession, dir: String, beforeId: Long,
-      domainCol: String = "domain"): DataFrame =
-    SegmentStore.loadSums(s, dir, beforeId, meterSchema(domainCol),
-      Seq(domainCol), "m_")
+  def loadAssigned(s: SparkSession, dir: String, beforeId: Long): DataFrame =
+    SegmentStore.loadSums(s, dir, beforeId, meterSchema, Seq(DomainCol), "m_")
 }

@@ -12,7 +12,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Operators that persist such an intermediate (`Dedup.allPairsJaccard`'s
   * token lists, `Layout.tokenShards`' range-partitioned frame,
-  * `Dedup.incrementalSpanCore`'s tokenized base + occurrence frames)
+  * `Dedup.spanCore`'s tokenized base + occurrence frames)
   * register it here. The CALLER owns release, with two scopes:
   *
   *  - Whole-session: after the terminal action on the last operator

@@ -13,7 +13,7 @@ class BudgetStreamSpec extends SparkSpec {
     val b0 = mk((1L, "a", "w w w w"), (2L, "a", "x x x"), (3L, "b", "y y y y y"))
     val b1 = mk((4L, "a", "z z z z z"), (5L, "b", "q"))
     def run(b: org.apache.spark.sql.DataFrame, id: Long) =
-      BudgetStream.admitStaged(b, dir, "text", "doc_id", "source",
+      BudgetStream.admitStaged(b, dir, "text", "doc_id",
         budget = 6L, batchId = id)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getLong(3), r.getBoolean(4))).sortBy(_._1).toSeq
@@ -43,7 +43,7 @@ class BudgetStreamSpec extends SparkSpec {
     val b1 = mk((4L, "a", "z z z z z"), (5L, "b", "q"))
     val b2 = mk((6L, "b", "r r"))
     def run(b: org.apache.spark.sql.DataFrame, id: Long) =
-      BudgetStream.admitStaged(b, dir, "text", "doc_id", "source",
+      BudgetStream.admitStaged(b, dir, "text", "doc_id",
         budget = 6L, batchId = id)
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
           r.getLong(3), r.getBoolean(4))).sortBy(_._1).toSeq
@@ -77,11 +77,11 @@ class BudgetStreamSpec extends SparkSpec {
     def mk(rows: (Long, String, String)*) =
       rows.toSeq.toDF("doc_id", "source", "text")
     BudgetStream.admitStaged(mk((1L, "a", "w w")), dir, "text", "doc_id",
-      "source", 6L, 0L).collect()
+      6L, 0L).collect()
     BudgetStream.admitStaged(mk((2L, "a", "x")), dir, "text", "doc_id",
-      "source", 6L, 1L).collect()
+      6L, 1L).collect()
     BudgetStream.admitStaged(mk((3L, "b", "y y y")), dir, "text", "doc_id",
-      "source", 6L, 2L).collect()
+      6L, 2L).collect()
     assert(BudgetStream.compact(spark, dir, keepNewestSegments = 1) == 2L)
     // fabricate the crash shapes a half-done compaction leaves behind:
     // a folded segment the cleanup missed (id < foldedBelow), a stale
@@ -113,12 +113,12 @@ class BudgetStreamSpec extends SparkSpec {
   test("admitStaged joins the meter broadcast — no batch-side exchange for state") {
     val dir = tmpDir("budget-plan")
     val b0 = Seq((1L, "a", "w w")).toDF("doc_id", "source", "text")
-    BudgetStream.admitStaged(b0, dir, "text", "doc_id", "source", 6L, 0L)
+    BudgetStream.admitStaged(b0, dir, "text", "doc_id", 6L, 0L)
       .collect()
     // assert on the lazy admission plan (admitStaged itself returns the
     // eagerly checkpointed frame, whose executed plan is an RDD scan)
     val plan = BudgetStream
-      .admissionFrame(b0, dir, "text", "doc_id", "source", 6L, 1L)
+      .admissionFrame(b0, dir, "text", "doc_id", 6L, 1L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
   }

@@ -51,7 +51,7 @@ class FrontierStreamSpec extends SparkSpec {
     rows.toSeq.toDF("url", "domain", "priority")
 
   private def run(dir: String)(b: org.apache.spark.sql.DataFrame, id: Long) =
-    FrontierStream.assignStaged(b, dir, "url", "domain", "priority",
+    FrontierStream.assignStaged(b, dir, "url", "priority",
       delaysDf, maxDepth = 3L, batchId = id)
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getBoolean(5))).sortBy(_._1).toSeq
@@ -74,7 +74,7 @@ class FrontierStreamSpec extends SparkSpec {
       val staged = FrontierStream.assignStaged(
         mk(("u1", "a.com", 9L), ("u2", "a.com", 8L),
           ("u3", "a.com", 7L), ("u4", "a.com", 6L)),
-        dir, "url", "domain", "priority", delaysDf, maxDepth = 2L,
+        dir, "url", "priority", delaysDf, maxDepth = 2L,
         batchId = 0L)
         .collect().map(r => (r.getString(0), r.getLong(3), r.getLong(4),
           r.getBoolean(5))).sortBy(_._1).toSeq
@@ -142,7 +142,7 @@ class FrontierStreamSpec extends SparkSpec {
     val dir = tmpDir("frontier-plan")
     run(dir)(mk(("u1", "a.com", 1L)), 0L)
     val plan = FrontierStream.assignStaged(
-      mk(("u2", "a.com", 2L)), dir, "url", "domain", "priority",
+      mk(("u2", "a.com", 2L)), dir, "url", "priority",
       delaysDf, maxDepth = 3L, batchId = 1L)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)

@@ -64,7 +64,7 @@ class SegmentStoreSpec extends SparkSpec {
     // the replayed epoch claims the same id and overwrites the partial dir
     BudgetStream.admitStaged(
       Seq((10L, "a", "x y z")).toDF("doc_id", "source", "text"),
-      dir, "text", "doc_id", "source", 100L, 1L).collect()
+      dir, "text", "doc_id", 100L, 1L).collect()
     assert(SegmentStore.segments(spark, dir, "m_").map(_._1) == Seq(0L, 1L))
     assert(meter(dir) == Map("a" -> 5L))
     // and a compaction folds only committed rows
